@@ -94,7 +94,7 @@ def cmd_transform(args) -> int:
             nested = json.load(f)
         rows = [(b, fic, url) for b, fics in nested.items() for fic, url in fics.items()]
         lookup = spark.createDataFrame(rows, FIC_LOOKUP_SCHEMA)
-    silver = transform_fic_documents(bronze, url_lookup=lookup).persist()
+    silver = transform_fic_documents(bronze, url_lookup=lookup)
     valid, invalid = split_by_predicate(
         silver,
         date_folder_consistency(F.col("fic.fecha_corte"), F.col("anio"), F.col("mes")),

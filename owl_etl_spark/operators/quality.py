@@ -31,8 +31,20 @@ def anti_filter(df: DataFrame, skiplist: DataFrame, df_col: str, skip_col: str) 
 def split_by_predicate(df: DataFrame, predicate: Column) -> tuple[DataFrame, DataFrame]:
     """(valid, invalid) split — F3's date-consistency gate generalizes
     to any predicate; the invalid branch feeds the skip-list sink
-    (reference: src/scripts/script_transform.py:81-114, 270-293)."""
-    return df.filter(predicate), df.filter(~predicate | predicate.isNull())
+    (reference: src/scripts/script_transform.py:81-114, 270-293).
+    Rows where the predicate is null go to ``invalid``.
+
+    The input is sealed once (``localCheckpoint(eager=True)``) before
+    it is filtered, so the split costs one run of the input plan and
+    both branches read that materialization. Unsealed, every consumer
+    re-runs the whole upstream — on the FIC load that is the PDF
+    extraction and the transform once for the store drop's range
+    sampling, once for its write and once more for the skip list.
+    The seal is a local checkpoint: its blocks live in executor
+    storage with no lineage to recompute them from.
+    """
+    sealed = df.localCheckpoint(eager=True)
+    return sealed.filter(predicate), sealed.filter(~predicate | predicate.isNull())
 
 
 def date_folder_consistency(fecha_corte_iso: Column, anio: Column, mes: Column) -> Column:

@@ -183,14 +183,18 @@ def pdf_text_extractor(content: bytes) -> str:
         end = content.find(b"endstream", start)
         if end == -1:
             continue
-        raw = content[start:end].rstrip(b"\r\n")
+        raw = content[start:end]
         if b"/FlateDecode" in meta:
+            # compressed bytes may themselves end in CR/LF: decompress
+            # unstripped (zlib ignores the EOL after the stream's end)
             try:
                 raw = zlib.decompress(raw)
             except zlib.error:
                 continue
         elif b"/Filter" in meta:
             continue  # unsupported filter (DCT images etc.)
+        else:
+            raw = raw.rstrip(b"\r\n")
         if b"BT" in raw:
             lines.extend(_pdf_content_text(raw))
     if not lines:

@@ -201,6 +201,31 @@ def test_anti_filter_and_skiplist(spark, tmp_path):
     assert [r.v for r in kept] == [2]
 
 
+def test_split_by_predicate_partitions_rows_and_runs_input_once(spark):
+    from owl_etl_spark.operators.quality import split_by_predicate
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("int")
+    def counted(v):
+        calls.add(1)
+        return v
+
+    rows = [(i, None if i % 5 == 0 else i % 3) for i in range(20)]
+    df = spark.createDataFrame(rows, "id int, k int").withColumn("k", counted("k"))
+    valid, invalid = split_by_predicate(df, F.col("k") > 0)
+    got_valid = sorted((r.id, r.k) for r in valid.collect())
+    got_invalid = sorted((r.id, r.k) for r in invalid.collect())
+
+    assert {i for i, _ in got_valid}.isdisjoint(i for i, _ in got_invalid)
+    assert sorted(got_valid + got_invalid) == sorted(rows)
+    # a null predicate is not a pass: it goes to the invalid branch
+    assert {i for i, k in got_invalid if k is None} == {0, 5, 10, 15}
+    assert all(k > 0 for _, k in got_valid)
+    # both branches read one materialization of the input plan
+    assert calls.value == len(rows)
+
+
 def test_fuzzy_set_membership(spark):
     from owl_etl_spark.operators.fuzzy_join import fuzzy_set_membership
 
