@@ -41,7 +41,9 @@ def split_by_predicate(df: DataFrame, predicate: Column) -> tuple[DataFrame, Dat
     extraction and the transform once for the store drop's range
     sampling, once for its write and once more for the skip list.
     The seal is a local checkpoint: its blocks live in executor
-    storage with no lineage to recompute them from.
+    storage with no lineage to recompute them from, so losing an
+    executor fails the job instead of recomputing. It targets local
+    and single-executor runs, which is how this package runs today.
     """
     sealed = df.localCheckpoint(eager=True)
     return sealed.filter(predicate), sealed.filter(~predicate | predicate.isNull())

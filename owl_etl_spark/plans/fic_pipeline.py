@@ -19,12 +19,8 @@ once for the whole corpus; everything else is per-row expressions in a
 single fused projection — the entire pipeline is 1 broadcast join +
 0 shuffles.
 
-The plan is kept small on purpose: the agency match scores all
-candidates inside one ``transform`` over a literal array rather than
-unrolling a CASE per candidate, so the optimized plan stays ~150 KB of
-text and Catalyst optimizes it in about a second (the unrolled form is
-~800 KB and ~10 s, and pushes generated code past the JVM's 64 KB
-method limit). ``tests/test_plan_quality_fic.py`` guards the size.
+The agency match is one higher-order expression, so the plan does not
+grow per candidate agency (see ``_agency_match``).
 """
 
 from __future__ import annotations
@@ -153,10 +149,8 @@ def _agency_match(col: Column, agencies: list[str], cutoff: float = 0.8) -> Colu
     One higher-order expression: ``transform`` scores every candidate
     of a literal array, ``array_max`` takes the best score and
     ``array_position`` picks the first candidate that reaches it — the
-    list-order tie-break. A greatest-of CASE cascade unrolled per
-    candidate would spell every score twice per candidate; with 13
-    agencies that is most of the FIC transform's optimized plan and
-    ~10 s of Catalyst time per month.
+    list-order tie-break. One ``transform`` so the plan does not grow
+    per candidate; size guarded by tests/test_plan_quality_fic.py.
     Scorer is levenshtein-ratio (the built-in approximation; difflib
     parity available via functions.similarity.difflib_ratio as an
     opt-in UDF scorer).

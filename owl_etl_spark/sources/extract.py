@@ -183,18 +183,17 @@ def pdf_text_extractor(content: bytes) -> str:
         end = content.find(b"endstream", start)
         if end == -1:
             continue
+        # unstripped: compressed bytes may themselves end in CR/LF
+        # (zlib ignores the EOL after the stream's end, and the content
+        # scanner treats CR/LF as separators)
         raw = content[start:end]
         if b"/FlateDecode" in meta:
-            # compressed bytes may themselves end in CR/LF: decompress
-            # unstripped (zlib ignores the EOL after the stream's end)
             try:
                 raw = zlib.decompress(raw)
             except zlib.error:
                 continue
         elif b"/Filter" in meta:
             continue  # unsupported filter (DCT images etc.)
-        else:
-            raw = raw.rstrip(b"\r\n")
         if b"BT" in raw:
             lines.extend(_pdf_content_text(raw))
     if not lines:

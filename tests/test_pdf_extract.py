@@ -33,11 +33,3 @@ def test_flate_stream_ending_in_eol_byte_extracts(last):
     lines, pdf = _sheet_whose_stream_ends_in(last)
     assert pdf_text_extractor(pdf).splitlines() == lines
 
-
-def test_unfiltered_stream_eol_is_stripped():
-    content = b"BT (uno) Tj T* (dos) Tj ET"
-    pdf = (
-        b"%PDF-1.4\n1 0 obj\n<< /Length " + str(len(content)).encode() + b" >>\n"
-        b"stream\r\n" + content + b"\r\nendstream\nendobj\n%%EOF\n"
-    )
-    assert pdf_text_extractor(pdf).splitlines() == ["uno", "dos"]

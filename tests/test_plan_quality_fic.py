@@ -1,9 +1,6 @@
 """Plan-size guard for the FIC transform: the optimized plan of the
 monthly transform must stay small enough that Catalyst plans it in
-seconds and whole-stage codegen stays under the JVM's 64 KB method
-limit. An agency match unrolled per candidate (a greatest-of CASE
-cascade) spells ``levenshtein`` hundreds of times and grows the plan
-text past 800 KB; the higher-order form spells it a few times.
+seconds, i.e. the agency match must not be unrolled per candidate.
 """
 
 from __future__ import annotations
