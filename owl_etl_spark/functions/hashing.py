@@ -103,11 +103,6 @@ def simhash_sql(tokens_sql: str, bits: int = 16) -> Column:
     return F.expr(f"element_at(transform(array({base}), __h -> {' + '.join(terms)}), 1)")
 
 
-def xxhash_bucket(col: Column, num_buckets: int) -> Column:
-    """Spark-native fast bucket id (not oracle-portable): xxhash64 mod n."""
-    return F.pmod(F.xxhash64(col), F.lit(num_buckets))
-
-
 def hashed_features(
     df,
     id_col: str,

@@ -191,22 +191,3 @@ def smart_percent_array(arr_sql: str, key_field: str, scale: int = 6) -> Column:
     fractional scale and rounded.
     """
     return F.expr(smart_percent_array_sql(arr_sql, key_field, scale))
-
-
-def participation_sum(arr_sql: str) -> Column:
-    """Intra-row participation sum (A1): ``aggregate`` over the array,
-    null participacion treated as 0 (reference gathers then sums,
-    src/etl/transform.py:439-460)."""
-    return F.expr(f"aggregate({arr_sql}, 0D, (a, x) -> a + coalesce(x.participacion, 0D))")
-
-
-def range_bucket_counts(arr_sql: str, threshold: float = 1.0) -> Column:
-    """Count of array values above/below a threshold (A2,
-    reference: src/etl/transform.py:549-551) as a
-    ``struct{gt, le}``."""
-    nonnull = f"filter({arr_sql}, x -> x.participacion IS NOT NULL)"
-    return F.expr(
-        f"""named_struct(
-            'gt', size(filter({nonnull}, x -> x.participacion > {threshold}D)),
-            'le', size(filter({nonnull}, x -> x.participacion <= {threshold}D)))"""
-    )

@@ -72,26 +72,8 @@ def difflib_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
-def array_jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard similarity of two arrays (as sets) — built-ins only."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
-
-
 def _to_double_array(col_sql: str) -> str:
     return f"transform({col_sql}, v -> CAST(v AS DOUBLE))"
-
-
-def dot_sql(a_sql: str, b_sql: str) -> Column:
-    """Dot product of two numeric arrays in double precision.
-
-    Left-to-right ``aggregate`` over ``zip_with`` products — a fixed
-    summation order, so results are IEEE-deterministic and
-    reproducible across engines.
-    """
-    a, b = _to_double_array(a_sql), _to_double_array(b_sql)
-    return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
 
 
 def norm_sql(a_sql: str) -> Column:

@@ -25,10 +25,6 @@ def tokens(col: Column) -> Column:
     return F.when(F.trim(col) == "", F.array().cast("array<string>")).otherwise(t)
 
 
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
 def shingle_chain_sql(toks: str, n: int) -> str:
     """SQL for the array of space-joined ``n``-token windows of the
     token-array expression ``toks`` (which must have ≥ ``n`` elements
@@ -235,15 +231,6 @@ def redact(col: Column, patterns: dict[str, str] | None = None, token: str = "[R
     for pat in (patterns or REDACTION_PATTERNS).values():
         out = F.regexp_replace(out, pat, token)
     return out
-
-
-def redaction_counts(col: Column, patterns: dict[str, str] | None = None) -> Column:
-    """struct of per-pattern match counts (audit metric for the scrub)."""
-    pats = patterns or REDACTION_PATTERNS
-    fields = []
-    for name, pat in pats.items():
-        fields.append(F.regexp_count(col, F.lit(pat)).cast("long").alias(name))
-    return F.struct(*fields)
 
 
 def clean_text(col: Column) -> Column:

@@ -26,11 +26,11 @@ so the whole K-round trajectory — thresholds, leaves, residuals — is
 bit-identical across engines; the DuckDB oracle for q297 replays it
 round by round with unrolled materialized CTEs and hash-matches.
 
-At 100 TB: K+1 scans of a 2-column integer projection (cache it);
-per scan one tree-reduced global aggregate of ~2·|T| BIGINTs; driver
-state is 4 scalars per round. Candidate thresholds are caller-fixed
-(domain knowledge or a prior quantile pass), not data-adaptive per
-round — that is what keeps a round at one scan.
+At 100 TB: two scans of a 2-column integer projection — one collapses
+it per x value for the driver replay of all K rounds
+(``session.bounded_collect``; x must be bucketed), one computes every
+round's MAE. Candidate thresholds are caller-fixed (domain knowledge
+or a prior quantile pass), not data-adaptive per round.
 """
 
 from __future__ import annotations
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from owl_etl_spark.operators.logreg import _round_half_away
+from owl_etl_spark.session import bounded_collect, literal_frame
 
 
 def gbm_stump_fit(
@@ -60,7 +61,9 @@ def gbm_stump_fit(
 
     Candidates where a split would be empty on either side are
     skipped; ties on the gain break toward the SMALLEST threshold.
-    Raises if no candidate ever splits the data.
+    Raises if no candidate ever splits the data, or if ``x_col`` has
+    more distinct values than ``session.DRIVER_REPLAY_MAX_ROWS``
+    (bucket it).
     """
     if not thresholds:
         raise ValueError("gbm_stump_fit: need at least one candidate threshold")
@@ -70,31 +73,26 @@ def gbm_stump_fit(
         F.col(x_col).cast("long").alias("__x"),
     )
 
-    # r12 restructured the rounds to scan a per-x collapsed frame
-    # (guide §2.3: every split statistic is linear in y within an
-    # x-group, so Σ_{x≤t} resid_k derives exactly from (n_x, Σy_x) and
-    # pred_k). r13 finishes the move (guide §5 driver work / §1.2):
-    # the collapsed frame is bounded by the covariate's cardinality
-    # (bucketed covariates are the engine convention — the same bound
-    # the r12 shape already relied on to checkpoint it), so it is
-    # collected ONCE and the K rounds replay in exact driver
-    # arithmetic — BIGINT sums of Python ints in any order, gains as
-    # IEEE doubles OF those exact integers, identical to the JVM's.
-    # That deletes two localCheckpoint jobs and K+1 collect jobs; what
-    # remains on the cluster is one collapse job and ONE final
-    # full-data scan for every round's MAE (|y − pred_k(x)| is not
-    # linear in y, so it genuinely needs the rows). 7 Spark jobs → 2,
-    # and the full-data frame is no longer checkpointed at all — at
-    # 100 TB two column-pruned parquet scans beat materializing the
-    # working set to executor storage.
-    xrows = (
-        work.groupBy("__x")
-        .agg(
+    # Every split statistic is linear in y within an x-group, so
+    # Σ_{x≤t} resid_k derives exactly from (n_x, Σy_x) and pred_k: the
+    # per-x collapsed frame replays the K rounds on the driver (see
+    # session.bounded_collect) — BIGINT sums of Python ints in any
+    # order, gains as IEEE doubles OF those exact integers, identical
+    # to the JVM's. What stays on the cluster is the collapse and ONE
+    # final full-data scan for every round's MAE (|y − pred_k(x)| is
+    # not linear in y, so it genuinely needs the rows).
+    xrows = bounded_collect(
+        work.groupBy("__x").agg(
             F.count(F.lit(1)).cast("long").alias("__nx"),
             F.sum("__y").cast("long").alias("__sy"),
         )
-        .collect()
     )
+    if xrows is None:
+        raise ValueError(
+            "gbm_stump_fit: more distinct x values than the driver-replay "
+            "cap (session.DRIVER_REPLAY_MAX_ROWS) — x must be a bucketed "
+            "integer covariate; bucket it upstream"
+        )
     n_total = sum(r["__nx"] for r in xrows)
     s_total = sum(r["__sy"] for r in xrows if r["__sy"] is not None)
     if not n_total:
@@ -190,8 +188,6 @@ def gbm_stump_model_df(spark, fitted: list[dict]) -> DataFrame:
     Python-worker round trip to deserialize its (mostly empty) slice —
     profiled at 32 tasks / ~1.9 s wall for this frame alone. The
     literal form evaluates in the JVM: zero Python boundary."""
-    from owl_etl_spark.session import literal_frame
-
     return literal_frame(
         spark,
         [

@@ -28,7 +28,7 @@ from owl_etl_spark.functions.hashing import (
     simhash_sql,
 )
 from owl_etl_spark.functions.text import shingle_chain_sql
-from owl_etl_spark.session import spread_for_cpu
+from owl_etl_spark.session import bounded_collect, literal_frame, spread_for_cpu
 from owl_etl_spark.functions.text import fingerprint, normalize_text
 
 
@@ -391,18 +391,6 @@ def with_simhash(df: DataFrame, text_col: str = "text", bits: int = 16) -> DataF
         "__toks", F.split(F.col("__norm"), " ")
     )
     return df.withColumn("simhash", simhash_sql("__toks", bits)).drop("__norm", "__toks")
-
-
-def simhash_buckets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 16) -> DataFrame:
-    """Group ids by identical SimHash — near-dup *buckets* (the cheap
-    screen before a verifier; identical 16-bit simhash on short docs is
-    a strong near-dup signal, and hamming-≤k needs only ``bits`` choose
-    ``k`` rotated variants as extra keys)."""
-    return (
-        with_simhash(df, text_col, bits)
-        .groupBy("simhash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"), F.count(F.lit(1)).alias("bucket_size"))
-    )
 
 
 def ngram_jaccard_pairs(
@@ -777,13 +765,59 @@ def near_dup_dedup(
     return kept, verified
 
 
+def _label_ids(ids: DataFrame, id_col: str, mapping: DataFrame) -> DataFrame:
+    """``(id_col, component)`` for every id: the ``(node, root)``
+    mapping's root, or the id itself when it has no row (no edge)."""
+    return (
+        ids.select(F.col(id_col).alias("node"))
+        .join(mapping, "node", "left")
+        .select(
+            F.col("node").alias(id_col),
+            F.coalesce(F.col("root"), F.col("node")).alias("component"),
+        )
+        .localCheckpoint()
+    )
+
+
+def _driver_components(
+    edge_rows: list, ids: DataFrame, id_col: str, ntyp: str
+) -> DataFrame:
+    """Exact driver union-find over collected ``(u, v)`` edges. Union
+    by ``parent[max] = min`` keeps every root the minimum of its
+    component, so each node's root is the min reachable id — the
+    contract both distributed variants converge to. The mapping is a
+    literal ``(node, root)`` frame of type ``ntyp``; the ids join stays
+    in Spark."""
+    parent: dict = {}
+
+    def _find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in edge_rows:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        a, b = _find(u), _find(v)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    mapping = literal_frame(
+        ids.sparkSession,
+        sorted((node, _find(node)) for node in parent),
+        f"node {ntyp}, root {ntyp}",
+    )
+    return _label_ids(ids, id_col, mapping)
+
+
 def connected_components(
     pairs: DataFrame,
     ids: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 10,
     strict: bool = True,
-    max_driver_edges: int = 100_000,
 ) -> DataFrame:
     """Connected components over a similarity-pair edge list:
     (id, component) where component = min id reachable.
@@ -811,7 +845,7 @@ def connected_components(
       and the logical plan grows without bound. On a real cluster with
       flaky executors prefer ``spark.sparkContext.setCheckpointDir`` +
       ``.checkpoint()`` (HDFS-backed) over the executor-local variant.
-    - ``edges`` is consumed once per round; caching it computes the
+    - ``edges`` is consumed once per round; sealing it computes the
       pair list once.
     - ``strict=True`` raises if the loop exhausts ``max_iters`` while
       labels are still changing — a truncated result is NOT a valid
@@ -820,64 +854,22 @@ def connected_components(
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .cache()
+        .localCheckpoint(eager=True)
     )
+    # exact driver replay when model-sized (session.bounded_collect)
+    rows = bounded_collect(edges)
+    if rows is not None:
+        edges.unpersist()
+        ntyp = dict(ids.select(F.col(id_col)).dtypes)[id_col]
+        return _driver_components(rows, ids, id_col, ntyp)
     # Width the loop to the EDGE COUNT, not the upstream partitioning
     # (r12, guide §2.6/§1): the no-shuffle union doubles the pair
     # frame's partitions, so a small dup graph inherited ~2×scan-width
     # near-empty partitions and every round paid that many tasks of
     # pure serialization churn (profiled: 64-task stages over 0.1 MB).
-    # One count materializes the cache (round 1 paid it implicitly
-    # anyway); the coalesce reads the cache, never recomputes. At
-    # scale ceil(n/4M) keeps ~4M edges per task — the clamp leaves big
-    # graphs at their natural width.
+    # At scale ceil(n/4M) keeps ~4M edges per task — the clamp leaves
+    # big graphs at their natural width; the coalesce reads the seal.
     n_edges = edges.count()
-    # r13 (guide §5 driver work / §1.2): a model-sized dup graph (the
-    # count is already paid — it materializes the cache) converges
-    # faster in an exact driver union-find than in even ONE round of
-    # join+groupBy+checkpoint+convergence-count jobs; component = min
-    # reachable id is algorithm-independent (same contract as the star
-    # variant, pinned by test). The ids join stays in Spark — only the
-    # edge list crosses to the driver. Corpus-scale dup graphs
-    # (n_edges > max_driver_edges) take the distributed rounds.
-    if n_edges <= int(max_driver_edges):
-        try:
-            erows = [(r[0], r[1]) for r in edges.collect()]
-        finally:
-            edges.unpersist()
-        parent: dict = {}
-
-        def _find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for s, d in erows:
-            parent.setdefault(s, s)
-            parent.setdefault(d, d)
-            a, b = _find(s), _find(d)
-            if a != b:
-                parent[max(a, b)] = min(a, b)
-        from owl_etl_spark.session import literal_frame
-
-        ntyp = dict(ids.select(F.col(id_col)).dtypes)[id_col]
-        mapping = literal_frame(
-            pairs.sparkSession,
-            sorted((node, _find(node)) for node in parent),
-            f"node {ntyp}, root {ntyp}",
-        )
-        return (
-            ids.select(F.col(id_col).alias("node"))
-            .join(mapping, "node", "left")
-            .select(
-                F.col("node").alias(id_col),
-                F.coalesce(F.col("root"), F.col("node")).alias("component"),
-            )
-            .localCheckpoint()
-        )
     cur_parts = edges.rdd.getNumPartitions()
     want = max(1, min(cur_parts, -(-n_edges // 4_000_000)))
     if want < cur_parts:
@@ -940,14 +932,8 @@ def connected_components(
         # the per-round checkpoint backing `labels` can be released.
         # Non-endpoint ids (no edges — their label can never move)
         # rejoin here as self-labeled singletons.
-        result = (
-            ids.select(F.col(id_col).alias("node"))
-            .join(labels, "node", "left")
-            .select(
-                F.col("node").alias(id_col),
-                F.coalesce(F.col("component"), F.col("node")).alias("component"),
-            )
-            .localCheckpoint()
+        result = _label_ids(
+            ids, id_col, labels.select("node", F.col("component").alias("root"))
         )
         if prev_checkpoint is not None:
             prev_checkpoint.unpersist()
@@ -1039,7 +1025,6 @@ def connected_components_star(
     id_col: str = "doc_id",
     max_iters: int = 12,
     strict: bool = True,
-    max_driver_edges: int = 100_000,
 ) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     contraction (Kiveris et al., "Connected Components in MapReduce
@@ -1094,54 +1079,10 @@ def connected_components_star(
     edges = _canon(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     ).localCheckpoint()
-    # r13 (guide §5 driver work / §1.2): when the sealed edge set is
-    # model-sized (count over cached blocks — cheap), the contraction
-    # rounds' job-per-phase orchestration costs more than the whole
-    # problem: run an exact union-find driver-side and hand back the
-    # (node → component-min) star as a pure literal frame. The ids
-    # join below stays in Spark, so corpus-sized id tables are
-    # untouched; component = min reachable id is algorithm-independent,
-    # so the labels are identical to the converged star's. Bigger edge
-    # sets (q311-class dup graphs) take the distributed rounds.
-    if edges.count() <= int(max_driver_edges):
-        erows = [(r[0], r[1]) for r in edges.collect()]
-        parent: dict = {}
-
-        def _find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for lo, hi in erows:
-            parent.setdefault(lo, lo)
-            parent.setdefault(hi, hi)
-            a, b = _find(lo), _find(hi)
-            if a != b:
-                parent[max(a, b)] = min(a, b)
-        comp_min: dict = {}
-        for node in parent:
-            root = _find(node)
-            comp_min[root] = min(comp_min.get(root, node), node)
-        from owl_etl_spark.session import literal_frame
-
-        ntyp = dict(edges.dtypes)["lo"]
-        mapping = literal_frame(
-            pairs.sparkSession,
-            sorted((node, comp_min[_find(node)]) for node in parent),
-            f"node {ntyp}, root {ntyp}",
-        )
-        result = (
-            ids.select(F.col(id_col).alias("node"))
-            .join(mapping, "node", "left")
-            .select(
-                F.col("node").alias(id_col),
-                F.coalesce(F.col("root"), F.col("node")).alias("component"),
-            )
-            .localCheckpoint()
-        )
+    # exact driver replay when model-sized (session.bounded_collect)
+    rows = bounded_collect(edges)
+    if rows is not None:
+        result = _driver_components(rows, ids, id_col, dict(edges.dtypes)["lo"])
         edges.unpersist()
         return result
     prev_ckpt: DataFrame | None = edges
@@ -1209,15 +1150,7 @@ def connected_components_star(
         mapping = edges.select(F.col("hi").alias("node"), F.col("lo").alias("root"))
         if not converged:
             mapping = mapping.groupBy("node").agg(F.min("root").alias("root"))
-        result = (
-            ids.select(F.col(id_col).alias("node"))
-            .join(mapping, "node", "left")
-            .select(
-                F.col("node").alias(id_col),
-                F.coalesce(F.col("root"), F.col("node")).alias("component"),
-            )
-            .localCheckpoint()
-        )
+        result = _label_ids(ids, id_col, mapping)
         prev_ckpt.unpersist()
         prev_ckpt = None
         return result

@@ -111,14 +111,6 @@ def reliability_report(
     )
 
 
-def field_frequency_report(diffs: DataFrame) -> DataFrame:
-    """Per-field diff frequency (the 'Resumen_Campos' sheet,
-    test_ETL.py:312-314)."""
-    return diffs.groupBy("campo").agg(F.count(F.lit(1)).alias("ocurrencias")).orderBy(
-        F.desc("ocurrencias"), F.asc("campo")
-    )
-
-
 def bucket_checksum_diff(
     a: DataFrame,
     b: DataFrame,

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import bounded_collect, literal_frame
+
 
 def gram_matrix(
     df: DataFrame,
@@ -108,7 +110,6 @@ def power_iteration_top_eigvec(
     n_iters: int = 6,
     a_scale: int = 10_000,
     micro: int = 1_000_000,
-    max_driver_cells: int = 4_000_000,
 ) -> DataFrame:
     """Dominant eigenvector of a symmetric matrix given as the
     upper-triangle ``(i, j, s)`` frame ``gram_matrix`` emits —
@@ -166,18 +167,10 @@ def power_iteration_top_eigvec(
         # every iteration's analyzed tree shallow.
         .localCheckpoint(eager=True)
     )
-    # r13 (guide §5 driver work / §1.2): the quantized matrix is dim²
-    # CELLS — bounded by the matrix width, never the corpus — and the
-    # whole iteration is INTEGER arithmetic (multiply/add, max-|w|
-    # pivot, exact-multiple floor division: Python's // is precisely
-    # the floordiv the SQL identity reconstructs from trunc-%). When
-    # the sealed cell frame is model-sized, collect it once and replay
-    # the n_iters rounds in exact driver ints: the count+collect over
-    # cached blocks replaces 6×(join + aggregate + sort-limit pivot +
-    # broadcast) micro-stage jobs, bit-identically. Wider matrices
-    # (cells > max_driver_cells) keep the distributed loop below.
-    if a.count() <= int(max_driver_cells):
-        cells = [(r[0], r[1], r[2]) for r in a.collect()]
+    # exact driver replay when model-sized (session.bounded_collect)
+    rows = bounded_collect(a)
+    if rows is not None:
+        cells = [(r[0], r[1], r[2]) for r in rows]
         ityp = dict(a.dtypes)["i"]
         v_d = {i: int(micro) for i, _, _ in cells}
         for _ in range(int(n_iters)):
@@ -194,8 +187,6 @@ def power_iteration_top_eigvec(
             sg = -1 if pw < 0 else 1
             pv = max(abs(pw), 1)
             v_d = {i: (w * int(micro) * sg) // pv for i, w in w_d.items()}
-        from owl_etl_spark.session import literal_frame
-
         return literal_frame(
             gram.sparkSession,
             sorted(v_d.items()),

@@ -29,10 +29,10 @@ Feature contract: integer-valued, BOUNDED features (the caller scales
 BIGINT to ~10⁹ rows. Standardize/clip upstream; this operator's job
 is the exact loop, not feature hygiene.
 
-At 100 TB: per iteration one scan + partial aggregate (no shuffle —
-Spark's global agg tree-reduces); K iterations = K scans, so cache
-the (y, x…) projection before fitting. d (feature count) numbers of
-driver state; no collect of anything row-sized.
+At 100 TB: one scan collapses the rows to their distinct (y, x…)
+combinations, which the K iterations replay on the driver
+(``session.bounded_collect``); more combinations than its cap raise,
+so features must be bucketed. Nothing row-sized is collected.
 """
 
 from __future__ import annotations
@@ -41,6 +41,8 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from owl_etl_spark.session import bounded_collect, literal_frame
 
 
 def _sigma(z):
@@ -62,7 +64,9 @@ def logistic_regression_fit(
     ``lr`` must be exactly representable in binary (default 0.5) so
     the update arithmetic is reproducible; a non-dyadic lr raises.
     ``y_col`` must be 0/1 integers; nulls raise (woven guard —
-    silently dropping a labeled row changes the gradient).
+    silently dropping a labeled row changes the gradient). More
+    distinct (y, x) combinations than ``session.DRIVER_REPLAY_MAX_ROWS``
+    raise: bucket the features.
     """
     num, den = float(lr).as_integer_ratio()
     # lr must be a power of two (1, 0.5, 0.25, …): then lr·gmean is an
@@ -84,41 +88,33 @@ def logistic_regression_fit(
         ).cast("long"),
     ).otherwise(y0)
     d = len(x_cols)
-    # Collapse to distinct feature/label combos ONCE (r12, guide §2.3
-    # "aggregate before you shuffle", applied to iteration): every
-    # per-row gradient term round(resid·x_j·1e6) is a pure function of
-    # (y, x_0..x_{d-1}), so summing cnt·term over the weighted distinct
-    # combos is bit-identical to summing term over rows — and each GD
-    # iteration then scans the collapsed frame (bounded by the feature
-    # cardinality product; bucketed covariates are the documented
-    # convention) instead of the data. Also fixes the silent
-    # re-computation of an uncached upstream: `work` was re-evaluated
-    # from `df`'s lineage on every iteration.
-    # r13 (guide §5 driver work / §1.2): the collapsed frame is bounded
-    # by the feature-combo cardinality (bucketed covariates are the
-    # documented convention — the same bound the r12 shape relied on to
-    # checkpoint it), so it is collected ONCE and the K GD iterations
-    # replay in exact driver arithmetic: ONE Spark job instead of a
-    # checkpoint plus K aggregate round-trips. Bit-identity with the
-    # JVM expression path, term by term: long products are exactly
-    # representable doubles (|x| ≤ ~10³, |w| ≤ ~10⁷ — the feature
-    # contract), the double fold runs in the same j-order, σ's
-    # 9-decimal snap and the micro-unit round both emulate Spark's
-    # ROUND (BigDecimal over the shortest decimal repr, HALF_UP —
-    # Python's repr() is the same shortest-repr algorithm), and the
-    # gradient totals are exact Python-int sums. libm: math.exp and
-    # the JVM's Math.exp may differ by 1 ulp; the 9-decimal σ snap
-    # exists to absorb exactly that (the DuckDB oracle already replays
-    # this trajectory through a THIRD exp and hash-matches).
-    rows = (
+    # Collapse to distinct (y, x_0..x_{d-1}) combos once: every per-row
+    # gradient term round(resid·x_j·1e6) is a pure function of the
+    # combo, so cnt-weighted sums over the combos are bit-identical to
+    # sums over rows. The combos replay on the driver (see
+    # session.bounded_collect). Bit-identity with the JVM expression
+    # path, term by term: long products are exactly representable
+    # doubles (|x| ≤ ~10³, |w| ≤ ~10⁷ — the feature contract), the
+    # double fold runs in the same j-order, σ's 9-decimal snap and the
+    # micro-unit round both emulate Spark's ROUND (HALF_UP over the
+    # shortest decimal repr, which Python's repr() also produces), and
+    # the gradient totals are exact int sums. math.exp and the JVM's
+    # Math.exp may differ by 1 ulp; the 9-decimal σ snap absorbs that
+    # (the DuckDB oracle replays this trajectory through a third exp).
+    rows = bounded_collect(
         df.select(
             y.alias("__y"),
             *[F.col(c).cast("long").alias(f"__x{j}") for j, c in enumerate(x_cols)],
         )
         .groupBy("__y", *[f"__x{j}" for j in range(d)])
         .agg(F.count(F.lit(1)).cast("long").alias("__cnt"))
-        .collect()
     )
+    if rows is None:
+        raise ValueError(
+            "logistic_regression_fit: more distinct (y, x) combinations than "
+            "the driver-replay cap (session.DRIVER_REPLAY_MAX_ROWS) — features "
+            "must be integer-valued and bounded; bucket them upstream"
+        )
     n = sum(r["__cnt"] for r in rows)
     if not n:
         raise ValueError("logistic_regression_fit: empty input")
@@ -398,6 +394,4 @@ def cv_logistic_report(
         + ", ".join(f"w_{c} long" for c in x_cols)
         + ", test_logloss_micro_nats long"
     )
-    from owl_etl_spark.session import literal_frame
-
     return literal_frame(spark, outs, schema).orderBy("fold")

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import bounded_collect, literal_frame
+
 MICRO = 1_000_000
 
 
@@ -53,7 +55,6 @@ def bradley_terry_strengths(
     loser_col: str = "loser",
     n_iters: int = 5,
     broadcast_items: bool = True,
-    max_driver_pairs: int = 4_000_000,
 ) -> DataFrame:
     """Fit Bradley-Terry strengths from a (winner, loser) outcome
     list; returns ``(item, wins, games, strength_micro)`` — strengths
@@ -100,18 +101,10 @@ def bradley_terry_strengths(
         )
         .localCheckpoint()
     )
-    # r13 (guide §5 driver work / §1.2): the unordered-pair record is
-    # bounded by distinct item PAIRS — tournament-sized, never
-    # game-list-sized — and the MM recurrence is all-integer (every
-    # division the exact-multiple floor-div, which Python's // computes
-    # directly), so when the sealed pair frame is model-sized it is
-    # collected once and the n_iters rounds replay in exact driver
-    # ints, bit-identically: one Spark job instead of two more seals
-    # plus 5×(two joins + aggregate + max-pivot + broadcast)
-    # micro-stages. Tournaments with more distinct pairs keep the
-    # distributed loop below (guarded by a count over sealed blocks).
-    if pairs.count() <= int(max_driver_pairs):
-        prows = [(r[0], r[1], r[2], r[3]) for r in pairs.collect()]
+    # exact driver replay when model-sized (session.bounded_collect)
+    rows = bounded_collect(pairs)
+    if rows is not None:
+        prows = [(r[0], r[1], r[2], r[3]) for r in rows]
         wins: dict = {}
         games_d: dict = {}
         for a, b, n, wa in prows:
@@ -141,8 +134,6 @@ def bradley_terry_strengths(
                 )
             pm = max(max(praw_d.values(), default=0), 1)
             r_d = {item: (p * 1_000_000) // pm for item, p in praw_d.items()}
-        from owl_etl_spark.session import literal_frame
-
         return literal_frame(
             games.sparkSession,
             [

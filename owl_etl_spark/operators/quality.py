@@ -85,14 +85,6 @@ def _type_of(df: DataFrame, col: str) -> str:
     return dict(df.dtypes)[col]
 
 
-def sum_invariant(df: DataFrame, sum_col: Column, lo: float = 0.95, hi: float = 1.05) -> DataFrame:
-    """Flag rows whose participation sum falls outside [lo, hi]
-    (reference warns — src/etl/transform.py:660-676; we attach a flag
-    column so downstream can filter, quarantine, or alert via
-    ``observe``)."""
-    return df.withColumn("sum_in_range", (sum_col >= lo) & (sum_col <= hi))
-
-
 def observed_counts(df: DataFrame, name: str, *metrics: Column):
     """Attach an ``Observation`` for job-metric accounting (A7) —
     replaces the reference's driver-side success/failure counters with

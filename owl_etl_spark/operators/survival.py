@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import bounded_collect, literal_frame
+
 
 def km_risk_table(
     df: DataFrame,
@@ -306,32 +308,24 @@ def cox_ph_fit(
     all stay in the risk set at t). Returns one row:
     (n, n_events, beta_micro, se_micro, grad_micro) — grad_micro is
     the final-iteration gradient (≈0 at convergence: a self-check the
-    caller can assert on).
+    caller can assert on). More distinct (duration, event, x)
+    combinations than ``session.DRIVER_REPLAY_MAX_ROWS`` raise: bucket
+    the duration and the covariate.
     """
-    # Collapse to distinct (t, e, x) combos ONCE (r12, guide §2.3
-    # applied to iteration): every per-duration aggregate term — the
-    # risk weight w = round(exp(β·x/1e6)·1e6), x·w, x²·w, the event
-    # counts — is a pure function of (t, e, x), so weighting by __cnt
-    # is bit-identical to scanning the rows, and each Newton iteration
-    # then aggregates the collapsed frame (≤ |t|·|e|·|x| rows; bucketed
-    # covariates are the documented convention) instead of the data.
-    # r13 (guide §5 driver work / §1.2): the collapsed frame is bounded
-    # by |t|·|e|·|x| (bucketed covariates are the documented convention
-    # — the same bound the r12 shape relied on to checkpoint it), so it
-    # is collected ONCE and the Newton iterations replay in exact
-    # driver arithmetic: ONE Spark job instead of a checkpoint plus
-    # n_iters aggregate round-trips plus a counts job. Bit-identity
-    # with the JVM expression path: risk weights snap to integer
-    # micro-units through Spark's ROUND (BigDecimal over the shortest
-    # decimal repr, HALF_UP — emulated by _jvm_round0), every suffix
+    # Collapse to distinct (t, e, x) combos once: every per-duration
+    # aggregate term — the risk weight w = round(exp(β·x/1e6)·1e6),
+    # x·w, x²·w, the event counts — is a pure function of (t, e, x), so
+    # weighting by __cnt is bit-identical to scanning the rows. The
+    # combos replay on the driver (see session.bounded_collect).
+    # Bit-identity with the JVM expression path: risk weights snap to
+    # integer micro-units through Spark's ROUND (HALF_UP over the
+    # shortest decimal repr — emulated by _jvm_round0), every suffix
     # S0/S1/S2 sum and gradient total is an exact Python-int sum, and
     # the per-event-time double terms run the same operation order.
-    # libm: math.exp and the JVM's Math.exp may differ by 1 ulp; the
+    # math.exp and the JVM's Math.exp may differ by 1 ulp; the
     # micro-unit snap absorbs it except within ~1e-10 of a half-micro
-    # boundary, and the bucketed covariate keeps the distinct exp
-    # inputs to a handful per iteration (the same argument, and the
-    # same DuckDB-replayed oracle gate, the docstring already makes).
-    rows = (
+    # boundary (the argument the docstring makes).
+    rows = bounded_collect(
         df.select(
             F.col(duration_col).cast("long").alias("__t"),
             F.col(event_col).cast("long").alias("__e"),
@@ -339,8 +333,14 @@ def cox_ph_fit(
         )
         .groupBy("__t", "__e", "__x")
         .agg(F.count(F.lit(1)).cast("long").alias("__cnt"))
-        .collect()
     )
+    if rows is None:
+        raise ValueError(
+            "cox_ph_fit: more distinct (duration, event, x) combinations than "
+            "the driver-replay cap (session.DRIVER_REPLAY_MAX_ROWS) — the "
+            "duration needs bucketing (integer units, e.g. days) and x must "
+            "be a bucketed covariate"
+        )
 
     import math as _math
 
@@ -415,9 +415,6 @@ def cox_ph_fit(
     n = sum(r["__cnt"] for r in rows)
     n_events = sum(r["__cnt"] for r in rows if r["__e"] == 1)
     se_micro = _round_half_away(1.0 / _math.sqrt(h_micro / 1_000_000.0) * 1_000_000.0)
-
-    from owl_etl_spark.session import literal_frame
-
     return literal_frame(
         df.sparkSession,
         [(n, n_events, beta, se_micro, g_micro)],

@@ -32,9 +32,3 @@ class Pipeline:
         for _, step in self.steps:
             df = step(df)
         return df
-
-    def explain_stages(self, df: DataFrame) -> list[str]:
-        """Stage names + the final fused plan (for plan review)."""
-        names = [n for n, _ in self.steps]
-        final = self.run(df)
-        return names + [final._jdf.queryExecution().explainString("formatted")]

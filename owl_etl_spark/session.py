@@ -136,6 +136,47 @@ def literal_frame(spark, rows, schema):
     return spark.createDataFrame(pdf, schema=_St.fromDDL(ddl))
 
 
+#: Row cap of a driver replay (see ``bounded_collect``).
+DRIVER_REPLAY_MAX_ROWS = 4_000_000
+
+
+def bounded_collect(df):
+    """Collect ``df`` if it has at most ``DRIVER_REPLAY_MAX_ROWS``
+    rows, else return None — the one guard of every driver replay.
+
+    Several operators iterate a fixed number of rounds over a frame
+    that is model-sized rather than corpus-sized (a quantized matrix,
+    a pair record, a dup-graph edge list, a collapsed design matrix).
+    Their recurrences are exact: integer sums, floor divisions that
+    Python's ``//`` computes directly, IEEE doubles of exact integers,
+    Spark's ROUND emulated term by term. So when the frame is small,
+    collecting it once and replaying the rounds in driver Python gives
+    bit-identical answers for the price of one Spark job, where the
+    distributed loop pays several jobs of join/aggregate/broadcast
+    micro-stages per round. A ``None`` sends the caller to its
+    distributed loop (or, for a fit without one, to an error).
+
+    The cap: a row of three BIGINTs is ~370 B of Python objects once
+    collected, so 4M rows is ~1.5 GB of driver heap and ~130 MB of
+    serialized result, under ``spark.driver.maxResultSize``'s 1 GiB
+    default; replay loops are O(rows × rounds) Python steps, tens of
+    seconds at the cap. At sf0.1 the largest frame a registered query
+    hands a replay is 52,694 rows (q305's Cox collapse) and the largest
+    dup graph 2,486 directed edges, so no tested scale sits near it.
+    The constant is read at call time (tests monkeypatch it to force
+    either path).
+
+    Precondition: ``df`` must be SEALED (``localCheckpoint``/cached)
+    or an aggregate whose final stage is model-sized. ``coalesce(1)``
+    folds everything back to the last shuffle into one task — that is
+    what makes this one Spark job (a bare ``limit`` scans 1, 4, 16 …
+    partitions, one job per step) — but on an unsealed narrow chain
+    over a big scan it would run that whole scan in a single task."""
+    cap = DRIVER_REPLAY_MAX_ROWS
+    rows = df.coalesce(1).limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None
+
+
 #: spread_for_cpu width sizing: bytes of (compressed, plan-estimated)
 #: input per task. Calibrated to the measured CPU density of the text
 #: chains this helper exists for (~3.4 ms CPU per compressed KB for

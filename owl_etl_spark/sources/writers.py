@@ -10,17 +10,8 @@ free) and snapshot-merge writes for gold tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_staged_json(df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("anio", "mes"), mode: str = "overwrite") -> None:
-    """S8/S9: staging layer partitioned by (year, month) — the
-    reference's folder-per-month convention as a partition spec.
-    JSON keeps the staging contract human-readable; switch to
-    ``.parquet`` for the compressed path at scale.
-    """
-    df.write.mode(mode).partitionBy(*partition_cols).json(path)
 
 
 def write_staged_parquet(df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("anio", "mes"), mode: str = "overwrite") -> None:

@@ -72,7 +72,7 @@ def test_ransac_candidates_are_broadcast(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_bradley_terry_default_is_literal_fallback_broadcasts(spark):
+def test_bradley_terry_default_is_literal_fallback_broadcasts(spark, monkeypatch):
     # r13: the MM fit replays driver-side over the bounded pair record
     # (the returned frame is a pure literal plan — no exchange, no
     # Python boundary); the DISTRIBUTED fallback for over-sized
@@ -83,6 +83,7 @@ def test_bradley_terry_default_is_literal_fallback_broadcasts(spark):
 
     from pyspark.sql import functions as F
 
+    from owl_etl_spark import session
     from owl_etl_spark.operators.pairwise import bradley_terry_strengths
 
     plan = _plan(spark, "q255_shipping_bradley_terry")
@@ -92,14 +93,15 @@ def test_bradley_terry_default_is_literal_fallback_broadcasts(spark):
         (F.col("id") % 7).cast("string").alias("winner"),
         ((F.col("id") % 7 + 1 + F.col("id") % 3) % 11).cast("string").alias("loser"),
     )
-    dist = bradley_terry_strengths(games, max_driver_pairs=0)
+    monkeypatch.setattr(session, "DRIVER_REPLAY_MAX_ROWS", 0)
+    dist = bradley_terry_strengths(games)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         dist.explain("formatted")
     assert "BroadcastExchange" in buf.getvalue()
 
 
-def test_power_iteration_default_is_literal_fallback_pivot_in_plan(spark):
+def test_power_iteration_default_is_literal_fallback_pivot_in_plan(spark, monkeypatch):
     # r13: the all-integer loop replays driver-side when the quantized
     # matrix is model-sized (literal result frame); the distributed
     # fallback for wide matrices must keep its scalar pivot IN-PLAN
@@ -110,6 +112,7 @@ def test_power_iteration_default_is_literal_fallback_pivot_in_plan(spark):
 
     from pyspark.sql import functions as F
 
+    from owl_etl_spark import session
     from owl_etl_spark.operators.linalg import power_iteration_top_eigvec
 
     plan = _plan(spark, "q253_embedding_top_eigvec")
@@ -121,7 +124,8 @@ def test_power_iteration_default_is_literal_fallback_pivot_in_plan(spark):
         (F.col("id") / 3).cast("int").alias("j"),
         (F.col("id") + 1).cast("long").alias("s"),
     ).filter("j >= i")
-    dist = power_iteration_top_eigvec(gram, n_iters=2, max_driver_cells=0)
+    monkeypatch.setattr(session, "DRIVER_REPLAY_MAX_ROWS", 0)
+    dist = power_iteration_top_eigvec(gram, n_iters=2)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         dist.explain("formatted")

@@ -283,13 +283,14 @@ def test_connected_components_lineage_truncated(spark):
     assert "LogicalRDD" in plan or "ExistingRDD" in plan, plan
 
 
-def test_connected_components_unconverged_raises(spark):
+def test_connected_components_unconverged_raises(spark, monkeypatch):
     """A truncated (max_iters-exhausted) labeling is not a clustering;
     strict mode must refuse to return it, non-strict must warn."""
     import warnings
 
     import pytest
 
+    from owl_etl_spark import session
     from owl_etl_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 8)], ["id_a", "id_b"])
@@ -297,13 +298,12 @@ def test_connected_components_unconverged_raises(spark):
     # force the distributed rounds (r13: the exact union-find fast path
     # for model-sized edge sets always converges — this test pins the
     # DISTRIBUTED loop's truncation contract)
+    monkeypatch.setattr(session, "DRIVER_REPLAY_MAX_ROWS", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, ids, max_iters=1, max_driver_edges=0)
+        connected_components(pairs, ids, max_iters=1)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        connected_components(
-            pairs, ids, max_iters=1, strict=False, max_driver_edges=0
-        ).collect()
+        connected_components(pairs, ids, max_iters=1, strict=False).collect()
     assert any("did not converge" in str(x.message) for x in w)
 
 
@@ -346,25 +346,27 @@ def test_star_contraction_converges_on_deep_chain(spark):
     assert out == {i: 1 for i in range(1, n + 1)}
 
 
-def test_star_contraction_nonstrict_one_row_per_node(spark):
+def test_star_contraction_nonstrict_one_row_per_node(spark, monkeypatch):
     """Non-strict + unconverged: the raw edge set is NOT a star (a
     node can be `hi` in several edges), so the non-strict path must
     still emit exactly one row per input id — labels may be truncated,
     but the shape contract (one component per node) holds."""
     import warnings
 
+    from owl_etl_spark import session
     from owl_etl_spark.operators.dedup import connected_components_star
 
     n = 60
     pairs = spark.createDataFrame([(i, i + 1) for i in range(1, n)], ["id_a", "id_b"])
     ids = spark.createDataFrame([(i,) for i in range(1, n + 1)], ["doc_id"])
+    monkeypatch.setattr(session, "DRIVER_REPLAY_MAX_ROWS", 0)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         # force the distributed rounds (r13 added an exact union-find
         # fast path for model-sized edge sets, which always converges —
         # this test pins the truncated DISTRIBUTED path's shape)
         rows = connected_components_star(
-            pairs, ids, max_iters=1, strict=False, max_driver_edges=0
+            pairs, ids, max_iters=1, strict=False
         ).collect()
     assert any("did not converge" in str(x.message) for x in w)
     assert len(rows) == n
@@ -423,11 +425,12 @@ def test_minhash_lsh_skew_guard_chunks_giant_buckets(spark):
     assert "REPARTITION_BY_COL" in plan or "hashpartitioning(band" in plan, plan
 
 
-def test_star_contraction_driver_path_matches_distributed(spark):
+def test_star_contraction_driver_path_matches_distributed(spark, monkeypatch):
     """r13: model-sized edge sets take an exact union-find driver path
     (literal mapping frame). Labels must equal the distributed star
     contraction's on the same graph — component = min reachable id is
     algorithm-independent, and this pins it."""
+    from owl_etl_spark import session
     from owl_etl_spark.operators.dedup import connected_components_star
 
     # two chains, a triangle, and singletons
@@ -440,20 +443,20 @@ def test_star_contraction_driver_path_matches_distributed(spark):
         (r.doc_id, r.component)
         for r in connected_components_star(pairs, ids).collect()
     )
+    monkeypatch.setattr(session, "DRIVER_REPLAY_MAX_ROWS", 0)
     dist = sorted(
         (r.doc_id, r.component)
-        for r in connected_components_star(
-            pairs, ids, max_driver_edges=0
-        ).collect()
+        for r in connected_components_star(pairs, ids).collect()
     )
     assert fast == dist
     assert dict(fast)[99] == 99  # singleton keeps its own id
 
 
-def test_min_label_cc_driver_path_matches_distributed(spark):
+def test_min_label_cc_driver_path_matches_distributed(spark, monkeypatch):
     """r13: model-sized dup graphs take the exact union-find driver
     path in connected_components too — labels must equal the
     distributed min-label rounds' on the same graph."""
+    from owl_etl_spark import session
     from owl_etl_spark.operators.dedup import connected_components
 
     edges = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)]
@@ -465,9 +468,10 @@ def test_min_label_cc_driver_path_matches_distributed(spark):
         (r.doc_id, r.component)
         for r in connected_components(pairs, ids).collect()
     )
+    monkeypatch.setattr(session, "DRIVER_REPLAY_MAX_ROWS", 0)
     dist = sorted(
         (r.doc_id, r.component)
-        for r in connected_components(pairs, ids, max_driver_edges=0).collect()
+        for r in connected_components(pairs, ids).collect()
     )
     assert fast == dist
     assert dict(fast)[99] == 99

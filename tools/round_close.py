@@ -13,13 +13,34 @@ Usage:
 
 Exit codes: bench failures (quality gates / regression guard) propagate
 — a failing bench leaves the tree untouched and exits nonzero, so a
-round can never close on a silently failing benchmark.
+round can never close on a silently failing benchmark. Before benching,
+queries whose behavior hash moved since their verified-green stamp and
+that sit outside the gate window (``tools/gate_manifest.py``) stop the
+close with exit code 3: re-verify (``tools/verify_sweep.py``) and
+re-stamp (``tools/stamp_manifest.py``) first.
 """
 import os
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def stale_queries() -> list[str]:
+    """Queries changed since their last verified-green stamp that the
+    external gate will not re-check (the test_gate_freshness rule)."""
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as entry
+    from tools.gate_manifest import (
+        GATE_WINDOW,
+        compute_hashes,
+        load_manifest,
+        stale_gate_violations,
+    )
+
+    return stale_gate_violations(
+        load_manifest(), compute_hashes(entry), list(entry.queries()), GATE_WINDOW
+    )
 
 
 def main() -> int:
@@ -36,6 +57,15 @@ def main() -> int:
             cwd=REPO,
         )
         return proc.returncode
+    stale = stale_queries()
+    if stale:
+        print(
+            f"round_close: {len(stale)} queries changed since their "
+            f"verified-green stamp: {stale} — run tools/verify_sweep.py, "
+            "then tools/stamp_manifest.py, before closing",
+            file=sys.stderr,
+        )
+        return 3
     env = dict(os.environ)
     # min-of-3 headline passes: single samples certify host weather,
     # not code (three consecutive closes flagged three disjoint query
