@@ -124,10 +124,10 @@ def cmd_load(args) -> int:
         silver = anti_filter(silver, skip, "_filename", "skip_name")
     latest = latest_per_key(
         silver, ["fic.nombre_fic", "fic.url"], "fic.fecha_corte", tiebreak=["_filename"]
-    ).persist()
+    )
     tables = to_star_schema(latest)
     write_gold_snapshot(tables, args.output)
-    print(json.dumps({"stage": "load", "documents": latest.count(),
+    print(json.dumps({"stage": "load", "documents": tables["fic"].count(),
                       "tables": sorted(tables)}))
     return 0
 

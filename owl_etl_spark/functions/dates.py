@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from owl_etl_spark.functions.text import _sql, sql_str
+
 #: Spanish month abbreviations/names → month number
 #: (reference: src/etl/transform.py:818-830).
 SPANISH_MONTHS = {
@@ -39,46 +41,70 @@ SPANISH_MONTHS = {
 }
 
 
-def _normalize_spanish_months(col: Column) -> Column:
-    """Lowercase + map Spanish month tokens to zero-padded numbers."""
-    out = F.lower(F.trim(col))
-    # Replace longest names first so 'sept' doesn't half-match 'sep'.
-    for name in sorted(SPANISH_MONTHS, key=len, reverse=True):
-        out = F.regexp_replace(out, rf"\b{name}\b", f"{SPANISH_MONTHS[name]:02d}")
-    return out
+_SEPARATORS = r"[/\s]+"
+_MONTH_YY = r"^(\d{1,2})-(\d{2})$"
+_DAY_MONTH_YY = r"^(\d{1,2})-(\d{1,2})-(\d{2})$"
 
 
-def _guard_year(d: Column) -> Column:
-    return F.when(F.year(d) >= 1990, d)
+def _month_pattern(month: int) -> str:
+    """One alternation regex for every spelling of ``month``, longest
+    first so 'sept' is tried before 'sep'."""
+    names = sorted((n for n, m in SPANISH_MONTHS.items() if m == month), key=len, reverse=True)
+    return rf"\b({'|'.join(names)})\b"
+
+
+def fecha_normalizada_sql(text_sql: str) -> str:
+    """SQL text of the parse chain's input: lowercased, trimmed, each
+    Spanish month spelling mapped to its zero-padded number (one regex
+    per month, 12 in all), separators unified to '-'.
+
+    A month name is a whole word between word boundaries and each is
+    replaced by digits, which are word characters too, so the order of
+    the 12 replacements cannot change the result.
+    """
+    out = f"lower(trim({text_sql}))"
+    for month in sorted(set(SPANISH_MONTHS.values())):
+        out = f"regexp_replace({out}, {sql_str(_month_pattern(month))}, '{month:02d}')"
+    return f"regexp_replace({out}, {sql_str(_SEPARATORS)}, '-')"
+
+
+def parse_fecha_normalizada_sql(norm_sql: str) -> str:
+    """SQL text of the ``coalesce`` of ``try_to_date`` attempts over a
+    string already normalized by :func:`fecha_normalizada_sql`, in the
+    reference's precedence order; a year before 1990 rejects an attempt
+    (src/etl/transform.py:929)."""
+    # 2-digit trailing year -> 20yy for the mm-yy / dd-mm-yy shapes.
+    s2 = f"regexp_replace({norm_sql}, {sql_str(_MONTH_YY)}, '$1-20$2')"
+    s3 = f"regexp_replace({norm_sql}, {sql_str(_DAY_MONTH_YY)}, '$1-$2-20$3')"
+
+    def t(src: str, fmt: str) -> str:
+        d = f"try_to_date({src}, '{fmt}')"
+        return f"CASE WHEN year({d}) >= 1990 THEN {d} END"
+
+    return "coalesce(" + ", ".join([
+        # month-year -> first of month (reference pattern 1/3)
+        t(f"concat('01-', {s2})", "dd-M-yyyy"),
+        # day-month-year (reference pattern 2/4, day-first before month-first)
+        t(s3, "d-M-yyyy"),
+        t(s3, "M-d-yyyy"),
+        # ISO and slashed ISO (separators already unified)
+        t(norm_sql, "yyyy-M-d"),
+        # year-month -> first of month
+        t(f"concat({norm_sql}, '-01')", "yyyy-M-dd"),
+    ]) + ")"
 
 
 def parse_fecha_robusta(col: Column) -> Column:
     """Multi-format date string → ``DateType`` (null if unparseable).
 
-    Composition of Spanish-month normalization + a ``coalesce`` of
-    ``try_to_date`` attempts in the reference's precedence order.
+    Spanish-month normalization, then a ``coalesce`` of ``try_to_date``
+    attempts in the reference's precedence order. The normalized string
+    is spelled once per attempt here; a plan that parses many rows of
+    one column can normalize it in its own projection first and hand
+    :func:`parse_fecha_normalizada_sql` the column, as the FIC pipeline
+    does. ``col`` is spliced as SQL text (see ``functions.text._sql``).
     """
-    s = _normalize_spanish_months(col)
-    # Unify separators to '-' for the pattern chain.
-    s = F.regexp_replace(s, r"[/\s]+", "-")
-    # 2-digit trailing year → 20yy for the mm-yy / dd-mm-yy shapes.
-    s2 = F.regexp_replace(s, r"^(\d{1,2})-(\d{2})$", r"$1-20$2")
-    s3 = F.regexp_replace(s, r"^(\d{1,2})-(\d{1,2})-(\d{2})$", r"$1-$2-20$3")
-
-    def t(src: Column, fmt: str) -> Column:
-        return _guard_year(F.try_to_date(src, fmt))
-
-    return F.coalesce(
-        # month-year → first of month (reference pattern 1/3)
-        t(F.concat(F.lit("01-"), s2), "dd-M-yyyy"),
-        # day-month-year (reference pattern 2/4, day-first before month-first)
-        t(s3, "d-M-yyyy"),
-        t(s3, "M-d-yyyy"),
-        # ISO and slashed ISO (separators already unified)
-        t(s, "yyyy-M-d"),
-        # year-month → first of month
-        t(F.concat(s, F.lit("-01")), "yyyy-M-dd"),
-    )
+    return F.expr(parse_fecha_normalizada_sql(fecha_normalizada_sql(_sql(col))))
 
 
 def parse_fecha_robusta_iso(col: Column) -> Column:

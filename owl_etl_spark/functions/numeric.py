@@ -10,6 +10,18 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from owl_etl_spark.functions.text import _sql, sql_str
+
+_NOT_NUMERIC = r"[^\d.\-]"
+
+
+def parse_numero_sql(text_sql: str) -> str:
+    """SQL text of :func:`parse_numero` over the expression ``text_sql``."""
+    return (
+        f"coalesce(try_cast({text_sql} AS DOUBLE), try_cast(regexp_replace("
+        f"translate(CAST({text_sql} AS STRING), ',', '.'), {sql_str(_NOT_NUMERIC)}, '') AS DOUBLE))"
+    )
+
 
 def parse_numero(col: Column) -> Column:
     """Lenient string→double parse (P7).
@@ -29,10 +41,10 @@ def parse_numero(col: Column) -> Column:
     (src/etl/transform.py:787-802), so it yields 15.0 — a locale bug
     this engine does not reproduce. Golden parity is unaffected (the
     fixtures carry no comma-decimal numerics).
+
+    ``col`` is spliced as SQL text (see ``functions.text._sql``).
     """
-    direct = col.try_cast("double")
-    cleaned = F.regexp_replace(F.translate(col.cast("string"), ",", "."), r"[^\d.\-]", "")
-    return F.coalesce(direct, cleaned.try_cast("double"))
+    return F.expr(parse_numero_sql(_sql(col)))
 
 
 def parse_percent(col: Column) -> Column:
@@ -142,7 +154,17 @@ def convert_if_needed_sql(path: str, scale: int = 6) -> str:
 
 
 def smart_percent_array_sql(arr_sql: str, key_field: str, scale: int = 6) -> str:
-    """SQL-text form of :func:`smart_percent_array`.
+    """Two-pass percentage normalization over an array of structs (P5),
+    as SQL text.
+
+    Pass 1 (intra-row ``aggregate``): sum + count of >1 values; pass 2
+    (intra-row ``transform``): convert each element per the detected
+    format. Mirrors the reference's per-category two-pass
+    (src/etl/transform.py:426-605) with zero shuffle — each category
+    is one array inside one row. ``arr_sql`` is the SQL of an
+    ``array<struct{<key_field>: string, participacion: double}>``;
+    the result has the same shape, participacion normalized to
+    fractional scale and rounded.
 
     The 'unknown' vote falls back to PER-VALUE conversion, exactly like
     the reference's ``_convertir_porcentaje_individual``
@@ -173,21 +195,3 @@ def smart_percent_array_sql(arr_sql: str, key_field: str, scale: int = 6) -> str
                    WHEN __fmt = 'x100' THEN round({v} / 100.0D, {scale})
                    WHEN __fmt = 'frac' THEN round({v}, {scale})
                    ELSE ({individual}) END))), 1)"""
-
-
-def smart_percent_array(arr_sql: str, key_field: str, scale: int = 6) -> Column:
-    """Two-pass percentage normalization over an array of structs (P5).
-
-    Pass 1 (intra-row ``aggregate``): sum + count of >1 values; pass 2
-    (intra-row ``transform``): convert each element per the detected
-    format. Mirrors the reference's per-category two-pass
-    (src/etl/transform.py:426-605) with zero shuffle — each category
-    is one array inside one row, so higher-order functions do the
-    whole job inside WholeStageCodegen.
-
-    ``arr_sql`` is the SQL path of an
-    ``array<struct{<key_field>: string, participacion: double}>``
-    column; returns the same shape, participacion normalized to
-    fractional scale and rounded.
-    """
-    return F.expr(smart_percent_array_sql(arr_sql, key_field, scale))

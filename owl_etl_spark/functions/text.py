@@ -79,7 +79,10 @@ def char_ngrams(col: Column, n: int = 5) -> Column:
 
 
 def _sql(col: Column) -> str:
-    # Column → SQL text for embedding inside higher-order expressions.
+    # Column → SQL text for embedding in expression text. Column
+    # references, function calls and F.expr columns render as parseable
+    # SQL; arithmetic built with Python operators does not (it renders
+    # as e.g. "*(a, 2.5)"), so wrappers built on this take the former.
     from pyspark.sql.classic.column import Column as ClassicColumn
 
     if isinstance(col, ClassicColumn):
@@ -87,34 +90,52 @@ def _sql(col: Column) -> str:
     raise TypeError("expected a classic Column")
 
 
-def keyword_class_score(col: Column, keywords: list[str]) -> Column:
-    """Count how many of ``keywords`` appear in the lowercased text —
-    the reference's per-class score (src/etl/transform.py:144-156)."""
-    low = F.lower(col)
-    score = F.lit(0)
-    for kw in keywords:
-        score = score + F.when(low.contains(kw.lower()), 1).otherwise(0)
-    return score
+def sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal (quotes and backslashes
+    escaped), for splicing into expression text."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def classify_keywords_sql(text_sql: str, class_keywords: dict[str, list[str]], default: str = "Desconocido") -> str:
+    """SQL text of :func:`classify_keywords` over the expression ``text_sql``."""
+    if not class_keywords:
+        return sql_str(default)
+    n = len(class_keywords)
+    m = max(n, 2)
+    low = f"lower({text_sql})"
+    codes = []
+    for i, kws in enumerate(class_keywords.values()):
+        hits = " + ".join(
+            f"CASE WHEN contains({low}, {sql_str(kw.lower())}) THEN 1 ELSE 0 END" for kw in kws
+        )
+        codes.append(f"(({hits or '0'}) * {m} - {i + 1})")
+    best = f"greatest({', '.join(codes)})" if n > 1 else codes[0]
+    # slot 1: no keyword matched; slot m + 1 - i: class i
+    slots = [default] * (m - n + 1) + list(reversed(class_keywords))
+    return (
+        f"coalesce(element_at(array({', '.join(map(sql_str, slots))}), {best} % {m} + 2), "
+        f"{sql_str(default)})"
+    )
 
 
 def classify_keywords(col: Column, class_keywords: dict[str, list[str]], default: str = "Desconocido") -> Column:
     """Keyword-count argmax classifier (P2 generalized).
 
-    Ties and zero-match fall to ``default`` unless exactly one class
-    attains the max (the reference tie-breaks by insertion order of a
-    dict + fallback rules; we use first-declared-class-wins on ties,
-    matching Python's ``max`` over dict items).
+    A class scores one per keyword contained in the lowercased text
+    (the reference's per-class score, src/etl/transform.py:144-156).
+    The highest score wins; ties go to the first-declared class
+    (Python's ``max`` over dict items); no match, or a null text, gives
+    ``default``.
+
+    Each score is built once and the argmax is one integer ``greatest``:
+    class ``i`` of ``n`` encodes as ``score * m - (i + 1)`` with
+    ``m = max(n, 2)``, so a higher score always wins, a tie goes to the
+    lower index, and an all-zero row maximizes at ``-1``. ``code % m``
+    then indexes a literal array of class names (``-1 % m = -1`` lands
+    on ``default``). No higher-order lambda: those run interpreted.
+    ``col`` is spliced as SQL text (see ``_sql``).
     """
-    scores = {name: keyword_class_score(col, kws) for name, kws in class_keywords.items()}
-    best = F.greatest(*scores.values()) if len(scores) > 1 else next(iter(scores.values()))
-    out = F.lit(default)
-    # Python max() returns the FIRST maximal item → check in declaration
-    # order, first match wins.
-    expr = None
-    for name in class_keywords:
-        cond = scores[name] == best
-        expr = F.when((best > 0) & cond, name) if expr is None else expr.when((best > 0) & cond, name)
-    return expr.otherwise(out) if expr is not None else out
+    return F.expr(classify_keywords_sql(_sql(col), class_keywords, default))
 
 
 #: The reference's four keyword classes, verbatim facts from

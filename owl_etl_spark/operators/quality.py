@@ -63,26 +63,23 @@ def date_folder_consistency(fecha_corte_iso: Column, anio: Column, mes: Column) 
 
 def repair_structure(df: DataFrame) -> DataFrame:
     """P10: backfill absent lists/structs on the FIC document
-    (reference: src/etl/transform.py:755-784) — pure ``coalesce``.
+    (reference: src/etl/transform.py:755-784) — pure ``coalesce``, one
+    ``withColumns``.
     """
-    out = df
-    for list_col in ("plazo_duracion", "principales_inversiones", "rentabilidad_volatilidad"):
-        if list_col in df.columns:
-            out = out.withColumn(
-                list_col, F.coalesce(F.col(list_col), F.expr(f"CAST(array() AS {_type_of(df, list_col)})"))
-            )
-    if "composicion_portafolio" in df.columns:
+    types = dict(df.dtypes)
+    fills = {
+        c: f"coalesce({c}, CAST(array() AS {types[c]}))"
+        for c in ("plazo_duracion", "principales_inversiones", "rentabilidad_volatilidad")
+        if c in types
+    }
+    if "composicion_portafolio" in types:
         fields = ", ".join(
             f"'{name}', coalesce(composicion_portafolio.{name}, "
             f"CAST(array() AS array<struct<{key}: string, participacion: double>>))"
             for name, key in COMPOSICION_CATEGORIES.items()
         )
-        out = out.withColumn("composicion_portafolio", F.expr(f"named_struct({fields})"))
-    return out
-
-
-def _type_of(df: DataFrame, col: str) -> str:
-    return dict(df.dtypes)[col]
+        fills["composicion_portafolio"] = f"named_struct({fields})"
+    return df.withColumns({c: F.expr(sql) for c, sql in fills.items()})
 
 
 def observed_counts(df: DataFrame, name: str, *metrics: Column):

@@ -6,9 +6,9 @@ Surrogate keys are deterministic hashes of the logical key — replay-
 stable and distributed-safe, replacing Postgres autoincrement
 (SURVEY.md §7.4).
 
-Every table derives from ONE silver snapshot, so a re-run converges to
-the same state (idempotent) even though Spark has no cross-table
-transaction (the documented weaker guarantee).
+Every table derives from ONE sealed silver snapshot, so a re-run
+converges to the same state (idempotent) even though Spark has no
+cross-table transaction (the documented weaker guarantee).
 """
 
 from __future__ import annotations
@@ -153,9 +153,18 @@ def raw_json_table(df: DataFrame, tipo: str = "transformed") -> DataFrame:
 
 
 def to_star_schema(silver: DataFrame) -> dict[str, DataFrame]:
-    """One silver snapshot → all 8 gold tables (S10 as pure projection;
-    write/merge policy belongs to the caller/sink layer)."""
-    keyed = with_fic_id(silver)
+    """One silver snapshot → every gold table (S10; write/merge policy
+    belongs to the caller/sink layer).
+
+    Not a pure projection: the keyed snapshot is sealed once here with
+    ``localCheckpoint(eager=True)`` — one eager job now — so each table
+    is one scan of the seal and its write is a single job, instead of
+    every table re-running the silver read, its recency window and the
+    key. The sealed blocks have no lineage: losing an executor fails the
+    later writes instead of recomputing them (the package targets local
+    / single-executor runs, as ``split_by_predicate`` does).
+    """
+    keyed = with_fic_id(silver).localCheckpoint(eager=True)
     return {
         "fic": fic_hub(keyed),
         "composicion_portafolio": composicion_table(keyed),

@@ -9,35 +9,39 @@ Stage order matches ``transform_fic_data``:
 3. robust date parsing (P8) on the 3 date fields
 4. lenient numeric parsing (P7) on caracteristicas numerics
 5. fund-type keyword classification (P2)
-6. URL enrichment via fuzzy lookup join (J1)
+6. URL enrichment via fuzzy lookup (J1)
 7. monetary descale (P4)
 8. structure repair (P10)
 
 Unlike the reference (which re-reads the lookup file per record —
-src/etl/transform.py:205-216), the URL join is a broadcast join done
-once for the whole corpus; everything else is per-row expressions in a
-single fused projection — the entire pipeline is 1 broadcast join +
-0 shuffles.
+src/etl/transform.py:205-216), the lookup is folded once into a single
+broadcast row of candidates and cross-joined onto every document; each
+document then picks its URL with a per-row expression. Everything else
+is per-row expressions in two projections, so the whole pipeline is one
+broadcast + 0 shuffles, one stage.
 
-The agency match is one higher-order expression, so the plan does not
-grow per candidate agency (see ``_agency_match``).
+The stages' expressions are SQL text built once per process
+(``_stage_sql``) and applied as one ``withColumns`` and one ``select``:
+building the plan costs a few hundred py4j round trips and three
+analyses, not one analysis per stage.
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from owl_etl_spark.functions.dates import parse_fecha_robusta_iso
+from owl_etl_spark.functions.dates import fecha_normalizada_sql, parse_fecha_normalizada_sql
 from owl_etl_spark.functions.numeric import (
     convert_if_needed_sql,
     descale_monetary,
-    parse_numero,
+    parse_numero_sql,
     parsed_participation_sql,
-    smart_percent_array,
     smart_percent_array_sql,
 )
-from owl_etl_spark.functions.text import FIC_CLASS_KEYWORDS, classify_keywords
+from owl_etl_spark.functions.text import FIC_CLASS_KEYWORDS, _sql, classify_keywords_sql, sql_str
 from owl_etl_spark.operators.quality import repair_structure
 from owl_etl_spark.schemas import COMPOSICION_CATEGORIES
 
@@ -98,30 +102,38 @@ _HORIZONS = [
 ]
 
 
-def _normalize_percentages(df: DataFrame) -> DataFrame:
+#: Stage 3's date fields, each normalized into a temporary column.
+_DATES = {
+    "__fecha_corte": "fic.fecha_corte",
+    "__fecha_inicio": "caracteristicas.fecha_inicio_operaciones",
+    "__fecha_calif": "calificacion.fecha_ultima_calificacion",
+}
+
+
+def _percentages_sql() -> tuple[dict[str, str], dict[str, str]]:
     """Stage 1 — lenient percent parse (string participacion survives
     the typed read — see schemas._part_array), then P5 on every
-    participation array, P6 on horizons."""
-    out = df.withColumn(
-        "plazo_duracion",
-        smart_percent_array(parsed_participation_sql("plazo_duracion", "plazo"), "plazo"),
-    ).withColumn(
-        "principales_inversiones",
-        smart_percent_array(
-            parsed_participation_sql("principales_inversiones", "emisor"), "emisor"
-        ),
-    )
-    comp_fields = ", ".join(
-        f"'{name}', "
-        + smart_percent_array_sql(
-            parsed_participation_sql(f"composicion_portafolio.{name}", key), key
-        )
-        for name, key in COMPOSICION_CATEGORIES.items()
-    )
-    out = out.withColumn(
-        "composicion_portafolio",
-        F.expr(f"named_struct({comp_fields})"),
-    )
+    participation array, P6 on horizons.
+
+    Returns (temporaries, columns): each parsed participation array is
+    a temporary, because the P5 format vote reads it about ten times.
+    """
+    arrays = {
+        "plazo_duracion": ("plazo_duracion", "plazo"),
+        "principales_inversiones": ("principales_inversiones", "emisor"),
+        **{
+            name: (f"composicion_portafolio.{name}", key)
+            for name, key in COMPOSICION_CATEGORIES.items()
+        },
+    }
+    parsed = {
+        f"__pct_{name}": parsed_participation_sql(path, key) for name, (path, key) in arrays.items()
+    }
+
+    def normalized(name: str) -> str:
+        return smart_percent_array_sql(f"__pct_{name}", arrays[name][1])
+
+    comp_fields = ", ".join(f"'{name}', {normalized(name)}" for name in COMPOSICION_CATEGORIES)
 
     def horizon_struct(side: str) -> str:
         fields = ", ".join(
@@ -129,19 +141,18 @@ def _normalize_percentages(df: DataFrame) -> DataFrame:
         )
         return f"named_struct({fields})"
 
-    out = out.withColumn(
-        "rentabilidad_volatilidad",
-        F.expr(
-            f"""transform(rentabilidad_volatilidad, rv -> named_struct(
-                  'tipo_de_participacion', rv.tipo_de_participacion,
-                  'rentabilidad_historica_ea', {horizon_struct('rentabilidad_historica_ea')},
-                  'volatilidad_historica', {horizon_struct('volatilidad_historica')}))"""
-        ),
-    )
-    return out
+    return parsed, {
+        "plazo_duracion": normalized("plazo_duracion"),
+        "principales_inversiones": normalized("principales_inversiones"),
+        "composicion_portafolio": f"named_struct({comp_fields})",
+        "rentabilidad_volatilidad": f"""transform(rentabilidad_volatilidad, rv -> named_struct(
+              'tipo_de_participacion', rv.tipo_de_participacion,
+              'rentabilidad_historica_ea', {horizon_struct('rentabilidad_historica_ea')},
+              'volatilidad_historica', {horizon_struct('volatilidad_historica')}))""",
+    }
 
 
-def _agency_match(col: Column, agencies: list[str], cutoff: float = 0.8) -> Column:
+def _agency_match_sql(probe_sql: str, agencies: tuple[str, ...], cutoff: float = 0.8) -> str:
     """Best-matching agency (as the caller spelled it) or null (J2
     semantics: similarity ≥ cutoff, else substring containment —
     reference src/etl/transform.py:679-733).
@@ -154,189 +165,152 @@ def _agency_match(col: Column, agencies: list[str], cutoff: float = 0.8) -> Colu
     Scorer is levenshtein-ratio (the built-in approximation; difflib
     parity available via functions.similarity.difflib_ratio as an
     opt-in UDF scorer).
+
+    Containment ties: the reference iterates a SET here (its pick is
+    interpreter-hash-order dependent); ties break by the match appearing
+    earliest in the probe, then the tighter (shorter) canonical — which
+    reproduces the checked-in goldens.
     """
-    probe = F.upper(F.trim(col))
-    candidates = F.array(
-        *[F.struct(F.lit(a).alias("name"), F.lit(a.upper()).alias("key")) for a in agencies]
+    probe = f"upper(trim({probe_sql}))"
+    candidates = "array(" + ", ".join(
+        f"named_struct('name', {sql_str(a)}, 'key', {sql_str(a.upper())})" for a in agencies
+    ) + ")"
+    sim = f"(1.0D - levenshtein({probe}, c.key) / greatest(length({probe}), length(c.key)))"
+    contained = f"(contains({probe}, c.key) OR contains(c.key, {probe}))"
+    contained_score = (
+        f"(0.801D + 0.001D / (1 + greatest(position(c.key, {probe}) - 1, 0))"
+        " + 0.0001D / length(c.name))"
     )
-
-    def score(cand: Column) -> Column:
-        key = cand["key"]
-        max_len = F.greatest(F.length(probe), F.length(key))
-        sim = F.lit(1.0) - F.levenshtein(probe, key) / max_len
-        contained = probe.contains(key) | key.contains(probe)
-        # Containment ties: the reference iterates a SET here (its pick
-        # is interpreter-hash-order dependent); we break ties by the
-        # match appearing earliest in the probe, then the tighter
-        # (shorter) canonical — which reproduces the checked-in goldens.
-        contained_score = (
-            F.lit(0.801)
-            + F.lit(0.001) / (1 + F.greatest(F.position(key, probe) - 1, F.lit(0)))
-            + F.lit(0.0001) / F.length(cand["name"])
-        )
-        return F.when(probe.isNull() | (probe == ""), F.lit(-1.0)).otherwise(
-            F.when(contained & (sim < cutoff), contained_score).otherwise(sim)
-        )
-
-    scores = F.transform(candidates, score)
-    best = F.array_max(scores)
-    pick = F.element_at(candidates, F.array_position(scores, best).cast("int"))
-    return F.when(best >= cutoff, pick["name"])
-
-
-def _normalize_agencies(df: DataFrame, agencies: list[str]) -> DataFrame:
-    """Stage 2 — J2: normalized agency name + boolean flag inside the
-    calificacion struct (reference writes both — transform.py:699-702)."""
-    ent = F.col("calificacion.entidad_calificadora")
-    matched = _agency_match(ent, agencies)
-    # flag stays NULL when the field is absent/empty — the reference
-    # only writes it when an entidad value exists (transform.py:691-703)
-    flag = F.when(ent.isNull() | (F.trim(ent) == ""), F.lit(None).cast("boolean")).otherwise(
-        matched.isNotNull()
+    scores = (
+        f"transform({candidates}, c -> CASE WHEN {probe} IS NULL OR {probe} = '' THEN -1.0D "
+        f"ELSE CASE WHEN {contained} AND {sim} < {cutoff}D THEN {contained_score} "
+        f"ELSE {sim} END END)"
     )
-    return df.withColumn(
-        "calificacion",
-        F.col("calificacion")
-        .withField("entidad_calificadora", F.coalesce(matched, ent))
-        .withField("entidad_calificadora_normalizada", flag),
+    best = f"array_max({scores})"
+    return (
+        f"CASE WHEN {best} >= {cutoff}D THEN "
+        f"element_at({candidates}, CAST(array_position({scores}, {best}) AS INT)).name END"
     )
 
 
-def _parse_dates(df: DataFrame) -> DataFrame:
-    """Stage 3 — P8 on the three date fields; ISO-string output keeps
-    the reference's store-as-string convention (lexicographic compare
-    stays valid). Unparseable values keep the ORIGINAL string
-    (reference: src/etl/transform.py:955-963 warns and leaves the
-    field untouched); downstream validity gates treat non-ISO as null.
-    """
-
-    def parse_keep(path: str) -> Column:
-        return F.coalesce(parse_fecha_robusta_iso(F.col(path)), F.col(path))
-
-    return df.withColumn(
-        "fic",
-        F.col("fic").withField("fecha_corte", parse_keep("fic.fecha_corte")),
-    ).withColumn(
-        "caracteristicas",
-        F.col("caracteristicas").withField(
-            "fecha_inicio_operaciones", parse_keep("caracteristicas.fecha_inicio_operaciones")
-        ),
-    ).withColumn(
-        "calificacion",
-        F.col("calificacion").withField(
-            "fecha_ultima_calificacion", parse_keep("calificacion.fecha_ultima_calificacion")
-        ),
-    )
+def _agency_match(col: Column, agencies: list[str], cutoff: float = 0.8) -> Column:
+    """Column form of :func:`_agency_match_sql`."""
+    return F.expr(_agency_match_sql(_sql(col), tuple(agencies), cutoff))
 
 
-def _parse_numerics(df: DataFrame) -> DataFrame:
-    """Stage 4 — P7: lenient re-parse of caracteristicas numerics (they
-    may arrive as strings upstream of the typed schema; with a typed
-    read this is a no-op guard)."""
-    return df.withColumn(
-        "caracteristicas",
-        F.col("caracteristicas")
-        .withField("valor", parse_numero(F.col("caracteristicas.valor")))
-        .withField(
-            "no_unidades_en_circulacion",
-            parse_numero(F.col("caracteristicas.no_unidades_en_circulacion")),
-        ),
-    )
+_ALIAS_SEPARATORS = r"[\s_\-]+"
+_SPACES = r"[\s_]+"
 
 
-def _classify_tipo(df: DataFrame) -> DataFrame:
-    """Stage 5 — P2: keyword-argmax fund classification into fic.tipo."""
-    return df.withColumn(
-        "fic",
-        F.col("fic").withField(
-            "tipo", classify_keywords(F.col("fic.politica_de_inversion"), FIC_CLASS_KEYWORDS)
-        ),
-    )
-
-
-def _alias_expr(col: Column, aliases: dict[str, str]) -> Column:
+def _alias_sql(col_sql: str, aliases: tuple[tuple[str, str], ...]) -> str:
     """Alias lookup on the reference's normalized key: lowercase with
-    spaces/dashes/underscores stripped (src/etl/transform.py:299-302)."""
-    norm = F.regexp_replace(F.lower(col), r"[\s_\-]+", "")
-    out = col
-    for k, v in aliases.items():
-        out = F.when(norm == k, v).otherwise(out)
-    return out
+    spaces/dashes/underscores stripped (src/etl/transform.py:299-302) —
+    one literal-map lookup, the name itself when the key is unknown."""
+    amap = "map(" + ", ".join(f"{sql_str(k)}, {sql_str(v)}" for k, v in aliases) + ")"
+    norm = f"regexp_replace(lower({col_sql}), {sql_str(_ALIAS_SEPARATORS)}, '')"
+    return f"coalesce(element_at({amap}, {norm}), {col_sql})"
 
 
-def _enrich_url(df: DataFrame, lookup: DataFrame, aliases: dict[str, str]) -> DataFrame:
-    """Stage 6 — J1: attach fic.url from the (banco, fic, url) lookup.
+def _bank_sql(col_sql: str, aliases: tuple[tuple[str, str], ...]) -> str:
+    return f"lower(regexp_replace({_alias_sql(col_sql, aliases)}, {sql_str(_SPACES)}, ''))"
 
-    Two-level match per the reference (transform.py:171-269): bank by
-    alias-map → exact-normalized → containment; fund within the bank by
-    normalized exact → best similarity above threshold. Implemented as
-    ONE broadcast fuzzy join: candidates are restricted to the matched
-    bank, scored, top-1 by window — the reference's O(records × dims)
-    driver loop becomes a single broadcast hash join.
+
+def _fund_sql(col_sql: str) -> str:
+    return f"lower(regexp_replace({col_sql}, {sql_str(_SPACES)}, ' '))"
+
+
+def _candidates_sql(aliases: tuple[tuple[str, str], ...]) -> str:
+    """The whole (banco, fic, url) lookup as one array of normalized
+    candidates — one row, broadcast to every document."""
+    return (
+        f"collect_list(named_struct('bank', {_bank_sql('banco', aliases)}, "
+        f"'fund', {_fund_sql('fic')}, 'url', url)) AS __cands"
+    )
+
+
+#: Stage 6 — J1, per document over the broadcast candidates. Bank by
+#: alias-map → exact-normalized → containment either way; fund within
+#: the bank by normalized exact (2.0) → levenshtein ratio, kept at
+#: ≥ 0.7 (a null fund scores null and is dropped) (reference
+#: transform.py:171-269). The best is the smallest (-similarity, fund,
+#: url): similarity desc, then fund asc, then url asc — a total order,
+#: so the pick never depends on lookup row order.
+_URL_PICK_SQL = """array_min(filter(transform(
+      filter(__cands, c -> c.bank = __bank OR contains(__bank, c.bank) OR contains(c.bank, __bank)),
+      c -> named_struct(
+        'rank', -CASE WHEN __fund = c.fund THEN 2.0D
+                      ELSE 1.0D - levenshtein(__fund, c.fund)
+                                  / greatest(length(__fund), length(c.fund)) END,
+        'fund', c.fund,
+        'url', c.url)),
+    c -> c.rank <= -0.7D)).url"""
+
+
+def _parse_keep_sql(norm_col: str, path: str) -> str:
+    """Stage 3 — P8 on one date field; ISO-string output keeps the
+    reference's store-as-string convention (lexicographic compare stays
+    valid). Unparseable values keep the ORIGINAL string (reference:
+    src/etl/transform.py:955-963 warns and leaves the field untouched);
+    downstream validity gates treat non-ISO as null."""
+    return f"coalesce(date_format({parse_fecha_normalizada_sql(norm_col)}, 'yyyy-MM-dd'), {path})"
+
+
+@functools.lru_cache(maxsize=None)
+def _stage_sql(
+    agencies: tuple[str, ...], aliases: tuple[tuple[str, str], ...], with_urls: bool
+) -> tuple[dict[str, str], dict[str, str], dict[str, list[tuple[str, str]]]]:
+    """SQL text of the transform's two projections, built once per process.
+
+    Returns (temporaries, columns, fields). The first projection adds the
+    temporaries that later stages read more than once: the parsed
+    participation arrays, the normalized date strings, the agency match,
+    the parsed ``valor`` and the normalized bank and fund. The second
+    replaces whole columns (stage 1) and writes struct fields, as
+    (field, SQL) per struct column applied in order.
+
+    Each temporary is read several times by the second projection, so
+    Catalyst keeps the two apart (CollapseProject does not inline a
+    costly expression it would copy): it runs once per row and appears
+    once in the plan.
     """
-    from pyspark.sql import Window
-
-    probe = df.withColumn(
-        "__bank_norm",
-        F.lower(F.regexp_replace(_alias_expr(F.col("banco"), aliases), r"[\s_]+", "")),
-    ).withColumn("__fund_norm", F.lower(F.regexp_replace(F.col("fondo"), r"[\s_]+", " ")))
-    dim = lookup.select(
-        F.lower(F.regexp_replace(_alias_expr(F.col("banco"), aliases), r"[\s_]+", "")).alias(
-            "__d_bank"
-        ),
-        F.lower(F.regexp_replace(F.col("fic"), r"[\s_]+", " ")).alias("__d_fund"),
-        F.col("url").alias("__url"),
+    ent = "calificacion.entidad_calificadora"
+    parsed, columns = _percentages_sql()
+    temps = {
+        **parsed,
+        **{tmp: fecha_normalizada_sql(path) for tmp, path in _DATES.items()},
+        "__agency": _agency_match_sql(ent, agencies),
+        "__valor": parse_numero_sql("caracteristicas.valor"),
+    }
+    if with_urls:
+        temps["__bank"] = _bank_sql("banco", aliases)
+        temps["__fund"] = _fund_sql("fondo")
+    # stage 2's flag stays NULL when the field is absent/empty — the
+    # reference only writes it when an entidad value exists
+    # (transform.py:691-703)
+    flag = (
+        f"CASE WHEN {ent} IS NULL OR trim({ent}) = '' THEN CAST(NULL AS BOOLEAN) "
+        "ELSE __agency IS NOT NULL END"
     )
-    # Top-1 window key: the reference layout repeats the same
-    # <bank>_<fund>_raw.json basename across monthly folders, so
-    # partitioning by _filename alone would collapse a multi-month read
-    # to one surviving row per basename (dropping whole documents, not
-    # just URLs). Key on the full path when the scan provides it, else
-    # a per-row unique id so each input record keeps exactly one row.
-    if "_filepath" in probe.columns:
-        probe = probe.withColumn("__doc_key", F.col("_filepath"))
-    else:
-        probe = probe.withColumn("__doc_key", F.monotonically_increasing_id())
-    cand = probe.join(
-        F.broadcast(dim),
-        (F.col("__bank_norm") == F.col("__d_bank"))
-        | F.col("__bank_norm").contains(F.col("__d_bank"))
-        | F.col("__d_bank").contains(F.col("__bank_norm")),
-        "left",
-    )
-    max_len = F.greatest(F.length("__fund_norm"), F.length("__d_fund"))
-    sim = F.when(F.col("__d_fund").isNull(), F.lit(-1.0)).otherwise(
-        F.when(F.col("__fund_norm") == F.col("__d_fund"), F.lit(2.0)).otherwise(
-            F.lit(1.0) - F.levenshtein("__fund_norm", "__d_fund") / max_len
-        )
-    )
-    w = Window.partitionBy("__doc_key").orderBy(
-        F.desc("__sim"), F.asc_nulls_last("__d_fund")
-    )
-    best = (
-        cand.withColumn("__sim", sim)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-    )
-    return best.withColumn(
-        "fic",
-        F.col("fic").withField(
-            "url", F.when(F.col("__sim") >= 0.7, F.col("__url"))
-        ),
-    ).drop(
-        "__bank_norm", "__fund_norm", "__d_bank", "__d_fund", "__url",
-        "__sim", "__rn", "__doc_key",
-    )
-
-
-def _descale_valor(df: DataFrame) -> DataFrame:
-    """Stage 7 — P4: monetary descale of caracteristicas.valor."""
-    return df.withColumn(
-        "caracteristicas",
-        F.col("caracteristicas").withField(
-            "valor", descale_monetary(F.col("caracteristicas.valor"), max_iters=6)
-        ),
-    )
+    fields = {
+        "fic": [
+            ("fecha_corte", _parse_keep_sql("__fecha_corte", "fic.fecha_corte")),
+            ("tipo", classify_keywords_sql("fic.politica_de_inversion", FIC_CLASS_KEYWORDS)),
+            ("url", _URL_PICK_SQL if with_urls else "CAST(NULL AS STRING)"),
+        ],
+        "caracteristicas": [
+            ("fecha_inicio_operaciones",
+             _parse_keep_sql("__fecha_inicio", "caracteristicas.fecha_inicio_operaciones")),
+            ("no_unidades_en_circulacion",
+             parse_numero_sql("caracteristicas.no_unidades_en_circulacion")),
+        ],
+        "calificacion": [
+            ("entidad_calificadora", f"coalesce(__agency, {ent})"),
+            ("entidad_calificadora_normalizada", flag),
+            ("fecha_ultima_calificacion",
+             _parse_keep_sql("__fecha_calif", "calificacion.fecha_ultima_calificacion")),
+        ],
+    }
+    return temps, columns, fields
 
 
 def transform_fic_documents(
@@ -349,17 +323,31 @@ def transform_fic_documents(
 
     ``df`` is a FIC_RAW_SCHEMA DataFrame with file-metadata columns
     (``banco``, ``fondo``, ``_filename`` — see sources.readers); returns
-    the FIC_TRANSFORMED shape.
+    the FIC_TRANSFORMED shape, one row per input row.
     """
-    out = _normalize_percentages(df)
-    out = _normalize_agencies(out, agencies or RATING_AGENCIES)
-    out = _parse_dates(out)
-    out = _parse_numerics(out)
-    out = _classify_tipo(out)
+    aliases = tuple((bank_aliases or BANK_ALIASES).items())
+    temps, columns, fields = _stage_sql(
+        tuple(agencies or RATING_AGENCIES), aliases, url_lookup is not None
+    )
+    names = df.columns
     if url_lookup is not None:
-        out = _enrich_url(out, url_lookup, bank_aliases or BANK_ALIASES)
-    else:
-        out = out.withColumn("fic", F.col("fic").withField("url", F.lit(None).cast("string")))
-    out = _descale_valor(out)
-    out = repair_structure(out)
-    return out
+        cands = url_lookup.coalesce(1).selectExpr(_candidates_sql(aliases))
+        df = df.crossJoin(F.broadcast(cands))
+    staged = df.withColumns({name: F.expr(sql) for name, sql in temps.items()})
+
+    def stage(name: str) -> Column | str:
+        if name in columns:
+            return F.expr(columns[name]).alias(name)
+        if name not in fields:
+            return name
+        out = F.col(name)
+        for field, sql in fields[name]:
+            out = out.withField(field, F.expr(sql))
+        if name == "caracteristicas":
+            # stage 7 — P4 on the parsed valor, a temporary, so the
+            # descale's repeated reads do not copy the parse
+            out = out.withField("valor", descale_monetary(F.col("__valor"), max_iters=6))
+        return out.alias(name)
+
+    out = staged.select(*[stage(c) for c in names])
+    return repair_structure(out)

@@ -210,7 +210,7 @@ def test_structure_repaired(transformed):
 def test_multi_month_same_basename_not_collapsed(spark):
     """Regression (ADVICE r1, medium): the reference layout repeats the
     same <bank>_<fund>_raw.json basename across monthly folders; the URL
-    top-1 window must not collapse those to one row per basename."""
+    pick must keep one row per input row, not one per basename."""
     docs = [_doc(nombre="fondoA", fecha_corte="2025-06-30"),
             _doc(nombre="fondoA", fecha_corte="2025-07-31")]
     raw = spark.createDataFrame(docs, FIC_RAW_SCHEMA)
@@ -237,8 +237,7 @@ def test_multi_month_same_basename_not_collapsed(spark):
     assert {r["fecha_corte"] for r in rows} == {"2025-06-30", "2025-07-31"}
     assert all(r["url"] == "http://example.test/fondoA" for r in rows)
 
-    # Fallback path (no _filepath column): unique-per-row key still keeps
-    # every record.
+    # Without a _filepath column every record is kept too.
     out2 = transform_fic_documents(raw.drop("_filepath"), url_lookup=lookup)
     assert out2.count() == 2
 
