@@ -36,6 +36,7 @@ from owl_etl_spark.operators.dedup import ngram_jaccard_pairs
 from owl_etl_spark.operators.knn import brute_force_knn, lsh_knn
 from owl_etl_spark.operators.latest import latest_per_key
 from owl_etl_spark.operators.sessionize import session_stats
+from owl_etl_spark.session import seal
 from owl_etl_spark.sources.readers import read_table
 
 # ---------------------------------------------------------------------------
@@ -18186,7 +18187,7 @@ def q310(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem")
     pc = _copurchase_pair_counts(li)
-    # The level loop materializes eagerly (per-level localCheckpoint —
+    # The level loop materializes eagerly (a seal per level —
     # an RDD-path action AQE cannot coalesce); pin the iterative phase
     # to the session's core count so an un-tuned 200-partition session
     # doesn't pay hundreds of near-empty tasks per level.
@@ -18199,10 +18200,9 @@ def q310(spark: SparkSession, sf_dir: str) -> DataFrame:
         # from the SEALED frame — the unsealed seeds plan was measured
         # re-running the whole co-purchase aggregation a second time
         # inside the operator's seed seal (~1.5 s of the query's wall).
-        edges = (
+        edges = seal(
             pc.select(F.col("a").alias("src"), F.col("b").alias("dst"))
             .unionByName(pc.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-            .localCheckpoint(eager=True)
         )
         seeds = (
             edges.select(F.col("src").alias("node"))
@@ -18260,7 +18260,7 @@ def q311(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop2 = d.filter(F.col("doc_id") % 3 == 0)
     cat = session_catalog()
     tag = sf_tag(sf_dir)
-    # The whole body is eager (store writes + per-round localCheckpoint
+    # The whole body is eager (store writes + per-round sealed
     # label loops — RDD-path actions AQE cannot coalesce); pin it to
     # the session's core count so an un-tuned 200-partition session
     # doesn't pay hundreds of near-empty tasks per round.
@@ -18279,9 +18279,7 @@ def q311(spark: SparkSession, sf_dir: str) -> DataFrame:
         label_store = cat.read(spark, f"q311_components_{tag}")
         sigs2 = minhash_band_signatures(drop2, "doc_id", "text", num_hashes=16, bands=8)
         pairs2 = incremental_lsh_pairs(sigs2, sig_store)
-        out = incremental_components(
-            label_store, pairs2, drop2.select("doc_id")
-        ).localCheckpoint(eager=True)
+        out = seal(incremental_components(label_store, pairs2, drop2.select("doc_id")))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return out
@@ -19475,7 +19473,7 @@ def q325(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle count intra-row. Referenced three times below; without
     # the checkpoint each reference would re-run the whole signature
     # subtree (measured 26s -> ~8s sweep wall).
-    sigs = (
+    sigs = seal(
         with_minhash(d.select("doc_id", "text"), "text", num_hashes=16)
         .select(
             "doc_id",
@@ -19486,7 +19484,6 @@ def q325(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n"),
         )
-        .localCheckpoint(eager=True)
     )
     # The remaining stages (banding + shingle-intersection + signature
     # joins) are pair-list-sized; run them eagerly under a core-count
@@ -19526,7 +19523,7 @@ def _q325_scored(spark: SparkSession, d: DataFrame, sigs: DataFrame) -> DataFram
             "x -> CAST(x AS STRING)), '_')"
         ).alias("sig"),
     )
-    pairs = incremental_lsh_pairs(band_rows, None).localCheckpoint(eager=True)
+    pairs = seal(incremental_lsh_pairs(band_rows, None))
 
     sh = d.select(
         "doc_id",
@@ -19545,7 +19542,7 @@ def _q325_scored(spark: SparkSession, d: DataFrame, sigs: DataFrame) -> DataFram
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("i"))
     )
-    scored = (
+    scored = seal(
         pairs.join(
             sigs.select(
                 F.col("doc_id").alias("id_a"),
@@ -19577,7 +19574,6 @@ def _q325_scored(spark: SparkSession, d: DataFrame, sigs: DataFrame) -> DataFram
             .cast("long")
             .alias("jm"),
         )
-        .localCheckpoint(eager=True)
     )
     return scored
 
@@ -19795,7 +19791,7 @@ def q328(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize this month's pairs BEFORE the store gains the
         # month's own signatures (the read is lazy; the law needs the
         # pre-append store)
-        pairs = incremental_lsh_pairs(sigs, store).localCheckpoint(eager=True)
+        pairs = seal(incremental_lsh_pairs(sigs, store))
         cat.write_drop(sigs, name, ["band", "sig"], label)
         out = pairs if out is None else out.unionByName(pairs)
     if cat.watermark(name) != "m2" or cat.drops(name) != ["m0", "m1", "m2"]:
@@ -19913,7 +19909,7 @@ def q330(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprints feed the band rows AND both pair-side joins —
     # materialize once so the Python decode boundary runs one pass
     # (the q325 signatures lesson)
-    fps = perceptual_fingerprint(to_binary_payload(d)).localCheckpoint(eager=True)
+    fps = seal(perceptual_fingerprint(to_binary_payload(d)))
     return phash_near_dup_pairs(fps, max_hamming=3, bands=4)
 
 
@@ -20054,9 +20050,7 @@ def q333(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = session_catalog()
     tag = sf_tag(sf_dir)
 
-    hist_fps = perceptual_fingerprint(
-        to_binary_payload(d.filter(F.col("doc_id") % 3 != 0))
-    ).localCheckpoint(eager=True)
+    hist_fps = seal(perceptual_fingerprint(to_binary_payload(d.filter(F.col("doc_id") % 3 != 0))))
     cat.write_drop(
         hist_fps.select("doc_id", "phash"), f"q333_phash_{tag}", ["doc_id"], "history"
     )
@@ -20064,9 +20058,7 @@ def q333(spark: SparkSession, sf_dir: str) -> DataFrame:
         phash_band_rows(hist_fps), f"q333_phash_bands_{tag}", ["band", "sig"], "history"
     )
 
-    drop_fps = perceptual_fingerprint(
-        to_binary_payload(d.filter(F.col("doc_id") % 3 == 0))
-    ).localCheckpoint(eager=True)
+    drop_fps = seal(perceptual_fingerprint(to_binary_payload(d.filter(F.col("doc_id") % 3 == 0))))
     store_bands = cat.read(spark, f"q333_phash_bands_{tag}")
     pairs_new = incremental_lsh_pairs(phash_band_rows(drop_fps), store_bands)
     pairs_hist = incremental_lsh_pairs(phash_band_rows(hist_fps), None)
@@ -22027,8 +22019,8 @@ def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = [f"m{k:02d}" for k in range(12)]
     out = None
     # 12 sequential monthly loads, each a handful of small shuffles and
-    # a localCheckpoint: pin shuffle width to core count for the
-    # iterative phase (localCheckpoint freezes pre-AQE partitioning, so
+    # a seal: pin shuffle width to core count for the
+    # iterative phase (a seal freezes pre-AQE partitioning, so
     # the session default of 200 would cost 12×(stages×200) empty
     # tasks) — the q310 save/restore discipline.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -22055,7 +22047,7 @@ def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = window[0]
             for p in window[1:]:
                 merged = merged.unionByName(p)
-            merged = merged.localCheckpoint(eager=True)
+            merged = seal(merged)
             window.clear()
             return merged if acc is None else acc.unionByName(merged)
 
@@ -22066,10 +22058,12 @@ def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
             # chain per month for the parquet write. One small
             # materialization replaces a second signing pass, twelve
             # times.
-            sigs = minhash_band_signatures(
-                d.filter(F.col("doc_id") % 12 == k), "doc_id", "text",
-                num_hashes=16, bands=8,
-            ).localCheckpoint(eager=True)
+            sigs = seal(
+                minhash_band_signatures(
+                    d.filter(F.col("doc_id") % 12 == k), "doc_id", "text",
+                    num_hashes=16, bands=8,
+                )
+            )
             store = cat.read(spark, name) if cat.exists(name) else None
             # this month's pairs against the pre-append store (lazy;
             # directory-pinned — see the window note above)

@@ -19,7 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from owl_etl_spark.session import get_spark
+from owl_etl_spark.session import get_spark, release
 
 #: In-run quality-gate failures (e.g. the planted-neighbor ANN recall
 #: gate). Recorded in the sidecar under "failures" AND propagated to a
@@ -461,8 +461,8 @@ def _skew_scenario(sparksession, sf_dir: str) -> dict[str, float]:
             print(f"# {label}_{mode}: {dt:.3f}s ({n} rows)", file=sys.stderr)
         out[f"{label}_max_task_pairs_unguarded"] = hot_class * hot_class // 2
         out[f"{label}_max_task_pairs_guarded"] = guard * guard
-    hot29.unpersist()
-    hot34.unpersist()
+    release(hot29)
+    release(hot34)
 
     # q142 shape (r5 VERDICT finding #2): ONE bot user owning n_t
     # touches and n_c conversions. The naive key join materializes
@@ -541,8 +541,8 @@ def _skew_scenario(sparksession, sf_dir: str) -> dict[str, float]:
         .collect()[0]["m"]
     )
     out["q142_skew_max_task_pairs_guarded"] = int(mx)
-    t_hot.unpersist()
-    c_hot.unpersist()
+    release(t_hot)
+    release(c_hot)
     return out
 
 
@@ -617,8 +617,8 @@ def _ann_scenario(sparksession, sf_dir: str) -> dict[str, float]:
             f"# ann_{label}: {out[f'{label}_s']}s recall@5={out[f'{label}_recall_at_5']}",
             file=sys.stderr,
         )
-    encoded_pq.unpersist()
-    encoded_ivfpq.unpersist()
+    release(encoded_pq)
+    release(encoded_ivfpq)
     return out
 
 
@@ -730,9 +730,9 @@ def _ann_clustered_scenario(sparksession) -> dict[str, float]:
             f"same_cluster@5={out[f'{label}_same_cluster_at_5']}",
             file=sys.stderr,
         )
-    em.unpersist()
-    encoded_pq.unpersist()
-    encoded_ivfpq.unpersist()
+    release(em)
+    release(encoded_pq)
+    release(encoded_ivfpq)
     return out
 
 
@@ -839,9 +839,9 @@ def _ann_planted_scenario(sparksession) -> dict[str, float]:
             f"{out['pq_rerank_recall_at_5']} < 0.9 — ranking regression",
             file=sys.stderr,
         )
-    em.unpersist()
-    qs.unpersist()
-    encoded_pq.unpersist()
+    release(em)
+    release(qs)
+    release(encoded_pq)
     return out
 
 
@@ -1657,7 +1657,7 @@ def _scale_stress_scenario(
             nfeat = extract_features(payloads).count()
             out["multimodal_featurize_s"] = round(time.perf_counter() - t0, 3)
             out["multimodal_featurize_rows"] = nfeat
-            payloads.unpersist()
+            release(payloads)
             print(
                 "# multimodal payload: "
                 f"{out['multimodal_total_mb']}MB total, max batch "

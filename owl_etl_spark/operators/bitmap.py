@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import seal
+
 
 def segment_bitmaps(
     df: DataFrame,
@@ -74,7 +76,7 @@ def segment_overlap(
     member, via per-word bitmap AND + popcount (see module
     docstring). ``jaccard_micro`` = n_common·10⁶ div (n_a + n_b −
     n_common) — exact integer division of exact counts."""
-    bm = segment_bitmaps(df, segment_col, member_col).localCheckpoint()
+    bm = seal(segment_bitmaps(df, segment_col, member_col))
     sizes = bm.groupBy("segment").agg(
         F.sum(F.bit_count("bits")).cast("long").alias("n")
     )

@@ -37,6 +37,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import seal
+
 #: fold-state sentinel: symbols are never empty strings, so '' marks
 #: "no pending symbol" without a tag column
 _EMPTY = "''"
@@ -109,9 +111,7 @@ def bpe_pair_merges(
     and determinism contract."""
     if n_merges < 1:
         raise ValueError(f"bpe_pair_merges: n_merges must be >= 1, got {n_merges}")
-    vocab = word_freq_symbols(docs, text_col, max_word_len).localCheckpoint(
-        eager=False
-    )
+    vocab = seal(word_freq_symbols(docs, text_col, max_word_len), eager=False)
     winners = []
     for t in range(1, int(n_merges) + 1):
         pairs = (
@@ -131,7 +131,7 @@ def bpe_pair_merges(
             .groupBy(F.col("p.l").alias("left"), F.col("p.r").alias("right"))
             .agg(F.sum("freq").cast("long").alias("pair_count"))
         )
-        best = (
+        best = seal(
             pairs.orderBy(
                 F.col("pair_count").desc(), F.col("left").asc(), F.col("right").asc()
             )
@@ -141,14 +141,17 @@ def bpe_pair_merges(
                 "left",
                 "right",
                 "pair_count",
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         winners.append(best)
         if t < n_merges:
-            vocab = vocab.crossJoin(F.broadcast(best.select("left", "right"))).select(
-                "word",
-                "freq",
-                F.expr(_merge_fold_expr("syms", "left", "right")).alias("syms"),
-            ).localCheckpoint(eager=False)
+            vocab = seal(
+                vocab.crossJoin(F.broadcast(best.select("left", "right"))).select(
+                    "word",
+                    "freq",
+                    F.expr(_merge_fold_expr("syms", "left", "right")).alias("syms"),
+                ),
+                eager=False,
+            )
     return reduce(DataFrame.unionAll, winners)

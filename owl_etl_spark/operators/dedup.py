@@ -28,7 +28,14 @@ from owl_etl_spark.functions.hashing import (
     simhash_sql,
 )
 from owl_etl_spark.functions.text import shingle_chain_sql
-from owl_etl_spark.session import bounded_collect, literal_frame, spread_for_cpu
+from owl_etl_spark.session import (
+    bounded_collect,
+    literal_frame,
+    release,
+    seal,
+    sealed,
+    spread_for_cpu,
+)
 from owl_etl_spark.functions.text import fingerprint, normalize_text
 
 
@@ -439,8 +446,8 @@ def ngram_jaccard_pairs(
 
     The exploded (id, shingle) relation feeds two consumers (doc
     sizes, posting lists), so it is persisted for the duration of this
-    call and eagerly released (localCheckpoint of the small
-    above-threshold output); nothing leaks into the session.
+    call; the small above-threshold output is sealed before it is
+    unpersisted.
     """
     from pyspark import StorageLevel
 
@@ -508,7 +515,7 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
         )
-        return out.localCheckpoint(eager=True)
+        return seal(out)
     finally:
         sh.unpersist()
 
@@ -533,9 +540,9 @@ def ngram_jaccard_pairs_prefix(
     self-join; candidates are then verified EXACTLY with an intra-row
     set intersection, so the output is identical to the naive join.
 
-    EAGER: the verified pair list is materialized (localCheckpoint)
-    before returning so the corpus-sized shingle cache can be released
-    inside this call instead of leaking into the session.
+    EAGER: the verified pair list is sealed before returning so the
+    corpus-sized shingle cache can be released inside this call
+    instead of leaking into the session.
 
     Scale: no stage materializes the full pair space — the self-join
     fan-out is Σ over *prefix* postings only, and hot shingles land in
@@ -625,12 +632,9 @@ def ngram_jaccard_pairs_prefix(
         .select("id_a", "id_b", "jaccard")
     )
     try:
-        # Eager: materialize the (small) verified pair list, then release
-        # the corpus-sized shingle cache in the finally. The call returns
-        # a flat scan of the checkpointed pairs; its own (pair-sized)
-        # storage is released by the context cleaner when the caller
-        # drops the DataFrame.
-        return result.localCheckpoint()
+        # seal the (small) verified pair list, then unpersist the
+        # corpus-sized shingle cache in the finally
+        return seal(result)
     finally:
         sets.unpersist()
 
@@ -768,14 +772,13 @@ def near_dup_dedup(
 def _label_ids(ids: DataFrame, id_col: str, mapping: DataFrame) -> DataFrame:
     """``(id_col, component)`` for every id: the ``(node, root)``
     mapping's root, or the id itself when it has no row (no edge)."""
-    return (
+    return seal(
         ids.select(F.col(id_col).alias("node"))
         .join(mapping, "node", "left")
         .select(
             F.col("node").alias(id_col),
             F.coalesce(F.col("root"), F.col("node")).alias("component"),
         )
-        .localCheckpoint()
     )
 
 
@@ -839,107 +842,98 @@ def connected_components(
     from the output.
 
     Scale notes:
-    - ``labels`` is ``localCheckpoint``-ed every round, so each round's
-      convergence count executes only that round's join — without it
-      the uncached lineage re-runs ALL prior rounds (O(rounds²) work)
-      and the logical plan grows without bound. On a real cluster with
-      flaky executors prefer ``spark.sparkContext.setCheckpointDir`` +
-      ``.checkpoint()`` (HDFS-backed) over the executor-local variant.
+    - ``labels`` is sealed every round, so each round's convergence
+      count executes only that round's join — without it the lineage
+      re-runs ALL prior rounds (O(rounds²) work) and the logical plan
+      grows without bound; the previous round's seal is released once
+      the next one is materialized.
     - ``edges`` is consumed once per round; sealing it computes the
       pair list once.
     - ``strict=True`` raises if the loop exhausts ``max_iters`` while
       labels are still changing — a truncated result is NOT a valid
       clustering and must never be silently returned (ADVICE r1).
     """
-    edges = (
+    with sealed(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    # exact driver replay when model-sized (session.bounded_collect)
-    rows = bounded_collect(edges)
-    if rows is not None:
-        edges.unpersist()
-        ntyp = dict(ids.select(F.col(id_col)).dtypes)[id_col]
-        return _driver_components(rows, ids, id_col, ntyp)
-    # Width the loop to the EDGE COUNT, not the upstream partitioning
-    # (r12, guide §2.6/§1): the no-shuffle union doubles the pair
-    # frame's partitions, so a small dup graph inherited ~2×scan-width
-    # near-empty partitions and every round paid that many tasks of
-    # pure serialization churn (profiled: 64-task stages over 0.1 MB).
-    # At scale ceil(n/4M) keeps ~4M edges per task — the clamp leaves
-    # big graphs at their natural width; the coalesce reads the seal.
-    n_edges = edges.count()
-    cur_parts = edges.rdd.getNumPartitions()
-    want = max(1, min(cur_parts, -(-n_edges // 4_000_000)))
-    if want < cur_parts:
-        edges = edges.coalesce(want)
-    # Iterate labels over EDGE ENDPOINTS only (r12, guide §2.3): a node
-    # with no edge can never change its label, so carrying the full
-    # ``ids`` frame through every round shuffled corpus-sized rows for
-    # nothing — on a sparse dup graph the endpoint set is orders of
-    # magnitude smaller than the corpus. Non-endpoint ids rejoin as
-    # self-labeled singletons in the final left join (unchanged).
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-    )
-    prev_checkpoint: DataFrame | None = None
-    converged = False
-    try:
-        for _ in range(max_iters):
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.node)
-                .groupBy("src")
-                .agg(F.min("component").alias("n_comp"))
-            )
-            new_labels = (
-                labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("component"), F.coalesce(F.col("n_comp"), F.col("component"))
-                    ).alias("new_component"),
-                    "component",
-                )
-                .localCheckpoint()  # truncate lineage; `changed` below reads this
-            )
-            changed = (
-                new_labels.filter(F.col("new_component") != F.col("component"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels.select("node", F.col("new_component").alias("component"))
-            if prev_checkpoint is not None:
-                prev_checkpoint.unpersist()
-            prev_checkpoint = new_labels
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            msg = (
-                f"connected_components did not converge within max_iters={max_iters}; "
-                "the graph diameter exceeds the iteration budget and the labels are "
-                "truncated mid-propagation. Raise max_iters."
-            )
-            if strict:
-                raise RuntimeError(msg)
-            import warnings
-
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        # localCheckpoint is eager — the result is materialized here, so
-        # the per-round checkpoint backing `labels` can be released.
-        # Non-endpoint ids (no edges — their label can never move)
-        # rejoin here as self-labeled singletons.
-        result = _label_ids(
-            ids, id_col, labels.select("node", F.col("component").alias("root"))
+    ) as edges:
+        # exact driver replay when model-sized (session.bounded_collect)
+        rows = bounded_collect(edges)
+        if rows is not None:
+            ntyp = dict(ids.select(F.col(id_col)).dtypes)[id_col]
+            return _driver_components(rows, ids, id_col, ntyp)
+        # Width the loop to the EDGE COUNT, not the upstream partitioning
+        # (r12, guide §2.6/§1): the no-shuffle union doubles the pair
+        # frame's partitions, so a small dup graph inherited ~2×scan-width
+        # near-empty partitions and every round paid that many tasks of
+        # pure serialization churn (profiled: 64-task stages over 0.1 MB).
+        # At scale ceil(n/4M) keeps ~4M edges per task — the clamp leaves
+        # big graphs at their natural width; the coalesce reads the seal.
+        n_edges = edges.count()
+        cur_parts = edges.rdd.getNumPartitions()
+        want = max(1, min(cur_parts, -(-n_edges // 4_000_000)))
+        if want < cur_parts:
+            edges = edges.coalesce(want)
+        # Iterate labels over EDGE ENDPOINTS only (r12, guide §2.3): a node
+        # with no edge can never change its label, so carrying the full
+        # ``ids`` frame through every round shuffled corpus-sized rows for
+        # nothing — on a sparse dup graph the endpoint set is orders of
+        # magnitude smaller than the corpus. Non-endpoint ids rejoin as
+        # self-labeled singletons in the final left join (unchanged).
+        labels = (
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("component"))
         )
-        if prev_checkpoint is not None:
-            prev_checkpoint.unpersist()
-        return result
-    finally:
-        edges.unpersist()
+        new_labels: DataFrame | None = None
+        converged = False
+        try:
+            for _ in range(max_iters):
+                neighbor_min = (
+                    edges.join(labels, edges.dst == labels.node)
+                    .groupBy("src")
+                    .agg(F.min("component").alias("n_comp"))
+                )
+                prev, new_labels = new_labels, seal(
+                    labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
+                    .select(
+                        "node",
+                        F.least(
+                            F.col("component"), F.coalesce(F.col("n_comp"), F.col("component"))
+                        ).alias("new_component"),
+                        "component",
+                    )
+                )
+                if prev is not None:
+                    release(prev)
+                changed = (
+                    new_labels.filter(F.col("new_component") != F.col("component"))
+                    .limit(1)
+                    .count()
+                )
+                labels = new_labels.select("node", F.col("new_component").alias("component"))
+                if changed == 0:
+                    converged = True
+                    break
+            if not converged:
+                msg = (
+                    f"connected_components did not converge within max_iters={max_iters}; "
+                    "the graph diameter exceeds the iteration budget and the labels are "
+                    "truncated mid-propagation. Raise max_iters."
+                )
+                if strict:
+                    raise RuntimeError(msg)
+                import warnings
+
+                warnings.warn(msg, RuntimeWarning, stacklevel=2)
+            # Non-endpoint ids (no edges — their label can never move)
+            # rejoin here as self-labeled singletons.
+            return _label_ids(
+                ids, id_col, labels.select("node", F.col("component").alias("root"))
+            )
+        finally:
+            if new_labels is not None:
+                release(new_labels)
 
 
 def dedup_segments(
@@ -1046,10 +1040,10 @@ def connected_components_star(
     exchange (sort-based, streaming — no per-node buffers, so
     giant-component hubs are safe; the pre-r12 groupBy+join form paid
     an extra broadcast build + join per phase per round); edges are
-    ``localCheckpoint``-ed per round (lineage truncation, same
-    rationale as min-label) and the previous round's checkpoint is
-    released. Convergence = the small-star round leaves the edge set
-    unchanged (count + order-free xxhash64 checksum — one cheap agg);
+    sealed per round (lineage truncation, same rationale as min-label)
+    and the previous round's seal is released. Convergence = the
+    small-star round leaves the edge set unchanged (count + order-free
+    xxhash64 checksum — one cheap agg);
     the converged edge set is exactly the star (child → component-min)
     mapping. ``strict=True`` raises on non-convergence like
     ``connected_components`` (a truncated contraction is not a valid
@@ -1076,88 +1070,83 @@ def connected_components_star(
         ).collect()[0]
         return int(row["n"]), int(row["h"])
 
-    edges = _canon(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    ).localCheckpoint()
-    # exact driver replay when model-sized (session.bounded_collect)
-    rows = bounded_collect(edges)
-    if rows is not None:
-        result = _driver_components(rows, ids, id_col, dict(edges.dtypes)["lo"])
-        edges.unpersist()
-        return result
-    prev_ckpt: DataFrame | None = edges
-    converged = False
-    try:
-        sig = _checksum(edges)
-        for _ in range(max_iters):
-            bidir = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
-                edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-            )
-            # LARGE-STAR: for each u, m = min(N(u) ∪ {u}); emit (v, m)
-            # for all neighbors v > u. The per-u min is a WINDOW
-            # aggregate over the same rows (r12, guide §2.4): the old
-            # groupBy(min) + join-back added a broadcast build + join
-            # per phase per round; the window shares the one exchange,
-            # streams (sort-based, spills — no per-node buffers, so
-            # giant-component hubs stay safe), and emits the identical
-            # pair multiset.
-            wu = Window.partitionBy("u")
-            large = _canon(
-                bidir.withColumn("mv", F.min("v").over(wu))
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("src"), F.least("u", "mv").alias("dst"))
-            )
-            # SMALL-STAR: for each u over its ≤-neighbors v < u,
-            # m = min(N<(u)); emit (v, m) and (u, m).
-            smaller = large.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-            small = _canon(
-                smaller.withColumn("mv", F.min("v").over(wu))
-                .select(
-                    F.explode(
-                        F.array(
-                            F.struct(F.col("v").alias("src"), F.col("mv").alias("dst")),
-                            F.struct(F.col("u").alias("src"), F.col("mv").alias("dst")),
-                        )
-                    ).alias("e")
+    with sealed(
+        _canon(pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
+    ) as edges:
+        # exact driver replay when model-sized (session.bounded_collect)
+        rows = bounded_collect(edges)
+        if rows is not None:
+            return _driver_components(rows, ids, id_col, dict(edges.dtypes)["lo"])
+        cur = edges  # the current round's edge seal
+        converged = False
+        try:
+            sig = _checksum(cur)
+            for _ in range(max_iters):
+                bidir = cur.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
+                    cur.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
                 )
-                .select("e.src", "e.dst")
-            ).localCheckpoint()
-            new_sig = _checksum(small)
-            edges = small
-            if prev_ckpt is not None:
-                prev_ckpt.unpersist()
-            prev_ckpt = small
-            if new_sig == sig:
-                converged = True
-                break
-            sig = new_sig
-        if not converged:
-            msg = (
-                f"connected_components_star did not converge within max_iters={max_iters}; "
-                "star contraction incomplete — labels would be truncated. Raise max_iters."
-            )
-            if strict:
-                raise RuntimeError(msg)
-            import warnings
+                # LARGE-STAR: for each u, m = min(N(u) ∪ {u}); emit (v, m)
+                # for all neighbors v > u. The per-u min is a WINDOW
+                # aggregate over the same rows (r12, guide §2.4): the old
+                # groupBy(min) + join-back added a broadcast build + join
+                # per phase per round; the window shares the one exchange,
+                # streams (sort-based, spills — no per-node buffers, so
+                # giant-component hubs stay safe), and emits the identical
+                # pair multiset.
+                wu = Window.partitionBy("u")
+                large = _canon(
+                    bidir.withColumn("mv", F.min("v").over(wu))
+                    .filter(F.col("v") > F.col("u"))
+                    .select(F.col("v").alias("src"), F.least("u", "mv").alias("dst"))
+                )
+                # SMALL-STAR: for each u over its ≤-neighbors v < u,
+                # m = min(N<(u)); emit (v, m) and (u, m).
+                smaller = large.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+                small = seal(
+                    _canon(
+                        smaller.withColumn("mv", F.min("v").over(wu))
+                        .select(
+                            F.explode(
+                                F.array(
+                                    F.struct(F.col("v").alias("src"), F.col("mv").alias("dst")),
+                                    F.struct(F.col("u").alias("src"), F.col("mv").alias("dst")),
+                                )
+                            ).alias("e")
+                        )
+                        .select("e.src", "e.dst")
+                    )
+                )
+                new_sig = _checksum(small)
+                if cur is not edges:
+                    release(cur)
+                cur = small
+                if new_sig == sig:
+                    converged = True
+                    break
+                sig = new_sig
+            if not converged:
+                msg = (
+                    f"connected_components_star did not converge within max_iters={max_iters}; "
+                    "star contraction incomplete — labels would be truncated. Raise max_iters."
+                )
+                if strict:
+                    raise RuntimeError(msg)
+                import warnings
 
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        # Converged edges are (component-min, member) stars: each node
-        # appears as `hi` exactly once. An UNCONVERGED edge set is not
-        # a star — a node can still be `hi` in several edges — so the
-        # non-strict path reduces to one (node, min root) row first;
-        # labels may still be truncated (per the warning above) but
-        # the output is well-formed (one row per node).
-        mapping = edges.select(F.col("hi").alias("node"), F.col("lo").alias("root"))
-        if not converged:
-            mapping = mapping.groupBy("node").agg(F.min("root").alias("root"))
-        result = _label_ids(ids, id_col, mapping)
-        prev_ckpt.unpersist()
-        prev_ckpt = None
-        return result
-    finally:
-        # on an exception path, release the last per-round checkpoint
-        if prev_ckpt is not None:
-            prev_ckpt.unpersist()
+                warnings.warn(msg, RuntimeWarning, stacklevel=2)
+            # Converged edges are (component-min, member) stars: each node
+            # appears as `hi` exactly once. An UNCONVERGED edge set is not
+            # a star — a node can still be `hi` in several edges — so the
+            # non-strict path reduces to one (node, min root) row first;
+            # labels may still be truncated (per the warning above) but
+            # the output is well-formed (one row per node).
+            mapping = cur.select(F.col("hi").alias("node"), F.col("lo").alias("root"))
+            if not converged:
+                mapping = mapping.groupBy("node").agg(F.min("root").alias("root"))
+            return _label_ids(ids, id_col, mapping)
+        finally:
+            if cur is not edges:
+                release(cur)
 
 
 def near_dup_clusters(

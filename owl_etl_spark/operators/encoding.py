@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import seal
+
 
 def loo_target_encode(
     df: DataFrame,
@@ -195,7 +197,7 @@ def entropy_binning(
         F.col(target_col).cast("long").alias("__y"),
         F.lit("r").alias("__seg"),
     ).filter(F.col("__v").isNotNull() & F.col("__y").isNotNull())
-    d = d.localCheckpoint(eager=False)
+    d = seal(d, eager=False)
     C = int(candidates)
     fd = lambda x, dv: f"(({x}) - (((({x}) % ({dv})) + ({dv})) % ({dv}))) div ({dv})"
     for lvl in range(int(depth)):
@@ -249,7 +251,7 @@ def entropy_binning(
             .filter(F.col("__rk") == 1)
             .select(F.col("__seg").alias("__s2"), F.col("__t").alias("__bt"))
         )
-        d = (
+        d = seal(
             d.join(F.broadcast(best), d["__seg"] == best["__s2"], "left")
             .select(
                 "__v",
@@ -265,8 +267,8 @@ def entropy_binning(
                 )
                 .otherwise(F.col("__seg"))
                 .alias("__seg"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return (
         d.groupBy(F.col("__seg").alias("bin_id"))

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import seal
+
 
 def did_report(
     df: DataFrame,
@@ -356,12 +358,14 @@ def aipw_report(
         logistic_regression_fit,
     )
 
-    work = df.select(
-        F.col(treat_col).cast("long").alias("__t"),
-        F.col(y_col).cast("long").alias("__y"),
-        F.col(x_col).cast("long").alias("__x"),
-        F.lit(1).cast("long").alias("__one"),
-    ).localCheckpoint(eager=True)
+    work = seal(
+        df.select(
+            F.col(treat_col).cast("long").alias("__t"),
+            F.col(y_col).cast("long").alias("__y"),
+            F.col(x_col).cast("long").alias("__x"),
+            F.lit(1).cast("long").alias("__one"),
+        )
+    )
     pw = logistic_regression_fit(
         work, "__t", ["__one", "__x"], iterations=prop_iterations, lr=lr
     )

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import seal
+
 
 def grid_radius_join(
     points: DataFrame,
@@ -138,7 +140,7 @@ def grid_density_clusters(
     )
     OFF = 1 << 20
     STRIDE = 1 << 42
-    cells = (
+    cells = seal(
         p.groupBy(
             F.expr(f"__x div {cell_size}").alias("cx"),
             F.expr(f"__y div {cell_size}").alias("cy"),
@@ -155,7 +157,6 @@ def grid_density_clusters(
         # again — cross-job, where ReuseExchange cannot fire. One
         # eager seal of the grid-bounded cell table replaces three
         # full re-aggregations of the corpus.
-        .localCheckpoint(eager=True)
     )
     d = F.explode(F.sequence(F.lit(-1), F.lit(1)))
     probe = cells.select("cell_id", "cx", "cy")

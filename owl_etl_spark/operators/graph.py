@@ -11,8 +11,9 @@ Execution shape (same family as ``dedup.connected_components``): the
 RANK VECTOR is a DataFrame keyed by node; each iteration is one join
 (ranks → out-edges) + one aggregate (sum contributions per target) —
 two shuffles over the EDGE list, never an adjacency matrix.
-``localCheckpoint`` per iteration truncates lineage, so N iterations
-cost O(N) plan depth, not O(N²).
+A seal (``session.seal``) per iteration truncates lineage, so N
+iterations cost O(N) plan depth, not O(N²); each round releases the
+seal the previous round made.
 
 Determinism contract: ranks live in integer MICRO-units. Each edge
 contribution is ``round(rank / outdegree)`` — one float division +
@@ -39,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from owl_etl_spark.session import release, seal
 
 #: rank unit: 1.0 == 1_000_000 micro-units
 MICRO = 1_000_000
@@ -86,14 +89,13 @@ def pagerank(
     # joins against it, and without this each of the n_iters eager
     # checkpoints below would re-run the caller's full edge lineage
     # (in q125, a 4-table join) from scratch
-    e = (
+    e = seal(
         edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w"))
         .join(out_deg, "__s")
-        .localCheckpoint()
     )
-    ranks = nodes.select(
-        F.col(node_col).alias("__n"), F.lit(MICRO).cast("long").alias("__r")
-    ).localCheckpoint()
+    ranks = seal(
+        nodes.select(F.col(node_col).alias("__n"), F.lit(MICRO).cast("long").alias("__r"))
+    )
     teleport = int(round((1.0 - damping) * MICRO))
     n_nodes = None
     has_out = None
@@ -101,8 +103,9 @@ def pagerank(
         n_nodes = nodes.count()
         # skinny (node) frame of rank sources — broadcast-joined each
         # iteration to split the vector into contributing vs dangling
-        has_out = e.select(F.col("__s").alias("__n")).distinct().localCheckpoint()
+        has_out = seal(e.select(F.col("__s").alias("__n")).distinct())
     for _ in range(n_iters):
+        prev = ranks
         contrib = (
             e.join(ranks, e["__s"] == ranks["__n"])
             .select(
@@ -128,17 +131,19 @@ def pagerank(
             ).select(
                 "__n", F.coalesce(F.col("__in"), F.lit(0)).alias("__in")
             ).crossJoin(F.broadcast(dg))
-            ranks = contrib_full.select(
-                "__n",
-                (
-                    F.lit(teleport)
-                    + F.round(
-                        F.lit(damping) * (F.col("__in") + F.col("__dg"))
-                    ).cast("long")
-                ).alias("__r"),
-            ).localCheckpoint()
+            ranks = seal(
+                contrib_full.select(
+                    "__n",
+                    (
+                        F.lit(teleport)
+                        + F.round(
+                            F.lit(damping) * (F.col("__in") + F.col("__dg"))
+                        ).cast("long")
+                    ).alias("__r"),
+                )
+            )
         else:
-            ranks = (
+            ranks = seal(
                 ranks.join(contrib, ranks["__n"] == contrib["__d"], "left")
                 .select(
                     "__n",
@@ -149,8 +154,11 @@ def pagerank(
                         )
                     ).alias("__r"),
                 )
-                .localCheckpoint()
             )
+        release(prev)
+    release(e)
+    if has_out is not None:
+        release(has_out)
     return ranks.select(
         F.col("__n").alias(node_col), F.col("__r").alias("rank_micro_units")
     )
@@ -175,7 +183,7 @@ def personalized_pagerank(
 
     Same integer micro-unit recurrence and plan shape as ``pagerank``
     (one edges⋈ranks join + one edge-list aggregate per iteration,
-    localCheckpoint lineage seal), with the teleport term restricted:
+    one lineage seal per iteration), with the teleport term restricted:
 
         rank₀(v)  = 1e6 · [v ∈ S]
         rank'(v)  = [v ∈ S]·round((1-d)·1e6)
@@ -190,23 +198,21 @@ def personalized_pagerank(
     sums, one float round per edge and per node."""
     w = F.col(weight_col).cast("long") if weight_col is not None else F.lit(1).cast("long")
     out_deg = edges.groupBy(F.col(src_col).alias("__s")).agg(F.sum(w).alias("__deg"))
-    e = (
+    e = seal(
         edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w"))
         .join(out_deg, "__s")
-        .localCheckpoint()
     )
     seed_flag = F.broadcast(
         seeds.select(F.col(seeds.columns[0]).alias("__n")).distinct()
     ).withColumn("__seed", F.lit(1).cast("long"))
-    base = (
+    base = seal(
         nodes.select(F.col(node_col).alias("__n"))
         .join(seed_flag, "__n", "left")
         .select("__n", F.coalesce(F.col("__seed"), F.lit(0)).alias("__seed"))
-        .localCheckpoint()
     )
     teleport = int(round((1.0 - damping) * MICRO))
     ranks = base.select("__n", (F.col("__seed") * MICRO).alias("__r"))
-    for _ in range(n_iters):
+    for i in range(n_iters):
         contrib = (
             e.join(ranks, e["__s"] == ranks["__n"])
             .select(
@@ -218,7 +224,7 @@ def personalized_pagerank(
             .groupBy("__d")
             .agg(F.sum("__c").alias("__in"))
         )
-        ranks = (
+        prev, ranks = ranks, seal(
             base.join(contrib, base["__n"] == contrib["__d"], "left")
             .select(
                 "__n",
@@ -229,8 +235,12 @@ def personalized_pagerank(
                     ).cast("long")
                 ).alias("__r"),
             )
-            .localCheckpoint()
         )
+        if i:
+            release(prev)
+    release(e)
+    if n_iters:
+        release(base)
     return ranks.select(
         F.col("__n").alias(node_col), F.col("__r").alias("rank_micro_units")
     )
@@ -324,7 +334,7 @@ def bfs_hops(
 
     Iterative frontier expansion, the q98/q125 discipline: each round
     joins the CURRENT FRONTIER (not the full distance set) against the
-    edges, anti-joins already-reached nodes, and localCheckpoints —
+    edges, anti-joins already-reached nodes, and seals —
     per-round cost is |frontier neighborhood|, lineage stays flat, and
     the loop exits as soon as a frontier comes back empty (diameter
     rounds, not max_hops rounds, on most graphs). Hops are exact
@@ -342,24 +352,29 @@ def bfs_hops(
     spark = edges.sparkSession
     from owl_etl_spark.session import literal_frame
 
-    dist = literal_frame(
-        spark, [(s, 0) for s in sources], ["node", "hop"]
-    ).select(F.col("node").cast(dict(e.dtypes)["__s"]), F.col("hop").cast("int"))
-    dist = dist.localCheckpoint()
-    frontier = dist.select("node")
+    dist = seal(
+        literal_frame(spark, [(s, 0) for s in sources], ["node", "hop"]).select(
+            F.col("node").cast(dict(e.dtypes)["__s"]), F.col("hop").cast("int")
+        )
+    )
+    frontier = dist
     for h in range(1, int(max_hops) + 1):
-        nxt = (
+        nxt = seal(
             frontier.join(e, frontier.node == e.__s)
             .select(F.col("__d").alias("node"))
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
             .withColumn("hop", F.lit(h).cast("int"))
-            .localCheckpoint()
         )
+        if frontier is not dist:
+            release(frontier)
+        frontier = nxt
         if nxt.limit(1).count() == 0:
             break
-        dist = dist.unionByName(nxt).localCheckpoint()
-        frontier = nxt.select("node")
+        prev, dist = dist, seal(dist.unionByName(nxt))
+        release(prev)
+    if frontier is not dist:
+        release(frontier)
     return dist
 
 
@@ -397,7 +412,7 @@ def hits_scores(
     the same aggregate, so Catalyst's ReuseExchange computes the raw
     table once and both consumers (max + normalize) read the shuffle.
     Whole rounds therefore fuse into ONE job with zero driver
-    barriers; a ``localCheckpoint`` every 2 rounds bounds plan depth
+    barriers; a seal every 2 rounds bounds plan depth
     for large ``n_iters``. Score tables are node-sized, so the
     edges⋈scores join carries an explicit ``broadcast`` hint. Edges
     are deduplicated (parallel edges would double-count mutual
@@ -407,11 +422,10 @@ def hits_scores(
     """
     if n_iters < 1:
         raise ValueError(f"hits_scores: n_iters must be >= 1, got {n_iters}")
-    e = (
+    e = seal(
         edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
         .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
         .distinct()
-        .localCheckpoint()
     )
     # nodes and the seed hub table are each consumed exactly once
     # (final zero-fill join / first half-round join), so they carry no
@@ -444,6 +458,7 @@ def hits_scores(
         )
 
     auth = None
+    hub_seal = None
     for i in range(n_iters):
         araw = (
             e.join(F.broadcast(hub), e.__s == hub.__n)
@@ -463,7 +478,10 @@ def hits_scores(
             # chain under every later operator (q183: 3.4 s of the
             # 4.2 s wall was plan build). Same fix as
             # linalg.power_iteration_top_eigvec.
-            hub = hub.localCheckpoint(eager=True)
+            hub = seal(hub)
+            if hub_seal is not None:
+                release(hub_seal)
+            hub_seal = hub
     return (
         nodes.join(hub, "__n", "left")
         .join(auth, "__n", "left")
@@ -692,31 +710,37 @@ def harmonic_centrality(
             f"{_HARMONIC_MAX_NODES} — exact all-pairs is V² state; "
             "contract the graph first (host/nation rollup)"
         )
-    e = (
+    e = seal(
         edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
         .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
         .where(F.col(src_col) != F.col(dst_col))
         .distinct()
-        .localCheckpoint()
     )
-    dist = nodes.select(
-        F.col(node_col).alias("__src"),
-        F.col(node_col).alias("__n"),
-        F.lit(0).cast("int").alias("__h"),
-    ).localCheckpoint()
+    dist = seal(
+        nodes.select(
+            F.col(node_col).alias("__src"),
+            F.col(node_col).alias("__n"),
+            F.lit(0).cast("int").alias("__h"),
+        )
+    )
     frontier = dist
     for h in range(1, int(max_hops) + 1):
-        nxt = (
+        nxt = seal(
             frontier.join(e, frontier["__n"] == e["__s"])
             .select("__src", F.col("__d").alias("__n"), F.lit(h).cast("int").alias("__h"))
             .distinct()
             .join(dist.select("__src", "__n"), ["__src", "__n"], "left_anti")
-            .localCheckpoint()
         )
+        if frontier is not dist:
+            release(frontier)
+        frontier = nxt
         if nxt.limit(1).count() == 0:
             break
-        dist = dist.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+        prev, dist = dist, seal(dist.unionByName(nxt))
+        release(prev)
+    if frontier is not dist:
+        release(frontier)
+    release(e)
     reached = dist.filter(F.col("__h") > 0)
     scores = reached.groupBy("__src").agg(
         F.count(F.lit(1)).cast("long").alias("n_reached"),
@@ -780,16 +804,15 @@ def simrank(
             f"simrank: {n_nodes} nodes > max_nodes={max_nodes} — SimRank "
             "state is node-pair-sized; contract the graph first"
         )
-    e = (
+    e = seal(
         edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
         .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
         .where(F.col(src_col) != F.col(dst_col))
         .distinct()
-        .localCheckpoint()
     )
-    indeg = e.groupBy(F.col("__d").alias("__n")).agg(
-        F.count(F.lit(1)).cast("long").alias("__deg")
-    ).localCheckpoint()
+    indeg = seal(
+        e.groupBy(F.col("__d").alias("__n")).agg(F.count(F.lit(1)).cast("long").alias("__deg"))
+    )
     # S_0: diagonal only
     s = nodes.select(
         F.col(node_col).alias("__a"),
@@ -829,7 +852,7 @@ def simrank(
             F.col(node_col).alias("__b"),
             F.lit(MICRO).cast("long").alias("__sc"),
         )
-        s = diag.unionByName(offdiag).localCheckpoint(eager=False)
+        s = diag.unionByName(offdiag)
     return (
         s.filter(F.col("__a") < F.col("__b"))
         .join(F.broadcast(da.select(F.col("__na").alias("__a"), F.col("__da").alias("in_deg_a"))), "__a", "left")
@@ -866,21 +889,19 @@ def rich_club_report(
     small by definition)."""
     if not degrees_of_interest:
         raise ValueError("rich_club_report: no degree thresholds given")
-    und = (
+    und = seal(
         edges.select(
             F.least(F.col("src").cast("string"), F.col("dst").cast("string")).alias("__a"),
             F.greatest(F.col("src").cast("string"), F.col("dst").cast("string")).alias("__b"),
         )
         .where(F.col("__a") != F.col("__b"))
         .distinct()
-        .localCheckpoint()
     )
-    deg = (
+    deg = seal(
         und.select(F.col("__a").alias("__n"))
         .unionAll(und.select(F.col("__b").alias("__n")))
         .groupBy("__n")
         .agg(F.count(F.lit(1)).cast("long").alias("__deg"))
-        .localCheckpoint()
     )
     outs = []
     spark = edges.sparkSession
@@ -932,14 +953,13 @@ def degree_assortativity(
     variance is zero — regular graphs have undefined assortativity,
     stated rather than zeroed). Headroom: Σ deg² over directed-pair
     rows ≤ 2E·maxdeg² — fine below ~10⁶ max degree."""
-    und = (
+    und = seal(
         edges.select(
             F.least(F.col("src").cast("string"), F.col("dst").cast("string")).alias("__a"),
             F.greatest(F.col("src").cast("string"), F.col("dst").cast("string")).alias("__b"),
         )
         .where(F.col("__a") != F.col("__b"))
         .distinct()
-        .localCheckpoint()
     )
     deg = (
         und.select(F.col("__a").alias("__n"))
@@ -1008,12 +1028,10 @@ def katz_centrality(
     the caller keep the join slim).
     """
     w = F.col(weight_col).cast("long") if weight_col is not None else F.lit(1).cast("long")
-    e = edges.select(
-        F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w")
-    ).localCheckpoint()
-    scores = nodes.select(
-        F.col(node_col).alias("__n"), F.lit(MICRO).cast("long").alias("__x")
-    ).localCheckpoint()
+    e = seal(edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w")))
+    scores = seal(
+        nodes.select(F.col(node_col).alias("__n"), F.lit(MICRO).cast("long").alias("__x"))
+    )
     for _ in range(int(n_iters)):
         contrib = (
             e.join(scores, e["__s"] == scores["__n"])
@@ -1021,7 +1039,7 @@ def katz_centrality(
             .groupBy("__d")
             .agg(F.sum("__c").alias("__in"))
         )
-        scores = (
+        prev, scores = scores, seal(
             scores.join(contrib, scores["__n"] == contrib["__d"], "left")
             .select(
                 "__n",
@@ -1032,8 +1050,9 @@ def katz_centrality(
                     )
                 ).alias("__x"),
             )
-            .localCheckpoint()
         )
+        release(prev)
+    release(e)
     return scores.select(
         F.col("__n").alias(node_col), F.col("__x").alias("katz_micro_units")
     )
@@ -1107,7 +1126,7 @@ def betweenness_seeded(
         return F.broadcast(df) if _bcast[0] else df
 
     def _seal(df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint(eager=True)
+        out = seal(df)
         _bcast[0] = out.count() <= _BETWEENNESS_MAX_BROADCAST
         return out
 
@@ -1119,7 +1138,7 @@ def betweenness_seeded(
     # here would only copy the blocks.
     e = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
     if not edges_sealed:
-        e = e.localCheckpoint()
+        e = seal(e)
     f0 = _seal(
         seeds.select(
             F.col(node_col).alias("__seed"),
@@ -1195,6 +1214,10 @@ def betweenness_seeded(
         if l > 0:
             delta = _seal(delta)
         acc.append(delta)
+    # the result reads levels 0, 1 and the last; the sealed deltas
+    # already hold what the levels in between fed
+    for lv in levels[2:-1]:
+        release(lv)
     alld = acc[0]
     for d in acc[1:]:
         alld = alld.unionByName(d)
@@ -1237,12 +1260,12 @@ def label_propagation_seeded(
     """
     from pyspark.sql import Window
 
-    e = edges.select(
-        F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-    ).localCheckpoint()
-    seeds = seed_labels.select(
-        F.col(node_col).alias("__n"), F.col(label_col).cast("string").alias("__l")
-    ).localCheckpoint()
+    e = seal(edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")))
+    seeds = seal(
+        seed_labels.select(
+            F.col(node_col).alias("__n"), F.col(label_col).cast("string").alias("__l")
+        )
+    )
     labels = seeds
     w = Window.partitionBy("__d").orderBy(
         F.col("__votes").desc(), F.col("__l").asc()
@@ -1260,7 +1283,12 @@ def label_propagation_seeded(
             # clamp: seeds never change, so drop any vote row for a seed
             .join(seeds.select("__n"), "__n", "left_anti")
         )
-        labels = seeds.unionByName(adopted).localCheckpoint()
+        prev, labels = labels, seal(seeds.unionByName(adopted))
+        if prev is not seeds:
+            release(prev)
+    release(e)
+    if labels is not seeds:
+        release(seeds)
     return labels.select(
         F.col("__n").alias(node_col), F.col("__l").alias(label_col)
     )

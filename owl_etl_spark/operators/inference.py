@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from owl_etl_spark.functions.hashing import md5_long
+from owl_etl_spark.session import seal
 
 _M = 1_000_000
 
@@ -444,7 +445,7 @@ def fdr_bh_screen(
         & F.col("__v").isNotNull()
         & F.col("__k").isNotNull()
     )
-    d = d.localCheckpoint(eager=False)
+    d = seal(d, eager=False)
     base = d.groupBy("__g").agg(
         F.sum(F.col("__side").cast("long")).cast("long").alias("__n1"),
         F.sum((~F.col("__side")).cast("long")).cast("long").alias("__n2"),
@@ -811,7 +812,7 @@ def jonckheere_terpstra(
         F.col(value_col).cast("long").alias("__v"),
     ).filter(F.col("__g").isNotNull() & F.col("__v").isNotNull())
     per_gv = d.groupBy("__g", "__v").agg(F.count(F.lit(1)).cast("long").alias("__c"))
-    per_gv = per_gv.localCheckpoint(eager=False)
+    per_gv = seal(per_gv, eager=False)
     all_v = per_gv.select("__v").distinct()
     groups = per_gv.select("__g").distinct()
     grid = all_v.crossJoin(F.broadcast(groups)).join(

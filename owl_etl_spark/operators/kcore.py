@@ -9,8 +9,8 @@ degrees recomputed over the survivors) until a fixpoint.
 Plan shape per round: one degree aggregate over the surviving edge
 set + two semi-joins to drop edges touching peeled nodes — all keyed
 shuffles on the node id, no global sorts, no driver-side data. The
-edge set only shrinks, so rounds get cheaper; `localCheckpoint`
-truncates the growing lineage each round (same discipline as the
+edge set only shrinks, so rounds get cheaper; a seal truncates the
+growing lineage each round (same discipline as the
 connected-components loop in operators/dedup.py). Convergence is
 checked by edge-count fixpoint; a graph that has not converged within
 ``max_rounds`` raises rather than silently returning a non-core
@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from owl_etl_spark.session import release, seal
 
 
 def k_core(
@@ -50,7 +52,7 @@ def k_core(
         .where(F.col("__a").isNotNull() & F.col("__b").isNotNull() & (F.col("__a") != F.col("__b")))
     )
     sym = base.union(base.select(F.col("__b").alias("__a"), F.col("__a").alias("__b"))).distinct()
-    cur = sym.localCheckpoint(eager=True)
+    cur = seal(sym)
     n_edges = cur.count()
     for _ in range(int(max_rounds)):
         keep = (
@@ -59,11 +61,12 @@ def k_core(
             .where(F.col("__deg") >= int(k))
             .select("__a")
         )
-        nxt = (
-            cur.join(keep, "__a", "left_semi")
-            .join(keep.withColumnRenamed("__a", "__b"), "__b", "left_semi")
-            .localCheckpoint(eager=True)
+        nxt = seal(
+            cur.join(keep, "__a", "left_semi").join(
+                keep.withColumnRenamed("__a", "__b"), "__b", "left_semi"
+            )
         )
+        release(cur)
         n_next = nxt.count()
         if n_next == n_edges:
             return (

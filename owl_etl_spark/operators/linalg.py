@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from owl_etl_spark.session import bounded_collect, literal_frame
+from owl_etl_spark.session import bounded_collect, literal_frame, release, seal
 
 
 def gram_matrix(
@@ -140,14 +140,14 @@ def power_iteration_top_eigvec(
     Plan per iteration: one A⋈v join + one i-group aggregate over the
     MATRIX CELL list (dim² rows, never the corpus) + a 1-row broadcast
     pivot kept IN-PLAN (the fused-HITS shape — no driver collect);
-    lineage seals lazily every 2 rounds."""
+    lineage seals every 2 rounds."""
     full = gram.select("i", "j", "s").unionAll(
         gram.filter(F.col("j") > F.col("i")).select(
             F.col("j").alias("i"), F.col("i").alias("j"), "s"
         )
     )
     amax = full.agg(F.greatest(F.max(F.abs(F.col("s"))), F.lit(1)).alias("__amax"))
-    a = (
+    a = seal(
         full.crossJoin(F.broadcast(amax))
         .select(
             "i",
@@ -165,11 +165,11 @@ def power_iteration_top_eigvec(
         # gram subtree per operator (measured: 3.4 s of q253's 4.2 s
         # was plan build, 0.4 s execution). Truncating here keeps
         # every iteration's analyzed tree shallow.
-        .localCheckpoint(eager=True)
     )
     # exact driver replay when model-sized (session.bounded_collect)
     rows = bounded_collect(a)
     if rows is not None:
+        release(a)
         cells = [(r[0], r[1], r[2]) for r in rows]
         ityp = dict(a.dtypes)["i"]
         v_d = {i: int(micro) for i, _, _ in cells}
@@ -195,6 +195,7 @@ def power_iteration_top_eigvec(
     v = a.select(F.col("i").alias("vi")).distinct().select(
         "vi", F.lit(int(micro)).cast("long").alias("x")
     )
+    v_seal = None
     for it in range(int(n_iters)):
         w = (
             a.join(v, a["j"] == v["vi"])
@@ -222,5 +223,8 @@ def power_iteration_top_eigvec(
             # eager for the same reason as `a` above: bound the depth
             # of the plan the NEXT iteration's build must re-analyze
             # (ckpt cadence 1/2/3/none measured 5.1/3.0/3.4/5.0 s)
-            v = v.localCheckpoint(eager=True)
+            v = seal(v)
+            if v_seal is not None:
+                release(v_seal)
+            v_seal = v
     return v.select(F.col("vi").alias("i"), F.col("x").alias("v_micro"))

@@ -42,7 +42,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from owl_etl_spark.session import bounded_collect, literal_frame
+from owl_etl_spark.session import bounded_collect, literal_frame, seal
 
 
 def _sigma(z):
@@ -361,7 +361,8 @@ def cv_logistic_report(
         "__fold",
         (md5_long(F.concat(F.col(key_col).cast("string"), F.lit(f"#{salt}"))) % folds)
         .cast("long"),
-    ).localCheckpoint(eager=False)
+    )
+    work = seal(work, eager=False)
     outs = []
     spark = df.sparkSession
     for f in range(int(folds)):

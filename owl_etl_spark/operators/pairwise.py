@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from owl_etl_spark.session import bounded_collect, literal_frame
+from owl_etl_spark.session import bounded_collect, literal_frame, release, seal
 
 MICRO = 1_000_000
 
@@ -88,7 +88,7 @@ def bradley_terry_strengths(
     # one shuffle: unordered-pair game counts with per-direction wins
     lo = F.least("__w", "__l")
     hi = F.greatest("__w", "__l")
-    pairs = (
+    pairs = seal(
         g.select(
             lo.alias("__a"),
             hi.alias("__b"),
@@ -99,11 +99,11 @@ def bradley_terry_strengths(
             F.count(F.lit(1)).cast("long").alias("__n"),
             F.sum("__a_won").cast("long").alias("__wa"),
         )
-        .localCheckpoint()
     )
     # exact driver replay when model-sized (session.bounded_collect)
     rows = bounded_collect(pairs)
     if rows is not None:
+        release(pairs)
         prows = [(r[0], r[1], r[2], r[3]) for r in rows]
         wins: dict = {}
         games_d: dict = {}
@@ -142,7 +142,7 @@ def bradley_terry_strengths(
             ],
             "item string, wins bigint, games bigint, strength_micro bigint",
         )
-    items = (
+    items = seal(
         pairs.select(F.col("__a").alias("item"), F.col("__wa").alias("__wins"), "__n")
         .unionAll(
             pairs.select(
@@ -170,13 +170,16 @@ def bradley_terry_strengths(
                 ).cast("long"),
             ).otherwise(F.col("wins")),
         )
-        .localCheckpoint()
     )
     # symmetric pair view for the per-item denominator join
-    sym = pairs.select("__a", "__b", "__n").unionAll(
-        pairs.select(F.col("__b").alias("__a"), F.col("__a").alias("__b"), "__n")
-    ).localCheckpoint()
+    sym = seal(
+        pairs.select("__a", "__b", "__n").unionAll(
+            pairs.select(F.col("__b").alias("__a"), F.col("__a").alias("__b"), "__n")
+        )
+    )
+    release(pairs)
     r = items.select("item", F.lit(MICRO).cast("long").alias("__r"))
+    r_seal = None
     for it in range(int(n_iters)):
         ra = r.select(F.col("item").alias("__a"), F.col("__r").alias("__ra"))
         rb = r.select(F.col("item").alias("__b"), F.col("__r").alias("__rb"))
@@ -216,7 +219,10 @@ def bradley_terry_strengths(
             # eager (r12): bound the analyzed-plan depth the next
             # iteration's build pays (q253/q183 fix; q255 measured
             # 5.3 s build vs 0.2 s exec with the lazy seal)
-            r = r.localCheckpoint(eager=True)
+            r = seal(r)
+            if r_seal is not None:
+                release(r_seal)
+            r_seal = r
     return items.join(_bi(r), "item").select(
         "item", "wins", "games", F.col("__r").alias("strength_micro")
     )

@@ -18,8 +18,8 @@ cover:
 
 Both follow the repo's iterative-loop discipline (see
 operators/dedup.py connected_components): per round, ONE keyed
-shuffle (a join on the node id + an aggregate), ``localCheckpoint``
-to truncate lineage, and a cheap fixpoint test so the loop exits in
+shuffle (a join on the node id + an aggregate), a seal to truncate
+lineage, and a cheap fixpoint test so the loop exits in
 diameter-ish rounds rather than always burning the budget. All
 arithmetic is exact integers — costs are BIGINT sums, tie-breaks are
 total orders — so results are deterministic and engine-portable, and
@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from owl_etl_spark.session import release, seal
 
 
 def weighted_shortest_paths(
@@ -65,7 +67,7 @@ def weighted_shortest_paths(
     Plan per round: current distance table joins the edge list on the
     node id (one keyed shuffle), unions the stand-pat rows, and takes
     ``min(cost)`` per node — no global sorts, no driver data;
-    ``localCheckpoint`` keeps lineage flat. At 100 TB the distance
+    a seal per round keeps lineage flat. At 100 TB the distance
     table is |V| rows and each round is one shuffle of
     |V| + |frontier neighborhood| rows, the same contract as
     ``bfs_hops`` (operators/graph.py:225) with a cost column riding
@@ -100,24 +102,19 @@ def weighted_shortest_paths(
     spark = edges.sparkSession
     from owl_etl_spark.session import literal_frame
 
-    dist = literal_frame(
-        spark, [(s, 0) for s in sources], ["node", "cost"]
-    ).select(
-        F.col("node").cast(dict(e.dtypes)["__s"]), F.col("cost").cast("long")
+    dist = seal(
+        literal_frame(spark, [(s, 0) for s in sources], ["node", "cost"]).select(
+            F.col("node").cast(dict(e.dtypes)["__s"]), F.col("cost").cast("long")
+        )
     )
-    dist = dist.localCheckpoint(eager=True)
     sig = (1, 0)
     for _ in range(int(max_hops)):
         relaxed = (
             dist.join(e, dist.node == e.__s)
             .select(F.col("__d").alias("node"), (F.col("cost") + F.col("__w")).alias("cost"))
         )
-        nxt = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=True)
-        )
+        nxt = seal(dist.unionByName(relaxed).groupBy("node").agg(F.min("cost").alias("cost")))
+        release(dist)
         row = nxt.agg(
             F.count(F.lit(1)).alias("n"), F.sum("cost").alias("total")
         ).collect()[0]
@@ -164,8 +161,8 @@ def label_propagation(
     sym = base.union(
         base.select(F.col("__b").alias("__a"), F.col("__a").alias("__b"))
     ).distinct()
-    sym = sym.localCheckpoint(eager=True)
-    labels = sym.select(F.col("__a").alias("node")).distinct().withColumn(
+    sym = seal(sym)
+    labels = initial = sym.select(F.col("__a").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
     for _ in range(int(rounds)):
@@ -174,13 +171,15 @@ def label_propagation(
             .groupBy(F.col("__a").alias("node"), F.col("label"))
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        labels = (
-            votes.groupBy("node")
-            .agg(
+        prev, labels = labels, seal(
+            votes.groupBy("node").agg(
                 F.min(F.struct((-F.col("__c")).alias("nc"), F.col("label").alias("lb")))
                 .getField("lb")
                 .alias("label")
             )
-            .localCheckpoint(eager=True)
         )
+        if prev is not initial:
+            release(prev)
+    if labels is not initial:
+        release(sym)
     return labels

@@ -276,7 +276,6 @@ def mondrian_partitions(
         F.col(tie_col).alias("__t"),
         F.lit("r").alias("__gid"),
     ).filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
-    d = d.localCheckpoint(eager=False)
     for lvl in range(int(depth)):
         # One window pass per level, all partitioned by the current
         # cell (r12, guide §2.4): the median, the left-flag counts and
@@ -333,7 +332,6 @@ def mondrian_partitions(
                 .otherwise(F.col("__gid"))
                 .alias("__gid"),
             )
-            .localCheckpoint(eager=False)
         )
     return (
         d.groupBy(F.col("__gid").alias("gid"))

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import seal
+
 
 def table_profile(
     df: DataFrame, cols: list[str], approx_distinct: bool = False
@@ -511,7 +513,7 @@ def mi_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     """
     if len(cols) < 2:
         raise ValueError("mi_matrix: need at least two columns")
-    work = df.select(*cols).localCheckpoint(eager=False)
+    work = seal(df.select(*cols), eager=False)
     out = None
     for i, a in enumerate(cols):
         for b in cols[i + 1 :]:

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from owl_etl_spark.schemas import COMPOSICION_CATEGORIES
+from owl_etl_spark.session import seal
 
 
 def anti_filter(df: DataFrame, skiplist: DataFrame, df_col: str, skip_col: str) -> DataFrame:
@@ -34,18 +35,14 @@ def split_by_predicate(df: DataFrame, predicate: Column) -> tuple[DataFrame, Dat
     (reference: src/scripts/script_transform.py:81-114, 270-293).
     Rows where the predicate is null go to ``invalid``.
 
-    The input is sealed once (``localCheckpoint(eager=True)``) before
-    it is filtered, so the split costs one run of the input plan and
-    both branches read that materialization. Unsealed, every consumer
-    re-runs the whole upstream — on the FIC load that is the PDF
-    extraction and the transform once for the store drop's range
-    sampling, once for its write and once more for the skip list.
-    The seal is a local checkpoint: its blocks live in executor
-    storage with no lineage to recompute them from, so losing an
-    executor fails the job instead of recomputing. It targets local
-    and single-executor runs, which is how this package runs today.
+    The input is sealed once (``session.seal``) before it is filtered,
+    so the split costs one run of the input plan and both branches read
+    that materialization. Unsealed, every consumer re-runs the whole
+    upstream — on the FIC load that is the PDF extraction and the
+    transform once for the store drop's range sampling, once for its
+    write and once more for the skip list.
     """
-    sealed = df.localCheckpoint(eager=True)
+    sealed = seal(df)
     return sealed.filter(predicate), sealed.filter(~predicate | predicate.isNull())
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from owl_etl_spark.functions.hashing import md5_long
+from owl_etl_spark.session import seal
 
 MICRO = 1_000_000
 
@@ -77,7 +78,8 @@ def ransac_line_fit(
             Window.orderBy(F.col("__x").asc(), F.col("__y").asc(), F.col("__k").asc())
         )
         - 1,
-    ).localCheckpoint(eager=False)
+    )
+    idx = seal(idx, eager=False)
     spark = df.sparkSession
     cands = (
         spark.range(0, K)
@@ -112,7 +114,7 @@ def ransac_line_fit(
     pb = idx.select(
         F.col("__i").alias("__ib"), F.col("__x").alias("x2"), F.col("__y").alias("y2")
     )
-    lines = (
+    lines = seal(
         cands.join(F.broadcast(pa), "__ia")
         .join(F.broadcast(pb), "__ib")
         .select(
@@ -123,8 +125,8 @@ def ransac_line_fit(
             "y2",
             (F.col("y2") - F.col("y1")).alias("__dy"),
             (F.col("x2") - F.col("x1")).alias("__dx"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     counted = (
         pts.crossJoin(F.broadcast(lines.filter(F.col("__dx") != 0)))

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from owl_etl_spark.schemas import COMPOSICION_CATEGORIES, COMPOSICION_TAGS
+from owl_etl_spark.session import seal
 
 
 def with_fic_id(df: DataFrame) -> DataFrame:
@@ -156,15 +157,12 @@ def to_star_schema(silver: DataFrame) -> dict[str, DataFrame]:
     """One silver snapshot → every gold table (S10; write/merge policy
     belongs to the caller/sink layer).
 
-    Not a pure projection: the keyed snapshot is sealed once here with
-    ``localCheckpoint(eager=True)`` — one eager job now — so each table
-    is one scan of the seal and its write is a single job, instead of
-    every table re-running the silver read, its recency window and the
-    key. The sealed blocks have no lineage: losing an executor fails the
-    later writes instead of recomputing them (the package targets local
-    / single-executor runs, as ``split_by_predicate`` does).
+    Not a pure projection: the keyed snapshot is sealed once here
+    (``session.seal``, one eager job now), so each table is one scan of
+    the seal and its write is a single job, instead of every table
+    re-running the silver read, its recency window and the key.
     """
-    keyed = with_fic_id(silver).localCheckpoint(eager=True)
+    keyed = seal(with_fic_id(silver))
     return {
         "fic": fic_hub(keyed),
         "composicion_portafolio": composicion_table(keyed),

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import seal
+
 
 def theil_sen_slopes(
     df: DataFrame,
@@ -256,7 +258,7 @@ def huber_location(
         F.col(group_col).cast("string").alias("__g"),
         F.col(value_col).cast("long").alias("__y"),
     ).filter(F.col("__g").isNotNull() & F.col("__y").isNotNull())
-    d = d.localCheckpoint(eager=False)
+    d = seal(d, eager=False)
     base = d.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum("__y").cast("long").alias("__sy"),
@@ -355,10 +357,9 @@ def quantile_regression_fit(
     if not 0 < int(tau_centi) < 100:
         raise ValueError("quantile_regression_fit: tau_centi must be in (0, 100)")
     tc = int(tau_centi)
-    work = df.select(
-        F.col(y_col).cast("long").alias("__y"),
-        F.col(x_col).cast("long").alias("__x"),
-    ).localCheckpoint(eager=True)
+    work = seal(
+        df.select(F.col(y_col).cast("long").alias("__y"), F.col(x_col).cast("long").alias("__x"))
+    )
 
     def _solve(row, pfx: str) -> tuple[int, int]:
         sw, sx = float(row[f"{pfx}w"]), float(row[f"{pfx}x"])
@@ -441,10 +442,9 @@ def huber_line_fit(
     """
     from owl_etl_spark.operators.logreg import _round_half_away
 
-    work = df.select(
-        F.col(y_col).cast("long").alias("__y"),
-        F.col(x_col).cast("long").alias("__x"),
-    ).localCheckpoint(eager=True)
+    work = seal(
+        df.select(F.col(y_col).cast("long").alias("__y"), F.col(x_col).cast("long").alias("__x"))
+    )
 
     def _solve(row) -> tuple[int, int]:
         sw, sx = float(row["__sw"]), float(row["__sx"])

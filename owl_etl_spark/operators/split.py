@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from owl_etl_spark.functions.hashing import md5_long
+from owl_etl_spark.session import seal
 
 
 def hash_bucket(key: Column, num_buckets: int = 100, salt: str = "") -> Column:
@@ -381,12 +382,14 @@ def importance_weights(
     """
     from owl_etl_spark.operators.logreg import logistic_regression_fit
 
-    work = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(domain_col).cast("long").alias("__y"),
-        F.lit(1).cast("long").alias("__x0"),
-        *[F.col(c).cast("long").alias(f"__x{j + 1}") for j, c in enumerate(x_cols)],
-    ).localCheckpoint(eager=True)
+    work = seal(
+        df.select(
+            F.col(id_col).alias("__id"),
+            F.col(domain_col).cast("long").alias("__y"),
+            F.lit(1).cast("long").alias("__x0"),
+            *[F.col(c).cast("long").alias(f"__x{j + 1}") for j, c in enumerate(x_cols)],
+        )
+    )
     feats = ["__x0"] + [f"__x{j + 1}" for j in range(len(x_cols))]
     w = logistic_regression_fit(work, "__y", feats, iterations=iterations, lr=lr)
     z = sum(

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import seal
+
 
 def _guarded(col, limit: int, what: str):
     return F.when(
@@ -413,7 +415,7 @@ def permutation_mean_test(
     if len(groups) != 2:
         raise ValueError(f"permutation_mean_test: need exactly 2 groups, got {groups}")
     g1 = groups[0]
-    d = d.localCheckpoint(eager=False)
+    d = seal(d, eager=False)
     base = d.groupBy().agg(
         F.sum(F.when(F.col("__g") == g1, 1).otherwise(0)).cast("long").alias("n1"),
         F.sum(F.when(F.col("__g") != g1, 1).otherwise(0)).cast("long").alias("n2"),

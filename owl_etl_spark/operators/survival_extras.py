@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from owl_etl_spark.operators.survival import km_survival
+from owl_etl_spark.session import seal
 
 _M = 1_000_000
 
@@ -114,7 +115,7 @@ def concordance_index(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum((F.col("__e") == 1).cast("long")).cast("long").alias("__nev"),
     )
-    per = per.localCheckpoint(eager=False)
+    per = seal(per, eager=False)
     all_t = per.select("__t").distinct()
     all_r = per.select("__r").distinct()
     grid = all_t.crossJoin(F.broadcast(all_r)).join(

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from owl_etl_spark.session import seal
+
 _M = 1_000_000
 
 
@@ -82,7 +84,7 @@ def mann_kendall_sen(
         F.col(t_col).cast("long").alias("__t"),
         F.col(value_col).cast("long").alias("__x"),
     ).filter(F.col("__t").isNotNull() & F.col("__x").isNotNull())
-    d = d.localCheckpoint(eager=False)
+    d = seal(d, eager=False)
     base = d.groupBy().agg(F.count(F.lit(1)).cast("long").alias("__n"))
     base = base.withColumn(
         "__n", _guarded(F.col("__n"), max_points, "mann_kendall_sen")

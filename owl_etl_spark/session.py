@@ -9,6 +9,7 @@ are sized from the environment rather than hardcoded.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -136,6 +137,43 @@ def literal_frame(spark, rows, schema):
     return spark.createDataFrame(pdf, schema=_St.fromDDL(ddl))
 
 
+def seal(df, eager=True):
+    """Stage ``df`` in executor storage and return a frame that reads
+    it — the one spelling of a local checkpoint.
+
+    Operators seal a frame that several actions read (so its lineage
+    runs once) or that an iterative loop carries (so each round's plan
+    starts from a leaf, not from every earlier round). An eager seal is
+    one Spark job, run here; a lazy one (``eager=False``) stores its
+    blocks during the first action that reads it. A seal has no
+    lineage: if an executor holding its blocks is lost, the next read
+    fails instead of recomputing. Free the blocks with ``release``."""
+    return df.localCheckpoint(eager)
+
+
+def release(df):
+    """Free the blocks of a frame ``seal`` returned. Any frame still
+    built on it fails its next action afterwards, so release only once
+    nothing live reads the seal. ``DataFrame.unpersist()`` frees
+    nothing here: the blocks belong to the checkpointed RDD under the
+    frame's ``LogicalRDD`` leaf, which this unpersists (blocking)."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        raise TypeError(f"release: expected a sealed frame, got a {plan.nodeName()} plan")
+    plan.rdd().unpersist(True)
+
+
+@contextmanager
+def sealed(df):
+    """``seal(df)`` for the body of a ``with`` block, released when the
+    block exits, also on an exception."""
+    out = seal(df)
+    try:
+        yield out
+    finally:
+        release(out)
+
+
 #: Row cap of a driver replay (see ``bounded_collect``).
 DRIVER_REPLAY_MAX_ROWS = 4_000_000
 
@@ -166,7 +204,7 @@ def bounded_collect(df):
     The constant is read at call time (tests monkeypatch it to force
     either path).
 
-    Precondition: ``df`` must be SEALED (``localCheckpoint``/cached)
+    Precondition: ``df`` must be SEALED (``seal``, or cached)
     or an aggregate whose final stage is model-sized. ``coalesce(1)``
     folds everything back to the last shuffle into one task — that is
     what makes this one Spark job (a bare ``limit`` scans 1, 4, 16 …
