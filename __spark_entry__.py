@@ -36,7 +36,7 @@ from owl_etl_spark.operators.dedup import ngram_jaccard_pairs
 from owl_etl_spark.operators.knn import brute_force_knn, lsh_knn
 from owl_etl_spark.operators.latest import latest_per_key
 from owl_etl_spark.operators.sessionize import session_stats
-from owl_etl_spark.session import seal
+from owl_etl_spark.session import release, seal
 from owl_etl_spark.sources.readers import read_table
 
 # ---------------------------------------------------------------------------
@@ -22040,7 +22040,11 @@ def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
         # point where laziness would turn into reading swapped-out
         # files. 24 sequential seal jobs → 12 sig seals + 3 window
         # seals; values unchanged (the law hashes the union).
+        # Once a window is sealed nothing reads its months' signature
+        # seals (the probes are inside the window seal; write_drop has
+        # run), so they are released there.
         window: list = []  # lazy per-month pair frames, current window
+        window_sigs: list = []  # the window's month signature seals
         def _seal_window(acc):
             if not window:
                 return acc
@@ -22049,6 +22053,9 @@ def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
                 merged = merged.unionByName(p)
             merged = seal(merged)
             window.clear()
+            for month in window_sigs:
+                release(month)
+            window_sigs.clear()
             return merged if acc is None else acc.unionByName(merged)
 
         for k, label in enumerate(labels):
@@ -22064,6 +22071,7 @@ def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
                     num_hashes=16, bands=8,
                 )
             )
+            window_sigs.append(sigs)
             store = cat.read(spark, name) if cat.exists(name) else None
             # this month's pairs against the pre-append store (lazy;
             # directory-pinned — see the window note above)

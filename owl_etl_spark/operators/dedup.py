@@ -30,6 +30,7 @@ from owl_etl_spark.functions.hashing import (
 from owl_etl_spark.functions.text import shingle_chain_sql
 from owl_etl_spark.session import (
     bounded_collect,
+    iterate,
     literal_frame,
     release,
     seal,
@@ -842,11 +843,9 @@ def connected_components(
     from the output.
 
     Scale notes:
-    - ``labels`` is sealed every round, so each round's convergence
-      count executes only that round's join — without it the lineage
-      re-runs ALL prior rounds (O(rounds²) work) and the logical plan
-      grows without bound; the previous round's seal is released once
-      the next one is materialized.
+    - ``labels`` runs through ``session.iterate``, sealed every round,
+      so each round's convergence count executes only that round's
+      join.
     - ``edges`` is consumed once per round; sealing it computes the
       pair list once.
     - ``strict=True`` raises if the loop exhausts ``max_iters`` while
@@ -880,42 +879,34 @@ def connected_components(
         # nothing — on a sparse dup graph the endpoint set is orders of
         # magnitude smaller than the corpus. Non-endpoint ids rejoin as
         # self-labeled singletons in the final left join (unchanged).
-        labels = (
+        labels0 = (
             edges.select(F.col("src").alias("node"))
             .distinct()
             .select("node", F.col("node").alias("component"))
         )
-        new_labels: DataFrame | None = None
-        converged = False
+
+        def _round(labels: DataFrame, _: int) -> DataFrame:
+            neighbor_min = (
+                edges.join(labels, edges.dst == labels.node)
+                .groupBy("src")
+                .agg(F.min("component").alias("n_comp"))
+            )
+            least = F.least(
+                F.col("component"), F.coalesce(F.col("n_comp"), F.col("component"))
+            )
+            return labels.join(neighbor_min, labels.node == neighbor_min.src, "left").select(
+                "node", least.alias("component"), (least != F.col("component")).alias("__moved")
+            )
+
+        moved = []
+
+        def _settled(labels: DataFrame) -> bool:
+            moved.append(labels.filter(F.col("__moved")).limit(1).count())
+            return moved[-1] == 0
+
+        labels = iterate(labels0, _round, max_iters, stop=_settled)
         try:
-            for _ in range(max_iters):
-                neighbor_min = (
-                    edges.join(labels, edges.dst == labels.node)
-                    .groupBy("src")
-                    .agg(F.min("component").alias("n_comp"))
-                )
-                prev, new_labels = new_labels, seal(
-                    labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-                    .select(
-                        "node",
-                        F.least(
-                            F.col("component"), F.coalesce(F.col("n_comp"), F.col("component"))
-                        ).alias("new_component"),
-                        "component",
-                    )
-                )
-                if prev is not None:
-                    release(prev)
-                changed = (
-                    new_labels.filter(F.col("new_component") != F.col("component"))
-                    .limit(1)
-                    .count()
-                )
-                labels = new_labels.select("node", F.col("new_component").alias("component"))
-                if changed == 0:
-                    converged = True
-                    break
-            if not converged:
+            if not moved or moved[-1]:  # no round ran, or the last moved a label
                 msg = (
                     f"connected_components did not converge within max_iters={max_iters}; "
                     "the graph diameter exceeds the iteration budget and the labels are "
@@ -932,8 +923,8 @@ def connected_components(
                 ids, id_col, labels.select("node", F.col("component").alias("root"))
             )
         finally:
-            if new_labels is not None:
-                release(new_labels)
+            if labels is not labels0:
+                release(labels)
 
 
 def dedup_segments(
@@ -1039,9 +1030,8 @@ def connected_components_star(
     the per-u minimum as a WINDOW aggregate sharing the phase's one
     exchange (sort-based, streaming — no per-node buffers, so
     giant-component hubs are safe; the pre-r12 groupBy+join form paid
-    an extra broadcast build + join per phase per round); edges are
-    sealed per round (lineage truncation, same rationale as min-label)
-    and the previous round's seal is released. Convergence = the
+    an extra broadcast build + join per phase per round); the edge set
+    runs through ``session.iterate``, sealed every round. Convergence = the
     small-star round leaves the edge set unchanged (count + order-free
     xxhash64 checksum — one cheap agg);
     the converged edge set is exactly the star (child → component-min)
@@ -1077,53 +1067,50 @@ def connected_components_star(
         rows = bounded_collect(edges)
         if rows is not None:
             return _driver_components(rows, ids, id_col, dict(edges.dtypes)["lo"])
-        cur = edges  # the current round's edge seal
-        converged = False
-        try:
-            sig = _checksum(cur)
-            for _ in range(max_iters):
-                bidir = cur.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
-                    cur.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-                )
-                # LARGE-STAR: for each u, m = min(N(u) ∪ {u}); emit (v, m)
-                # for all neighbors v > u. The per-u min is a WINDOW
-                # aggregate over the same rows (r12, guide §2.4): the old
-                # groupBy(min) + join-back added a broadcast build + join
-                # per phase per round; the window shares the one exchange,
-                # streams (sort-based, spills — no per-node buffers, so
-                # giant-component hubs stay safe), and emits the identical
-                # pair multiset.
-                wu = Window.partitionBy("u")
-                large = _canon(
-                    bidir.withColumn("mv", F.min("v").over(wu))
-                    .filter(F.col("v") > F.col("u"))
-                    .select(F.col("v").alias("src"), F.least("u", "mv").alias("dst"))
-                )
-                # SMALL-STAR: for each u over its ≤-neighbors v < u,
-                # m = min(N<(u)); emit (v, m) and (u, m).
-                smaller = large.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-                small = seal(
-                    _canon(
-                        smaller.withColumn("mv", F.min("v").over(wu))
-                        .select(
-                            F.explode(
-                                F.array(
-                                    F.struct(F.col("v").alias("src"), F.col("mv").alias("dst")),
-                                    F.struct(F.col("u").alias("src"), F.col("mv").alias("dst")),
-                                )
-                            ).alias("e")
+
+        def _round(cur: DataFrame, _: int) -> DataFrame:
+            bidir = cur.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
+                cur.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+            )
+            # LARGE-STAR: for each u, m = min(N(u) ∪ {u}); emit (v, m)
+            # for all neighbors v > u. The per-u min is a WINDOW
+            # aggregate over the same rows (r12, guide §2.4): the old
+            # groupBy(min) + join-back added a broadcast build + join
+            # per phase per round; the window shares the one exchange,
+            # streams (sort-based, spills — no per-node buffers, so
+            # giant-component hubs stay safe), and emits the identical
+            # pair multiset.
+            wu = Window.partitionBy("u")
+            large = _canon(
+                bidir.withColumn("mv", F.min("v").over(wu))
+                .filter(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("src"), F.least("u", "mv").alias("dst"))
+            )
+            # SMALL-STAR: for each u over its ≤-neighbors v < u,
+            # m = min(N<(u)); emit (v, m) and (u, m).
+            smaller = large.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+            return _canon(
+                smaller.withColumn("mv", F.min("v").over(wu))
+                .select(
+                    F.explode(
+                        F.array(
+                            F.struct(F.col("v").alias("src"), F.col("mv").alias("dst")),
+                            F.struct(F.col("u").alias("src"), F.col("mv").alias("dst")),
                         )
-                        .select("e.src", "e.dst")
-                    )
+                    ).alias("e")
                 )
-                new_sig = _checksum(small)
-                if cur is not edges:
-                    release(cur)
-                cur = small
-                if new_sig == sig:
-                    converged = True
-                    break
-                sig = new_sig
+                .select("e.src", "e.dst")
+            )
+
+        sigs = [_checksum(edges)]
+
+        def _settled(cur: DataFrame) -> bool:
+            sigs.append(_checksum(cur))
+            return sigs[-1] == sigs[-2]
+
+        cur = iterate(edges, _round, max_iters, stop=_settled)
+        try:
+            converged = len(sigs) > 1 and sigs[-1] == sigs[-2]
             if not converged:
                 msg = (
                     f"connected_components_star did not converge within max_iters={max_iters}; "

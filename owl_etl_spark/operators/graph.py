@@ -10,10 +10,9 @@ same operator covers influence/abuse scoring on interaction graphs.
 Execution shape (same family as ``dedup.connected_components``): the
 RANK VECTOR is a DataFrame keyed by node; each iteration is one join
 (ranks → out-edges) + one aggregate (sum contributions per target) —
-two shuffles over the EDGE list, never an adjacency matrix.
-A seal (``session.seal``) per iteration truncates lineage, so N
-iterations cost O(N) plan depth, not O(N²); each round releases the
-seal the previous round made.
+two shuffles over the EDGE list, never an adjacency matrix. The
+loops run through ``session.iterate`` (lineage seals and their
+release).
 
 Determinism contract: ranks live in integer MICRO-units. Each edge
 contribution is ``round(rank / outdegree)`` — one float division +
@@ -41,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from owl_etl_spark.session import release, seal
+from owl_etl_spark.session import iterate, literal_frame, release, seal, sealed
 
 #: rank unit: 1.0 == 1_000_000 micro-units
 MICRO = 1_000_000
@@ -85,67 +84,35 @@ def pagerank(
     out_deg = edges.groupBy(F.col(src_col).alias("__s")).agg(
         F.sum(w).alias("__deg")
     )
-    # checkpoint the degree-annotated edge list ONCE: every iteration
-    # joins against it, and without this each of the n_iters eager
-    # checkpoints below would re-run the caller's full edge lineage
-    # (in q125, a 4-table join) from scratch
-    e = seal(
+    teleport = int(round((1.0 - damping) * MICRO))
+    # seal the degree-annotated edge list ONCE: every round joins
+    # against it, and without this each round's seal would re-run the
+    # caller's full edge lineage (in q125, a 4-table join) from scratch
+    with sealed(
         edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w"))
         .join(out_deg, "__s")
-    )
-    ranks = seal(
-        nodes.select(F.col(node_col).alias("__n"), F.lit(MICRO).cast("long").alias("__r"))
-    )
-    teleport = int(round((1.0 - damping) * MICRO))
-    n_nodes = None
-    has_out = None
-    if dangling == "redistribute":
-        n_nodes = nodes.count()
-        # skinny (node) frame of rank sources — broadcast-joined each
-        # iteration to split the vector into contributing vs dangling
-        has_out = seal(e.select(F.col("__s").alias("__n")).distinct())
-    for _ in range(n_iters):
-        prev = ranks
-        contrib = (
-            e.join(ranks, e["__s"] == ranks["__n"])
-            .select(
-                F.col("__d"),
-                F.round(F.col("__r") * F.col("__w") / F.col("__deg")).cast("long").alias("__c"),
-            )
-            .groupBy("__d")
-            .agg(F.sum("__c").alias("__in"))
+    ) as e:
+        ranks0 = seal(
+            nodes.select(F.col(node_col).alias("__n"), F.lit(MICRO).cast("long").alias("__r"))
         )
         if dangling == "redistribute":
-            # one map-side-combined aggregate → a single row: the total
-            # rank parked on nodes with no out-edges this iteration
-            dg = (
-                ranks.join(F.broadcast(has_out), "__n", "left_anti")
-                .agg(F.coalesce(F.sum("__r"), F.lit(0)).alias("__dsum"))
+            n_nodes = nodes.count()
+            # skinny (node) frame of rank sources — broadcast-joined each
+            # round to split the vector into contributing vs dangling
+            has_out = seal(e.select(F.col("__s").alias("__n")).distinct())
+
+        def _round(ranks: DataFrame, _: int) -> DataFrame:
+            contrib = (
+                e.join(ranks, e["__s"] == ranks["__n"])
                 .select(
-                    F.round(F.col("__dsum") / F.lit(n_nodes)).cast("long").alias("__dg")
+                    F.col("__d"),
+                    F.round(F.col("__r") * F.col("__w") / F.col("__deg")).cast("long").alias("__c"),
                 )
+                .groupBy("__d")
+                .agg(F.sum("__c").alias("__in"))
             )
-            node_ids = ranks.select("__n")
-            contrib_full = node_ids.join(
-                contrib, node_ids["__n"] == contrib["__d"], "left"
-            ).select(
-                "__n", F.coalesce(F.col("__in"), F.lit(0)).alias("__in")
-            ).crossJoin(F.broadcast(dg))
-            ranks = seal(
-                contrib_full.select(
-                    "__n",
-                    (
-                        F.lit(teleport)
-                        + F.round(
-                            F.lit(damping) * (F.col("__in") + F.col("__dg"))
-                        ).cast("long")
-                    ).alias("__r"),
-                )
-            )
-        else:
-            ranks = seal(
-                ranks.join(contrib, ranks["__n"] == contrib["__d"], "left")
-                .select(
+            if dangling == "leak":
+                return ranks.join(contrib, ranks["__n"] == contrib["__d"], "left").select(
                     "__n",
                     (
                         F.lit(teleport)
@@ -154,11 +121,32 @@ def pagerank(
                         )
                     ).alias("__r"),
                 )
+            # one map-side-combined aggregate → a single row: the total
+            # rank parked on nodes with no out-edges this round
+            dg = (
+                ranks.join(F.broadcast(has_out), "__n", "left_anti")
+                .agg(F.coalesce(F.sum("__r"), F.lit(0)).alias("__dsum"))
+                .select(F.round(F.col("__dsum") / F.lit(n_nodes)).cast("long").alias("__dg"))
             )
-        release(prev)
-    release(e)
-    if has_out is not None:
-        release(has_out)
+            node_ids = ranks.select("__n")
+            contrib_full = node_ids.join(
+                contrib, node_ids["__n"] == contrib["__d"], "left"
+            ).select(
+                "__n", F.coalesce(F.col("__in"), F.lit(0)).alias("__in")
+            ).crossJoin(F.broadcast(dg))
+            return contrib_full.select(
+                "__n",
+                (
+                    F.lit(teleport)
+                    + F.round(F.lit(damping) * (F.col("__in") + F.col("__dg"))).cast("long")
+                ).alias("__r"),
+            )
+
+        ranks = iterate(ranks0, _round, n_iters)
+        if dangling == "redistribute":
+            release(has_out)
+        if ranks is not ranks0:
+            release(ranks0)
     return ranks.select(
         F.col("__n").alias(node_col), F.col("__r").alias("rank_micro_units")
     )
@@ -198,35 +186,33 @@ def personalized_pagerank(
     sums, one float round per edge and per node."""
     w = F.col(weight_col).cast("long") if weight_col is not None else F.lit(1).cast("long")
     out_deg = edges.groupBy(F.col(src_col).alias("__s")).agg(F.sum(w).alias("__deg"))
-    e = seal(
-        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w"))
-        .join(out_deg, "__s")
-    )
     seed_flag = F.broadcast(
         seeds.select(F.col(seeds.columns[0]).alias("__n")).distinct()
     ).withColumn("__seed", F.lit(1).cast("long"))
-    base = seal(
-        nodes.select(F.col(node_col).alias("__n"))
-        .join(seed_flag, "__n", "left")
-        .select("__n", F.coalesce(F.col("__seed"), F.lit(0)).alias("__seed"))
-    )
     teleport = int(round((1.0 - damping) * MICRO))
-    ranks = base.select("__n", (F.col("__seed") * MICRO).alias("__r"))
-    for i in range(n_iters):
-        contrib = (
-            e.join(ranks, e["__s"] == ranks["__n"])
-            .select(
-                F.col("__d"),
-                F.round(F.col("__r") * F.col("__w") / F.col("__deg"))
-                .cast("long")
-                .alias("__c"),
-            )
-            .groupBy("__d")
-            .agg(F.sum("__c").alias("__in"))
+    with sealed(
+        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w"))
+        .join(out_deg, "__s")
+    ) as e:
+        base = seal(
+            nodes.select(F.col(node_col).alias("__n"))
+            .join(seed_flag, "__n", "left")
+            .select("__n", F.coalesce(F.col("__seed"), F.lit(0)).alias("__seed"))
         )
-        prev, ranks = ranks, seal(
-            base.join(contrib, base["__n"] == contrib["__d"], "left")
-            .select(
+
+        def _round(ranks: DataFrame, _: int) -> DataFrame:
+            contrib = (
+                e.join(ranks, e["__s"] == ranks["__n"])
+                .select(
+                    F.col("__d"),
+                    F.round(F.col("__r") * F.col("__w") / F.col("__deg"))
+                    .cast("long")
+                    .alias("__c"),
+                )
+                .groupBy("__d")
+                .agg(F.sum("__c").alias("__in"))
+            )
+            return base.join(contrib, base["__n"] == contrib["__d"], "left").select(
                 "__n",
                 (
                     F.col("__seed") * teleport
@@ -235,12 +221,11 @@ def personalized_pagerank(
                     ).cast("long")
                 ).alias("__r"),
             )
-        )
-        if i:
-            release(prev)
-    release(e)
-    if n_iters:
-        release(base)
+
+        ranks0 = base.select("__n", (F.col("__seed") * MICRO).alias("__r"))
+        ranks = iterate(ranks0, _round, n_iters)
+        if ranks is not ranks0:
+            release(base)
     return ranks.select(
         F.col("__n").alias(node_col), F.col("__r").alias("rank_micro_units")
     )
@@ -332,14 +317,12 @@ def bfs_hops(
     "how far is every supplier from this region" questions, and the
     BFS core of any unweighted shortest-path readout.
 
-    Iterative frontier expansion, the q98/q125 discipline: each round
-    joins the CURRENT FRONTIER (not the full distance set) against the
-    edges, anti-joins already-reached nodes, and seals —
-    per-round cost is |frontier neighborhood|, lineage stays flat, and
-    the loop exits as soon as a frontier comes back empty (diameter
-    rounds, not max_hops rounds, on most graphs). Hops are exact
-    integers; no tie can affect min-hop, so the result is
-    deterministic regardless of traversal order.
+    Iterative frontier expansion (``_hop_distances``): each round
+    joins only the current frontier against the edges, so a round
+    costs |frontier neighborhood| and the loop exits on the first
+    empty frontier. Hops are exact integers; no tie can affect
+    min-hop, so the result is deterministic regardless of traversal
+    order.
     """
     e = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
@@ -349,33 +332,53 @@ def bfs_hops(
             e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d"))
         )
     e = e.distinct()
-    spark = edges.sparkSession
-    from owl_etl_spark.session import literal_frame
-
     dist = seal(
-        literal_frame(spark, [(s, 0) for s in sources], ["node", "hop"]).select(
+        literal_frame(edges.sparkSession, [(s, 0) for s in sources], ["node", "hop"]).select(
             F.col("node").cast(dict(e.dtypes)["__s"]), F.col("hop").cast("int")
         )
     )
-    frontier = dist
-    for h in range(1, int(max_hops) + 1):
-        nxt = seal(
-            frontier.join(e, frontier.node == e.__s)
-            .select(F.col("__d").alias("node"))
+    return _hop_distances(e, dist, "node", "hop", max_hops)
+
+
+def _hop_distances(
+    e: DataFrame, dist: DataFrame, node: str, hop: str, max_hops: int
+) -> DataFrame:
+    """Frontier expansion shared by ``bfs_hops`` and
+    ``harmonic_centrality``: ``dist`` is a sealed table of hop-0 rows
+    (its key columns, ``node`` among them, then ``hop``) and ``e`` an
+    ``(__s, __d)`` edge frame. Round h joins the FRONTIER (the rows
+    reached at hop h-1, not the whole table) against the edges and
+    anti-joins the keys already reached; ``session.iterate`` seals
+    each frontier, and the stop test ends the loop on an empty one or
+    else folds it into a fresh seal of the table — diameter rounds,
+    not ``max_hops``, on most graphs. Returns the sealed table;
+    ``dist`` and every frontier are released."""
+    keys = [c for c in dist.columns if c != hop]
+    reached = dist
+
+    def _expand(frontier: DataFrame, i: int) -> DataFrame:
+        return (
+            frontier.join(e, frontier[node] == e["__s"])
+            .select(
+                *[F.col("__d").alias(c) if c == node else c for c in keys],
+                F.lit(i + 1).cast("int").alias(hop),
+            )
             .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(h).cast("int"))
+            .join(reached.select(*keys), keys, "left_anti")
         )
-        if frontier is not dist:
-            release(frontier)
-        frontier = nxt
-        if nxt.limit(1).count() == 0:
-            break
-        prev, dist = dist, seal(dist.unionByName(nxt))
-        release(prev)
-    if frontier is not dist:
-        release(frontier)
-    return dist
+
+    def _empty_or_fold(frontier: DataFrame) -> bool:
+        nonlocal reached
+        if frontier.limit(1).count() == 0:
+            return True
+        old, reached = reached, seal(reached.unionByName(frontier))
+        release(old)
+        return False
+
+    last = iterate(dist, _expand, max_hops, stop=_empty_or_fold)
+    if last is not dist:
+        release(last)
+    return reached
 
 
 def hits_scores(
@@ -412,8 +415,8 @@ def hits_scores(
     the same aggregate, so Catalyst's ReuseExchange computes the raw
     table once and both consumers (max + normalize) read the shuffle.
     Whole rounds therefore fuse into ONE job with zero driver
-    barriers; a seal every 2 rounds bounds plan depth
-    for large ``n_iters``. Score tables are node-sized, so the
+    barriers; ``session.iterate`` seals every second round to bound
+    plan depth for large ``n_iters``. Score tables are node-sized, so the
     edges⋈scores join carries an explicit ``broadcast`` hint. Edges
     are deduplicated (parallel edges would double-count mutual
     reinforcement; pass pre-weighted counts through a multiplicity
@@ -458,8 +461,9 @@ def hits_scores(
         )
 
     auth = None
-    hub_seal = None
-    for i in range(n_iters):
+
+    def _round(hub: DataFrame, _: int) -> DataFrame:
+        nonlocal auth
         araw = (
             e.join(F.broadcast(hub), e.__s == hub.__n)
             .groupBy("__d")
@@ -471,17 +475,9 @@ def hits_scores(
             .groupBy("__s")
             .agg(F.sum("__a").cast("long").alias("__raw"))
         )
-        hub = _maxnorm(hraw, "__s", "__h")
-        if (i + 1) % 2 == 0 and i + 1 < n_iters:
-            # eager (r12): Spark analyzes the growing plan per
-            # DataFrame build — the lazy seal left the full half-round
-            # chain under every later operator (q183: 3.4 s of the
-            # 4.2 s wall was plan build). Same fix as
-            # linalg.power_iteration_top_eigvec.
-            hub = seal(hub)
-            if hub_seal is not None:
-                release(hub_seal)
-            hub_seal = hub
+        return _maxnorm(hraw, "__s", "__h")
+
+    hub = iterate(hub, _round, n_iters, every=2)
     return (
         nodes.join(hub, "__n", "left")
         .join(auth, "__n", "left")
@@ -696,9 +692,9 @@ def harmonic_centrality(
     (nation-level trade, host-level link graphs after the usual
     host collapse), where V² state is a few million rows; it raises
     past ``_HARMONIC_MAX_NODES`` rather than quietly attempting a
-    billion² table. Per hop: ONE frontier⋈edges join + a min-merge
-    aggregate over the (src, node) distance table, lazily
-    checkpointed — the q171 BFS shape lifted to ALL sources at once.
+    billion² table. Per hop: ONE frontier⋈edges join + an anti-join
+    against the (src, node) distance table (``_hop_distances``) — the
+    q171 BFS shape lifted to ALL sources at once.
     Distances are exact ints; the final score is
     ``harmonic_micro = Σ fd(1e6, d)`` (exact-multiple floor-div), so
     the oracle replays it with a bounded recursive CTE.
@@ -710,37 +706,18 @@ def harmonic_centrality(
             f"{_HARMONIC_MAX_NODES} — exact all-pairs is V² state; "
             "contract the graph first (host/nation rollup)"
         )
-    e = seal(
+    with sealed(
         edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
         .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
         .where(F.col(src_col) != F.col(dst_col))
         .distinct()
-    )
-    dist = seal(
-        nodes.select(
+    ) as e:
+        hop0 = nodes.select(
             F.col(node_col).alias("__src"),
             F.col(node_col).alias("__n"),
             F.lit(0).cast("int").alias("__h"),
         )
-    )
-    frontier = dist
-    for h in range(1, int(max_hops) + 1):
-        nxt = seal(
-            frontier.join(e, frontier["__n"] == e["__s"])
-            .select("__src", F.col("__d").alias("__n"), F.lit(h).cast("int").alias("__h"))
-            .distinct()
-            .join(dist.select("__src", "__n"), ["__src", "__n"], "left_anti")
-        )
-        if frontier is not dist:
-            release(frontier)
-        frontier = nxt
-        if nxt.limit(1).count() == 0:
-            break
-        prev, dist = dist, seal(dist.unionByName(nxt))
-        release(prev)
-    if frontier is not dist:
-        release(frontier)
-    release(e)
+        dist = _hop_distances(e, seal(hop0), "__n", "__h", max_hops)
     reached = dist.filter(F.col("__h") > 0)
     scores = reached.groupBy("__src").agg(
         F.count(F.lit(1)).cast("long").alias("n_reached"),
@@ -1028,31 +1005,31 @@ def katz_centrality(
     the caller keep the join slim).
     """
     w = F.col(weight_col).cast("long") if weight_col is not None else F.lit(1).cast("long")
-    e = seal(edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w")))
-    scores = seal(
-        nodes.select(F.col(node_col).alias("__n"), F.lit(MICRO).cast("long").alias("__x"))
-    )
-    for _ in range(int(n_iters)):
-        contrib = (
-            e.join(scores, e["__s"] == scores["__n"])
-            .select(F.col("__d"), (F.col("__w") * F.col("__x")).alias("__c"))
-            .groupBy("__d")
-            .agg(F.sum("__c").alias("__in"))
+    with sealed(
+        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"), w.alias("__w"))
+    ) as e:
+        scores0 = seal(
+            nodes.select(F.col(node_col).alias("__n"), F.lit(MICRO).cast("long").alias("__x"))
         )
-        prev, scores = scores, seal(
-            scores.join(contrib, scores["__n"] == contrib["__d"], "left")
-            .select(
+
+        def _round(scores: DataFrame, _: int) -> DataFrame:
+            contrib = (
+                e.join(scores, e["__s"] == scores["__n"])
+                .select(F.col("__d"), (F.col("__w") * F.col("__x")).alias("__c"))
+                .groupBy("__d")
+                .agg(F.sum("__c").alias("__in"))
+            )
+            return scores.join(contrib, scores["__n"] == contrib["__d"], "left").select(
                 "__n",
                 (
                     F.lit(MICRO)
-                    + F.round(F.lit(alpha) * F.coalesce(F.col("__in"), F.lit(0))).cast(
-                        "long"
-                    )
+                    + F.round(F.lit(alpha) * F.coalesce(F.col("__in"), F.lit(0))).cast("long")
                 ).alias("__x"),
             )
-        )
-        release(prev)
-    release(e)
+
+        scores = iterate(scores0, _round, n_iters)
+        if scores is not scores0:
+            release(scores0)
     return scores.select(
         F.col("__n").alias(node_col), F.col("__x").alias("katz_micro_units")
     )
@@ -1147,9 +1124,11 @@ def betweenness_seeded(
         )
     )
     levels = [f0]  # levels[l] = (seed, node, sigma) at distance l
-    # `visited` is a lazy union over the level frames — scanning the
-    # (mostly sealed) levels again is cheaper than materializing the
-    # union, so it carries no checkpoint of its own.
+    # `visited` is a lazy union over the sealed level frames — scanning
+    # them again is cheaper than materializing the union, so it carries
+    # no seal of its own. It must union the SEALS: each unsealed level
+    # plans the previous `visited`, so a union of those doubles the
+    # σ-aggregates a level plans at every level.
     visited = f0.select("__seed", "__n")
     for i in range(1, int(n_levels) + 1):
         frontier = levels[-1]
@@ -1161,7 +1140,7 @@ def betweenness_seeded(
             .join(_b(visited), ["__seed", "__n"], "left_anti")
         )
         levels.append(_seal(nxt))
-        visited = visited.unionByName(nxt.select("__seed", "__n"))
+        visited = visited.unionByName(levels[-1].select("__seed", "__n"))
     # backward dependency accumulation, deepest level has delta = 0
     delta = levels[-1].select(
         "__seed", "__n", F.lit(0).cast("long").alias("__delta")
@@ -1260,35 +1239,34 @@ def label_propagation_seeded(
     """
     from pyspark.sql import Window
 
-    e = seal(edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")))
-    seeds = seal(
-        seed_labels.select(
-            F.col(node_col).alias("__n"), F.col(label_col).cast("string").alias("__l")
-        )
-    )
-    labels = seeds
     w = Window.partitionBy("__d").orderBy(
         F.col("__votes").desc(), F.col("__l").asc()
     )
-    for _ in range(int(n_iters)):
-        votes = (
-            e.join(labels, e["__s"] == labels["__n"])
-            .groupBy(F.col("__d"), F.col("__l"))
-            .agg(F.count(F.lit(1)).cast("long").alias("__votes"))
+    with sealed(edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))) as e:
+        seeds = seal(
+            seed_labels.select(
+                F.col(node_col).alias("__n"), F.col(label_col).cast("string").alias("__l")
+            )
         )
-        adopted = (
-            votes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(F.col("__d").alias("__n"), "__l")
-            # clamp: seeds never change, so drop any vote row for a seed
-            .join(seeds.select("__n"), "__n", "left_anti")
-        )
-        prev, labels = labels, seal(seeds.unionByName(adopted))
-        if prev is not seeds:
-            release(prev)
-    release(e)
-    if labels is not seeds:
-        release(seeds)
+
+        def _round(labels: DataFrame, _: int) -> DataFrame:
+            votes = (
+                e.join(labels, e["__s"] == labels["__n"])
+                .groupBy(F.col("__d"), F.col("__l"))
+                .agg(F.count(F.lit(1)).cast("long").alias("__votes"))
+            )
+            adopted = (
+                votes.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .select(F.col("__d").alias("__n"), "__l")
+                # clamp: seeds never change, so drop any vote row for a seed
+                .join(seeds.select("__n"), "__n", "left_anti")
+            )
+            return seeds.unionByName(adopted)
+
+        labels = iterate(seeds, _round, n_iters)
+        if labels is not seeds:
+            release(seeds)
     return labels.select(
         F.col("__n").alias(node_col), F.col("__l").alias(label_col)
     )

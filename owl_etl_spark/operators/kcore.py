@@ -9,9 +9,8 @@ degrees recomputed over the survivors) until a fixpoint.
 Plan shape per round: one degree aggregate over the surviving edge
 set + two semi-joins to drop edges touching peeled nodes — all keyed
 shuffles on the node id, no global sorts, no driver-side data. The
-edge set only shrinks, so rounds get cheaper; a seal truncates the
-growing lineage each round (same discipline as the
-connected-components loop in operators/dedup.py). Convergence is
+edge set only shrinks, so rounds get cheaper; the loop runs through
+``session.iterate``, sealed every round. Convergence is
 checked by edge-count fixpoint; a graph that has not converged within
 ``max_rounds`` raises rather than silently returning a non-core
 (callers at 100 TB pick max_rounds from the peel depth they can
@@ -26,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from owl_etl_spark.session import release, seal
+from owl_etl_spark.session import iterate, release, seal
 
 
 def k_core(
@@ -51,29 +50,34 @@ def k_core(
         edges.select(a.alias("__a"), b.alias("__b"))
         .where(F.col("__a").isNotNull() & F.col("__b").isNotNull() & (F.col("__a") != F.col("__b")))
     )
-    sym = base.union(base.select(F.col("__b").alias("__a"), F.col("__a").alias("__b"))).distinct()
-    cur = seal(sym)
-    n_edges = cur.count()
-    for _ in range(int(max_rounds)):
+    sym = seal(
+        base.union(base.select(F.col("__b").alias("__a"), F.col("__a").alias("__b"))).distinct()
+    )
+    counts = [sym.count()]
+
+    def _peel(cur: DataFrame, _: int) -> DataFrame:
         keep = (
             cur.groupBy("__a")
             .agg(F.count(F.lit(1)).alias("__deg"))
             .where(F.col("__deg") >= int(k))
             .select("__a")
         )
-        nxt = seal(
-            cur.join(keep, "__a", "left_semi").join(
-                keep.withColumnRenamed("__a", "__b"), "__b", "left_semi"
-            )
+        return cur.join(keep, "__a", "left_semi").join(
+            keep.withColumnRenamed("__a", "__b"), "__b", "left_semi"
         )
-        release(cur)
-        n_next = nxt.count()
-        if n_next == n_edges:
+
+    def _fixpoint(nxt: DataFrame) -> bool:
+        counts.append(nxt.count())
+        return counts[-1] in (counts[-2], 0)
+
+    core = iterate(sym, _peel, max_rounds, stop=_fixpoint)
+    if core is not sym:
+        release(sym)
+        if counts[-1] == counts[-2]:
             return (
-                nxt.groupBy(F.col("__a").alias("node"))
+                core.groupBy(F.col("__a").alias("node"))
                 .agg(F.count(F.lit(1)).cast("long").alias("degree"))
             )
-        cur, n_edges = nxt, n_next
-        if n_edges == 0:
-            return cur.select(F.col("__a").alias("node"), F.lit(0).cast("long").alias("degree"))
+        if counts[-1] == 0:
+            return core.select(F.col("__a").alias("node"), F.lit(0).cast("long").alias("degree"))
     raise RuntimeError(f"k_core: no fixpoint after {max_rounds} rounds (k={k})")

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from owl_etl_spark.session import bounded_collect, literal_frame, release, seal
+from owl_etl_spark.session import bounded_collect, iterate, literal_frame, release, seal
 
 
 def gram_matrix(
@@ -140,7 +140,7 @@ def power_iteration_top_eigvec(
     Plan per iteration: one A⋈v join + one i-group aggregate over the
     MATRIX CELL list (dim² rows, never the corpus) + a 1-row broadcast
     pivot kept IN-PLAN (the fused-HITS shape — no driver collect);
-    lineage seals every 2 rounds."""
+    ``session.iterate`` seals every second round."""
     full = gram.select("i", "j", "s").unionAll(
         gram.filter(F.col("j") > F.col("i")).select(
             F.col("j").alias("i"), F.col("i").alias("j"), "s"
@@ -195,8 +195,8 @@ def power_iteration_top_eigvec(
     v = a.select(F.col("i").alias("vi")).distinct().select(
         "vi", F.lit(int(micro)).cast("long").alias("x")
     )
-    v_seal = None
-    for it in range(int(n_iters)):
+
+    def _round(v: DataFrame, _: int) -> DataFrame:
         w = (
             a.join(v, a["j"] == v["vi"])
             .groupBy("i")
@@ -210,7 +210,7 @@ def power_iteration_top_eigvec(
                 F.greatest(F.abs(F.col("w")), F.lit(1)).cast("long").alias("__pv"),
             )
         )
-        v = w.crossJoin(F.broadcast(pivot)).select(
+        return w.crossJoin(F.broadcast(pivot)).select(
             F.col("i").alias("vi"),
             F.expr(
                 f"(w * {int(micro)} * __sg - ((w * {int(micro)} * __sg % __pv)"
@@ -219,12 +219,6 @@ def power_iteration_top_eigvec(
             .cast("long")
             .alias("x"),
         )
-        if (it + 1) % 2 == 0 and it + 1 < n_iters:
-            # eager for the same reason as `a` above: bound the depth
-            # of the plan the NEXT iteration's build must re-analyze
-            # (ckpt cadence 1/2/3/none measured 5.1/3.0/3.4/5.0 s)
-            v = seal(v)
-            if v_seal is not None:
-                release(v_seal)
-            v_seal = v
+
+    v = iterate(v, _round, n_iters, every=2)
     return v.select(F.col("vi").alias("i"), F.col("x").alias("v_micro"))

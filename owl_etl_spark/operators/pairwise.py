@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from owl_etl_spark.session import bounded_collect, literal_frame, release, seal
+from owl_etl_spark.session import bounded_collect, iterate, literal_frame, release, seal
 
 MICRO = 1_000_000
 
@@ -178,9 +178,8 @@ def bradley_terry_strengths(
         )
     )
     release(pairs)
-    r = items.select("item", F.lit(MICRO).cast("long").alias("__r"))
-    r_seal = None
-    for it in range(int(n_iters)):
+
+    def _round(r: DataFrame, _: int) -> DataFrame:
         ra = r.select(F.col("item").alias("__a"), F.col("__r").alias("__ra"))
         rb = r.select(F.col("item").alias("__b"), F.col("__r").alias("__rb"))
         denom = (
@@ -211,18 +210,14 @@ def bradley_terry_strengths(
             )
         )
         pmax = praw.agg(F.greatest(F.max("__p"), F.lit(1)).alias("__pm"))
-        r = praw.crossJoin(F.broadcast(pmax)).select(
+        return praw.crossJoin(F.broadcast(pmax)).select(
             "item",
             F.expr(_fd("__p * 1000000", "__pm")).cast("long").alias("__r"),
         )
-        if (it + 1) % 2 == 0 and it + 1 < n_iters:
-            # eager (r12): bound the analyzed-plan depth the next
-            # iteration's build pays (q253/q183 fix; q255 measured
-            # 5.3 s build vs 0.2 s exec with the lazy seal)
-            r = seal(r)
-            if r_seal is not None:
-                release(r_seal)
-            r_seal = r
+
+    r = iterate(
+        items.select("item", F.lit(MICRO).cast("long").alias("__r")), _round, n_iters, every=2
+    )
     return items.join(_bi(r), "item").select(
         "item", "wins", "games", F.col("__r").alias("strength_micro")
     )

@@ -18,8 +18,8 @@ cover:
 
 Both follow the repo's iterative-loop discipline (see
 operators/dedup.py connected_components): per round, ONE keyed
-shuffle (a join on the node id + an aggregate), a seal to truncate
-lineage, and a cheap fixpoint test so the loop exits in
+shuffle (a join on the node id + an aggregate), sealed by
+``session.iterate``, and a cheap fixpoint test so the loop exits in
 diameter-ish rounds rather than always burning the budget. All
 arithmetic is exact integers — costs are BIGINT sums, tie-breaks are
 total orders — so results are deterministic and engine-portable, and
@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from owl_etl_spark.session import release, seal
+from owl_etl_spark.session import iterate, literal_frame, release, seal
 
 
 def weighted_shortest_paths(
@@ -67,7 +67,7 @@ def weighted_shortest_paths(
     Plan per round: current distance table joins the edge list on the
     node id (one keyed shuffle), unions the stand-pat rows, and takes
     ``min(cost)`` per node — no global sorts, no driver data;
-    a seal per round keeps lineage flat. At 100 TB the distance
+    ``session.iterate`` seals each round. At 100 TB the distance
     table is |V| rows and each round is one shuffle of
     |V| + |frontier neighborhood| rows, the same contract as
     ``bfs_hops`` (operators/graph.py:225) with a cost column riding
@@ -99,30 +99,28 @@ def weighted_shortest_paths(
     # parallel edges: keep only the cheapest — fewer relax candidates,
     # identical shortest-path semantics
     e = e.groupBy("__s", "__d").agg(F.min("__w").alias("__w"))
-    spark = edges.sparkSession
-    from owl_etl_spark.session import literal_frame
-
-    dist = seal(
-        literal_frame(spark, [(s, 0) for s in sources], ["node", "cost"]).select(
-            F.col("node").cast(dict(e.dtypes)["__s"]), F.col("cost").cast("long")
-        )
+    dist0 = seal(
+        literal_frame(
+            edges.sparkSession, [(s, 0) for s in sources], ["node", "cost"]
+        ).select(F.col("node").cast(dict(e.dtypes)["__s"]), F.col("cost").cast("long"))
     )
-    sig = (1, 0)
-    for _ in range(int(max_hops)):
-        relaxed = (
-            dist.join(e, dist.node == e.__s)
-            .select(F.col("__d").alias("node"), (F.col("cost") + F.col("__w")).alias("cost"))
+
+    def _relax(dist: DataFrame, _: int) -> DataFrame:
+        relaxed = dist.join(e, dist.node == e.__s).select(
+            F.col("__d").alias("node"), (F.col("cost") + F.col("__w")).alias("cost")
         )
-        nxt = seal(dist.unionByName(relaxed).groupBy("node").agg(F.min("cost").alias("cost")))
-        release(dist)
-        row = nxt.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("cost").alias("total")
-        ).collect()[0]
-        nxt_sig = (row["n"], row["total"])
-        dist = nxt
-        if nxt_sig == sig:
-            break
-        sig = nxt_sig
+        return dist.unionByName(relaxed).groupBy("node").agg(F.min("cost").alias("cost"))
+
+    sigs = [(1, 0)]
+
+    def _fixpoint(dist: DataFrame) -> bool:
+        row = dist.agg(F.count(F.lit(1)).alias("n"), F.sum("cost").alias("total")).collect()[0]
+        sigs.append((row["n"], row["total"]))
+        return sigs[-1] == sigs[-2]
+
+    dist = iterate(dist0, _relax, max_hops, stop=_fixpoint)
+    if dist is not dist0:
+        release(dist0)
     return dist
 
 
@@ -162,24 +160,23 @@ def label_propagation(
         base.select(F.col("__b").alias("__a"), F.col("__a").alias("__b"))
     ).distinct()
     sym = seal(sym)
-    labels = initial = sym.select(F.col("__a").alias("node")).distinct().withColumn(
+    initial = sym.select(F.col("__a").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    for _ in range(int(rounds)):
+
+    def _round(labels: DataFrame, _: int) -> DataFrame:
         votes = (
             sym.join(labels, sym.__b == labels.node)
             .groupBy(F.col("__a").alias("node"), F.col("label"))
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        prev, labels = labels, seal(
-            votes.groupBy("node").agg(
-                F.min(F.struct((-F.col("__c")).alias("nc"), F.col("label").alias("lb")))
-                .getField("lb")
-                .alias("label")
-            )
+        return votes.groupBy("node").agg(
+            F.min(F.struct((-F.col("__c")).alias("nc"), F.col("label").alias("lb")))
+            .getField("lb")
+            .alias("label")
         )
-        if prev is not initial:
-            release(prev)
+
+    labels = iterate(initial, _round, rounds)
     if labels is not initial:
         release(sym)
     return labels
