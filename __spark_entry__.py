@@ -659,11 +659,8 @@ def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("o_orderkey") % 3 == 1, F.lit(1000.0))
         .otherwise(F.lit(1000000.0))
     )
-    return o.select(
-        "o_orderkey",
-        (F.col("o_totalprice") * mult).alias("scaled"),
-        descale_monetary(F.col("o_totalprice") * mult, max_iters=4).alias("descaled"),
-    )
+    scaled = o.select("o_orderkey", (F.col("o_totalprice") * mult).alias("scaled"))
+    return scaled.withColumn("descaled", descale_monetary(F.col("scaled"), max_iters=4))
 
 
 _FMT_VOTE_DUCK = """CASE
@@ -5360,7 +5357,7 @@ _Q118_M, _Q118_SUB, _Q118_DIM = 4, 16, 64
 
 
 def _full_dist_duck(e: str, c: str) -> str:
-    """DuckDB twin of cluster._assign_expr's 64-dim squared-L2:
+    """DuckDB twin of cluster.assign_clusters' 64-dim squared-L2:
     left fold in index order; DuckDB's init-less list_reduce matches
     Spark's 0D-seeded aggregate exactly (0 + x1 == x1)."""
     return (
@@ -8504,7 +8501,7 @@ def q166(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier coordinates interleave bit-by-bit into one BIGINT whose
     RANGES are tight rectangles in BOTH dimensions, which is exactly
     why min/max file statistics can prune a scan filtered on either
-    column after zorder_repartition's single range exchange. The
+    column after one range repartition on the z-value. The
     readout aggregates per 4096-wide z-range: its x1/x2 min-max
     envelopes stay ~64-wide (vs 1024 for a single-column sort),
     making the pruning power measurable in the result itself.

@@ -19,7 +19,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from owl_etl_spark.session import get_spark, release
+from owl_etl_spark.session import release
+from tools import _harness
 
 #: In-run quality-gate failures (e.g. the planted-neighbor ANN recall
 #: gate). Recorded in the sidecar under "failures" AND propagated to a
@@ -164,95 +165,18 @@ HEADLINE = [
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = _harness.sf_dir()
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    spark = get_spark(app_name="owl-etl-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    qs = entrymod.queries()
-    # Warm the JVM with a trivial action and touch every table's parquet
-    # footer (schema read) so one-time file-listing/metadata IO isn't
-    # billed to whichever query happens to scan the table first.
-    spark.read.parquet(f"{sf_dir}/nation.parquet").count()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").schema
-    # JIT-warm the scan/hash-agg/join/window execution paths on the two
-    # tiny dimension tables (25+5 rows) so steady-state query time, not
-    # first-use JVM compilation, is what gets measured.
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    (
-        nation.join(region, nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_nationkey").alias("s"))
-        .withColumn("rk", F.row_number().over(Window.partitionBy("r_name").orderBy("n")))
-        .orderBy("r_name")
-        .count()
-    )
-    # Warm the Python worker pool (round 12, guide §1/§4.5): worker
-    # processes are SESSION-scoped and reused across queries
-    # (spark.python.worker.reuse=true, unbounded idle pool in Spark 4),
-    # so the one-time pool spawn — fork per core plus each worker's
-    # pandas/numpy/pyarrow imports — is session initialization exactly
-    # like the JVM JIT warm above, not any query's cost. Without this
-    # the FIRST Python-boundary query in the list absorbs the whole
-    # storm: q359's first run measured 103 s summed task time vs 1.7 s
-    # task CPU (32 tasks blocked on 64 worker spawns), ~15 s wall on a
-    # single-pass run; warm re-runs of the same query are 1.1 s. The
-    # chained identity map mirrors the synth→decode two-runner shape so
-    # the pool is sized for the worst stage; the grouped map warms the
-    # applyInPandas runner path (same pool, different JVM runner).
-    _ident = lambda it: it  # noqa: E731
-    par = spark.sparkContext.defaultParallelism
-    (
-        spark.range(par * 8, numPartitions=par)
-        .mapInPandas(_ident, schema="id bigint")
-        .mapInPandas(_ident, schema="id bigint")
-        .count()
-    )
-    (
-        spark.range(par * 8, numPartitions=par)
-        .groupBy((F.col("id") % par).alias("g"))
-        .applyInPandas(lambda pdf: pdf[["id"]], schema="id bigint")
-        .count()
-    )
-
-    # Build + analyze (NOT execute) each headline plan once: first-use
-    # Py4J/expression-construction and analyzer warmup is driver-process
-    # initialization, not query cost. Execution below still pays full
-    # plan-to-physical + codegen + run on a fresh DataFrame.
-    for name in HEADLINE:
-        qs[name](spark, sf_dir).schema
+    spark = _harness.start_session("owl-etl-spark-bench")
+    _harness.warm_up(spark, sf_dir)
 
     # SPARK_GRAFT_HEADLINE_RUNS > 1 (round 12, used by round_close):
     # run the whole headline list N times and record the per-query MIN
     # — the same estimator the committed paired-A/B protocol judges on.
-    # Intermittent multi-second host stalls land on DIFFERENT queries
-    # each pass (observed: three consecutive round-closes flagged three
-    # disjoint query sets), so a single sample certifies host weather,
-    # not code; the min of N interleaved-in-time passes does not. The
-    # driver's own invocation keeps the default single pass.
+    # A plain invocation keeps the default single pass.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_HEADLINE_RUNS", "1")))
-    timings: dict[str, float] = {}
-    for pass_i in range(runs):
-        for name in HEADLINE:
-            fn = qs[name]
-            t0 = time.perf_counter()
-            n = fn(spark, sf_dir).count()
-            dt = time.perf_counter() - t0
-            if name not in timings or dt < timings[name]:
-                timings[name] = round(dt, 3)
-            print(
-                f"# {name}: {dt:.3f}s ({n} rows)"
-                + (f" [pass {pass_i + 1}/{runs}]" if runs > 1 else ""),
-                file=sys.stderr,
-            )
+    res = _harness.min_of_n(spark, sf_dir, _harness.lookup(entrymod.queries(), HEADLINE), runs)
+    timings = {name: r["min_s"] for name, r in res.items()}
     total = sum(timings.values())
 
     # Local-iteration escape hatch for the optimization loop: headline

@@ -36,7 +36,7 @@ def md5_long_seeded(col: Column, seed: int) -> Column:
 MINHASH_P = 2_147_483_647
 
 
-def minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
+def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Seeded (a, b) coefficient pairs for the universal-hash family
     ``h_i(x) = (a_i·x + b_i) mod P`` — the standard MinHash
     construction (one base hash, k cheap affine derivations) instead
@@ -45,7 +45,7 @@ def minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     (same trick as the q33 seeded hyperplanes)."""
     import numpy as np
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     a = rng.integers(1, MINHASH_P, size=num_hashes)
     b = rng.integers(0, MINHASH_P, size=num_hashes)
     return [(int(x), int(y)) for x, y in zip(a, b)]

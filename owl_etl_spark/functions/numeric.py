@@ -1,8 +1,8 @@
 """Numeric normalization expressions (SURVEY.md §2.2 P4-P7).
 
-All pure ``Column`` expressions — JVM-side, codegen-friendly, no UDFs.
-Higher-order array functions are built as SQL expression strings
-(the lambda forms are only reachable via ``F.expr``/``selectExpr``).
+All are SQL expression text — JVM-side, codegen-friendly, no UDFs —
+so they compose inside higher-order lambdas (reachable only via
+``F.expr``/``selectExpr``) and build a plan in one py4j call each.
 """
 
 from __future__ import annotations
@@ -16,15 +16,8 @@ _NOT_NUMERIC = r"[^\d.\-]"
 
 
 def parse_numero_sql(text_sql: str) -> str:
-    """SQL text of :func:`parse_numero` over the expression ``text_sql``."""
-    return (
-        f"coalesce(try_cast({text_sql} AS DOUBLE), try_cast(regexp_replace("
-        f"translate(CAST({text_sql} AS STRING), ',', '.'), {sql_str(_NOT_NUMERIC)}, '') AS DOUBLE))"
-    )
-
-
-def parse_numero(col: Column) -> Column:
-    """Lenient string→double parse (P7).
+    """Lenient string→double parse (P7), as SQL text over the
+    expression ``text_sql``.
 
     Strips everything but digits, dot, minus; comma decimal → dot;
     null on failure (reference: src/etl/transform.py:787-802 uses
@@ -41,66 +34,52 @@ def parse_numero(col: Column) -> Column:
     (src/etl/transform.py:787-802), so it yields 15.0 — a locale bug
     this engine does not reproduce. Golden parity is unaffected (the
     fixtures carry no comma-decimal numerics).
-
-    ``col`` is spliced as SQL text (see ``functions.text._sql``).
     """
-    return F.expr(parse_numero_sql(_sql(col)))
+    return (
+        f"coalesce(try_cast({text_sql} AS DOUBLE), try_cast(regexp_replace("
+        f"translate(CAST({text_sql} AS STRING), ',', '.'), {sql_str(_NOT_NUMERIC)}, '') AS DOUBLE))"
+    )
 
 
-def parse_percent(col: Column) -> Column:
-    """Percent parse. Clean casts pass through directly — the
-    reference's numeric branch, and the only safe path for scientific
-    notation ("5e-05"), whose exponent marker the regex would strip.
-    The regex clean (keep digits/dot/comma/minus/%, comma→dot, drop %)
-    is the string branch (reference: src/etl/transform.py:569-605)."""
-    direct = col.try_cast("double")
-    cleaned = F.regexp_replace(col.cast("string"), r"[^\d.,\-%]", "")
-    cleaned = F.translate(cleaned, ",", ".")
-    cleaned = F.regexp_replace(cleaned, "%", "")
-    return F.coalesce(direct, cleaned.try_cast("double"))
-
-
-def descale_monetary(col: Column, max_iters: int = 10, scale: int = 2) -> Column:
-    """Monetary de-scaling with exact while-loop semantics (P4).
+def descale_monetary_sql(text_sql: str, max_iters: int) -> str:
+    """Monetary de-scaling with exact while-loop semantics (P4), as SQL
+    text over the expression ``text_sql``.
 
     The reference repeatedly divides by 1000 while the value exceeds
     1e6, then rounds to 2 dp (src/etl/transform.py:70-86) — result in
-    (1000, 1e6] for inputs > 1e6. A bounded CASE-chain unrolls the
-    loop deterministically (``max_iters`` of 10 covers values up to
-    1e36); each step is the same IEEE double division the reference
-    performs, so results are bit-identical — unlike a log10-based
-    closed form, which can disagree on boundaries.
+    (1000, 1e6] for inputs > 1e6. A bounded CASE unrolls the loop
+    deterministically (``max_iters`` of 10 covers values up to 1e36);
+    each step is the same IEEE double division the reference performs,
+    so results are bit-identical — unlike a log10-based closed form,
+    which can disagree on boundaries. The literals are doubles
+    (``1000.0D``): a bare ``1000.0`` in SQL text is DECIMAL.
 
-    Implementation note: a naive ``when(v>1e6, v/1000)`` chain triples
-    the expression tree per iteration (3^max_iters nodes — measured
-    codegen blowup); instead, one CASE picks the first k for which k
-    repeated divisions land ≤ 1e6, with each candidate spelled as the
-    same exact division sequence — O(max_iters²) tiny tree, identical
-    IEEE results.
+    A naive nested ``CASE WHEN v > 1e6`` chain triples the expression
+    tree per iteration (3^max_iters nodes — measured codegen blowup);
+    instead, one CASE picks the first k for which k repeated divisions
+    land ≤ 1e6, with each candidate spelled as the same exact division
+    sequence — O(max_iters²) tiny tree, identical IEEE results.
     """
-    v = col.cast("double")
-    candidates = [v]
+    candidates = [f"CAST({text_sql} AS DOUBLE)"]
     for _ in range(max_iters):
-        candidates.append(candidates[-1] / 1000.0)
-    expr = None
-    for k in range(max_iters):
-        cond = candidates[k] <= 1_000_000.0
-        expr = F.when(cond, candidates[k]) if expr is None else expr.when(cond, candidates[k])
-    return F.round(expr.otherwise(candidates[max_iters]), scale)
+        candidates.append(f"({candidates[-1]} / 1000.0D)")
+    whens = " ".join(f"WHEN {c} <= 1000000.0D THEN {c}" for c in candidates[:max_iters])
+    return f"round(CASE {whens} ELSE {candidates[max_iters]} END, 2)"
 
 
-def convert_if_needed(col: Column, scale: int = 6) -> Column:
-    """Return/volatility normalization (P6): values with |v| > 1 are
-    percentages → divide by 100; always round (reference:
-    src/etl/transform.py:631-658)."""
-    v = col.cast("double")
-    return F.when(F.abs(v) > 1.0, F.round(v / 100.0, scale)).otherwise(F.round(v, scale))
+def descale_monetary(col: Column, max_iters: int = 10) -> Column:
+    """:func:`descale_monetary_sql` over ``col``, spliced as SQL text
+    (see ``functions.text._sql``)."""
+    return F.expr(descale_monetary_sql(_sql(col), max_iters))
 
 
 def parse_percent_sql(path: str) -> str:
-    """SQL-text form of :func:`parse_percent` for use inside
-    higher-order lambdas. Direct cast first (scientific notation must
-    not hit the regex, which would strip the exponent marker)."""
+    """Percent parse as SQL text, for use inside higher-order lambdas.
+    Clean casts pass through directly — the reference's numeric
+    branch, and the only safe path for scientific notation ("5e-05"),
+    whose exponent marker the regex would strip. The regex clean (keep
+    digits/dot/comma/minus/%, comma→dot, drop %) is the string branch
+    (reference: src/etl/transform.py:569-605)."""
     return (
         f"coalesce(try_cast({path} AS DOUBLE), "
         f"try_cast(replace(translate(regexp_replace(CAST({path} AS STRING), "
@@ -142,18 +121,19 @@ def _format_vote_sql(arr_sql: str) -> str:
         ELSE 'unknown' END"""
 
 
-def convert_if_needed_sql(path: str, scale: int = 6) -> str:
-    """SQL-text form of :func:`convert_if_needed` for composition inside
-    higher-order lambdas (Column trees don't re-serialize to parseable
-    SQL)."""
+def convert_if_needed_sql(path: str) -> str:
+    """Return/volatility normalization (P6) as SQL text, for composition
+    inside higher-order lambdas: values with |v| > 1 are percentages →
+    divide by 100; always round to 6 (reference:
+    src/etl/transform.py:631-658)."""
     v = f"CAST({path} AS DOUBLE)"
     return (
-        f"CASE WHEN abs({v}) > 1.0D THEN round({v} / 100.0D, {scale}) "
-        f"ELSE round({v}, {scale}) END"
+        f"CASE WHEN abs({v}) > 1.0D THEN round({v} / 100.0D, 6) "
+        f"ELSE round({v}, 6) END"
     )
 
 
-def smart_percent_array_sql(arr_sql: str, key_field: str, scale: int = 6) -> str:
+def smart_percent_array_sql(arr_sql: str, key_field: str) -> str:
     """Two-pass percentage normalization over an array of structs (P5),
     as SQL text.
 
@@ -164,7 +144,7 @@ def smart_percent_array_sql(arr_sql: str, key_field: str, scale: int = 6) -> str
     is one array inside one row. ``arr_sql`` is the SQL of an
     ``array<struct{<key_field>: string, participacion: double}>``;
     the result has the same shape, participacion normalized to
-    fractional scale and rounded.
+    fractional scale and rounded to 6.
 
     The 'unknown' vote falls back to PER-VALUE conversion, exactly like
     the reference's ``_convertir_porcentaje_individual``
@@ -183,15 +163,15 @@ def smart_percent_array_sql(arr_sql: str, key_field: str, scale: int = 6) -> str
     fmt = _format_vote_sql(arr_sql)
     v = "x.participacion"
     individual = f"""CASE
-        WHEN abs({v}) BETWEEN 0.9D AND 1.1D THEN round({v}, {scale})
-        WHEN abs({v}) BETWEEN 90.0D AND 110.0D THEN round({v} / 100.0D, {scale})
-        WHEN abs({v}) > 1.1D THEN round({v} / 100.0D, {scale})
-        ELSE round({v}, {scale}) END"""
+        WHEN abs({v}) BETWEEN 0.9D AND 1.1D THEN round({v}, 6)
+        WHEN abs({v}) BETWEEN 90.0D AND 110.0D THEN round({v} / 100.0D, 6)
+        WHEN abs({v}) > 1.1D THEN round({v} / 100.0D, 6)
+        ELSE round({v}, 6) END"""
     return f"""element_at(transform(array({fmt}), __fmt ->
               transform({arr_sql}, x -> named_struct(
               '{key_field}', x.{key_field},
               'participacion',
               CASE WHEN {v} IS NULL THEN CAST(NULL AS DOUBLE)
-                   WHEN __fmt = 'x100' THEN round({v} / 100.0D, {scale})
-                   WHEN __fmt = 'frac' THEN round({v}, {scale})
+                   WHEN __fmt = 'x100' THEN round({v} / 100.0D, 6)
+                   WHEN __fmt = 'frac' THEN round({v}, 6)
                    ELSE ({individual}) END))), 1)"""

@@ -195,7 +195,7 @@ def lang_stopword_scores(col: Column) -> dict[str, Column]:
     return out
 
 
-def lang_id(col: Column, default: str = "und") -> Column:
+def lang_id(col: Column) -> Column:
     """Argmax over lang_stopword_scores; 'und' when nothing matches."""
     scores = lang_stopword_scores(col)
     best = F.greatest(*scores.values())
@@ -203,7 +203,7 @@ def lang_id(col: Column, default: str = "und") -> Column:
     for lang in scores:
         cond = scores[lang] == best
         expr = F.when((best > 0) & cond, lang) if expr is None else expr.when((best > 0) & cond, lang)
-    return expr.otherwise(F.lit(default))
+    return expr.otherwise(F.lit("und"))
 
 
 def quality_features(col: Column) -> Column:
@@ -245,12 +245,12 @@ REDACTION_PATTERNS = {
 }
 
 
-def redact(col: Column, patterns: dict[str, str] | None = None, token: str = "[REDACTED]") -> Column:
+def redact(col: Column, patterns: dict[str, str] | None = None) -> Column:
     """Replace PII-ish spans with a token — the standard scrubbing pass
     before corpus publication. Chained regexp_replace (JVM-side)."""
     out = col
     for pat in (patterns or REDACTION_PATTERNS).values():
-        out = F.regexp_replace(out, pat, token)
+        out = F.regexp_replace(out, pat, "[REDACTED]")
     return out
 
 

@@ -11,8 +11,9 @@ engine-specific.
 
 Scale notes: rank normalization needs each column's min/max — one
 cheap stats pass (or provide known bounds); the interleave itself is
-a pure per-row expression (loop-unrolled shifts, whole-stage codegen,
-no UDF, no shuffle beyond the final range partition).
+a pure per-row expression (``operators.zorder.zorder_expr``: unrolled
+shifts, whole-stage codegen, no UDF, no shuffle beyond the final range
+partition).
 """
 
 from __future__ import annotations
@@ -20,18 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def interleave_bits(a: Column, b: Column, bits: int = 16) -> Column:
-    """Morton key from two integer columns already in [0, 2**bits):
-    bit i of ``a`` lands at position 2i+1, of ``b`` at 2i."""
-    terms = []
-    for i in range(bits):
-        terms.append(F.shiftleft(F.shiftright(a.cast("long"), i).bitwiseAND(1), 2 * i + 1))
-        terms.append(F.shiftleft(F.shiftright(b.cast("long"), i).bitwiseAND(1), 2 * i))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out.bitwiseOR(t)
-    return out
+from owl_etl_spark.operators.zorder import zorder_expr
 
 
 def _scale_to_bits(col: Column, lo: Column, hi: Column, bits: int) -> Column:
@@ -42,19 +32,21 @@ def _scale_to_bits(col: Column, lo: Column, hi: Column, bits: int) -> Column:
     return F.least(F.lit(mx), F.greatest(F.lit(0), F.floor(frac * mx).cast("long")))
 
 
-def zorder_key(
-    df: DataFrame, col_a: str, col_b: str, bits: int = 16, key_col: str = "__zkey"
-) -> DataFrame:
-    """Attach a Morton key over two numeric columns. Bounds come from
-    one min/max aggregation (broadcast as literals into the row
-    expression — the plan stays shuffle-free)."""
+def zorder_key(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
+    """Attach ``__zkey``: the Morton key (``zorder_expr``, 16 bits per
+    column) over two numeric columns min-max scaled to [0, 2**16);
+    bit i of ``col_a`` lands at position 2i+1, of ``col_b`` at 2i.
+    Bounds come from one min/max aggregation (broadcast as literals
+    into the row expression — the plan stays shuffle-free)."""
     stats = df.agg(
         F.min(col_a).alias("alo"), F.max(col_a).alias("ahi"),
         F.min(col_b).alias("blo"), F.max(col_b).alias("bhi"),
     ).collect()[0]
-    a = _scale_to_bits(F.col(col_a), F.lit(stats.alo), F.lit(stats.ahi), bits)
-    b = _scale_to_bits(F.col(col_b), F.lit(stats.blo), F.lit(stats.bhi), bits)
-    return df.withColumn(key_col, interleave_bits(a, b, bits))
+    scaled = df.withColumns({
+        "__za": _scale_to_bits(F.col(col_a), F.lit(stats.alo), F.lit(stats.ahi), 16),
+        "__zb": _scale_to_bits(F.col(col_b), F.lit(stats.blo), F.lit(stats.bhi), 16),
+    })
+    return scaled.withColumn("__zkey", zorder_expr(["__zb", "__za"], 16)).drop("__za", "__zb")
 
 
 def write_zordered_parquet(
@@ -63,18 +55,16 @@ def write_zordered_parquet(
     col_a: str,
     col_b: str,
     target_partitions: int,
-    bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Write parquet clustered on the Z-order of (col_a, col_b): range
     partition + sort on the Morton key, then drop it. Point/box
     queries on EITHER or BOTH columns prune files via parquet min/max
     stats."""
-    keyed = zorder_key(df, col_a, col_b, bits)
+    keyed = zorder_key(df, col_a, col_b)
     (
         keyed.repartitionByRange(target_partitions, F.col("__zkey"))
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )

@@ -110,11 +110,6 @@ def align_pairs(
     id_col: str,
     pos_col: str,
     value_col: str,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    match: int = 2,
-    mismatch: int = -1,
-    gap: int = -2,
     band: int = 64,
     max_len: int = 100_000,
 ) -> DataFrame:
@@ -135,8 +130,8 @@ def align_pairs(
         sid.alias("__sid"), pos.alias("__pos"), val.alias("__val")
     ).filter(F.col("__pos").isNotNull() & F.col("__val").isNotNull())
     pr = pairs.select(
-        F.col(a_col).cast("string").alias("__a"),
-        F.col(b_col).cast("string").alias("__b"),
+        F.col("id_a").cast("string").alias("__a"),
+        F.col("id_b").cast("string").alias("__b"),
     )
     left = pr.join(
         pts.select(
@@ -170,7 +165,7 @@ def align_pairs(
         ]
     )
     band_i, max_len_i = int(band), int(max_len)
-    match_i, mis_i, gap_i = int(match), int(mismatch), int(gap)
+    match_i, mis_i, gap_i = 2, -1, -2
 
     def _one(key, pdf):  # (key, pdf) signature — eval type by position
         a_rows = pdf[pdf["__side"] == 0].sort_values(["__pos", "__val"])

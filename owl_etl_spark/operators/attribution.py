@@ -40,6 +40,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Most channels exact Shapley (2^k coalitions) accepts.
+MAX_CHANNELS = 12
+
 
 def _ranked_pairs(
     touches: DataFrame,
@@ -322,7 +325,6 @@ def shapley_attribution(
     user_col: str,
     channel_col: str,
     conv_col: str,
-    max_channels: int = 12,
 ) -> DataFrame:
     """Exact Shapley-value channel attribution over EXPOSURE
     COALITIONS — the game-theoretic completion of the rule-based
@@ -346,7 +348,7 @@ def shapley_attribution(
     Scale contract: the subset enumeration is 2^k·k rows with
     k = |channels| — O(data) work is ONE user-mask aggregate and ONE
     mask aggregate; the exponential part never touches data and is
-    refused loudly past ``max_channels`` (k=12 → 49k rows; Shapley
+    refused loudly past ``MAX_CHANNELS`` (k=12 → 49k rows; Shapley
     over more channels needs sampling, a different operator). Spark
     and DuckDB both evaluate popcount via ``bit_count``."""
     chans = [
@@ -360,9 +362,9 @@ def shapley_attribution(
     k = len(chans)
     if k == 0:
         raise ValueError("shapley_attribution: no non-null channels")
-    if k > max_channels:
+    if k > MAX_CHANNELS:
         raise ValueError(
-            f"shapley_attribution: {k} channels > max_channels={max_channels} "
+            f"shapley_attribution: {k} channels > max_channels={MAX_CHANNELS} "
             "— exact Shapley is 2^k; sample channels or raise the guard "
             "deliberately"
         )

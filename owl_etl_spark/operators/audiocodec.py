@@ -117,7 +117,7 @@ AUDIO_STATS_SCHEMA = (
 )
 
 
-def wav_audio_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def wav_audio_stats(df: DataFrame) -> DataFrame:
     """Decode a WAV binary column and emit EXACT integer audio
     features per row via Arrow-batched ``mapInPandas`` (shuffle-free):
     ``sum_sq`` (the RMS numerator, int64 — exact, so oracles replay
@@ -129,7 +129,7 @@ def wav_audio_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 d = decode_wav(bytes(payload))
                 s = d["samples"].astype(np.int64)
                 ch0 = s[:, 0]
@@ -157,4 +157,4 @@ def wav_audio_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
                 ],
             )
 
-    return df.select("doc_id", payload_col).mapInPandas(fn, schema=AUDIO_STATS_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(fn, schema=AUDIO_STATS_SCHEMA)

@@ -58,7 +58,6 @@ def poisson_bootstrap_ci(
     key_col: str,
     n_replicates: int = 32,
     alpha_bp: int = 1000,
-    salt: str = "boot",
 ) -> DataFrame:
     """Percentile bootstrap CI for each group's mean: ``(group, n,
     mean_micro, ci_lo_micro, ci_hi_micro, replicates)`` — micro value
@@ -88,7 +87,7 @@ def poisson_bootstrap_ci(
         d.select("__g", "__v", "__k", F.explode(F.expr(f"sequence(0, {B - 1})")).alias("__b"))
         .withColumn(
             "__u",
-            md5_long(F.concat(F.col("__k"), F.lit(f"#{salt}#"), F.col("__b").cast("string"))),
+            md5_long(F.concat(F.col("__k"), F.lit("#boot#"), F.col("__b").cast("string"))),
         )
         .withColumn("__m", F.expr(_mult_expr("__u")).cast("long"))
         .groupBy("__g", "__b")

@@ -48,30 +48,8 @@ def _argmin_sql(darr_col: str) -> str:
     return f"CAST(array_position({darr_col}, array_min({darr_col})) - 1 AS INT)"
 
 
-def _assign_expr(
-    vec_col: str, centroids: np.ndarray, round_digits: int | None = None
-) -> F.Column:
-    """argmin squared-L2 over centroid literals — one intra-row
-    expression, no UDF, no shuffle. ``round_digits`` rounds each
-    distance before the argmin (ties → lowest cluster index), making
-    the assignment portable across engines for oracle checking — the
-    same trick the cosine family uses (round 6 + id tiebreak).
-
-    NOTE: single-expression form — each distance's fold re-evaluates
-    the cast transform. Prefer :func:`assign_clusters`, which stages
-    the cast vector and the distance array as columns so every fold
-    runs once per row (the r12 optimization); this wrapper remains for
-    expression-position callers."""
-    k, dim = centroids.shape
-    vd = f"transform({vec_col}, v -> CAST(v AS DOUBLE))"
-    darr = "array(" + ", ".join(
-        _sqdist_fold(vd, centroids[c], round_digits) for c in range(k)
-    ) + ")"
-    return F.expr(f"CAST(array_position({darr}, array_min({darr})) - 1 AS INT)")
-
-
 def centroids_from_ids(
-    df: DataFrame, ids: list[int], id_col: str = "vec_id", vec_col: str = "embedding"
+    df: DataFrame, ids: list[int]
 ) -> np.ndarray:
     """Pinned centroids: the embedding rows with the given ids, ordered
     by id (cluster_id = position in ``ids`` sorted). Deterministic and
@@ -79,8 +57,8 @@ def centroids_from_ids(
     ``kmeans_fit`` for IVF demos/tests. Collects k rows (k·dim driver
     state, same footprint as fitted centroids)."""
     rows = (
-        df.filter(F.col(id_col).isin(ids))
-        .select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
+        df.filter(F.col("vec_id").isin(ids))
+        .select(F.col("vec_id").alias("i"), F.col("embedding").alias("v"))
         .orderBy("i")
         .collect()
     )
@@ -95,7 +73,6 @@ def kmeans_fit(
     k: int = 8,
     max_iters: int = 5,
     dim: int = 64,
-    seed: int = 42,
 ) -> np.ndarray:
     """Lloyd's algorithm; returns (k, dim) centroids.
 
@@ -191,8 +168,6 @@ def ivf_knn(
     centroids: np.ndarray,
     k: int = 5,
     n_probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_digits: int | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus rows are probed only in the
@@ -203,9 +178,9 @@ def ivf_knn(
     n_probes (== brute force at n_probes=k_clusters). ``round_digits``
     rounds centroid distances before argmin/probe ranking (ties →
     lowest cluster_id) so the candidate set is engine-portable."""
-    index = assign_clusters(corpus, centroids, vec_col, round_digits)
+    index = assign_clusters(corpus, centroids, "embedding", round_digits)
     return ivf_knn_preassigned(
-        queries, index, centroids, k, n_probes, id_col, vec_col, round_digits
+        queries, index, centroids, k, n_probes, "vec_id", "embedding", round_digits
     )
 
 
@@ -274,8 +249,6 @@ def pq_codebooks_from_ids(
     df: DataFrame,
     ids: list[int],
     m: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> np.ndarray:
     """Product-quantization codebooks pinned to embedding rows:
     (m, ks, dim/m) — block b's codebook is the b-th sub-vector of each
@@ -283,7 +256,7 @@ def pq_codebooks_from_ids(
     ``centroids_from_ids`` (fitted codebooks via ``kmeans_fit`` per
     block stay the production path; only pinned ones can hash-match an
     oracle)."""
-    full = centroids_from_ids(df, ids, id_col, vec_col)  # (ks, dim)
+    full = centroids_from_ids(df, ids)  # (ks, dim)
     ks, dim = full.shape
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -296,7 +269,6 @@ def pq_codebooks_fit(
     m: int = 4,
     ks: int = 16,
     dim: int = 64,
-    vec_col: str = "embedding",
     max_iters: int = 5,
     sample_rows: int | None = 10_000,
 ) -> np.ndarray:
@@ -323,7 +295,7 @@ def pq_codebooks_fit(
         for b in range(m):
             block = df.select(
                 F.expr(
-                    f"transform(slice({vec_col}, {b * sub + 1}, {sub}), "
+                    f"transform(slice(embedding, {b * sub + 1}, {sub}), "
                     f"v -> CAST(v AS DOUBLE))"
                 ).alias("__subv")
             )
@@ -337,7 +309,7 @@ def pq_codebooks_fit(
     # comparison inside TakeOrderedAndProject (17x at 20k rows).
     rows = (
         df.select(
-            F.expr(f"transform({vec_col}, v -> CAST(v AS DOUBLE))").alias("v")
+            F.expr("transform(embedding, v -> CAST(v AS DOUBLE))").alias("v")
         )
         .withColumn("__h", F.md5(F.concat_ws(",", F.col("v").cast("array<string>"))))
         .orderBy("__h")
@@ -353,7 +325,7 @@ def pq_codebooks_fit(
         C = S[:ks].copy()  # same init rule as kmeans_fit: first ks by hash
         for _ in range(max_iters):
             d = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = d.argmin(axis=1)  # ties -> lowest code, like _assign_expr
+            a = d.argmin(axis=1)  # ties -> lowest code, like assign_clusters
             new = C.copy()
             for j in range(ks):
                 mask = a == j
@@ -389,10 +361,9 @@ def pq_encode(
     df: DataFrame,
     codebooks: np.ndarray,
     vec_col: str = "embedding",
-    code_col: str = "pq_codes",
     round_digits: int | None = None,
 ) -> DataFrame:
-    """Attach ``code_col``: array<int> of m per-block argmin codes.
+    """Attach ``pq_codes``: array<int> of m per-block argmin codes.
     Map-only, broadcast-by-literal, whole-stage codegen — this is the
     compression pass that turns a dim-D float vector into m small ints
     (the 100 TB play: the encoded corpus is ~dim·4/m× smaller, scans
@@ -422,7 +393,7 @@ def pq_encode(
         out = out.withColumn(dc, F.expr(f"array({', '.join(dists)})"))
         tmp += [sl, dc]
         code_exprs.append(_argmin_sql(dc))
-    return out.withColumn(code_col, F.expr(f"array({', '.join(code_exprs)})")).drop(
+    return out.withColumn("pq_codes", F.expr(f"array({', '.join(code_exprs)})")).drop(
         *tmp
     )
 
@@ -432,9 +403,6 @@ def pq_adc_topk(
     corpus_encoded: DataFrame,
     codebooks: np.ndarray,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_codes",
     round_digits: int = 6,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k over a PQ-encoded
@@ -451,19 +419,19 @@ def pq_adc_topk(
     ranking."""
     m, ks, _ = codebooks.shape
     q = queries.select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         *[
-            F.expr(f"array({', '.join(_pq_block_dists(vec_col, codebooks, b, None))})").alias(
+            F.expr(f"array({', '.join(_pq_block_dists('embedding', codebooks, b, None))})").alias(
                 f"__lut{b}"
             )
             for b in range(m)
         ],
     )
     total = " + ".join(
-        f"element_at(__lut{b}, element_at({code_col}, {b + 1}) + 1)" for b in range(m)
+        f"element_at(__lut{b}, element_at(pq_codes, {b + 1}) + 1)" for b in range(m)
     )
     scored = (
-        corpus_encoded.select(F.col(id_col).alias("neighbor_id"), code_col)
+        corpus_encoded.select(F.col("vec_id").alias("neighbor_id"), "pq_codes")
         .join(F.broadcast(q))
         .select(
             "query_id",
@@ -487,10 +455,6 @@ def pq_rerank_topk(
     codebooks: np.ndarray,
     k: int = 5,
     shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_codes",
-    round_digits: int = 6,
 ) -> DataFrame:
     """The production PQ search pipeline: ADC over codes to a
     ``shortlist``, then EXACT squared-L2 re-rank of only the
@@ -510,13 +474,9 @@ def pq_rerank_topk(
         corpus_encoded,
         codebooks,
         k=shortlist,
-        id_col=id_col,
-        vec_col=vec_col,
-        code_col=code_col,
-        round_digits=round_digits,
     ).select("query_id", "neighbor_id")
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
+    qv = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
+    cv = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"))
     exact = (
         cand.join(F.broadcast(qv), "query_id")
         .join(cv, "neighbor_id")
@@ -529,7 +489,7 @@ def pq_rerank_topk(
                     "transform(__cv, v -> CAST(v AS DOUBLE)), "
                     "(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
                 ),
-                round_digits,
+                6,
             ).alias("dist"),
         )
     )
@@ -566,7 +526,6 @@ def ivfpq_encode(
     df: DataFrame,
     centroids: np.ndarray,
     codebooks: np.ndarray,
-    vec_col: str = "embedding",
     round_digits: int | None = None,
 ) -> DataFrame:
     """The full IVF-PQ index build as ONE map-only pass: coarse-assign
@@ -582,9 +541,9 @@ def ivfpq_encode(
     list's files (partition pruning does the 'inverted index' for
     free). Everything is literal-broadcast codegen'd expressions: no
     UDF, no shuffle, no driver data."""
-    assigned = assign_clusters(df, centroids, vec_col, round_digits)
+    assigned = assign_clusters(df, centroids, "embedding", round_digits)
     with_resid = assigned.withColumn(
-        "__resid", _residual_expr(vec_col, centroids, "cluster_id")
+        "__resid", _residual_expr("embedding", centroids, "cluster_id")
     )
     return pq_encode(with_resid, codebooks, vec_col="__resid", round_digits=round_digits).drop(
         "__resid"
@@ -598,9 +557,6 @@ def ivfpq_topk(
     codebooks: np.ndarray,
     k: int = 5,
     n_probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_codes",
     round_digits: int = 6,
 ) -> DataFrame:
     """IVF-PQ approximate top-k: each query probes its ``n_probes``
@@ -627,7 +583,7 @@ def ivfpq_topk(
     for ci in range(kc):
         arr = ", ".join(f"{float(v)!r}D" for v in centroids[ci])
         d = (
-            f"aggregate(zip_with(transform({vec_col}, v -> CAST(v AS DOUBLE)), array({arr}), "
+            f"aggregate(zip_with(transform(embedding, v -> CAST(v AS DOUBLE)), array({arr}), "
             f"(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
         )
         d = f"round({d}, {round_digits})" if round_digits is not None else d
@@ -637,8 +593,8 @@ def ivfpq_topk(
         f"p -> p.cluster_id)"
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
         F.explode(F.expr(probes)).alias("cluster_id"),
     ).withColumn("__qresid", _residual_expr("__qv", centroids, "cluster_id"))
     luts = q.select(
@@ -652,11 +608,11 @@ def ivfpq_topk(
         ],
     )
     total = " + ".join(
-        f"element_at(__lut{b}, element_at({code_col}, {b + 1}) + 1)" for b in range(m)
+        f"element_at(__lut{b}, element_at(pq_codes, {b + 1}) + 1)" for b in range(m)
     )
     scored = (
         corpus_encoded.select(
-            F.col(id_col).alias("neighbor_id"), "cluster_id", code_col
+            F.col("vec_id").alias("neighbor_id"), "cluster_id", "pq_codes"
         )
         .join(F.broadcast(luts), "cluster_id")
         .select(

@@ -43,13 +43,12 @@ def conformal_calibration_report(
     value_col: str,
     key_col: str,
     alpha_bp: int = 1000,
-    calib_mod: int = 2,
 ) -> DataFrame:
     """Per-group split-conformal report:
     ``(group, n_cal, n_test, median, qhat, covered, coverage_micro)``
     — exact BIGINTs. ``alpha_bp`` is α in basis points (1000 = 10% →
     target coverage 90%). Rows hash to calibration when
-    md5-derived parity of ``key_col`` ≡ 0 (mod ``calib_mod``).
+    md5-derived parity of ``key_col`` ≡ 0 (mod 2).
     Groups with empty calibration or test halves are dropped (no
     quantile / nothing to cover — documented)."""
     if not 0 < alpha_bp < 10_000:
@@ -62,7 +61,7 @@ def conformal_calibration_report(
         F.col(key_col).alias("__k"),
     ).filter(F.col("__y").isNotNull() & F.col("__g").isNotNull())
     d = d.withColumn(
-        "__cal", (md5_long(F.col("__k").cast("string")) % calib_mod == 0)
+        "__cal", (md5_long(F.col("__k").cast("string")) % 2 == 0)
     )
     # predictor: per-group integer median of CALIBRATION values only
     # (training on test would leak) — exact lower-median by rank

@@ -30,7 +30,6 @@ def token_pmi_pairs(
     text_col: str,
     top_vocab: int = 50,
     min_pair_count: int = 5,
-    min_token_len: int = 4,
 ) -> DataFrame:
     """(tok_a, tok_b, n_ab, df_a, df_b, pmi_micro_nats) for every
     ordered-by-name pair of top-vocabulary tokens co-occurring in at
@@ -42,7 +41,7 @@ def token_pmi_pairs(
             F.col(id_col),
             F.explode(F.split(F.lower(F.col(text_col)), "[^a-z]+")).alias("tok"),
         )
-        .filter(F.length("tok") >= min_token_len)
+        .filter(F.length("tok") >= 4)
         .distinct()
     )
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))

@@ -40,24 +40,24 @@ from owl_etl_spark.session import (
 from owl_etl_spark.functions.text import fingerprint, normalize_text
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Exact dedup on normalized text: one survivor (min id) per
     fingerprint. Single hash-shuffle on the md5 fingerprint."""
     return (
-        df.withColumn("__fp", fingerprint(F.col(text_col)))
+        df.withColumn("__fp", fingerprint(F.col("text")))
         .groupBy("__fp")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("dup_count"))
         .drop("__fp")
     )
 
 
-def duplicate_clusters(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def duplicate_clusters(df: DataFrame) -> DataFrame:
     """Fingerprint → cluster of ids + size; clusters of 1 are unique docs."""
     return (
-        df.withColumn("fingerprint", fingerprint(F.col(text_col)))
+        df.withColumn("fingerprint", fingerprint(F.col("text")))
         .groupBy("fingerprint")
         .agg(
-            F.sort_array(F.collect_list(id_col)).alias("ids"),
+            F.sort_array(F.collect_list("doc_id")).alias("ids"),
             F.count(F.lit(1)).alias("cluster_size"),
         )
     )
@@ -67,7 +67,6 @@ def with_minhash(
     df: DataFrame,
     text_col: str = "text",
     num_hashes: int = 16,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Attach ``minhash`` (array<bigint>) computed from word shingles.
 
@@ -85,8 +84,8 @@ def with_minhash(
         .withColumn(
             "__shingles",
             F.expr(
-                f"CASE WHEN size(__toks) < {shingle_n} THEN array(__norm) "
-                f"ELSE {shingle_chain_sql('__toks', shingle_n)} END"
+                f"CASE WHEN size(__toks) < 3 THEN array(__norm) "
+                f"ELSE {shingle_chain_sql('__toks', 3)} END"
             ),
         )
     )
@@ -345,8 +344,6 @@ def _chunked_cross_expansion(
 def incremental_lsh_pairs(
     new_sigs: DataFrame,
     store_sigs: DataFrame | None,
-    id_col: str = "doc_id",
-    max_group: int = 1024,
 ) -> DataFrame:
     """Near-dup candidate pairs INVOLVING a new drop, given the new
     drop's band signatures and the persisted signature store of every
@@ -364,41 +361,41 @@ def incremental_lsh_pairs(
     Store×store pairs are NOT re-emitted: they were produced when
     those drops were new, so unioning each drop's incremental output
     reproduces the one-shot full-corpus result exactly (oracle-gated
-    by q296). Both expansion paths carry the ``max_group``² per-task
+    by q296). Both expansion paths carry the 1024² per-task
     bound; the cross join's skew guard chunks BOTH sides, so a
     boilerplate band signature shared by g_store ∪ g_new docs fans
     out as (g_store/cap)·(g_new/cap) chunk rows, never g_store·g_new
     pairs in one task."""
     new_buckets = (
         new_sigs.groupBy("band", "sig")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
+        .agg(F.array_sort(F.collect_list(F.col("doc_id"))).alias("ids"))
     )
     new_new = _chunked_pair_expansion(
-        new_buckets.filter(F.size("ids") >= 2), ["band", "sig"], max_group
+        new_buckets.filter(F.size("ids") >= 2), ["band", "sig"], 1024
     )
     if store_sigs is None:
         return new_new.distinct()
     store_buckets = (
         store_sigs.groupBy("band", "sig")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
+        .agg(F.array_sort(F.collect_list(F.col("doc_id"))).alias("ids"))
     )
     cross = _chunked_cross_expansion(
         new_buckets.withColumnRenamed("ids", "ids_a").join(
             store_buckets.withColumnRenamed("ids", "ids_b"), ["band", "sig"]
         ),
-        max_group,
+        1024,
     )
     return new_new.unionByName(cross).distinct()
 
 
-def with_simhash(df: DataFrame, text_col: str = "text", bits: int = 16) -> DataFrame:
+def with_simhash(df: DataFrame) -> DataFrame:
     """Attach a SimHash fingerprint column (intra-row). Tokens are
     materialized first (same lambda re-evaluation hazard as
     with_minhash)."""
-    df = df.withColumn("__norm", normalize_text(F.col(text_col))).withColumn(
+    df = df.withColumn("__norm", normalize_text(F.col("text"))).withColumn(
         "__toks", F.split(F.col("__norm"), " ")
     )
-    return df.withColumn("simhash", simhash_sql("__toks", bits)).drop("__norm", "__toks")
+    return df.withColumn("simhash", simhash_sql("__toks")).drop("__norm", "__toks")
 
 
 def ngram_jaccard_pairs(
@@ -523,9 +520,6 @@ def ngram_jaccard_pairs(
 
 def ngram_jaccard_pairs_prefix(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via a PREFIX-FILTERED
@@ -552,19 +546,19 @@ def ngram_jaccard_pairs_prefix(
     when small); the verification joins shuffle candidate pairs, whose
     count the prefix filter already bounded.
     """
-    norm = normalize_text(F.col(text_col))
+    norm = normalize_text(F.col("text"))
     # pre-spread: small corpora scan as one partition; shingling +
     # hashing must not serialize onto a single task
     base = (
         spread_for_cpu(
-            df.select(F.col(id_col).alias("id"), norm.alias("__norm")),
+            df.select(F.col("doc_id").alias("id"), norm.alias("__norm")),
             by=F.col("id"),
         )
         .withColumn("__toks", F.split(F.col("__norm"), " "))
     )
     shingles_sql = (
-        f"CASE WHEN size(__toks) < {shingle_n} THEN array(__norm) "
-        f"ELSE {shingle_chain_sql('__toks', shingle_n)} END"
+        f"CASE WHEN size(__toks) < 3 THEN array(__norm) "
+        f"ELSE {shingle_chain_sql('__toks', 3)} END"
     )
     # `sets` feeds three branches (df counts, prefix index, verification);
     # without materialization each branch re-scans and re-shingles the
@@ -680,8 +674,6 @@ def embedding_near_dup_pairs(
 def semantic_dedup_pairs(
     df: DataFrame,
     centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.3,
     round_digits: int | None = 6,
 ) -> DataFrame:
@@ -702,12 +694,12 @@ def semantic_dedup_pairs(
     """
     from owl_etl_spark.operators.cluster import assign_clusters
 
-    assigned = assign_clusters(df, centroids, vec_col, round_digits)
+    assigned = assign_clusters(df, centroids, "embedding", round_digits)
     pairs = embedding_near_dup_pairs(
-        assigned, id_col, vec_col, block_col="cluster_id", threshold=threshold
+        assigned, block_col="cluster_id", threshold=threshold
     )
     blocks = assigned.select(
-        F.col(id_col).alias("id_a"), F.col("cluster_id").alias("cluster_id")
+        F.col("vec_id").alias("id_a"), F.col("cluster_id").alias("cluster_id")
     )
     return pairs.join(blocks, "id_a").select("cluster_id", "id_a", "id_b", "cosine")
 
@@ -1138,28 +1130,24 @@ def connected_components_star(
 
 def near_dup_clusters(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.7,
     **lsh_kwargs,
 ) -> DataFrame:
     """Full transitive near-dup clustering: LSH candidates → exact
     Jaccard verify → connected components. Returns (id, component);
     keeping ``component == id`` rows is the canonical dedup."""
-    _, verified = near_dup_dedup(df, id_col, text_col, threshold=threshold, **lsh_kwargs)
-    return connected_components(verified, df.select(id_col), id_col)
+    _, verified = near_dup_dedup(df, threshold=threshold, **lsh_kwargs)
+    return connected_components(verified, df.select("doc_id"))
 
 
 def winnow_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
 ) -> DataFrame:
     """Exploded winnowing fingerprint set: one (id, fingerprint) row
     per distinct selected hash (Schleimer et al. local fingerprinting:
-    k-gram rolling hashes min-sampled over windows of ``window``).
+    8-gram rolling hashes min-sampled over windows of 4).
 
     Computed intra-row (higher-order functions over the normalized
     text) then exploded — the only shuffle is whatever the caller
@@ -1167,11 +1155,11 @@ def winnow_fingerprints(
     """
     base = df.select(
         F.col(id_col), normalize_text(F.col(text_col)).alias("__s")
-    ).filter(F.length("__s") >= k + window)
+    ).filter(F.length("__s") >= 12)
     fps = (
-        f"array_distinct(transform(sequence(1, greatest(length(__s) - {k} - {window} + 2, 1)), "
-        f"i -> array_min(transform(sequence(i, i + {window - 1}), "
-        f"j -> CAST(conv(substring(md5(substring(__s, j, {k})), 1, 15), 16, 10) AS BIGINT)))))"
+        "array_distinct(transform(sequence(1, greatest(length(__s) - 10, 1)), "
+        "i -> array_min(transform(sequence(i, i + 3), "
+        "j -> CAST(conv(substring(md5(substring(__s, j, 8)), 1, 15), 16, 10) AS BIGINT)))))"
     )
     return base.select(id_col, F.explode(F.expr(fps)).alias("fingerprint"))
 
@@ -1181,8 +1169,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    k: int = 8,
-    window: int = 4,
 ) -> DataFrame:
     """Substring-containment near-dup pairs — the winnowing analog of
     exact-substring dedup (the RefinedWeb/Dolma suffix-array step,
@@ -1203,7 +1189,7 @@ def containment_pairs(
     first). Output: (inner_id, outer_id, containment), both directions
     when both clear the threshold.
     """
-    fps = winnow_fingerprints(df, id_col, text_col, k, window)
+    fps = winnow_fingerprints(df, id_col, text_col)
     sizes = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
     common = (
         fps.alias("a")
@@ -1229,11 +1215,7 @@ def containment_pairs(
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_shared: int = 1,
-    k: int = 8,
-    window: int = 4,
 ) -> tuple[DataFrame, DataFrame]:
     """Benchmark decontamination: drop training docs that share ≥
     ``min_shared`` winnowing fingerprints with any benchmark doc.
@@ -1247,20 +1229,20 @@ def decontaminate(
     LLM-training pipelines (the n-gram-overlap method), built from
     the same fingerprint primitive as the near-dup operators.
     """
-    doc_fp = winnow_fingerprints(docs, id_col, text_col, k, window)
+    doc_fp = winnow_fingerprints(docs)
     bench_fp = (
-        winnow_fingerprints(benchmark, id_col, text_col, k, window)
+        winnow_fingerprints(benchmark)
         .select("fingerprint")
         .distinct()
     )
     hits = (
         doc_fp.join(bench_fp, "fingerprint")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    contaminated = docs.join(hits, id_col)
-    clean = docs.join(hits.select(id_col), id_col, "left_anti")
+    contaminated = docs.join(hits, "doc_id")
+    clean = docs.join(hits.select("doc_id"), "doc_id", "left_anti")
     return clean, contaminated
 
 
@@ -1268,7 +1250,6 @@ def incremental_components(
     store_labels: DataFrame,
     new_pairs: DataFrame,
     new_ids: DataFrame,
-    id_col: str = "doc_id",
     max_iters: int = 10,
 ) -> DataFrame:
     """Connected components maintained INCREMENTALLY across drops —
@@ -1299,7 +1280,7 @@ def incremental_components(
     don't overlap).
     """
     store = store_labels.select(
-        F.col(id_col).alias("__node"), F.col("component").alias("__label")
+        F.col("doc_id").alias("__node"), F.col("component").alias("__label")
     )
     amap = store.select(
         F.col("__node").alias("id_a"), F.col("__label").alias("__la")
@@ -1322,22 +1303,22 @@ def incremental_components(
         .distinct()
     )
     cnodes = (
-        store.select(F.col("__label").alias(id_col))
+        store.select(F.col("__label").alias("doc_id"))
         .distinct()
-        .unionByName(new_ids.select(F.col(id_col)))
+        .unionByName(new_ids.select(F.col("doc_id")))
     )
-    roots = connected_components(contracted, cnodes, id_col, max_iters=max_iters)
+    roots = connected_components(contracted, cnodes, max_iters=max_iters)
     rmap = roots.select(
-        F.col(id_col).alias("__label"), F.col("component").alias("__root")
+        F.col("doc_id").alias("__label"), F.col("component").alias("__root")
     )
     out_store = store.join(rmap, "__label").select(
-        F.col("__node").alias(id_col), F.col("__root").alias("component")
+        F.col("__node").alias("doc_id"), F.col("__root").alias("component")
     )
     out_new = (
-        new_ids.select(F.col(id_col))
+        new_ids.select(F.col("doc_id"))
         .join(
-            roots.select(F.col(id_col), F.col("component")),
-            id_col,
+            roots.select(F.col("doc_id"), F.col("component")),
+            "doc_id",
         )
     )
     return out_store.unionByName(out_new)

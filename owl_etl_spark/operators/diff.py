@@ -21,7 +21,6 @@ def diff_tables(
     actual: DataFrame,
     expected: DataFrame,
     keys: list[str],
-    float_tol: float = 1e-10,
 ) -> DataFrame:
     """Field-level diff of two tables on a shared key.
 
@@ -29,7 +28,7 @@ def diff_tables(
     ``(*keys, campo, valor_actual, valor_esperado, estado)`` with
     estado ∈ {DIFERENTE, MISSING_ACTUAL, MISSING_EXPECTED} — the
     reference's diff record shape (test_ETL.py:51-124). Floats compare
-    within ``float_tol``; everything else by string equality with
+    within 1e-10; everything else by string equality with
     null-safe semantics.
     """
     compare_cols = [c for c in actual.columns if c not in keys and c in expected.columns]
@@ -48,7 +47,7 @@ def diff_tables(
         if dtype in ("double", "float"):
             differs = ~(
                 av.eqNullSafe(ev)
-                | (av.isNotNull() & ev.isNotNull() & (F.abs(av - ev) <= float_tol))
+                | (av.isNotNull() & ev.isNotNull() & (F.abs(av - ev) <= 1e-10))
             )
         else:
             differs = ~av.eqNullSafe(ev)
@@ -81,17 +80,14 @@ def reliability_report(
     actual: DataFrame,
     expected: DataFrame,
     keys: list[str],
-    group_col: str | None = None,
-    float_tol: float = 1e-10,
 ) -> DataFrame:
     """Per-key reliability score = (1 - diffs/compared_fields)·100
-    (reference formula test_ETL.py:180-184), optionally aggregated by a
-    group column (the per-bank summary sheet, test_ETL.py:317-323)."""
+    (reference formula test_ETL.py:180-184)."""
     compare_cols = [c for c in actual.columns if c not in keys and c in expected.columns]
     n_fields = len(compare_cols)
-    d = diff_tables(actual, expected, keys, float_tol)
+    d = diff_tables(actual, expected, keys)
     per_key = d.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_diffs"))
-    all_keys = (
+    return (
         actual.select(*keys)
         .union(expected.select(*keys))
         .distinct()
@@ -101,13 +97,6 @@ def reliability_report(
             "confiabilidad",
             F.round((1 - F.col("n_diffs") / F.lit(n_fields)) * 100, 2),
         )
-    )
-    if group_col is None:
-        return all_keys
-    return all_keys.groupBy(group_col).agg(
-        F.round(F.avg("confiabilidad"), 2).alias("confiabilidad_promedio"),
-        F.sum("n_diffs").alias("total_diffs"),
-        F.count(F.lit(1)).alias("n_records"),
     )
 
 

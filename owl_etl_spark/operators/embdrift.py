@@ -137,9 +137,6 @@ def similarity_histogram(
 def linear_cka(
     a: DataFrame,
     b: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    scale: int = 1000,
 ) -> DataFrame:
     """Linear CKA-style covariance alignment between two UNPAIRED
     embedding snapshots — the representation-similarity readout that
@@ -172,12 +169,12 @@ def linear_cka(
 
     from owl_etl_spark.operators.linalg import column_sums, gram_matrix
 
-    d = int(dim)
+    d = 64
 
     def side(df: DataFrame):
         g = {(r["i"], r["j"]): int(r["s"]) for r in
-             gram_matrix(df, vec_col, d, scale).collect()}
-        srow = column_sums(df, vec_col, d, scale).collect()[0]
+             gram_matrix(df, "embedding", d).collect()}
+        srow = column_sums(df, "embedding", d).collect()[0]
         n = int(srow["n"])
         sx = [int(x) for x in srow["sums"]]
         cells = {}
@@ -213,9 +210,6 @@ def linear_cka(
 def quadratic_mmd(
     a: DataFrame,
     b: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    scale: int = 1000,
 ) -> DataFrame:
     """Maximum mean discrepancy with the QUADRATIC kernel
     k(x, y) = (xᵀy)² between two embedding samples — the two-sample
@@ -242,10 +236,10 @@ def quadratic_mmd(
     12 significant micro-digits via round(·, 6) on the ×1e6 value."""
     from owl_etl_spark.operators.linalg import gram_matrix
 
-    d = int(dim)
+    d = 64
 
     def side(df: DataFrame):
-        rows = gram_matrix(df, vec_col, d, scale).collect()
+        rows = gram_matrix(df, "embedding", d).collect()
         n = int(rows[0]["n"]) if rows else 0
         g = {}
         for r in rows:
@@ -271,7 +265,7 @@ def quadratic_mmd(
     kbb = fro(gb, gb)
     kab = fro(ga, gb)
     num = kaa * n_b * n_b + kbb * n_a * n_a - 2 * kab * n_a * n_b
-    den = n_a * n_a * n_b * n_b * int(scale) ** 4
+    den = n_a * n_a * n_b * n_b * 1000**4
     mmd2 = float(num) / float(den)
     spark = a.sparkSession
     from owl_etl_spark.session import literal_frame

@@ -112,18 +112,15 @@ def ewma_smooth(
     key_col: str,
     order_col: str,
     value_col: str,
-    alpha_num: int = 1,
-    alpha_den: int = 4,
-    window: int = 32,
 ) -> DataFrame:
     """Bounded-window EWMA smoothing per series — exponential
     smoothing is a sequential recurrence, which is exactly why most
     engines punt it to per-row loops; truncating the kernel at
-    ``window`` lags turns it into a FIXED-WEIGHT window dot product
+    32 lags turns it into a FIXED-WEIGHT window dot product
     (the tail beyond 32 lags at α = 1/4 carries < 1e-4 of the mass —
     the truncation is the stated contract, not an approximation bug):
 
-        s_t = fd( Σ_{k<window} w_k · y_{t−k} , Σ_{k≤t} w_k )
+        s_t = fd( Σ_{k<32} w_k · y_{t−k} , Σ_{k≤t} w_k )
 
     with integer weight literals w_k = round(α(1−α)^k·1e6) baked
     driver-side (identical in the oracle), and the denominator using
@@ -131,14 +128,14 @@ def ewma_smooth(
     series head is a properly-normalized partial EWMA instead of
     biased toward zero. Exact BIGINTs, one floor division per row.
 
-    Plan: one window (collect the last ``window`` values) per series
+    Plan: one window (collect the last 32 values) per series
     key — a single shuffle; the dot product is an intra-row fold over
     a bounded array. Returns the input columns plus ``ewma_micro``
     (micro value-units)."""
     from pyspark.sql import Window
 
-    W = int(window)
-    wts = _ewma_weights(int(alpha_num), int(alpha_den), W)
+    W = 32
+    wts = _ewma_weights(1, 4, W)
     wsum_prefix = [sum(wts[: i + 1]) for i in range(W)]
     arr = ", ".join(str(w) for w in wts)
     pref = ", ".join(str(s) for s in wsum_prefix)

@@ -20,14 +20,11 @@ from pyspark.sql import functions as F
 from owl_etl_spark.functions.similarity import levenshtein_ratio
 
 
-def normalize_name(col: Column, stopwords: list[str] | None = None) -> Column:
+def normalize_name(col: Column) -> Column:
     """Aggressive name normalization: lowercase, strip punctuation,
-    drop stopwords, collapse spaces (reference:
-    src/etl/transform.py:308-325)."""
+    collapse spaces (reference: src/etl/transform.py:308-325)."""
     out = F.lower(F.trim(col))
     out = F.regexp_replace(out, r"[^\w\sáéíóúñü]", " ")
-    for sw in stopwords or []:
-        out = F.regexp_replace(out, rf"\b{sw}\b", " ")
     return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
@@ -36,9 +33,7 @@ def fuzzy_top1_join(
     dim: DataFrame,
     probe_col: str,
     dim_col: str,
-    score_fn=None,
     threshold: float = 0.7,
-    how: str = "left",
 ) -> DataFrame:
     """Attach the best-matching dimension row to each probe row.
 
@@ -47,13 +42,9 @@ def fuzzy_top1_join(
     which outranks pure similarity; within a tier the similarity score
     decides, and remaining ties break on the dimension value for
     determinism. Probes whose best score < ``threshold`` get nulls
-    (how='left') or are dropped (how='inner').
-
-    ``score_fn(probe_col, dim_col) -> Column`` defaults to
-    ``levenshtein_ratio``; pass ``similarity.lcs_ratio`` or
-    ``similarity.difflib_ratio`` for reference-parity scoring.
+    (a left join). The similarity is
+    ``levenshtein_ratio``.
     """
-    score_fn = score_fn or levenshtein_ratio
     p = probe.withColumn("__p_norm", normalize_name(F.col(probe_col)))
     d = dim.withColumn("__d_norm", normalize_name(F.col(dim_col)))
     cand = p.join(F.broadcast(d), how="cross")
@@ -62,7 +53,7 @@ def fuzzy_top1_join(
         F.col("__p_norm").contains(F.col("__d_norm"))
         | F.col("__d_norm").contains(F.col("__p_norm"))
     ).cast("int")
-    sim = score_fn(F.col("__p_norm"), F.col("__d_norm"))
+    sim = levenshtein_ratio(F.col("__p_norm"), F.col("__d_norm"))
     cand = (
         cand.withColumn("__exact", exact)
         .withColumn("__contains", contains)
@@ -82,12 +73,8 @@ def fuzzy_top1_join(
             (F.col("__exact") == 1) | (F.col("__contains") == 1) | (F.col("__sim") >= threshold),
         )
     )
-    dim_cols = [c for c in dim.columns]
-    if how == "inner":
-        best = best.filter(F.col("__matched"))
-    else:
-        for c in dim_cols:
-            best = best.withColumn(c, F.when(F.col("__matched"), F.col(c)))
+    for c in dim.columns:
+        best = best.withColumn(c, F.when(F.col("__matched"), F.col(c)))
     return best.withColumn("match_score", F.round(F.col("__sim"), 6)).drop(
         "__p_norm", "__d_norm", "__exact", "__contains", "__sim", "__rn", "__matched"
     )
@@ -99,11 +86,10 @@ def fuzzy_set_membership(
     known_values: list[str],
     out_col: str,
     flag_col: str,
-    cutoff: float = 0.8,
 ) -> DataFrame:
     """J2: normalize a column against a small known-value set.
 
-    Writes the best-matching canonical value (if score ≥ cutoff or
+    Writes the best-matching canonical value (if score ≥ 0.8 or
     containment) plus a boolean matched flag (reference:
     src/etl/transform.py:679-733 — rating-agency normalization).
     Implemented as a broadcast literal-array cross via explode-free
@@ -115,7 +101,7 @@ def fuzzy_set_membership(
 
     dim = literal_frame(spark, [(v,) for v in known_values], [out_col])
     probe = df.withColumn("__orig", F.col(col))
-    joined = fuzzy_top1_join(probe, dim, col, out_col, threshold=cutoff, how="left")
+    joined = fuzzy_top1_join(probe, dim, col, out_col, threshold=0.8)
     return joined.withColumn(flag_col, F.col(out_col).isNotNull()).withColumn(
         out_col, F.coalesce(F.col(out_col), F.col("__orig"))
     ).drop("__orig")

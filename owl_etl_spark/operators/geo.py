@@ -99,7 +99,6 @@ def grid_density_clusters(
     y_col: str,
     cell_size: int,
     min_pts: int,
-    max_iters: int = 20,
 ) -> DataFrame:
     """Density-based clustering, DBSCAN's grid approximation: bucket
     points into ``cell_size``-square cells, keep cells holding at
@@ -177,7 +176,7 @@ def grid_density_clusters(
     from owl_etl_spark.operators.dedup import connected_components_star
 
     comp = connected_components_star(
-        pairs, cells.select("cell_id"), id_col="cell_id", max_iters=max_iters
+        pairs, cells.select("cell_id"), id_col="cell_id", max_iters=20
     ).withColumnRenamed("cell_id", "__comp_cell")
     return (
         cells.join(comp, cells.cell_id == F.col("__comp_cell"))
@@ -196,9 +195,6 @@ def nearest_center_assign(
     id_col: str,
     x_col: str,
     y_col: str,
-    center_id_col: str = "center_id",
-    center_x_col: str = "center_x",
-    center_y_col: str = "center_y",
 ) -> DataFrame:
     """Assign every point to its nearest center (exact squared
     Euclidean distance, ties to the lowest center id):
@@ -220,9 +216,9 @@ def nearest_center_assign(
         F.col(id_col).isNotNull() & F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
     )
     c = centers.select(
-        F.col(center_id_col).alias("__cid"),
-        F.col(center_x_col).cast("long").alias("__cx"),
-        F.col(center_y_col).cast("long").alias("__cy"),
+        F.col("center_id").alias("__cid"),
+        F.col("center_x").cast("long").alias("__cx"),
+        F.col("center_y").cast("long").alias("__cy"),
     )
     dx = F.col("__x") - F.col("__cx")
     dy = F.col("__y") - F.col("__cy")
@@ -242,12 +238,6 @@ def nearest_center_assign(
 def simplified_silhouette(
     points: DataFrame,
     centers: DataFrame,
-    id_col: str = "id",
-    x_col: str = "x",
-    y_col: str = "y",
-    cid_col: str = "cid",
-    cx_col: str = "cx",
-    cy_col: str = "cy",
 ) -> DataFrame:
     """Simplified (centroid-based) silhouette per cluster — the
     clustering QUALITY readout the fitting family (kmeans/IVF/grid
@@ -270,14 +260,14 @@ def simplified_silhouette(
     from pyspark.sql import Window
 
     p = points.select(
-        F.col(id_col).alias("__id"),
-        F.col(x_col).cast("long").alias("__x"),
-        F.col(y_col).cast("long").alias("__y"),
+        F.col("id").alias("__id"),
+        F.col("x").cast("long").alias("__x"),
+        F.col("y").cast("long").alias("__y"),
     )
     c = centers.select(
-        F.col(cid_col).cast("long").alias("__cid"),
-        F.col(cx_col).cast("long").alias("__cx"),
-        F.col(cy_col).cast("long").alias("__cy"),
+        F.col("cid").cast("long").alias("__cid"),
+        F.col("cx").cast("long").alias("__cx"),
+        F.col("cy").cast("long").alias("__cy"),
     )
     cand = p.crossJoin(F.broadcast(c)).select(
         "__id",

@@ -575,8 +575,6 @@ def modularity_report(
     labels: DataFrame,
     node_col: str,
     label_col: str,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Newman modularity of a node partition over an undirected simple
     graph — the standard "is this community structure real" readout
@@ -605,8 +603,8 @@ def modularity_report(
     community for e_c and one for d_c, joined on the label — all
     bounded by community count, no quadratic anything.
     """
-    a = F.least(F.col(src_col), F.col(dst_col)).alias("a")
-    b = F.greatest(F.col(src_col), F.col(dst_col)).alias("b")
+    a = F.least(F.col("src"), F.col("dst")).alias("a")
+    b = F.greatest(F.col("src"), F.col("dst")).alias("b")
     und = edges.select(a, b).filter(F.col("a") != F.col("b")).distinct()
     lab = labels.select(
         F.col(node_col).alias("__v"), F.col(label_col).alias("__c")
@@ -747,7 +745,6 @@ def simrank(
     src_col: str = "src",
     dst_col: str = "dst",
     n_iters: int = 3,
-    c_micro: int = 800_000,
     max_nodes: int = 2_000,
 ) -> DataFrame:
     """SimRank structural similarity — "two nodes are similar when
@@ -758,7 +755,7 @@ def simrank(
         S(a,a) = 1
         S(a,b) = C/(|In(a)|·|In(b)|) Σ_{u∈In(a), v∈In(b)} S(u,v)
 
-    Integer recurrence (scores in MICRO units, C as ``c_micro``):
+    Integer recurrence (scores in MICRO units, C = 0.8, ``c_micro`` = 800000):
 
         S'(a,b) = fd(c_micro · Σ S(u,v), |In(a)|·|In(b)|·1e6)
 
@@ -815,7 +812,7 @@ def simrank(
                 F.col("__na").alias("__a"),
                 F.col("__nb").alias("__b"),
                 F.expr(
-                    f"((__sum * {int(c_micro)}) - ((((__sum * {int(c_micro)})"
+                    "((__sum * 800000) - ((((__sum * 800000)"
                     " % (__da * __db * 1000000)) + (__da * __db * 1000000))"
                     " % (__da * __db * 1000000))) div (__da * __db * 1000000)"
                 )
@@ -1039,9 +1036,6 @@ def betweenness_seeded(
     edges: DataFrame,
     seeds: DataFrame,
     n_levels: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    node_col: str = "node",
     edges_sealed: bool = False,
 ) -> DataFrame:
     """Seeded (truncated) betweenness centrality — Brandes' algorithm
@@ -1113,13 +1107,13 @@ def betweenness_seeded(
     # unsealed seeds plan was measured re-running the whole
     # co-purchase aggregation inside the f0 seal); re-checkpointing it
     # here would only copy the blocks.
-    e = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
+    e = edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d"))
     if not edges_sealed:
         e = seal(e)
     f0 = _seal(
         seeds.select(
-            F.col(node_col).alias("__seed"),
-            F.col(node_col).alias("__n"),
+            F.col("node").alias("__seed"),
+            F.col("node").alias("__n"),
             F.lit(1).cast("long").alias("__sig"),
         )
     )
@@ -1205,7 +1199,7 @@ def betweenness_seeded(
         .groupBy("__n")
         .agg(F.sum("__delta").cast("long").alias("betweenness_micro"))
         .filter(F.col("betweenness_micro") > 0)
-        .select(F.col("__n").alias(node_col), "betweenness_micro")
+        .select(F.col("__n").alias("node"), "betweenness_micro")
     )
 
 
@@ -1213,10 +1207,6 @@ def label_propagation_seeded(
     edges: DataFrame,
     seed_labels: DataFrame,
     n_iters: int = 3,
-    node_col: str = "node",
-    label_col: str = "label",
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Semi-supervised label propagation with CLAMPED seeds — the
     "spread the labels you have to the nodes you haven't labeled"
@@ -1242,10 +1232,10 @@ def label_propagation_seeded(
     w = Window.partitionBy("__d").orderBy(
         F.col("__votes").desc(), F.col("__l").asc()
     )
-    with sealed(edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))) as e:
+    with sealed(edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d"))) as e:
         seeds = seal(
             seed_labels.select(
-                F.col(node_col).alias("__n"), F.col(label_col).cast("string").alias("__l")
+                F.col("node").alias("__n"), F.col("label").cast("string").alias("__l")
             )
         )
 
@@ -1268,5 +1258,5 @@ def label_propagation_seeded(
         if labels is not seeds:
             release(seeds)
     return labels.select(
-        F.col("__n").alias(node_col), F.col("__l").alias(label_col)
+        F.col("__n").alias("node"), F.col("__l").alias("label")
     )

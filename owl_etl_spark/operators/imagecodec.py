@@ -314,7 +314,6 @@ def _dqt_segment(tid: int, quant: np.ndarray) -> bytes:
 def encode_jpeg_baseline(
     pixels: np.ndarray,
     quant_luma: np.ndarray | None = None,
-    quant_chroma: np.ndarray | None = None,
     subsample_420: bool = False,
     restart_interval: int = 0,
 ) -> bytes:
@@ -324,15 +323,13 @@ def encode_jpeg_baseline(
     APP0, DQT, SOF0, DHT, SOS, EOI). ``pixels`` is uint8 (H, W)
     grayscale or (H, W, 3) RGB; RGB is converted to JFIF YCbCr and
     optionally 4:2:0-subsampled (2x2 box mean). Quant tables are in
-    NATURAL order, entries 1..255."""
+    NATURAL order, entries 1..255; chroma uses the luma table."""
     pixels = np.asarray(pixels, dtype=np.uint8)
     ql = (_DEFAULT_QUANT if quant_luma is None else np.asarray(quant_luma)).astype(
         np.int32
     )
-    qc = (ql if quant_chroma is None else np.asarray(quant_chroma)).astype(np.int32)
-    for q in (ql, qc):
-        if q.size != 64 or q.min() < 1 or q.max() > 255:
-            raise ValueError("quant table must be 64 entries in 1..255")
+    if ql.size != 64 or ql.min() < 1 or ql.max() > 255:
+        raise ValueError("quant table must be 64 entries in 1..255")
     gray = pixels.ndim == 2
     h, w = pixels.shape[:2]
     if not h or not w:
@@ -385,7 +382,7 @@ def encode_jpeg_baseline(
         if pixels.shape[2] != 3:
             raise ValueError("color images must be (H, W, 3) RGB")
         ycc = _rgb_to_ycbcr(pixels)
-        out += _dqt_segment(1, qc)
+        out += _dqt_segment(1, ql)
         hs = 2 if subsample_420 else 1
         y_plane = _pad_to(ycc[..., 0], 8 * hs, 8 * hs)
         if subsample_420:
@@ -400,7 +397,7 @@ def encode_jpeg_baseline(
             ]
         else:
             chroma = [_pad_to(ycc[..., i], 8, 8) for i in (1, 2)]
-        zzs = [_plane_blocks(y_plane, ql)] + [_plane_blocks(c, qc) for c in chroma]
+        zzs = [_plane_blocks(y_plane, ql)] + [_plane_blocks(c, ql) for c in chroma]
         comp = bytes([1, (hs << 4) | hs, 0]) + bytes([2, 0x11, 1]) + bytes([3, 0x11, 1])
         out += b"\xff\xc0" + struct.pack(">HBHHB", 8 + 9, 8, h, w, 3) + comp
         out += _dht_segment(0, 0, _DC_BITS, _DC_SYMBOLS)
@@ -790,9 +787,7 @@ def _sub_blocks(data: bytes) -> bytes:
     return bytes(out)
 
 
-def encode_gif_frames(
-    frames: np.ndarray, delay_cs: int = 4, loop: bool = True
-) -> bytes:
+def encode_gif_frames(frames: np.ndarray) -> bytes:
     """REAL animated-GIF encoder: GIF89a header, logical screen
     descriptor, a 256-entry grayscale global palette (index == gray
     level, so the codec is LOSSLESS for 8-bit gray), NETSCAPE2.0 loop
@@ -809,10 +804,9 @@ def encode_gif_frames(
     out += struct.pack("<HH", w, h)
     out += bytes([0xF7, 0, 0])  # global palette: 256 entries, 8-bit color res
     out += bytes(v for i in range(256) for v in (i, i, i))  # grayscale ramp
-    if loop:
-        out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
+    out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
     for f in range(nf):
-        out += b"\x21\xf9\x04\x00" + struct.pack("<H", delay_cs) + b"\x00\x00"
+        out += b"\x21\xf9\x04\x00" + struct.pack("<H", 4) + b"\x00\x00"  # 4 cs delay
         out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
         out += bytes([8]) + _sub_blocks(_lzw_compress(frames[f].tobytes(), 8))
     out += b"\x3b"
@@ -903,7 +897,7 @@ JPEG_STATS_SCHEMA = (
 )
 
 
-def jpeg_pixel_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def jpeg_pixel_stats(df: DataFrame) -> DataFrame:
     """Decode a JPEG binary column with the FULL entropy decoder and
     emit exact integer pixel statistics per row — Arrow-batched
     ``mapInPandas``, shuffle-free. Stats are computed over the luma/
@@ -913,7 +907,7 @@ def jpeg_pixel_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 d = decode_jpeg_pixels(bytes(payload))
                 luma = d["pixels"][..., 0].astype(np.int64)
                 rows.append(
@@ -940,7 +934,7 @@ def jpeg_pixel_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
                 ],
             )
 
-    return df.select("doc_id", payload_col).mapInPandas(fn, schema=JPEG_STATS_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(fn, schema=JPEG_STATS_SCHEMA)
 
 
 GIF_SAMPLE_SCHEMA = (
@@ -950,7 +944,7 @@ GIF_SAMPLE_SCHEMA = (
 
 
 def gif_frame_sample_stats(
-    df: DataFrame, every: int = 2, payload_col: str = "payload"
+    df: DataFrame, every: int = 2
 ) -> DataFrame:
     """Decode an animated-GIF binary column and FRAME-SAMPLE it (every
     ``every``-th frame, starting at 0 — the video keyframe-sampling
@@ -963,7 +957,7 @@ def gif_frame_sample_stats(
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 d = decode_gif_frames(bytes(payload))
                 sampled = d["frames"][::every].astype(np.int64)
                 rows.append(
@@ -992,4 +986,4 @@ def gif_frame_sample_stats(
                 ],
             )
 
-    return df.select("doc_id", payload_col).mapInPandas(fn, schema=GIF_SAMPLE_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(fn, schema=GIF_SAMPLE_SCHEMA)

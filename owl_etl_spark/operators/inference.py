@@ -36,6 +36,9 @@ from owl_etl_spark.functions.hashing import md5_long
 from owl_etl_spark.session import seal
 
 _M = 1_000_000
+#: Largest tie block or group the exact pairwise statistics accept (the
+#: integer-exactness bound of their BIGINT pair counts).
+MAX_TIE_BLOCK = 2_000_000
 
 
 def _fd(x: str, d: str):
@@ -211,7 +214,6 @@ def kruskal_wallis(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    max_tie_block: int = 2_000_000,
 ) -> DataFrame:
     """Kruskal-Wallis rank test: do the k group distributions differ
     in location? The k-sample Mann-Whitney (q231's sibling), immune
@@ -227,7 +229,7 @@ def kruskal_wallis(
     never a row-volume window); 2R_j per group is an exact BIGINT
     sum. Each group's H contribution 3e6·(2R_j)²/(n_j·N·(N+1)) is one
     double expression, micro-snapped, summed exactly. Σ(t³−t) is
-    exact BIGINT; the cube binds ``max_tie_block`` (a single tie
+    exact BIGINT; the cube binds ``MAX_TIE_BLOCK`` (a single tie
     block beyond ~2.09e6 rows would overflow 2^63 — raise, don't
     corrupt).
 
@@ -245,7 +247,7 @@ def kruskal_wallis(
     )
     per_v = per_gv.groupBy("__v").agg(F.sum("__c").cast("long").alias("__t"))
     per_v = per_v.withColumn(
-        "__t", _guarded(F.col("__t"), max_tie_block, "kruskal_wallis tie block")
+        "__t", _guarded(F.col("__t"), MAX_TIE_BLOCK, "kruskal_wallis tie block")
     )
     per_v = per_v.withColumn("__cumle", F.sum("__t").over(w_run).cast("long"))
     # 2·avgrank of value v among all N rows
@@ -400,7 +402,6 @@ def fdr_bh_screen(
     n_perms: int = 64,
     alpha_num: int = 1,
     alpha_den: int = 10,
-    salt: str = "fdr",
 ) -> DataFrame:
     """Benjamini-Hochberg FDR screen over PER-GROUP permutation tests
     — the multiple-testing closure of q291: when the same two-cohort
@@ -483,7 +484,7 @@ def fdr_bh_screen(
             md5_long(
                 F.concat(
                     F.col("__k"),
-                    F.lit(f"#{salt}#"),
+                    F.lit("#fdr#"),
                     F.col("__g"),
                     F.lit("#"),
                     F.col("__p").cast("string"),
@@ -784,7 +785,6 @@ def jonckheere_terpstra(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    max_tie_block: int = 2_000_000,
 ) -> DataFrame:
     """Jonckheere-Terpstra test for an ORDERED trend across k groups
     (ordering = the natural sort of ``group_col``): are values
@@ -798,7 +798,7 @@ def jonckheere_terpstra(
     N² − Σn_j², and z the tie-corrected normal score (one snapped
     double expression; NULL when the variance degenerates). The
     three-term tie-corrected variance is assembled from exact BIGINT
-    group/tie sums (cubes bound ``max_tie_block``, the 2^63 guard).
+    group/tie sums (cubes bound ``MAX_TIE_BLOCK``, the 2^63 guard).
 
     Plan: one (group, value) aggregate; a grid of (distinct values ×
     k groups) densified with a per-group running-count window; one
@@ -841,7 +841,7 @@ def jonckheere_terpstra(
     )
     sizes = per_gv.groupBy("__g").agg(F.sum("__c").cast("long").alias("__nj"))
     sizes = sizes.withColumn(
-        "__nj", _guarded(F.col("__nj"), max_tie_block, "jonckheere_terpstra group")
+        "__nj", _guarded(F.col("__nj"), MAX_TIE_BLOCK, "jonckheere_terpstra group")
     )
     gsum = sizes.groupBy().agg(
         F.count(F.lit(1)).cast("long").alias("k_groups"),
@@ -857,7 +857,7 @@ def jonckheere_terpstra(
     )
     tblocks = per_gv.groupBy("__v").agg(F.sum("__c").cast("long").alias("__t"))
     tblocks = tblocks.withColumn(
-        "__t", _guarded(F.col("__t"), max_tie_block, "jonckheere_terpstra tie block")
+        "__t", _guarded(F.col("__t"), MAX_TIE_BLOCK, "jonckheere_terpstra tie block")
     )
     tsum = tblocks.groupBy().agg(
         F.sum(F.col("__t") * (F.col("__t") - 1) * (2 * F.col("__t") + 5))
@@ -1021,7 +1021,6 @@ def wilson_intervals(
     df: DataFrame,
     group_col: str,
     success_col: str,
-    z_milli: int = 1960,
 ) -> DataFrame:
     """Per-group binomial proportion with the Wilson score interval —
     the CI every rate dashboard should print instead of the Wald
@@ -1041,7 +1040,7 @@ def wilson_intervals(
 
     Plan: one (group) aggregate. Nothing else.
     """
-    z = float(z_milli) / 1000.0
+    z = 1.96
     d = df.select(
         F.col(group_col).cast("string").alias("__g"),
         F.col(success_col).cast("long").alias("__k"),

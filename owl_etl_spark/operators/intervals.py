@@ -91,7 +91,6 @@ def fifo_allocate(
     id_col: str,
     qty_col: str,
     order_col: str,
-    tiebreak_col: str | None = None,
     bucket_units: int | None = None,
 ) -> DataFrame:
     """FIFO matching of two per-key ordered streams. Returns one row
@@ -149,13 +148,9 @@ def fifo_allocate(
         raise ValueError(f"fifo_allocate: bucket_units must be >= 1, got {bucket_units}")
 
     def cum(side: DataFrame, tag: str) -> DataFrame:
-        order = [F.col(order_col).asc()]
-        if tiebreak_col is not None:
-            order.append(F.col(tiebreak_col).asc())
-        order.append(F.col(id_col).asc())
         w = (
             Window.partitionBy(*keys)
-            .orderBy(*order)
+            .orderBy(F.col(order_col).asc(), F.col(id_col).asc())
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         q0 = F.col(qty_col).cast("long")

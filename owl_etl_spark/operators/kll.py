@@ -36,7 +36,7 @@ composes, so a 1000-partition tree merge stays certified.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Sequence
+from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -205,7 +205,6 @@ def kll_merge_rows(rows: Iterable) -> KLL:
 def kll_quantile_report(
     df: DataFrame,
     value_col: str,
-    ps_bp: Sequence[int] = (100, 500, 2500, 5000, 7500, 9500, 9900),
     k: int = 400,
 ) -> DataFrame:
     """Self-certifying quantile report: build per-partition sketches,
@@ -221,7 +220,7 @@ def kll_quantile_report(
         F.col("v").isNotNull()
     )
     sk = kll_merge_rows(kll_partition_sketches(longs, "v", k=k).collect())
-    ests = [(int(p), sk.quantile(int(p))) for p in ps_bp]
+    ests = [(p, sk.quantile(p)) for p in (100, 500, 2500, 5000, 7500, 9500, 9900)]
     # literal_frame, not createDataFrame: no Python-worker round trips
     # for a percentile-count-sized frame (r13)
     from owl_etl_spark.session import literal_frame

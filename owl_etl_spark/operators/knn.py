@@ -25,8 +25,6 @@ def brute_force_knn(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -35,8 +33,8 @@ def brute_force_knn(
     + id tie-break makes top-k deterministic across runs and engines.
     Excludes self-matches (same id).
     """
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -75,13 +73,10 @@ def hyperplane_bucket_expr(
 
 def random_hyperplane_bucket(
     df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
     num_planes: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """Attach an ``lsh_bucket`` column (see hyperplane_bucket_expr)."""
-    return df.withColumn("lsh_bucket", hyperplane_bucket_expr(vec_col, dim, num_planes, seed))
+    return df.withColumn("lsh_bucket", hyperplane_bucket_expr("embedding", 64, num_planes))
 
 
 def _multi_table_buckets(
@@ -115,27 +110,21 @@ def lsh_knn(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    num_planes: int = 4,
-    num_tables: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's bucket in ANY of
-    ``num_tables`` independent hyperplane tables, then exact cosine rank
+    4 independent hyperplane tables, then exact cosine rank
     within candidates. Equi-join on (table, bucket) instead of a cross
     join — the 100 TB path.
 
-    Recall is tuned by (num_planes, num_tables): fewer planes → bigger
-    buckets → higher recall & cost; more tables → more probes. The
-    defaults (4, 4) give ~2^4 buckets/table; recall is observable by
+    Recall is set by (planes, tables) = (4, 4): fewer planes → bigger
+    buckets → higher recall & cost; more tables → more probes. (4, 4)
+    give ~2^4 buckets/table; recall is observable by
     comparing against ``brute_force_knn`` on a sample (tests do)."""
     qb = _multi_table_buckets(
-        queries, "query_id", "qv", id_col, vec_col, dim, num_planes, num_tables, seed
+        queries, "query_id", "qv", "vec_id", "embedding", 64, 4, 4, 42
     )
     cb = _multi_table_buckets(
-        corpus, "neighbor_id", "cv", id_col, vec_col, dim, num_planes, num_tables, seed
+        corpus, "neighbor_id", "cv", "vec_id", "embedding", 64, 4, 4, 42
     )
     scored = (
         cb.join(F.broadcast(qb), ["tbl", "bucket"])
@@ -153,7 +142,7 @@ def lsh_knn(
 
 
 def sq8_quantize(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+    df: DataFrame
 ) -> DataFrame:
     """Symmetric int8 scalar quantization (SQ8) of an embedding
     column: each vector maps to q_i = round(v_i / max|v| · 127) —
@@ -170,13 +159,13 @@ def sq8_quantize(
     they rank last by convention downstream).
     """
     scale = (
-        f"aggregate(transform({vec_col}, x -> abs(CAST(x AS DOUBLE))), "
-        f"0D, (a, x) -> greatest(a, x))"
+        "aggregate(transform(embedding, x -> abs(CAST(x AS DOUBLE))), "
+        "0D, (a, x) -> greatest(a, x))"
     )
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.expr(
-            f"transform({vec_col}, x -> CAST(round(CAST(x AS DOUBLE)"
+            f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
             f" / (CASE WHEN ({scale}) = 0 THEN 1.0 ELSE ({scale}) END)"
             f" * 127.0) AS BIGINT))"
         ).alias("qvec"),
@@ -188,8 +177,6 @@ def sq8_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k neighbors by the cosine of the SQ8-QUANTIZED vectors —
     the memory-bound ANN configuration: the index holds int8 codes
@@ -203,11 +190,11 @@ def sq8_topk(
     scale the same codes drop into the IVF probe path
     (cluster.ivf_knn_preassigned) unchanged.
     """
-    qq = sq8_quantize(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("qvec").alias("qa")
+    qq = sq8_quantize(queries).select(
+        F.col("vec_id").alias("query_id"), F.col("qvec").alias("qa")
     )
-    qc = sq8_quantize(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("qb")
+    qc = sq8_quantize(corpus).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("qvec").alias("qb")
     )
     dot = (
         "aggregate(zip_with(qa, qb, (x, y) -> x * y), CAST(0 AS BIGINT), (a, x) -> a + x)"

@@ -51,7 +51,6 @@ def upsert_by_recency(
     incoming: DataFrame,
     keys: list[str],
     recency_col: str,
-    tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """Merge incoming rows into an existing snapshot, newest-per-key wins
     (S10/F4 as a batch operator).
@@ -66,10 +65,9 @@ def upsert_by_recency(
     tagged_incoming = incoming.withColumn("__src", F.lit(1))
     unioned = tagged_existing.unionByName(tagged_incoming, allowMissingColumns=True)
     # Order: newer recency first; on exact tie prefer existing (__src asc).
-    order = [F.col(recency_col).desc_nulls_last(), F.col("__src").asc()] + [
-        F.col(c).desc() for c in (tiebreak or [])
-    ]
-    w = Window.partitionBy(*keys).orderBy(*order)
+    w = Window.partitionBy(*keys).orderBy(
+        F.col(recency_col).desc_nulls_last(), F.col("__src").asc()
+    )
     return (
         unioned.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -82,9 +80,6 @@ def scd2_history(
     keys: list[str],
     version_col: str,
     tiebreak: list[str] | None = None,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    current_flag: str = "is_current",
 ) -> DataFrame:
     """Type-2 slowly-changing-dimension history: every version kept,
     with a validity interval instead of the reference's delete-and-
@@ -94,9 +89,9 @@ def scd2_history(
 
     ``valid_from`` = the row's own version value; ``valid_to`` = the
     NEXT version's value per key (open/null for the newest);
-    ``current_flag`` marks the open row. One window shuffle on the
+    ``is_current`` marks the open row. One window shuffle on the
     key, identical cost to the W1 dedup — history costs nothing extra
-    at 100 TB until storage, where partitioning on ``current_flag``
+    at 100 TB until storage, where partitioning on ``is_current``
     (or date-bucketed ``valid_to``) keeps the hot current slice
     pruned.
     """
@@ -106,7 +101,7 @@ def scd2_history(
     w = Window.partitionBy(*keys).orderBy(*order)
     nxt = F.lead(version_col).over(w)
     return (
-        df.withColumn(valid_from, F.col(version_col))
-        .withColumn(valid_to, nxt)
-        .withColumn(current_flag, F.col(valid_to).isNull())
+        df.withColumn("valid_from", F.col(version_col))
+        .withColumn("valid_to", nxt)
+        .withColumn("is_current", F.col("valid_to").isNull())
     )

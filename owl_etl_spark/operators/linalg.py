@@ -108,8 +108,6 @@ def column_sums(
 def power_iteration_top_eigvec(
     gram: DataFrame,
     n_iters: int = 6,
-    a_scale: int = 10_000,
-    micro: int = 1_000_000,
 ) -> DataFrame:
     """Dominant eigenvector of a symmetric matrix given as the
     upper-triangle ``(i, j, s)`` frame ``gram_matrix`` emits —
@@ -117,8 +115,8 @@ def power_iteration_top_eigvec(
     whose sign/order is solver-dependent — the documented q170
     limitation) the result IS oracle-gateable:
 
-        A      = floordiv(s · a_scale, max|s|)        (|A| ≤ a_scale)
-        v₀     = micro everywhere
+        A      = floordiv(s · 1e4, max|s|)            (|A| ≤ 1e4)
+        v₀     = micro (1e6) everywhere
         w      = A · v                                 (exact BIGINT)
         pivot  = w-component with max |w|, ties → lowest i
         v'     = floordiv(w · micro · sign(pivot), max(|pivot|, 1))
@@ -128,8 +126,8 @@ def power_iteration_top_eigvec(
     bit-identical across engines and partitionings. Every division is
     the exact-multiple floor-div of ``_fd`` — no trunc/floor skew.
 
-    Overflow headroom: |w| ≤ dim·a_scale·micro, then ·micro again in
-    the normalize — dim ≤ ~9·10⁵ at the defaults before BIGINT risk;
+    Overflow headroom: |w| ≤ dim·1e4·micro, then ·micro again in
+    the normalize — dim ≤ ~9·10⁵ before BIGINT risk;
     raise awareness before feeding a wider matrix. Convergence is the
     standard power-iteration ratio |λ₂/λ₁| per round; fixed
     ``n_iters`` keeps the run replayable (the gate pins the ITERATE,
@@ -153,8 +151,8 @@ def power_iteration_top_eigvec(
             "i",
             "j",
             F.expr(
-                f"(s * {int(a_scale)} - ((s * {int(a_scale)} % __amax) + __amax)"
-                f" % __amax) div __amax"
+                "(s * 10000 - ((s * 10000 % __amax) + __amax)"
+                " % __amax) div __amax"
             )
             .cast("long")
             .alias("a"),
@@ -172,7 +170,7 @@ def power_iteration_top_eigvec(
         release(a)
         cells = [(r[0], r[1], r[2]) for r in rows]
         ityp = dict(a.dtypes)["i"]
-        v_d = {i: int(micro) for i, _, _ in cells}
+        v_d = {i: 1_000_000 for i, _, _ in cells}
         for _ in range(int(n_iters)):
             w_d: dict = {}
             for i, j, aa in cells:
@@ -186,14 +184,14 @@ def power_iteration_top_eigvec(
             pi, pw = max(w_d.items(), key=lambda kv: (abs(kv[1]), -kv[0]))
             sg = -1 if pw < 0 else 1
             pv = max(abs(pw), 1)
-            v_d = {i: (w * int(micro) * sg) // pv for i, w in w_d.items()}
+            v_d = {i: (w * 1_000_000 * sg) // pv for i, w in w_d.items()}
         return literal_frame(
             gram.sparkSession,
             sorted(v_d.items()),
             f"i {ityp}, v_micro bigint",
         )
     v = a.select(F.col("i").alias("vi")).distinct().select(
-        "vi", F.lit(int(micro)).cast("long").alias("x")
+        "vi", F.lit(1_000_000).cast("long").alias("x")
     )
 
     def _round(v: DataFrame, _: int) -> DataFrame:
@@ -213,8 +211,8 @@ def power_iteration_top_eigvec(
         return w.crossJoin(F.broadcast(pivot)).select(
             F.col("i").alias("vi"),
             F.expr(
-                f"(w * {int(micro)} * __sg - ((w * {int(micro)} * __sg % __pv)"
-                f" + __pv) % __pv) div __pv"
+                "(w * 1000000 * __sg - ((w * 1000000 * __sg % __pv)"
+                " + __pv) % __pv) div __pv"
             )
             .cast("long")
             .alias("x"),

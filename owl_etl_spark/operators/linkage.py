@@ -175,7 +175,6 @@ def resolve_entities(
     id_col: str,
     name_col: str,
     threshold: float = 0.6,
-    max_iters: int = 10,
     passes: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Full entity resolution: every input row labeled with its
@@ -192,7 +191,7 @@ def resolve_entities(
     else:
         edges = similarity_edges_multi(df, id_col, name_col, threshold, passes)
     return connected_components(
-        edges, df.select(id_col), id_col, max_iters=max_iters
+        edges, df.select(id_col), id_col
     ).withColumnRenamed("component", "entity_id")
 
 
@@ -334,7 +333,6 @@ def sorted_neighborhood_pairs(
     id_col: str,
     name_col: str,
     window: int = 3,
-    block_col=None,
     max_distance: int | None = None,
 ) -> DataFrame:
     """Sorted-Neighborhood Method candidate pairs: records are sorted
@@ -366,7 +364,7 @@ def sorted_neighborhood_pairs(
         raise ValueError("sorted_neighborhood_pairs: window must be >= 1")
     from pyspark.sql import Window
 
-    block = _block_first_token(name_col) if block_col is None else block_col
+    block = _block_first_token(name_col)
     base = df.select(
         F.col(id_col).alias("__id"),
         _norm(name_col).alias("__name"),

@@ -179,9 +179,8 @@ def logistic_score(
     df: DataFrame,
     x_cols: list[str],
     weights_micro: list[int],
-    out_col: str = "p_hat",
 ) -> DataFrame:
-    """Append σ(w·x) as ``out_col`` (double, rounded at 6) using a
+    """Append σ(w·x) as ``p_hat`` (double, rounded at 6) using a
     fitted micro-unit weight vector."""
     if len(x_cols) != len(weights_micro):
         raise ValueError("logistic_score: weights/features length mismatch")
@@ -189,7 +188,7 @@ def logistic_score(
         (F.lit(int(weights_micro[j])) * F.col(x_cols[j]).cast("long")).cast("double")
         for j in range(len(x_cols))
     ) / F.lit(1_000_000.0)
-    return df.withColumn(out_col, F.round(_sigma(z), 6))
+    return df.withColumn("p_hat", F.round(_sigma(z), 6))
 
 
 def logistic_fit_report(
@@ -336,7 +335,6 @@ def cv_logistic_report(
     folds: int = 2,
     iterations: int = 8,
     lr: float = 0.5,
-    salt: str = "cv",
 ) -> DataFrame:
     """K-fold cross-validated logistic regression — the evaluation
     discipline the in-sample fit report (q233) deliberately lacks:
@@ -359,7 +357,7 @@ def cv_logistic_report(
 
     work = df.withColumn(
         "__fold",
-        (md5_long(F.concat(F.col(key_col).cast("string"), F.lit(f"#{salt}"))) % folds)
+        (md5_long(F.concat(F.col(key_col).cast("string"), F.lit("#cv"))) % folds)
         .cast("long"),
     )
     work = seal(work, eager=False)

@@ -42,8 +42,6 @@ FEATURE_SCHEMA = (
 
 def to_binary_payload(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     media_type: F.Column | None = None,
 ) -> DataFrame:
     """Wrap a source column as an opaque binary payload with typed
@@ -52,10 +50,10 @@ def to_binary_payload(
     ``media_type`` may be a Column for mixed-media corpora (drives the
     per-type decoder dispatch in ``extract_features``)."""
     return df.select(
-        F.col(id_col),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.col("doc_id"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         (media_type if media_type is not None else F.lit("text/plain")).alias("media_type"),
-        F.length(F.encode(F.col(text_col), "utf-8")).cast("long").alias("n_bytes"),
+        F.length(F.encode(F.col("text"), "utf-8")).cast("long").alias("n_bytes"),
     )
 
 
@@ -420,9 +418,6 @@ def _phash_one(buf: bytes, bits: int) -> int:
 
 def perceptual_fingerprint(
     df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    bits: int = PHASH_BITS,
 ) -> DataFrame:
     """(id, phash, n_bytes) perceptual fingerprints over a binary
     payload column via Arrow-batched ``mapInPandas`` — the content-
@@ -435,52 +430,45 @@ def perceptual_fingerprint(
     hash bit-for-bit from the payload hex (the q113 device)."""
     import numpy as np  # noqa: F401  (imported for the worker closure)
 
-    out_schema = f"{id_col} bigint, phash bigint, n_bytes bigint"
+    out_schema = "doc_id bigint, phash bigint, n_bytes bigint"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = pdf[payload_col]
+            payloads = pdf["payload"]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
-                    "phash": [_phash_one(bytes(p), bits) for p in payloads],
+                    "doc_id": pdf["doc_id"],
+                    "phash": [_phash_one(bytes(p), PHASH_BITS) for p in payloads],
                     "n_bytes": [len(bytes(p)) for p in payloads],
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=out_schema)
+    return df.select("doc_id", "payload").mapInPandas(fn, schema=out_schema)
 
 
 def phash_band_rows(
     fps: DataFrame,
     bands: int = 4,
-    bits: int = PHASH_BITS,
-    id_col: str = "doc_id",
-    fp_col: str = "phash",
 ) -> DataFrame:
     """(id, band, sig) rows: the fingerprint split into ``bands``
     disjoint bit-slices — the LSH-shaped key that turns Hamming-ball
     search into equi-joins (Manku et al., "Detecting Near-Duplicates
     for Web Crawling"). Same row shape as the MinHash band store, so
     the banded join reuses the skew-guarded LSH pair machinery."""
-    if bits % bands != 0:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    width = bits // bands
+    if PHASH_BITS % bands != 0:
+        raise ValueError(f"bits={PHASH_BITS} not divisible by bands={bands}")
+    width = PHASH_BITS // bands
     vals = F.expr(
         f"transform(sequence(0, {bands - 1}), "
-        f"j -> pmod(shiftright({fp_col}, j * {width}), {1 << width}))"
+        f"j -> pmod(shiftright(phash, j * {width}), {1 << width}))"
     )
-    return fps.select(F.col(id_col), F.posexplode(vals).alias("band", "sig"))
+    return fps.select(F.col("doc_id"), F.posexplode(vals).alias("band", "sig"))
 
 
 def phash_near_dup_pairs(
     fps: DataFrame,
     max_hamming: int = 3,
     bands: int = 4,
-    bits: int = PHASH_BITS,
-    id_col: str = "doc_id",
-    fp_col: str = "phash",
-    max_group: int = 1024,
 ) -> DataFrame:
     """Near-dup pairs (id_a < id_b, hamming) among perceptual
     fingerprints with Hamming distance ≤ ``max_hamming``, found by
@@ -490,7 +478,7 @@ def phash_near_dup_pairs(
     slice matches exactly and the equi-join cannot miss a true pair.
     Candidate generation is the skew-guarded LSH bucket expansion
     (``incremental_lsh_pairs`` — per-task pair fan-out bounded by
-    ``max_group``² even if a degenerate fingerprint floods a bucket),
+    1024² even if a degenerate fingerprint floods a bucket),
     then one exact ``bit_count(xor)`` filter. At 100 TB: one shuffle
     on (band, sig), candidates ~ corpus/2^(bits/bands) per band plus
     true near-dups, nothing quadratic."""
@@ -501,10 +489,10 @@ def phash_near_dup_pairs(
             f"max_hamming={max_hamming} needs > {max_hamming} bands for "
             f"complete candidate generation (got {bands})"
         )
-    rows = phash_band_rows(fps, bands, bits, id_col, fp_col)
-    cand = incremental_lsh_pairs(rows, None, id_col=id_col, max_group=max_group)
-    fa = fps.select(F.col(id_col).alias("id_a"), F.col(fp_col).alias("__fa"))
-    fb = fps.select(F.col(id_col).alias("id_b"), F.col(fp_col).alias("__fb"))
+    rows = phash_band_rows(fps, bands)
+    cand = incremental_lsh_pairs(rows, None)
+    fa = fps.select(F.col("doc_id").alias("id_a"), F.col("phash").alias("__fa"))
+    fb = fps.select(F.col("doc_id").alias("id_b"), F.col("phash").alias("__fb"))
     return (
         cand.join(fa, "id_a")
         .join(fb, "id_b")

@@ -41,7 +41,6 @@ def negative_samples(
     item_col: str,
     m: int = 3,
     attempts_per_negative: int = 4,
-    salt: str = "neg",
 ) -> DataFrame:
     """``(user, item, attempt, neg_rank)`` — up to ``m`` deterministic
     hash-drawn negatives per user (see module docstring). ``item``
@@ -73,7 +72,7 @@ def negative_samples(
             "__idx",
             md5_long(
                 F.concat(
-                    F.col("__u"), F.lit(f"#{salt}#"), F.col("attempt").cast("string")
+                    F.col("__u"), F.lit("#neg#"), F.col("attempt").cast("string")
                 )
             )
             % F.lit(n_items),

@@ -54,7 +54,6 @@ def bradley_terry_strengths(
     winner_col: str = "winner",
     loser_col: str = "loser",
     n_iters: int = 5,
-    broadcast_items: bool = True,
 ) -> DataFrame:
     """Fit Bradley-Terry strengths from a (winner, loser) outcome
     list; returns ``(item, wins, games, strength_micro)`` — strengths
@@ -64,18 +63,12 @@ def bradley_terry_strengths(
     0 (W_i = 0 forces p_raw = 0 — the MM fixed point for a winless
     item under zero-smoothing, documented rather than smoothed).
 
-    ``broadcast_items`` (round 12, guide §3.1): the per-iteration
-    denominator and strength frames are ITEM-sized (one row per
-    competitor), but they descend from checkpointed RDDs Catalyst has
-    no stats for, so the items⋈denom / items⋈strength joins planned as
-    SortMergeJoins — two exchanges plus sorts per iteration for
-    dimension-sized tables. The default broadcasts them (the ra/rb
-    rating vectors already were); pass False for tournaments whose
-    item table outgrows executor memory, where the shuffle join is the
-    honest plan."""
-
-    def _bi(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_items else df
+    The per-iteration denominator and strength frames are ITEM-sized
+    (one row per competitor), but they descend from checkpointed RDDs
+    Catalyst has no stats for, so the items⋈denom / items⋈strength
+    joins planned as SortMergeJoins — two exchanges plus sorts per
+    iteration for dimension-sized tables. They are broadcast (the
+    ra/rb rating vectors already were; round 12, guide §3.1)."""
 
     w, l = F.col(winner_col).cast("string"), F.col(loser_col).cast("string")
     g = games.select(w.alias("__w"), l.alias("__l")).withColumn(
@@ -199,7 +192,7 @@ def bradley_terry_strengths(
             )
         )
         praw = (
-            items.join(_bi(denom), items["item"] == denom["__a"], "left")
+            items.join(F.broadcast(denom), items["item"] == denom["__a"], "left")
             .select(
                 "item",
                 F.expr(
@@ -218,6 +211,6 @@ def bradley_terry_strengths(
     r = iterate(
         items.select("item", F.lit(MICRO).cast("long").alias("__r")), _round, n_iters, every=2
     )
-    return items.join(_bi(r), "item").select(
+    return items.join(F.broadcast(r), "item").select(
         "item", "wins", "games", F.col("__r").alias("strength_micro")
     )

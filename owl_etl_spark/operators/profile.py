@@ -4,11 +4,9 @@ summary an ETL engine publishes with every load).
 
 All per-column aggregates are computed in ONE wide aggregation over
 the table, then unpivoted to a row per column with ``stack`` — the
-table is scanned once however many columns are profiled. (Exact
-distinct counts add the usual expand-based distinct aggregation; pass
-``approx_distinct=True`` to swap in HLL ``approx_count_distinct`` —
-the right choice at 100 TB, where an exact multi-column distinct is a
-multi-shuffle expand.)
+table is scanned once however many columns are profiled. Distinct
+counts are exact: one column-pruned distinct count per column (see
+``table_profile``).
 """
 
 from __future__ import annotations
@@ -19,9 +17,7 @@ from pyspark.sql import functions as F
 from owl_etl_spark.session import seal
 
 
-def table_profile(
-    df: DataFrame, cols: list[str], approx_distinct: bool = False
-) -> DataFrame:
+def table_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     """Per-column profile: (column, n_rows, n_null, n_distinct,
     min_value, max_value) with min/max rendered as strings so mixed
     column types unpivot into one frame.
@@ -45,9 +41,6 @@ def table_profile(
     storage (parquet/ORC); on row-oriented staging (JSON, CSV, JDBC)
     column pruning cannot reduce IO and each exact-distinct pass
     re-reads FULL rows — N profiled columns cost N full scans there.
-    ``approx_distinct=True`` (HLL) folds back into the single pass —
-    no expand, no extra scans — the right choice at 100 TB and on any
-    row-oriented source.
     """
     aggs = [F.count(F.lit(1)).cast("long").alias("__n_rows")]
     for c in cols:
@@ -56,17 +49,14 @@ def table_profile(
             F.min(c).cast("string").alias(f"__min_{c}"),
             F.max(c).cast("string").alias(f"__max_{c}"),
         ]
-        if approx_distinct:
-            aggs.append(F.approx_count_distinct(c).cast("long").alias(f"__dist_{c}"))
     wide = df.agg(*aggs)
-    if not approx_distinct:
-        for c in cols:
-            wide = wide.crossJoin(
-                df.select(c)
-                .where(F.col(c).isNotNull())
-                .distinct()
-                .agg(F.count(F.lit(1)).cast("long").alias(f"__dist_{c}"))
-            )
+    for c in cols:
+        wide = wide.crossJoin(
+            df.select(c)
+            .where(F.col(c).isNotNull())
+            .distinct()
+            .agg(F.count(F.lit(1)).cast("long").alias(f"__dist_{c}"))
+        )
     stack = ", ".join(
         f"'{c}', `__null_{c}`, `__dist_{c}`, `__min_{c}`, `__max_{c}`" for c in cols
     )

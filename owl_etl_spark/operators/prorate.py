@@ -29,12 +29,11 @@ def largest_remainder_allocate(
     keys: list[str],
     weight_col: str,
     total: int,
-    out_col: str = "alloc",
 ) -> DataFrame:
     """Allocate ``total`` integer units across the rows of ``df``
     (one row per group) proportional to BIGINT ``weight_col``.
 
-    Returns the input keys + weight + ``out_col``; Σ out_col == total
+    Returns the input keys + weight + ``alloc``; Σ alloc == total
     exactly. Null or negative weights raise (a weight is a claim about
     proportion — dropping or clamping it silently corrupts every other
     group's share); zero weights are allowed and get floor 0, winning
@@ -83,6 +82,6 @@ def largest_remainder_allocate(
             F.col("__w").alias(weight_col),
             (F.col("__floor") + F.when(F.col("__rk") <= F.col("__left"), F.lit(1)).otherwise(F.lit(0)))
             .cast("long")
-            .alias(out_col),
+            .alias("alloc"),
         )
     )

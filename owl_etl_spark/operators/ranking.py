@@ -25,12 +25,9 @@ from owl_etl_spark.functions.text import normalize_text, tokens
 def bm25_topk(
     df: DataFrame,
     terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 20,
     k1: float = 1.2,
     b: float = 0.75,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Top-k documents by BM25 score for a bag of query ``terms``.
 
@@ -41,14 +38,14 @@ def bm25_topk(
 
     Determinism: idf and the length norm are computed from exact
     BIGINT counts; every double op after that is per-row IEEE, and the
-    final score is rounded to ``round_digits`` before ranking with a
+    final score is rounded to 6 digits before ranking with a
     (score DESC, id ASC) tie-break — so the top-k set is identical
     across engines and partitionings.
 
     Documents matching none of the terms score 0 and are not returned.
     """
     toks = df.select(
-        F.col(id_col).alias("id"), tokens(normalize_text(F.col(text_col))).alias("t")
+        F.col("doc_id").alias("id"), tokens(normalize_text(F.col("text"))).alias("t")
     ).withColumn("dl", F.size("t").cast("long"))
     # 1-row corpus stats, joined in as a broadcast-able literal frame —
     # the n_docs anti-pattern (a separate driver-side count job) stays out
@@ -88,7 +85,7 @@ def bm25_topk(
         .agg(
             F.round(
                 F.sum(F.round(F.col("contrib") * 1e9).cast("long")) / 1e9,
-                round_digits,
+                6,
             ).alias("score")
         )
     )
@@ -97,7 +94,7 @@ def bm25_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "score",
             F.col("rank").cast("long").alias("rank"),
         )

@@ -47,7 +47,6 @@ def ransac_line_fit(
     key_col: str,
     n_candidates: int = 32,
     tol: int = 100,
-    salt: str = "ransac",
     max_product: int = 10**13,
 ) -> DataFrame:
     """Score ``n_candidates`` hash-drawn two-point lines by inlier
@@ -102,9 +101,9 @@ def ransac_line_fit(
         )
         .select(
             "candidate",
-            (md5_long(F.concat(F.lit(f"{salt}#a#"), F.col("candidate").cast("string")))
+            (md5_long(F.concat(F.lit("ransac#a#"), F.col("candidate").cast("string")))
              % F.col("__n")).alias("__ia"),
-            (md5_long(F.concat(F.lit(f"{salt}#b#"), F.col("candidate").cast("string")))
+            (md5_long(F.concat(F.lit("ransac#b#"), F.col("candidate").cast("string")))
              % F.col("__n")).alias("__ib"),
         )
     )

@@ -140,7 +140,7 @@ def volatilidad_table(df: DataFrame) -> DataFrame:
     return _rv_side(df, "volatilidad_historica")
 
 
-def raw_json_table(df: DataFrame, tipo: str = "transformed") -> DataFrame:
+def raw_json_table(df: DataFrame) -> DataFrame:
     """Whole-document archive as a JSON string column (S11;
     src/etl/load.py:356-364). On Spark 4 a VariantType column is the
     alternative; a string keeps sinks (JDBC/parquet) trivial."""
@@ -148,7 +148,7 @@ def raw_json_table(df: DataFrame, tipo: str = "transformed") -> DataFrame:
     return df.select(
         "fic_id",
         F.to_json(F.struct(*doc_cols)).alias("json_data"),
-        F.lit(tipo).alias("tipo"),
+        F.lit("transformed").alias("tipo"),
         (F.col("_filename") if "_filename" in df.columns else F.lit(None).cast("string")).alias("filename"),
     )
 

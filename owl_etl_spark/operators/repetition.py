@@ -43,10 +43,9 @@ def ngram_repetition_profile(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_tokens: int = 3,
 ) -> DataFrame:
     """Per-document repetition profile. Documents with fewer than
-    ``min_tokens`` whitespace tokens are excluded (no trigram slots —
+    3 whitespace tokens are excluded (no trigram slots —
     stated discipline).
 
     Returns ``(id, n_tokens, n_bigrams, top_bigram_count,
@@ -57,7 +56,7 @@ def ngram_repetition_profile(
     base = df.select(
         F.col(id_col).alias("__id"),
         tokens(normalize_text(F.col(text_col))).alias("__t"),
-    ).filter(F.size("__t") >= int(min_tokens))
+    ).filter(F.size("__t") >= 3)
     # Round 12 (guide §4.2's interpreted-lambda trap, measured §1):
     # the old gram builder indexed the token array from INSIDE the
     # transform lambda (get(__t, i)); CollapseProject inlines __t's

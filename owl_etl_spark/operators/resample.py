@@ -40,7 +40,6 @@ def gap_fill(
     step: str = "1 hour",
     trunc_unit: str = "hour",
     aggs: dict[str, Column] | None = None,
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """Dense per-key time grid with zero-filled counts.
 
@@ -52,7 +51,7 @@ def gap_fill(
     own [min, max] — the grid never extrapolates.
     """
     aggs = aggs or {}
-    b = F.date_trunc(trunc_unit, F.col(ts_col)).alias(bucket_col)
+    b = F.date_trunc(trunc_unit, F.col(ts_col)).alias("bucket")
     observed = df.groupBy(*keys, b).agg(
         F.count(F.lit(1)).alias("n"), *[c.alias(a) for a, c in aggs.items()]
     )
@@ -64,10 +63,10 @@ def gap_fill(
         )
         .select(
             *keys,
-            F.explode(F.expr(f"sequence(__lo, __hi, interval {step})")).alias(bucket_col),
+            F.explode(F.expr(f"sequence(__lo, __hi, interval {step})")).alias("bucket"),
         )
     )
-    joined = grid.join(observed, [*keys, bucket_col], "left")
+    joined = grid.join(observed, [*keys, "bucket"], "left")
     return joined.withColumn("n", F.coalesce(F.col("n"), F.lit(0)).cast("long"))
 
 
@@ -196,9 +195,9 @@ def cumulative_compound(
     )
 
 
-def ewma_weights(alpha: float, lags: int, unit: int = 1_000_000) -> list[int]:
+def ewma_weights(alpha: float, lags: int) -> list[int]:
     """The truncated-EWMA weight ladder as INTEGER micro-unit
-    literals: ``w_j = round(alpha·(1-alpha)^j · unit)`` for j = 0..
+    literals: ``w_j = round(alpha·(1-alpha)^j · 1e6)`` for j = 0..
     lags-1. Both the Spark expression and any SQL oracle bake in the
     same literals, so the smoothing is engine-exact by construction —
     the same pinning trick as the ANN centroids/codebooks."""
@@ -206,7 +205,7 @@ def ewma_weights(alpha: float, lags: int, unit: int = 1_000_000) -> list[int]:
         raise ValueError(f"ewma_weights: need 0 < alpha <= 1, got {alpha!r}")
     if lags < 1:
         raise ValueError(f"ewma_weights: need lags >= 1, got {lags!r}")
-    return [int(round(alpha * (1 - alpha) ** j * unit)) for j in range(lags)]
+    return [int(round(alpha * (1 - alpha) ** j * 1_000_000)) for j in range(lags)]
 
 
 def ewma(

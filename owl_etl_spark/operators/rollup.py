@@ -49,16 +49,16 @@ def merge_partial_aggs(state: DataFrame, new_partials: DataFrame, keys: list[str
     )
 
 
-def finalize(df: DataFrame, scale: int = 100) -> DataFrame:
+def finalize(df: DataFrame) -> DataFrame:
     """Reader-facing view of the state: back to domain units with the
     derived mean (never stored — avg is not algebraic; sum/count is)."""
     return df.select(
         *[c for c in df.columns if c not in _MERGE],
         F.col("cnt").alias("n"),
-        (F.col("sum").cast("double") / scale).alias("total"),
-        (F.col("min").cast("double") / scale).alias("minimum"),
-        (F.col("max").cast("double") / scale).alias("maximum"),
-        F.round(F.col("sum").cast("double") / F.col("cnt") / scale, 6).alias("mean"),
+        (F.col("sum").cast("double") / 100).alias("total"),
+        (F.col("min").cast("double") / 100).alias("minimum"),
+        (F.col("max").cast("double") / 100).alias("maximum"),
+        F.round(F.col("sum").cast("double") / F.col("cnt") / 100, 6).alias("mean"),
     )
 
 

@@ -36,7 +36,6 @@ def rfm_scores(
     ts_col: str,
     value_col: str,
     k: int = 5,
-    asof: int | None = None,
 ) -> DataFrame:
     """One row per key: ``(key, recency, frequency, monetary,
     r_score, f_score, m_score, rfm)``.
@@ -44,8 +43,8 @@ def rfm_scores(
     ``ts_col`` must be NUMERIC activity time in the caller's grain
     (epoch days/seconds — convert dates up front; keeping the grain
     caller-owned keeps the arithmetic engine-portable); ``value_col``
-    integer units (cents). ``asof`` (same grain) anchors recency =
-    asof − max(ts); default is the corpus maximum (a 1-row aggregate).
+    integer units (cents). Recency = corpus max(ts) − max(ts), the
+    corpus maximum from a 1-row aggregate.
     ``rfm`` = r·100 + f·10 + m.
     """
     base = df.select(
@@ -58,12 +57,9 @@ def rfm_scores(
         F.count(F.lit(1)).cast("long").alias("frequency"),
         F.sum("__v").cast("long").alias("monetary"),
     )
-    if asof is None:
-        gmax = per_key.agg(F.max("__last").alias("__gmax"))
-        per_key = per_key.crossJoin(F.broadcast(gmax))
-        rec = (F.col("__gmax") - F.col("__last")).cast("long")
-    else:
-        rec = (F.lit(int(asof)) - F.col("__last")).cast("long")
+    gmax = per_key.agg(F.max("__last").alias("__gmax"))
+    per_key = per_key.crossJoin(F.broadcast(gmax))
+    rec = (F.col("__gmax") - F.col("__last")).cast("long")
     per_key = per_key.withColumn("recency", rec).select(
         "__k", "recency", "frequency", "monetary"
     )

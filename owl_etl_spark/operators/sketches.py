@@ -41,9 +41,9 @@ def merge_sketches(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.groupBy(*keys).agg(F.hll_union_agg("sketch").alias("sketch"))
 
 
-def estimate(sketch_col: str = "sketch") -> Column:
-    """Distinct-count estimate from a sketch column (BIGINT)."""
-    return F.hll_sketch_estimate(sketch_col)
+def estimate() -> Column:
+    """Distinct-count estimate from the ``sketch`` column (BIGINT)."""
+    return F.hll_sketch_estimate("sketch")
 
 
 def distinct_overlap_estimate(
@@ -51,14 +51,13 @@ def distinct_overlap_estimate(
     key_col: str,
     cond_a: Column,
     cond_b: Column,
-    lg_k: int = 12,
 ) -> DataFrame:
     """Audience-overlap estimation via HLL set algebra, ONE pass:
     sketch the keys satisfying ``cond_a`` and ``cond_b`` (null keys
     are skipped by the sketch), union the sketches, and estimate
     |A∩B| = est(A) + est(B) - est(A∪B) (inclusion–exclusion).
 
-    The 100 TB shape: one scan, two lg_k-sized sketches per map task,
+    The 100 TB shape: one scan, two lg_k = 12 sketches per map task,
     KBs over the wire — vs the exact form's full shuffle of every
     (key, membership) pair. The intersection estimate inherits error
     from THREE estimates, each with rsd ≈ 1.04/√2^lg_k of its OWN
@@ -67,8 +66,8 @@ def distinct_overlap_estimate(
     confirmation on the shortlisted segments). Sketches here are
     mergeable like everything in this module: per-partition/day
     sketches roll up without rescans."""
-    sa = F.hll_sketch_agg(F.when(cond_a, F.col(key_col)), F.lit(lg_k))
-    sb = F.hll_sketch_agg(F.when(cond_b, F.col(key_col)), F.lit(lg_k))
+    sa = F.hll_sketch_agg(F.when(cond_a, F.col(key_col)), F.lit(12))
+    sb = F.hll_sketch_agg(F.when(cond_b, F.col(key_col)), F.lit(12))
     return df.agg(sa.alias("__sa"), sb.alias("__sb")).select(
         F.hll_sketch_estimate("__sa").alias("est_a"),
         F.hll_sketch_estimate("__sb").alias("est_b"),

@@ -23,15 +23,14 @@ def salted_groupby_sum(
     keys: list[str],
     value_col: str,
     salt_col: str,
-    num_salts: int = 16,
 ) -> DataFrame:
     """Two-level aggregation: groupBy (keys, salt) → groupBy keys.
 
     ``salt_col`` is any column that distributes rows within a key (an
-    id, a timestamp); the salt is its hash mod num_salts. The first
-    level bounds per-task group state to ~1/num_salts of the hot key.
+    id, a timestamp); the salt is its hash mod 16. The first
+    level bounds per-task group state to ~1/16 of the hot key.
     """
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(salt_col)), F.lit(num_salts)))
+    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(salt_col)), F.lit(16)))
     partial = salted.groupBy(*keys, "__salt").agg(F.sum(value_col).alias("__partial"))
     return partial.groupBy(*keys).agg(F.sum("__partial").alias(f"sum_{value_col}"))
 
@@ -41,27 +40,26 @@ def salted_join(
     small: DataFrame,
     key: str,
     row_id_col: str,
-    num_salts: int = 16,
 ) -> DataFrame:
     """Join a skewed fact side against a modest dimension by exploding
-    the dimension into ``num_salts`` salted replicas.
+    the dimension into 16 salted replicas.
 
     The fact side gets a deterministic salt from ``row_id_col``; the
-    dimension is replicated num_salts times (only viable when
-    |small| · num_salts stays modest — i.e. 'too big to broadcast,
+    dimension is replicated 16 times (only viable when
+    |small| · 16 stays modest — i.e. 'too big to broadcast,
     small enough to replicate'). The hot key's rows now spread across
-    num_salts tasks instead of one.
+    16 tasks instead of one.
     """
     fact = skewed.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(row_id_col)), F.lit(num_salts))
+        "__salt", F.pmod(F.xxhash64(F.col(row_id_col)), F.lit(16))
     )
     dim = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(15)))
     )
     return fact.join(dim, [key, "__salt"]).drop("__salt")
 
 
-def skew_report(df: DataFrame, key: str, heavy_hitter_k: int = 5) -> DataFrame:
+def skew_report(df: DataFrame, key: str) -> DataFrame:
     """Key-distribution diagnostics ahead of a join/agg on ``key``:
     one row with key cardinality, max/avg per-key row counts, and the
     skew ratio (max/avg) that predicts straggler tasks. Two-level

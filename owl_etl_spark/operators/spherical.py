@@ -10,9 +10,9 @@ longitude-compensated cell width, then the exact haversine check.
 
 Blocking: cells are ``radius_km``-sized in latitude degrees
 (1° lat ≈ 111.195 km everywhere) and widened in longitude by
-1/cos(max_abs_lat) — the worst case over the declared operating band,
+1/cos(MAX_ABS_LAT) — the worst case over the declared operating band,
 so every true neighbor pair shares a 3×3 cell neighborhood by
-construction. ``max_abs_lat`` (default 66°: below the polar circles)
+construction. ``MAX_ABS_LAT`` (66°: below the polar circles)
 is a CONTRACT — points beyond it raise (woven guard) rather than
 silently missing pairs; polar data needs a different blocking
 (s2-style), not a silently wrong one.
@@ -41,6 +41,8 @@ from pyspark.sql import functions as F
 #: km per degree of latitude (mean Earth radius 6371.0088 km)
 KM_PER_DEG_LAT = 111.19492664455873
 EARTH_RADIUS_KM = 6371.0088
+#: The latitude band the radius join's blocking covers; rows outside raise.
+MAX_ABS_LAT = 66.0
 
 
 def haversine_km(lat1, lon1, lat2, lon2):
@@ -69,25 +71,20 @@ def haversine_radius_join(
     lat_col: str,
     lon_col: str,
     radius_km: float,
-    max_abs_lat: float = 66.0,
 ) -> DataFrame:
     """All unordered point pairs within ``radius_km`` great-circle km:
     ``(id_a, id_b, dist_km)`` with id_a < id_b, dist rounded at 6.
     Coordinates are snapped to exact micro-degree integers; points
-    with |lat| > ``max_abs_lat`` (or null coords) raise — see the
+    with |lat| > ``MAX_ABS_LAT`` (or null coords) raise — see the
     module docheader's blocking contract.
     """
     if radius_km <= 0:
         raise ValueError(f"haversine_radius_join: radius_km must be > 0, got {radius_km}")
-    if not (0 < max_abs_lat < 89):
-        raise ValueError(
-            f"haversine_radius_join: max_abs_lat must be in (0, 89), got {max_abs_lat}"
-        )
     lat_cell_micro = int(round(radius_km / KM_PER_DEG_LAT * 1_000_000))
     lon_cell_micro = int(
         round(
             radius_km
-            / (KM_PER_DEG_LAT * math.cos(math.radians(max_abs_lat)))
+            / (KM_PER_DEG_LAT * math.cos(math.radians(MAX_ABS_LAT)))
             * 1_000_000
         )
     )
@@ -96,14 +93,14 @@ def haversine_radius_join(
     bad = (
         lat_u0.isNull()
         | lon_u0.isNull()
-        | (F.abs(lat_u0) > int(max_abs_lat * 1_000_000))
+        | (F.abs(lat_u0) > int(MAX_ABS_LAT * 1_000_000))
     )
     lat_u = F.when(
         bad,
         F.raise_error(
             F.lit(
                 f"haversine_radius_join: null coordinate or |lat| > "
-                f"{max_abs_lat}° — outside the declared blocking band "
+                f"{MAX_ABS_LAT}° — outside the declared blocking band "
                 "(polar data needs s2-style cells, not silent misses)"
             )
         ).cast("long"),

@@ -37,7 +37,6 @@ def hash_split(
     key: str | Column,
     fractions: dict[str, float],
     salt: str = "",
-    split_col: str = "split",
 ) -> DataFrame:
     """Assign each row to a named split by hashed key.
 
@@ -60,18 +59,18 @@ def hash_split(
         cond = bucket < int(round(cum * space))
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     last = F.lit(names[-1]) if expr is None else expr.otherwise(names[-1])
-    return df.withColumn(split_col, last)
+    return df.withColumn("split", last)
 
 
 def sample_by_hash(
-    df: DataFrame, key: str | Column, fraction: float, salt: str = "sample"
+    df: DataFrame, key: str | Column, fraction: float
 ) -> DataFrame:
     """Keep ~``fraction`` of rows, chosen by hashed key — unlike
     ``df.sample`` the decision is a pure row function: reproducible
     across runs/engines/partitionings, and consistent across tables
     sharing the key (sampling users samples all their events)."""
     space = 1_000_000
-    bucket = hash_bucket(F.col(key) if isinstance(key, str) else key, space, salt)
+    bucket = hash_bucket(F.col(key) if isinstance(key, str) else key, space, "sample")
     return df.filter(bucket < int(round(fraction * space)))
 
 
@@ -80,8 +79,6 @@ def weighted_mixture(
     key: str | Column,
     stratum_col: str,
     rates: dict[str, float],
-    default_rate: float = 0.0,
-    salt: str = "mix",
 ) -> DataFrame:
     """Curriculum-style source mixing: keep each stratum (source,
     language, quality tier, ...) at its own sampling rate. Per-row
@@ -89,7 +86,7 @@ def weighted_mixture(
     stratum never changes *which* rows of the others are kept (each
     stratum's keep set is a prefix of the same hash order)."""
     space = 1_000_000
-    bucket = hash_bucket(F.col(key) if isinstance(key, str) else key, space, salt)
+    bucket = hash_bucket(F.col(key) if isinstance(key, str) else key, space, "mix")
     thr = None
     for name, rate in rates.items():
         cut = int(round(rate * space))
@@ -98,9 +95,7 @@ def weighted_mixture(
             if thr is None
             else thr.when(F.col(stratum_col) == name, cut)
         )
-    thr = F.lit(int(round(default_rate * space))) if thr is None else thr.otherwise(
-        int(round(default_rate * space))
-    )
+    thr = F.lit(0) if thr is None else thr.otherwise(0)
     return df.filter(bucket < thr)
 
 
@@ -109,7 +104,6 @@ def stratified_sample_exact(
     strata: list[str],
     k: int,
     key: str | Column,
-    salt: str = "strat",
 ) -> DataFrame:
     """Exactly ``min(k, |stratum|)`` rows per stratum, picked by hash
     order (uniform, deterministic, engine-portable; key tiebreak for
@@ -120,7 +114,7 @@ def stratified_sample_exact(
 
     kc = F.col(key) if isinstance(key, str) else key
     space = 1_000_000_000
-    w = Window.partitionBy(*strata).orderBy(hash_bucket(kc, space, salt).asc(), kc.asc())
+    w = Window.partitionBy(*strata).orderBy(hash_bucket(kc, space, "strat").asc(), kc.asc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
@@ -156,7 +150,6 @@ def temperature_mixture(
     stratum_col: str,
     target_total: int,
     alpha: float = 0.5,
-    salt: str = "temp",
 ) -> DataFrame:
     """Temperature-weighted source mixture (the multilingual/
     multi-source LM sampling rule): per-stratum quotas ∝ n_s^alpha,
@@ -208,7 +201,7 @@ def temperature_mixture(
     )
     space = 1_000_000_000
     rank_w = Window.partitionBy(stratum_col).orderBy(
-        hash_bucket(kc, space, salt).asc(), kc.asc()
+        hash_bucket(kc, space, "temp").asc(), kc.asc()
     )
     return (
         df.withColumn("__rn", F.row_number().over(rank_w))
@@ -224,7 +217,6 @@ def weighted_sample_aes(
     weight_col: str,
     k: int,
     salt: str = "aes",
-    score_col: str = "score_nano",
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement, k items
     (Efraimidis–Spirakis A-ES): each row draws a stable uniform
@@ -271,8 +263,8 @@ def weighted_sample_aes(
     ).otherwise(w)
     nano = F.round(-F.log(u) / w_ok * 1_000_000_000).cast("bigint")
     return (
-        df.withColumn(score_col, nano)
-        .orderBy(F.col(score_col).asc(), F.col(key).asc())
+        df.withColumn("score_nano", nano)
+        .orderBy(F.col("score_nano").asc(), F.col(key).asc())
         .limit(k)
     )
 

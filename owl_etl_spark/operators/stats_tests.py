@@ -39,6 +39,10 @@ from pyspark.sql import functions as F
 
 from owl_etl_spark.session import seal
 
+#: Largest per-group row count each test's exact integer sums accept.
+KS_MAX_GROUP_ROWS = 1_000_000_000
+CHI_SQUARE_MAX_GROUP_ROWS = 1_000_000
+
 
 def _guarded(col, limit: int, what: str):
     return F.when(
@@ -60,7 +64,6 @@ def ks_test_report(
     side_col: str,
     side_a,
     side_b,
-    max_group_rows: int = 1_000_000_000,
 ) -> DataFrame:
     """Per-key two-sample KS statistic between the ``value_col``
     distributions of rows where ``side_col`` equals ``side_a`` vs
@@ -70,7 +73,7 @@ def ks_test_report(
     |r_a·n_b − r_b·n_a| (exact BIGINT; r = running ≤-count), and
     ks_d = d_num/(n_a·n_b) rounded at 6.
 
-    The guard binds at n_a·n_b ≤ 2^63 — max_group_rows defaults to
+    The guard binds at n_a·n_b ≤ 2^63 — ``KS_MAX_GROUP_ROWS`` is
     10⁹ per side, effectively unbounded.
 
     Plan: one (keys, value) aggregate with conditional side counts
@@ -101,7 +104,7 @@ def ks_test_report(
         .withColumn("__nb", F.sum("__cb").over(w_all))
     )
     staged = staged.withColumn(
-        "__na", _guarded(F.col("__na"), max_group_rows, "ks_test_report")
+        "__na", _guarded(F.col("__na"), KS_MAX_GROUP_ROWS, "ks_test_report")
     )
     d_num = F.abs(F.col("__ra") * F.col("__nb") - F.col("__rb") * F.col("__na"))
     agg = staged.groupBy(*keys).agg(
@@ -228,7 +231,6 @@ def chi_square_report(
     keys: list[str],
     x_col: str,
     y_col: str,
-    max_group_rows: int = 1_000_000,
 ) -> DataFrame:
     """Per-key Pearson χ² of independence between two categoricals,
     over the FULL n_x×n_y grid — empty cells included, where naive
@@ -241,7 +243,7 @@ def chi_square_report(
     degenerate 1×k grids). Null x/y rows are excluded up front.
 
     The O·n product binds the guard (must stay ≤ 2^63):
-    max_group_rows defaults to 10⁶ rows per group.
+    ``CHI_SQUARE_MAX_GROUP_ROWS`` is 10⁶ rows per group.
 
     Plan: one joint-cell aggregate, marginal rollups OF CELLS, a grid
     build by joining the two marginal lists per key (n_x·n_y rows —
@@ -257,7 +259,9 @@ def chi_square_report(
     mx = joint.groupBy(*keys, "__x").agg(F.sum("__o").cast("long").alias("__cx"))
     my = joint.groupBy(*keys, "__y").agg(F.sum("__o").cast("long").alias("__cy"))
     tot = joint.groupBy(*keys).agg(F.sum("__o").cast("long").alias("__n"))
-    tot = tot.withColumn("__n", _guarded(F.col("__n"), max_group_rows, "chi_square_report"))
+    tot = tot.withColumn(
+        "__n", _guarded(F.col("__n"), CHI_SQUARE_MAX_GROUP_ROWS, "chi_square_report")
+    )
     grid = mx.join(my, keys) if keys else mx.crossJoin(my)
     grid = grid.join(joint, [*keys, "__x", "__y"], "left").withColumn(
         "__o", F.coalesce(F.col("__o"), F.lit(0)).cast("long")
@@ -376,7 +380,6 @@ def permutation_mean_test(
     value_col: str,
     key_col: str,
     n_perms: int = 64,
-    salt: str = "perm",
 ) -> DataFrame:
     """Permutation test for a two-group mean difference — the
     assumption-free sibling of the parametric tests here (t-like
@@ -435,7 +438,7 @@ def permutation_mean_test(
         (int(base["__s1"]) * 1_000_000) // n1 - (int(base["__s2"]) * 1_000_000) // n2
     )
     # pseudo-permutation labels: row joins side 1 when
-    # md5(key#salt#p) mod n < n1 — marginally the right proportions
+    # md5(key#perm#p) mod n < n1 — marginally the right proportions
     n_tot = n1 + n2
     perms = (
         d.select(
@@ -445,7 +448,7 @@ def permutation_mean_test(
             "__side1",
             (
                 md5_long(
-                    F.concat(F.col("__k"), F.lit(f"#{salt}#"), F.col("__p").cast("string"))
+                    F.concat(F.col("__k"), F.lit("#perm#"), F.col("__p").cast("string"))
                 )
                 % n_tot
                 < n1

@@ -13,7 +13,7 @@ Caller contract: the input is ONE ROW PER TIME POINT (pre-aggregate
 raw events to daily/hourly buckets first — the q148/q209 shape). The
 pairwise step is series-length-bounded (n(n−1)/2 pairs of the
 bucketed frame), never raw-row-volume; the guard raises past
-``max_points``.
+``MAX_POINTS``.
 
 Exactness: S and the tie-corrected 18·Var(S) are exact BIGINTs; each
 pairwise Sen slope is one exact floor division (micro-units per time
@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from owl_etl_spark.session import seal
 
 _M = 1_000_000
+#: Longest series the pairwise Mann-Kendall/Sen statistics accept.
+MAX_POINTS = 50_000
 
 
 def _fd(x: str, d: str):
@@ -55,7 +57,6 @@ def mann_kendall_sen(
     df: DataFrame,
     t_col: str,
     value_col: str,
-    max_points: int = 50_000,
 ) -> DataFrame:
     """Mann-Kendall monotone-trend test + Sen's slope over a
     (time, value) series of exact integers.
@@ -75,7 +76,7 @@ def mann_kendall_sen(
       unit of ``t_col``; halve for the slope.
 
     Plan: one t<t' self-join of the bucketed frame (series-length-
-    bounded — ``max_points`` guards the caller's pre-aggregation
+    bounded — ``MAX_POINTS`` guards the caller's pre-aggregation
     contract), one global aggregate, one rank window over the pair
     frame for the median. Tie blocks ride a separate value-level
     aggregate of the same tiny frame.
@@ -87,7 +88,7 @@ def mann_kendall_sen(
     d = seal(d, eager=False)
     base = d.groupBy().agg(F.count(F.lit(1)).cast("long").alias("__n"))
     base = base.withColumn(
-        "__n", _guarded(F.col("__n"), max_points, "mann_kendall_sen")
+        "__n", _guarded(F.col("__n"), MAX_POINTS, "mann_kendall_sen")
     )
     right = d.select(F.col("__t").alias("__t2"), F.col("__x").alias("__x2"))
     pairs = d.join(right, F.col("__t") < F.col("__t2")).select(

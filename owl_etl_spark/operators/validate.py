@@ -37,12 +37,6 @@ def in_range(col: str, lo, hi) -> tuple[str, Column]:
     )
 
 
-def matches(col: str, pattern: str) -> tuple[str, Column]:
-    return row_check(
-        f"matches:{col}", ~F.col(col).rlike(pattern) | F.col(col).isNull()
-    )
-
-
 def constraint_report(
     df: DataFrame,
     row_checks: list[tuple[str, Column]] | None = None,
@@ -52,7 +46,7 @@ def constraint_report(
     """Evaluate constraints; return (constraint, n_violations) rows.
 
     - ``row_checks``: from :func:`row_check` / :func:`not_null` /
-      :func:`in_range` / :func:`matches` — all evaluated in a single
+      :func:`in_range` — all evaluated in a single
       aggregate pass.
     - ``unique_keys``: each key list counts rows beyond the first per
       key value (0 = unique).

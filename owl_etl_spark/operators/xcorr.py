@@ -34,7 +34,6 @@ def cross_correlation(
     x_col: str,
     y_col: str,
     max_lag: int = 3,
-    tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Per key and lag k in [−max_lag, +max_lag]:
     ``(keys..., lag, n_pairs, xcorr)`` — the correlation of
@@ -45,14 +44,10 @@ def cross_correlation(
     """
     if max_lag < 0:
         raise ValueError(f"cross_correlation: max_lag must be >= 0, got {max_lag}")
-    order = [F.col(order_col).asc()]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).asc())
-    w = Window.partitionBy(*keys).orderBy(*order)
+    w = Window.partitionBy(*keys).orderBy(F.col(order_col).asc())
     work = df.select(
         *keys,
         F.col(order_col),
-        *([F.col(tiebreak_col)] if tiebreak_col is not None else []),
         F.col(x_col).cast("long").alias("__x"),
         F.col(y_col).cast("long").alias("__y"),
     )

@@ -6,8 +6,8 @@ key keeps rows close in EVERY indexed dimension close on disk, so a
 scan filtered on any subset of the dimensions prunes most files —
 what Delta/Iceberg OPTIMIZE ZORDER does, expressed as plain columnar
 arithmetic. Interleaving is pure per-row bit math (whole-stage
-codegen, zero shuffle); the payoff step is ``zorder_repartition``,
-whose range exchange is the ONE shuffle a re-layout inherently costs.
+codegen, zero shuffle); the payoff step is a range repartition on the
+z-value, whose exchange is the ONE shuffle a re-layout inherently costs.
 
 Determinism: inputs must already be non-negative ints < 2^bits
 (callers normalize via pmod/bucketing/rank — value-to-cell mapping is
@@ -17,12 +17,11 @@ z-value is a sum of disjoint bit terms — identical on any engine with
 integer shifts.
 
 Relation to ``functions/zorder.py``: that module is the WRITE-path
-special case (two min-max-scaled columns feeding
-``write_sorted_parquet``); this one is the general k-column operator
-surface — explicit range contract instead of silent scaling, any
-number of dimensions, a repartition form, and an oracle-gated query
-(q166). Bit layout differs only by argument order (here dimension i
-owns positions ≡ i mod k).
+special case (two min-max-scaled columns, range-partitioned and sorted
+on :func:`zorder_expr` of the pair); this one is the general k-column
+operator surface — explicit range contract instead of silent scaling,
+any number of dimensions, and an oracle-gated query (q166). Dimension i
+owns the bit positions ≡ i mod k.
 """
 
 from __future__ import annotations
@@ -50,9 +49,9 @@ def zorder_expr(cols: list[str], bits: int) -> F.Column:
 
 
 def zorder_index(
-    df: DataFrame, cols: list[str], bits: int = 16, out_col: str = "zvalue"
+    df: DataFrame, cols: list[str], bits: int = 16
 ) -> DataFrame:
-    """Attach ``out_col``: the Morton code of ``cols``. Each input
+    """Attach ``zvalue``: the Morton code of ``cols``. Each input
     must be a non-negative integer < 2^bits (raises otherwise)."""
     checked = df
     limit = 1 << bits
@@ -72,25 +71,7 @@ def zorder_index(
                 ).cast("long"),
             ).otherwise(x),
         )
-    return checked.withColumn(out_col, zorder_expr(cols, bits).cast("long"))
-
-
-def zorder_repartition(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 16,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Range-repartition by the Morton code (and drop it): the
-    re-layout that makes per-dimension min/max file statistics prune
-    scans on ANY of ``cols``. One range exchange — the cost a
-    re-layout inherently pays once, amortized over every later scan."""
-    z = zorder_index(df, cols, bits, out_col="__z")
-    if num_partitions is not None:
-        out = z.repartitionByRange(num_partitions, F.col("__z"))
-    else:
-        out = z.repartitionByRange(F.col("__z"))
-    return out.drop("__z")
+    return checked.withColumn("zvalue", zorder_expr(cols, bits).cast("long"))
 
 
 def zone_map_report(
@@ -106,7 +87,7 @@ def zone_map_report(
     ``(bucket, n_rows, min_v, max_v, would_scan)``. The aggregate
     ``sum(n_rows) where would_scan`` over this report is exactly the
     I/O a zone-map-aware scan pays, which is how you quantify whether
-    a layout (natural order, sort, ``zorder_repartition``) actually
+    a layout (natural order, sort, z-order range repartition) actually
     earns its shuffle before rewriting 100 TB.
 
     One map-side-combinable groupBy on the bucket id; min/max are
@@ -142,9 +123,8 @@ def hilbert_index(
     x_col: str,
     y_col: str,
     bits: int = 10,
-    out_col: str = "hvalue",
 ) -> DataFrame:
-    """Attach ``out_col``: the 2-D Hilbert-curve index of
+    """Attach ``hvalue``: the 2-D Hilbert-curve index of
     (``x_col``, ``y_col``) — the layout key that strictly dominates
     the Morton code (q166) on locality: the Hilbert curve never takes
     the long diagonal jumps z-ordering suffers at power-of-two
@@ -217,6 +197,6 @@ def hilbert_index(
             .withColumn("__hx", F.col("__tx"))
         )
         s >>= 1
-    return out.withColumn(out_col, F.col("__hd")).drop(
+    return out.withColumn("hvalue", F.col("__hd")).drop(
         "__hx", "__hy", "__hd", "__rx", "__ry", "__tx"
     )

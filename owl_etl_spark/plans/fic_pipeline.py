@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from owl_etl_spark.functions.dates import fecha_normalizada_sql, parse_fecha_normalizada_sql
 from owl_etl_spark.functions.numeric import (
     convert_if_needed_sql,
-    descale_monetary,
+    descale_monetary_sql,
     parse_numero_sql,
     parsed_participation_sql,
     smart_percent_array_sql,
@@ -202,28 +202,28 @@ _ALIAS_SEPARATORS = r"[\s_\-]+"
 _SPACES = r"[\s_]+"
 
 
-def _alias_sql(col_sql: str, aliases: tuple[tuple[str, str], ...]) -> str:
+def _alias_sql(col_sql: str) -> str:
     """Alias lookup on the reference's normalized key: lowercase with
     spaces/dashes/underscores stripped (src/etl/transform.py:299-302) —
     one literal-map lookup, the name itself when the key is unknown."""
-    amap = "map(" + ", ".join(f"{sql_str(k)}, {sql_str(v)}" for k, v in aliases) + ")"
+    amap = "map(" + ", ".join(f"{sql_str(k)}, {sql_str(v)}" for k, v in BANK_ALIASES.items()) + ")"
     norm = f"regexp_replace(lower({col_sql}), {sql_str(_ALIAS_SEPARATORS)}, '')"
     return f"coalesce(element_at({amap}, {norm}), {col_sql})"
 
 
-def _bank_sql(col_sql: str, aliases: tuple[tuple[str, str], ...]) -> str:
-    return f"lower(regexp_replace({_alias_sql(col_sql, aliases)}, {sql_str(_SPACES)}, ''))"
+def _bank_sql(col_sql: str) -> str:
+    return f"lower(regexp_replace({_alias_sql(col_sql)}, {sql_str(_SPACES)}, ''))"
 
 
 def _fund_sql(col_sql: str) -> str:
     return f"lower(regexp_replace({col_sql}, {sql_str(_SPACES)}, ' '))"
 
 
-def _candidates_sql(aliases: tuple[tuple[str, str], ...]) -> str:
+def _candidates_sql() -> str:
     """The whole (banco, fic, url) lookup as one array of normalized
     candidates — one row, broadcast to every document."""
     return (
-        f"collect_list(named_struct('bank', {_bank_sql('banco', aliases)}, "
+        f"collect_list(named_struct('bank', {_bank_sql('banco')}, "
         f"'fund', {_fund_sql('fic')}, 'url', url)) AS __cands"
     )
 
@@ -257,7 +257,7 @@ def _parse_keep_sql(norm_col: str, path: str) -> str:
 
 @functools.lru_cache(maxsize=None)
 def _stage_sql(
-    agencies: tuple[str, ...], aliases: tuple[tuple[str, str], ...], with_urls: bool
+    with_urls: bool,
 ) -> tuple[dict[str, str], dict[str, str], dict[str, list[tuple[str, str]]]]:
     """SQL text of the transform's two projections, built once per process.
 
@@ -278,11 +278,11 @@ def _stage_sql(
     temps = {
         **parsed,
         **{tmp: fecha_normalizada_sql(path) for tmp, path in _DATES.items()},
-        "__agency": _agency_match_sql(ent, agencies),
+        "__agency": _agency_match_sql(ent, tuple(RATING_AGENCIES)),
         "__valor": parse_numero_sql("caracteristicas.valor"),
     }
     if with_urls:
-        temps["__bank"] = _bank_sql("banco", aliases)
+        temps["__bank"] = _bank_sql("banco")
         temps["__fund"] = _fund_sql("fondo")
     # stage 2's flag stays NULL when the field is absent/empty — the
     # reference only writes it when an entidad value exists
@@ -302,6 +302,9 @@ def _stage_sql(
              _parse_keep_sql("__fecha_inicio", "caracteristicas.fecha_inicio_operaciones")),
             ("no_unidades_en_circulacion",
              parse_numero_sql("caracteristicas.no_unidades_en_circulacion")),
+            # stage 7 — P4 on the parsed valor, a temporary, so the
+            # descale's repeated reads do not copy the parse
+            ("valor", descale_monetary_sql("__valor", 6)),
         ],
         "calificacion": [
             ("entidad_calificadora", f"coalesce(__agency, {ent})"),
@@ -316,8 +319,6 @@ def _stage_sql(
 def transform_fic_documents(
     df: DataFrame,
     url_lookup: DataFrame | None = None,
-    agencies: list[str] | None = None,
-    bank_aliases: dict[str, str] | None = None,
 ) -> DataFrame:
     """Full 8-stage FIC transform (P1 orchestrator).
 
@@ -325,13 +326,10 @@ def transform_fic_documents(
     (``banco``, ``fondo``, ``_filename`` — see sources.readers); returns
     the FIC_TRANSFORMED shape, one row per input row.
     """
-    aliases = tuple((bank_aliases or BANK_ALIASES).items())
-    temps, columns, fields = _stage_sql(
-        tuple(agencies or RATING_AGENCIES), aliases, url_lookup is not None
-    )
+    temps, columns, fields = _stage_sql(url_lookup is not None)
     names = df.columns
     if url_lookup is not None:
-        cands = url_lookup.coalesce(1).selectExpr(_candidates_sql(aliases))
+        cands = url_lookup.coalesce(1).selectExpr(_candidates_sql())
         df = df.crossJoin(F.broadcast(cands))
     staged = df.withColumns({name: F.expr(sql) for name, sql in temps.items()})
 
@@ -343,10 +341,6 @@ def transform_fic_documents(
         out = F.col(name)
         for field, sql in fields[name]:
             out = out.withField(field, F.expr(sql))
-        if name == "caracteristicas":
-            # stage 7 — P4 on the parsed valor, a temporary, so the
-            # descale's repeated reads do not copy the parse
-            out = out.withField("valor", descale_monetary(F.col("__valor"), max_iters=6))
         return out.alias(name)
 
     out = staged.select(*[stage(c) for c in names])

@@ -101,7 +101,7 @@ FIC_RAW_SCHEMA = StructType(
                     # (see _part_array): the reference leniently parses
                     # string numerics ("23,2 billones") that a typed
                     # double read would null out in PERMISSIVE mode;
-                    # stage 4 (P7 parse_numero) restores the doubles
+                    # stage 4 (P7 parse_numero_sql) restores the doubles
                     StructField("valor", StringType()),
                     StructField("fecha_inicio_operaciones", StringType()),
                     StructField("no_unidades_en_circulacion", StringType()),

@@ -270,7 +270,7 @@ def bounded_collect(df):
 SPREAD_BYTES_PER_TASK = 16 * 1024
 
 
-def spread_for_cpu(df, by=None, bytes_per_task: int = SPREAD_BYTES_PER_TASK):
+def spread_for_cpu(df, by=None):
     """Repartition a CPU-dense narrow stage's input so per-row work
     (normalize/tokenize/hash chains) runs wide, with an EXPLICIT
     partition count AQE cannot coalesce away (guide §2.4: adaptive
@@ -280,7 +280,7 @@ def spread_for_cpu(df, by=None, bytes_per_task: int = SPREAD_BYTES_PER_TASK):
 
     Scale-adaptive, not local-tuned (r13, VERDICT r12 #5): the width
     is sized from the optimizer's size estimate —
-    ``clamp(ceil(bytes / bytes_per_task), 1, shuffle.partitions)`` —
+    ``clamp(ceil(bytes / SPREAD_BYTES_PER_TASK), 1, shuffle.partitions)`` —
     so a sub-MB stage no longer pays a full environment width of
     near-empty tasks, and on a petabyte table whose scan already
     splits wider than the target this is a NO-OP (no exchange). The
@@ -305,7 +305,7 @@ def spread_for_cpu(df, by=None, bytes_per_task: int = SPREAD_BYTES_PER_TASK):
     )
     if size >= target * max_split:
         return df
-    width = min(target, max(1, -(-size // max(1, int(bytes_per_task)))))
+    width = min(target, max(1, -(-size // SPREAD_BYTES_PER_TASK)))
     if width <= 1:
         return df
     return df.repartition(width, by) if by is not None else df.repartition(width)

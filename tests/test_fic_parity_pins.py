@@ -354,3 +354,40 @@ def test_url_pick_breaks_full_ties_by_url(spark):
         [("bbva", "fondo uno", "u/1"), ("bbva", "fondo uno", "u/2")],
     ):
         assert _urls(spark, cases, rows, with_path=False) == cases
+
+
+# descale_monetary at max_iters 4 (q20), 6 (the FIC transform) and 10
+# (the default), recorded from the Column-built CASE before it became SQL
+# text. Rows: (value, {max_iters: descaled}); the same value also goes in
+# as a numeric string, which must descale identically.
+_ULP_ABOVE_1E6 = 1000000.0000000001
+DESCALE_CASES = [
+    (1e6, {4: 1e6, 6: 1e6, 10: 1e6}),
+    (_ULP_ABOVE_1E6, {4: 1000.0, 6: 1000.0, 10: 1000.0}),
+    (1e9, {4: 1e6, 6: 1e6, 10: 1e6}),
+    (1e36, {4: 1e24, 6: 1e18, 10: 1e6}),
+    (-5e9, {4: -5e9, 6: -5e9, 10: -5e9}),
+    (-1.0, {4: -1.0, 6: -1.0, 10: -1.0}),
+    (None, {4: None, 6: None, 10: None}),
+    (123456789.125, {4: 123456.79, 6: 123456.79, 10: 123456.79}),
+    (999999.995, {4: 1e6, 6: 1e6, 10: 1e6}),
+    (1000000001.0, {4: 1000.0, 6: 1000.0, 10: 1000.0}),
+]
+
+
+def test_descale_monetary_pins(spark):
+    from owl_etl_spark.functions.numeric import descale_monetary
+
+    rows = [(i, v, None if v is None else repr(v)) for i, (v, _) in enumerate(DESCALE_CASES)]
+    rows.append((len(rows), None, "2500000000"))
+    df = spark.createDataFrame(rows, "i int, v double, s string")
+    for max_iters in (4, 6, 10):
+        got = df.select(
+            "i",
+            descale_monetary(F.col("v"), max_iters).alias("d"),
+            descale_monetary(F.col("s"), max_iters).alias("ds"),
+        ).orderBy("i").collect()
+        want = [exp[max_iters] for _, exp in DESCALE_CASES]
+        assert [r.d for r in got[:-1]] == want, max_iters
+        assert [r.ds for r in got[:-1]] == want, max_iters
+        assert (got[-1].d, got[-1].ds) == (None, 2500.0)

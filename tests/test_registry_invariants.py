@@ -5,9 +5,14 @@ string) before they cost a driver round."""
 
 from __future__ import annotations
 
+import ast
 import re
+from collections import defaultdict
+from pathlib import Path
 
 import __spark_entry__ as entrymod
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_names_are_well_formed_and_numbers_unique():
@@ -53,3 +58,67 @@ def test_rows_only_queries_are_none():
 def test_every_query_function_has_a_docstring():
     for name, fn in entrymod.queries().items():
         assert fn.__doc__ and len(fn.__doc__) >= 30, f"{name}: missing docstring"
+
+
+def _py_files(*parts: str) -> list[Path]:
+    out = []
+    for part in parts:
+        path = ROOT / part
+        out += [path] if path.suffix == ".py" else sorted(path.rglob("*.py"))
+    return out
+
+
+def test_every_defaulted_keyword_is_passed_somewhere():
+    """A defaulted parameter of a public top-level function in
+    ``operators/``, ``functions/``, ``plans/`` or ``session.py`` is an
+    option; one that no call in the repo passes is a knob nobody sets,
+    and its default belongs in the body.
+
+    A call passes a keyword if it names it or reaches it by position.
+    Calls are matched by callee name anywhere in ``owl_etl_spark/``,
+    ``__spark_entry__.py``, ``bench.py``, ``tools/``, ``perfbench/`` and
+    ``tests/``. Names defined more than once in scope are skipped, and
+    a call site that passes ``**kwargs`` (or ``*args``) counts as
+    passing every keyword (or position), since the scan cannot see
+    which. ``sources/`` and ``streaming/`` hold deployment settings and
+    are out of scope.
+    """
+    scope = _py_files(
+        "owl_etl_spark/operators", "owl_etl_spark/functions", "owl_etl_spark/plans",
+        "owl_etl_spark/session.py",
+    )
+    defs = defaultdict(list)
+    for path in scope:
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                defs[node.name].append((path, node))
+    names, positions = defaultdict(set), defaultdict(int)
+    callers = _py_files(
+        "owl_etl_spark", "__spark_entry__.py", "bench.py", "tools", "perfbench", "tests"
+    )
+    for path in callers:
+        for call in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name not in defs:
+                continue
+            if any(k.arg is None for k in call.keywords):
+                names[name].add("**")
+            names[name].update(k.arg for k in call.keywords)
+            starred = any(isinstance(a, ast.Starred) for a in call.args)
+            positions[name] = max(positions[name], 10**6 if starred else len(call.args))
+    unpassed = []
+    for name, found in defs.items():
+        if len(found) > 1 or "**" in names[name]:
+            continue
+        path, node = found[0]
+        a = node.args
+        pos = a.posonlyargs + a.args
+        defaulted = [(i, p.arg) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
+        defaulted += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        for i, arg in defaulted:
+            if arg not in names[name] and (i is None or i >= positions[name]):
+                unpassed.append(f"{path.relative_to(ROOT)}:{node.lineno} {name}({arg})")
+    assert unpassed == []

@@ -475,3 +475,32 @@ def test_min_label_cc_driver_path_matches_distributed(spark, monkeypatch):
     )
     assert fast == dist
     assert dict(fast)[99] == 99
+
+
+def test_zorder_key_pins_morton_grid(spark):
+    """``zorder_key`` on an 8x8 integer grid (y spread over [-5, 16]):
+    keys recorded before it was rebuilt on ``operators.zorder.zorder_expr``."""
+    from owl_etl_spark.functions.zorder import zorder_key
+
+    grid = spark.createDataFrame(
+        [(x, y * 3 - 5) for x in range(8) for y in range(8)], "x int, y int"
+    )
+    got = [r["__zkey"] for r in zorder_key(grid, "x", "y").orderBy("x", "y").collect()]
+    assert got == [
+        0, 68174084, 272696336, 340870420,
+        1090785344, 1158959428, 1363481680, 1431655765,
+        136348168, 204522252, 409044504, 477218588,
+        1227133512, 1295307596, 1499829848, 1568003933,
+        545392672, 613566756, 818089008, 886263092,
+        1636178016, 1704352100, 1908874352, 1977048437,
+        681740840, 749914924, 954437176, 1022611260,
+        1772526184, 1840700268, 2045222520, 2113396605,
+        2181570688, 2249744772, 2454267024, 2522441108,
+        3272356032, 3340530116, 3545052368, 3613226453,
+        2317918856, 2386092940, 2590615192, 2658789276,
+        3408704200, 3476878284, 3681400536, 3749574621,
+        2726963360, 2795137444, 2999659696, 3067833780,
+        3817748704, 3885922788, 4090445040, 4158619125,
+        2863311530, 2931485614, 3136007866, 3204181950,
+        3954096874, 4022270958, 4226793210, 4294967295,
+    ]

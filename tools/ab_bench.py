@@ -1,20 +1,28 @@
-"""Interleaved A/B headline bench (the r9-drift protocol, promoted from
-bench_evidence/r9_drift/ — VERDICT r9 Next-round #2): run the common
-headline queries of ONE repo tree once and print one JSON line. Drive
-it alternately against HEAD and a prior round's `git archive` tree
-(H,R,H,R,H,R) so host-noise windows hit both arms; judge regressions
-on the min-vs-min ratio, never on a single sample (ANALYSIS.md rule:
-<1.15x moves are noise unless reproduced in both recorded runs AND a
-paired A/B).
+"""Interleaved A/B headline bench (the r9-drift protocol, VERDICT r9
+Next-round #2): run the common headline queries of ONE repo tree once
+and print one JSON line. Drive it alternately against HEAD and a prior
+round's `git archive` tree (H,R,H,R,H,R) so host-noise windows hit both
+arms; judge regressions on the min-vs-min ratio, never on a single
+sample (ANALYSIS.md rule: <1.15x moves are noise unless reproduced in
+both recorded runs AND a paired A/B).
+
+The program comes from ``<tree>``; the session, warm-up and timing come
+from this checkout's ``tools/_harness.py``, so both arms are timed alike.
 
 Usage:
     python tools/ab_bench.py <tree> [> run.jsonl]
-    AB_SF_DIR=/root/testdata/sf0.1 python tools/ab_bench.py <tree>
+    SPARK_GRAFT_SF_DIR=.../sf0.01 python tools/ab_bench.py <tree>
 """
+import importlib.util
 import json
 import os
 import sys
-import time
+
+_spec = importlib.util.spec_from_file_location(
+    "_harness", os.path.join(os.path.dirname(os.path.abspath(__file__)), "_harness.py")
+)
+_harness = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(_harness)
 
 TREE = os.path.abspath(sys.argv[1])
 sys.path.insert(0, TREE)
@@ -30,50 +38,14 @@ COMMON = [
     "q219", "q230", "q254", "q267", "q255", "q276", "q253",
 ]
 
-from owl_etl_spark.session import get_spark  # noqa: E402
-
-sf_dir = os.environ.get("AB_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark(app_name="ab-bench")
-spark.sparkContext.setLogLevel("ERROR")
+sf_dir = _harness.sf_dir()
+spark = _harness.start_session("ab-bench")
 
 import __spark_entry__ as entrymod  # noqa: E402
 
-qs = entrymod.queries()
-by_prefix = {k.split("_")[0]: v for k, v in qs.items()}
+_harness.warm_up(spark, sf_dir)
+res = _harness.min_of_n(spark, sf_dir, _harness.lookup(entrymod.queries(), COMMON), 1)
+timings = {k.split("_")[0]: v["min_s"] for k, v in res.items()}
 
-# bench.py's exact warmup: JVM action, parquet footers, tiny-dim JIT
-# pass, analyzer pass over every measured plan
-spark.read.parquet(f"{sf_dir}/nation.parquet").count()
-for t in (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split():
-    spark.read.parquet(f"{sf_dir}/{t}.parquet").schema
-
-from pyspark.sql import Window  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-region = spark.read.parquet(f"{sf_dir}/region.parquet")
-(
-    nation.join(region, nation.n_regionkey == region.r_regionkey)
-    .groupBy("r_name")
-    .agg(F.count(F.lit(1)).alias("n"), F.sum("n_nationkey").alias("s"))
-    .withColumn("rk", F.row_number().over(Window.partitionBy("r_name").orderBy("n")))
-    .orderBy("r_name")
-    .count()
-)
-for name in COMMON:
-    by_prefix[name](spark, sf_dir).schema
-
-timings = {}
-total = 0.0
-for name in COMMON:
-    t0 = time.perf_counter()
-    by_prefix[name](spark, sf_dir).count()
-    dt = time.perf_counter() - t0
-    timings[name] = round(dt, 3)
-    total += dt
-
-print(json.dumps({"tree": TREE, "total": round(total, 2), "queries": timings}))
+print(json.dumps({"tree": TREE, "total": round(sum(timings.values()), 2), "queries": timings}))
 spark.stop()

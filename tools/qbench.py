@@ -1,100 +1,53 @@
-"""Per-query micro-bench for the optimization loop (round 12).
+"""Per-query micro-bench: bench.py's session, warm-up and min-of-N timing
+(``tools/_harness.py``) on any registered queries, so its numbers compare
+directly with the headline record.
 
-Times a subset of registered queries with bench.py's exact warmup and
-methodology (fresh-DataFrame .count() per pass, min over N passes), so
-numbers are directly comparable to the headline record. Optionally
-dumps .explain("formatted") per query.
+Prints one JSON line ``{qNNN: {"min_s", "rows", "jobs"}}``. ``jobs`` is the
+number of Spark jobs the fastest run issued, read from the status tracker
+under that run's job group. Optionally dumps ``.explain("formatted")`` per
+query.
 
 Usage:
     python tools/qbench.py q310 q183 q98            # 3 passes each
     QB_RUNS=5 python tools/qbench.py q310
     QB_PLAN_DIR=plans/r12 QB_PLAN_SUFFIX=_before python tools/qbench.py q310
-    QB_SF_DIR=/root/testdata/sf0.01 python tools/qbench.py q310
+    SPARK_GRAFT_SF_DIR=.../sf0.01 python tools/qbench.py q310
 """
 import io
 import json
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from owl_etl_spark.session import get_spark  # noqa: E402
+from tools import _harness  # noqa: E402
 
-sf_dir = os.environ.get("QB_SF_DIR", "/root/testdata/sf0.1")
-runs = int(os.environ.get("QB_RUNS", "3"))
-plan_dir = os.environ.get("QB_PLAN_DIR", "")
-plan_suffix = os.environ.get("QB_PLAN_SUFFIX", "")
-
-spark = get_spark(app_name="qbench")
-spark.sparkContext.setLogLevel("ERROR")
-
-import __spark_entry__ as entrymod  # noqa: E402
-
-qs = entrymod.queries()
-by_prefix = {k.split("_")[0]: (k, v) for k, v in qs.items()}
 names = sys.argv[1:]
 if not names:
     print("usage: qbench.py qNNN [qNNN...]", file=sys.stderr)
     sys.exit(2)
+runs = int(os.environ.get("QB_RUNS", "3"))
+plan_dir = os.environ.get("QB_PLAN_DIR", "")
+plan_suffix = os.environ.get("QB_PLAN_SUFFIX", "")
 
-# bench.py's exact warmup
-spark.read.parquet(f"{sf_dir}/nation.parquet").count()
-for t in (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split():
-    spark.read.parquet(f"{sf_dir}/{t}.parquet").schema
-from pyspark.sql import Window  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
+sf_dir = _harness.sf_dir()
+spark = _harness.start_session("qbench")
 
-nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-region = spark.read.parquet(f"{sf_dir}/region.parquet")
-(
-    nation.join(region, nation.n_regionkey == region.r_regionkey)
-    .groupBy("r_name")
-    .agg(F.count(F.lit(1)).alias("n"), F.sum("n_nationkey").alias("s"))
-    .withColumn("rk", F.row_number().over(Window.partitionBy("r_name").orderBy("n")))
-    .orderBy("r_name")
-    .count()
-)
-# Python worker pool warm (mirrors bench.py round-12 warmup)
-par = spark.sparkContext.defaultParallelism
-ident = lambda it: it  # noqa: E731
-(
-    spark.range(par * 8, numPartitions=par)
-    .mapInPandas(ident, schema="id bigint")
-    .mapInPandas(ident, schema="id bigint")
-    .count()
-)
+import __spark_entry__ as entrymod  # noqa: E402
 
-for p in names:
-    full, fn = by_prefix[p]
-    fn(spark, sf_dir).schema
-
-out = {}
-for pass_i in range(runs):
-    for p in names:
-        full, fn = by_prefix[p]
-        spark.sparkContext.setJobDescription(f"qbench:{full}")
-        t0 = time.perf_counter()
-        n = fn(spark, sf_dir).count()
-        dt = time.perf_counter() - t0
-        if p not in out or dt < out[p][0]:
-            out[p] = (dt, n)
-        print(f"# {full} pass {pass_i+1}/{runs}: {dt:.3f}s ({n} rows)", file=sys.stderr)
-        spark.sparkContext.setJobDescription(None)
+fns = _harness.lookup(entrymod.queries(), names)
+_harness.warm_up(spark, sf_dir)
+out = _harness.min_of_n(spark, sf_dir, fns, runs)
 
 if plan_dir:
     os.makedirs(plan_dir, exist_ok=True)
-    for p in names:
-        full, fn = by_prefix[p]
+    for full, fn in fns.items():
         buf = io.StringIO()
         with redirect_stdout(buf):
             fn(spark, sf_dir).explain("formatted")
-        with open(os.path.join(plan_dir, f"{p}{plan_suffix}.txt"), "w") as f:
+        with open(os.path.join(plan_dir, f"{full.split('_')[0]}{plan_suffix}.txt"), "w") as f:
             f.write(buf.getvalue())
 
-print(json.dumps({p: {"min_s": round(v[0], 3), "rows": v[1]} for p, v in out.items()}))
+print(json.dumps({k.split("_")[0]: v for k, v in out.items()}))
 spark.stop()

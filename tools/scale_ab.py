@@ -8,16 +8,26 @@ alternately against HEAD and a prior round's `git archive` tree
 (H,R,H,R,H,R), then judge on min-vs-min per query — same noise rule as
 the headline protocol (<1.15x is noise unless reproduced).
 
+The program comes from ``<tree>``; the session, warm-up and timing come
+from this checkout's ``tools/_harness.py``.
+
 Usage:
     python tools/scale_ab.py <tree> [>> runs.jsonl]
-    AB_SF_DIR=/root/testdata/sf0.1 python tools/scale_ab.py <tree>
+    SPARK_GRAFT_SF_DIR=.../sf0.01 python tools/scale_ab.py <tree>
 """
+import importlib.util
 import json
 import os
 import shutil
 import sys
 import tempfile
 import time
+
+_spec = importlib.util.spec_from_file_location(
+    "_harness", os.path.join(os.path.dirname(os.path.abspath(__file__)), "_harness.py")
+)
+_harness = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(_harness)
 
 TREE = os.path.abspath(sys.argv[1])
 sys.path.insert(0, TREE)
@@ -34,42 +44,28 @@ HEAVY = [
     "q358_store_catalog_endurance",
 ]
 
-from owl_etl_spark.session import get_spark  # noqa: E402
-
-sf_dir = os.environ.get("AB_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark(app_name="scale-ab")
-spark.sparkContext.setLogLevel("ERROR")
+sf_dir = _harness.sf_dir()
+spark = _harness.start_session("scale-ab")
 
 import bench as benchmod  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
 work = tempfile.mkdtemp(prefix="scale_ab_")
 try:
+    _harness.warm_up(spark, sf_dir)
     t0 = time.perf_counter()
     benchmod._build_scale_tier(spark, sf_dir, 10, work)
     gen_s = round(time.perf_counter() - t0, 3)
 
-    qs = entrymod.queries()
-    for name in HEAVY:  # analyzer warm, as the headline protocol does
-        qs[name](spark, work).schema
-
-    timings = {}
-    total = 0.0
-    for name in HEAVY:
-        t0 = time.perf_counter()
-        n = qs[name](spark, work).count()
-        dt = time.perf_counter() - t0
-        timings[name.split("_")[0]] = round(dt, 3)
-        total += dt
-        print(f"# {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
-
+    res = _harness.min_of_n(spark, work, _harness.lookup(entrymod.queries(), HEAVY), 1)
+    timings = {k.split("_")[0]: v["min_s"] for k, v in res.items()}
     print(
         json.dumps(
             {
                 "tree": TREE,
                 "tier": "10x",
                 "gen_s": gen_s,
-                "total": round(total, 2),
+                "total": round(sum(timings.values()), 2),
                 "queries": timings,
             }
         )
