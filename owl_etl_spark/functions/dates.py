@@ -44,6 +44,7 @@ SPANISH_MONTHS = {
 _SEPARATORS = r"[/\s]+"
 _MONTH_YY = r"^(\d{1,2})-(\d{2})$"
 _DAY_MONTH_YY = r"^(\d{1,2})-(\d{1,2})-(\d{2})$"
+_DIGIT_RUNS = r"^\d+(-\d+)*$"
 
 
 def _month_pattern(month: int) -> str:
@@ -72,7 +73,12 @@ def parse_fecha_normalizada_sql(norm_sql: str) -> str:
     """SQL text of the ``coalesce`` of ``try_to_date`` attempts over a
     string already normalized by :func:`fecha_normalizada_sql`, in the
     reference's precedence order; a year before 1990 rejects an attempt
-    (src/etl/transform.py:929)."""
+    (src/etl/transform.py:929).
+
+    Only runs of digits joined by single dashes reach ``try_to_date``:
+    Spark reads ``yyyy`` as a signed year and throws ``long overflow``
+    on one like ``1-1--300000`` instead of returning null.
+    """
     # 2-digit trailing year -> 20yy for the mm-yy / dd-mm-yy shapes.
     s2 = f"regexp_replace({norm_sql}, {sql_str(_MONTH_YY)}, '$1-20$2')"
     s3 = f"regexp_replace({norm_sql}, {sql_str(_DAY_MONTH_YY)}, '$1-$2-20$3')"
@@ -81,7 +87,7 @@ def parse_fecha_normalizada_sql(norm_sql: str) -> str:
         d = f"try_to_date({src}, '{fmt}')"
         return f"CASE WHEN year({d}) >= 1990 THEN {d} END"
 
-    return "coalesce(" + ", ".join([
+    return f"CASE WHEN {norm_sql} RLIKE {sql_str(_DIGIT_RUNS)} THEN coalesce(" + ", ".join([
         # month-year -> first of month (reference pattern 1/3)
         t(f"concat('01-', {s2})", "dd-M-yyyy"),
         # day-month-year (reference pattern 2/4, day-first before month-first)
@@ -91,7 +97,7 @@ def parse_fecha_normalizada_sql(norm_sql: str) -> str:
         t(norm_sql, "yyyy-M-d"),
         # year-month -> first of month
         t(f"concat({norm_sql}, '-01')", "yyyy-M-dd"),
-    ]) + ")"
+    ]) + ") END"
 
 
 def parse_fecha_robusta(col: Column) -> Column:
