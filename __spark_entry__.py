@@ -528,7 +528,7 @@ def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization via the library operator (lag + running
     sum over one shared shuffle)."""
     e = _t(spark, sf_dir, "events")
-    stats = session_stats(e, "user_id", "ts", 1800)
+    stats = session_stats(e)
     return stats.select(
         "user_id",
         F.col("session_id").cast("long").alias("session_id"),
@@ -1064,7 +1064,7 @@ def q28(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     base = d.select("doc_id", normalize_text(F.col("text")).alias("norm"))
-    return base.select("doc_id", simhash_sql("split(norm, ' ')", 16).alias("simhash"))
+    return base.select("doc_id", simhash_sql("split(norm, ' ')").alias("simhash"))
 
 
 @_register(
@@ -1110,7 +1110,7 @@ def q29(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ngram_jaccard_pairs_prefix`` or ``near_dup_dedup`` (LSH+verify)
     instead."""
     d = _t(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(d, "doc_id", "text", shingle_n=3, threshold=0.5)
+    return ngram_jaccard_pairs(d, threshold=0.5)
 
 
 # ---------------------------------------------------------------------------
@@ -1171,7 +1171,7 @@ def q30(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast query side, fixed-order double-precision fold for the dot
     product, rank on (rounded score, id)."""
     em = _t(spark, sf_dir, "embeddings")
-    return brute_force_knn(em.filter(F.col("vec_id") < 10), em, k=5)
+    return brute_force_knn(em.filter(F.col("vec_id") < 10), em)
 
 
 @_register(
@@ -1217,7 +1217,7 @@ def q32(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.dedup import embedding_near_dup_pairs
 
     em = _t(spark, sf_dir, "embeddings")
-    return embedding_near_dup_pairs(em, "vec_id", "embedding", block_col="label", threshold=0.5)
+    return embedding_near_dup_pairs(em, block_col="label", threshold=0.5)
 
 
 # no-oracle entries: approximate / non-SQL-expressible operators --------------
@@ -1267,7 +1267,7 @@ def q33(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-matches exactly; tests additionally assert recall vs the
     exact q30."""
     em = _t(spark, sf_dir, "embeddings")
-    return lsh_knn(em.filter(F.col("vec_id") < 10), em, k=5)
+    return lsh_knn(em.filter(F.col("vec_id") < 10), em)
 
 
 _Q34_MINS = ",\n             ".join(
@@ -2411,7 +2411,7 @@ def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.sessionize import sessionize
 
     e = _t(spark, sf_dir, "events")
-    s = sessionize(e, "user_id", "ts", 1800)
+    s = sessionize(e)
     per_session = s.groupBy("user_id", "session_id").agg(
         F.max(F.when(F.col("event_type") == "view", 1).otherwise(0)).alias("has_view"),
         F.max(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("has_click"),
@@ -2509,9 +2509,7 @@ def q62(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     em = _t(spark, sf_dir, "embeddings")
     bucketed = random_hyperplane_bucket(em, num_planes=4)
-    return embedding_near_dup_pairs(
-        bucketed, "vec_id", "embedding", block_col="lsh_bucket", threshold=0.2
-    )
+    return embedding_near_dup_pairs(bucketed, block_col="lsh_bucket", threshold=0.2)
 
 
 @_register(
@@ -2866,7 +2864,6 @@ def q72(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id"],
         "ts",
         {"n_1h": F.count(F.lit(1)), "cents_1h": F.sum(cents)},
-        window_seconds=3600,
     )
     return out.select(
         "event_id",
@@ -3012,7 +3009,7 @@ def q76(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.resample import gap_fill
 
     e = _t(spark, sf_dir, "events").filter(F.col("user_id") % 10 == 0)
-    out = gap_fill(e, ["user_id"], "ts", step="1 hour", trunc_unit="hour")
+    out = gap_fill(e, ["user_id"], "ts")
     return out.select(
         "user_id",
         F.date_format("bucket", "yyyy-MM-dd HH:00:00").alias("hour_bucket"),
@@ -3187,7 +3184,7 @@ def q82(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.functions.text import chunk_tokens, normalize_text, tokens
 
     d = _t(spark, sf_dir, "documents")
-    ch = chunk_tokens(tokens(normalize_text(F.col("text"))), size=50, overlap=10)
+    ch = chunk_tokens(tokens(normalize_text(F.col("text"))), size=50)
     return d.select(
         "doc_id", F.posexplode(ch).alias("chunk_idx", "chunk")
     ).select("doc_id", F.col("chunk_idx").cast("long").alias("chunk_idx"), "chunk")
@@ -3648,7 +3645,7 @@ def q90(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.ranking import bm25_topk
 
     d = _t(spark, sf_dir, "documents")
-    return bm25_topk(d, _BM25_TERMS, k=20, k1=1.2, b=0.75)
+    return bm25_topk(d, _BM25_TERMS, k=20)
 
 
 @_register(
@@ -3688,7 +3685,7 @@ def q91(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     em = _t(spark, sf_dir, "embeddings")
     centroids = centroids_from_ids(em, _Q49_CENTROID_IDS)
-    return semantic_dedup_pairs(em, centroids, threshold=0.3, round_digits=6).select(
+    return semantic_dedup_pairs(em, centroids, threshold=0.3).select(
         F.col("cluster_id").cast("long").alias("cluster_id"), "id_a", "id_b", "cosine"
     )
 
@@ -3769,7 +3766,7 @@ def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.dedup import containment_pairs
 
     d = _t(spark, sf_dir, "documents")
-    return containment_pairs(d, "doc_id", "text", threshold=0.8)
+    return containment_pairs(d)
 
 
 @_register(
@@ -4275,7 +4272,7 @@ def q102(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.dedup import dedup_segments
 
     d = _t(spark, sf_dir, "documents")
-    return dedup_segments(d, "doc_id", "text", seg_tokens=8, max_df=2)
+    return dedup_segments(d)
 
 
 @_register(
@@ -4324,7 +4321,7 @@ def q103(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.split import temperature_mixture
 
     d = _t(spark, sf_dir, "documents")
-    kept = temperature_mixture(d, "doc_id", "source", target_total=300, alpha=0.5)
+    kept = temperature_mixture(d, "doc_id", "source", target_total=300)
     kept_stats = kept.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_kept"),
         F.sum("doc_id").cast("long").alias("kept_id_sum"),
@@ -4392,7 +4389,7 @@ def q104(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.ranking import unigram_logprob_score
 
     d = _t(spark, sf_dir, "documents")
-    return unigram_logprob_score(d, "doc_id", "text")
+    return unigram_logprob_score(d)
 
 
 _Q105_CB_IDS = [10, 70, 130, 190, 250, 310, 370, 430]
@@ -4483,7 +4480,7 @@ def q105(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbs = pq_codebooks_from_ids(em, _Q105_CB_IDS, m=_Q105_M)
     encoded = pq_encode(em, cbs, round_digits=6)
     return pq_adc_topk(
-        em.filter(F.col("vec_id") < 5), encoded, cbs, k=5, round_digits=6
+        em.filter(F.col("vec_id") < 5), encoded, cbs, k=5
     ).select("query_id", "neighbor_id", "approx_dist", "rank")
 
 
@@ -5126,7 +5123,7 @@ def q113(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = words.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("n"))
     top = counts.orderBy(F.desc("n"), F.asc("word")).limit(20)
     sketch = cms_build(words, "word", depth=4, width=4096)
-    est = cms_estimate(sketch, top.select("word"), "word", depth=4, width=4096)
+    est = cms_estimate(sketch, top.select("word"), "word", width=4096)
     return top.join(est, "word").select(
         "word", "n", F.col("est").cast("long").alias("est")
     )
@@ -5223,7 +5220,7 @@ def q115(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.split import weighted_sample_aes
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return weighted_sample_aes(d, "doc_id", "n_chars", k=100, salt="aes").select(
+    return weighted_sample_aes(d, "doc_id", "n_chars", k=100).select(
         "doc_id", "n_chars", "score_nano"
     )
 
@@ -5336,8 +5333,6 @@ def q117(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.withColumn("__cents", cents),
         ["event_type"],
         "ts",
-        step="1 hour",
-        trunc_unit="hour",
         aggs={"cents": F.sum("__cents").cast("long")},
     )
     interp = interpolate_linear(
@@ -5497,7 +5492,6 @@ def q118(spark: SparkSession, sf_dir: str) -> DataFrame:
         cbs,
         k=5,
         n_probes=2,
-        round_digits=6,
     ).select("query_id", "neighbor_id", "approx_dist", "rank")
 
 
@@ -5812,7 +5806,7 @@ def q123(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.linkage import resolve_entities
 
     p = _t(spark, sf_dir, "part")
-    return resolve_entities(p, "p_partkey", "p_name", threshold=0.6)
+    return resolve_entities(p, "p_partkey", "p_name")
 
 
 @_register(
@@ -5893,7 +5887,7 @@ def q124(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ref = v.filter(F.col("event_id") % 2 == 0)
     cur = v.filter(F.col("event_id") % 2 == 1)
-    return psi_report(ref, cur, ["event_type"], "cents", n_bins=10)
+    return psi_report(ref, cur, ["event_type"], "cents")
 
 
 def _q125_iter_sql(prev: str, cur: str) -> str:
@@ -6347,7 +6341,7 @@ def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     sa = cms_build(o.select("o_custkey"), "o_custkey", depth=4, width=4096)
     sb = cms_build(c.select("c_custkey"), "c_custkey", depth=4, width=4096)
-    est = cms_inner_product(sa, sb, depth=4)
+    est = cms_inner_product(sa, sb)
     exact = o.join(c, o["o_custkey"] == c["c_custkey"]).agg(
         F.count(F.lit(1)).cast("long").alias("exact_join_size")
     )
@@ -6474,7 +6468,7 @@ def q132(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("o_orderkey") % 21 - 10) / F.lit(100.0)).alias("ret"),
     )
     out = cumulative_compound(
-        r, ["o_custkey"], "us", "ret", out_col="compounded", tiebreak_col="o_orderkey"
+        r, ["o_custkey"], "us", "ret", tiebreak_col="o_orderkey"
     )
     return out.select(
         "o_orderkey",
@@ -6558,7 +6552,6 @@ def q133(spark: SparkSession, sf_dir: str) -> DataFrame:
         p,
         "p_partkey",
         "p_name",
-        threshold=0.6,
         passes=("last_token", "first_token", "squashed_prefix"),
     )
 
@@ -6809,7 +6802,6 @@ def q137(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.withColumn("drop", F.col("event_id") % 2),
         ["event_type", "drop"],
         "user_id",
-        lg_k=12,
     )
     merged = merge_sketches(per_drop, ["event_type"])
     est = merged.select("event_type", F.hll_sketch_estimate("sketch").alias("__est"))
@@ -6881,8 +6873,7 @@ def q138(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     out = ewma(
-        v, ["event_type"], "us", "cents", alpha=0.25, lags=16,
-        out_col="ewma", tiebreak_col="event_id",
+        v, ["event_type"], "us", "cents", alpha=0.25, lags=16, tiebreak_col="event_id",
     )
     return out.select("event_id", "event_type", "cents", "ewma")
 
@@ -6983,7 +6974,7 @@ def q140(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hour("ts").cast("long").alias("hr"),
         F.round(F.col("value") * 100).cast("long").alias("c"),
     )
-    out = seasonal_zscore(v, ["event_type"], "hr", "c", z_threshold=3.0)
+    out = seasonal_zscore(v, ["event_type"], "hr", "c")
     return out.select(
         "event_id", "event_type", "hr", F.col("c").alias("cents"), "z", "is_anomaly"
     )
@@ -7046,7 +7037,7 @@ def q141(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
     )
-    out = benford_screen(v, ["o_orderpriority"], "c", min_n=100)
+    out = benford_screen(v, ["o_orderpriority"], "c")
     return out.select("o_orderpriority", "n", "mad_micro", "flag")
 
 
@@ -7179,7 +7170,7 @@ def q143(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
     )
     nodes = _t(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
-    return triangle_count(edges, nodes, "node", "src", "dst").select(
+    return triangle_count(edges, nodes).select(
         F.col("node").alias("nationkey"), "n_triangles"
     )
 
@@ -7257,7 +7248,7 @@ def q144(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("grp"),
         F.round(F.col("value") * 100).cast("long").alias("c"),
     )
-    return ab_test_report(v, ["event_type"], "grp", "c", z_crit=1.96)
+    return ab_test_report(v, ["event_type"], "grp", "c")
 
 
 @_register(
@@ -7753,7 +7744,7 @@ def q153(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
     ska = kmv_sketch(e.filter(F.col("event_type") == "click"), "user_id", k=256)
     skb = kmv_sketch(e.filter(F.col("event_type") == "purchase"), "user_id", k=256)
-    est = kmv_jaccard_estimate(ska, skb, k=256)
+    est = kmv_jaccard_estimate(ska, skb)
     au = e.filter(F.col("event_type") == "click").select("user_id").distinct()
     bu = e.filter(F.col("event_type") == "purchase").select("user_id").distinct()
     ex = (
@@ -7907,7 +7898,7 @@ def q156(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("c"),
     )
     out = rolling_band_flags(
-        v, ["event_type"], "us", "c", window_rows=24, k_sigma=2.0,
+        v, ["event_type"], "us", "c", window_rows=24,
         tiebreak_col="event_id",
     )
     return out.select(
@@ -8118,7 +8109,7 @@ def q159(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     ]
     out = k_anonymity_generalize(
-        c, ladders, k=5, max_suppressed_rows=50, keep_cols=["c_custkey"]
+        c, ladders, max_suppressed_rows=50, keep_cols=["c_custkey"]
     )
     return out.select("c_custkey", "bal_b", "n_key", "seg", "gen_level")
 
@@ -8462,7 +8453,7 @@ def q165(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("d"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
     )
-    return rfm_scores(o, "o_custkey", "d", "c", k=5)
+    return rfm_scores(o, "o_custkey", "d", "c")
 
 
 @_register(
@@ -9423,7 +9414,7 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_suppkey").cast("long") * 2).alias("src"),
         (F.col("l_partkey").cast("long") * 2 + 1).alias("dst"),
     )
-    out = hits_scores(edges, "src", "dst", n_iters=3)
+    out = hits_scores(edges, n_iters=3)
     return out.select(
         F.when(
             F.col("node") % 2 == 0,
@@ -10606,7 +10597,7 @@ def q203(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.embdrift import similarity_histogram
 
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity_histogram(emb, "vec_id", "embedding", sample_mod=5, n_bins=40)
+    return similarity_histogram(emb, "vec_id", "embedding", sample_mod=5)
 
 
 # ---------------------------------------------------------------------------
@@ -10919,7 +10910,7 @@ def q207(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select(F.col("o_custkey").alias("e"), F.col("p_brand").alias("i"))
     )
-    return cooccurrence_similarity_topk(inc, "e", "i", k=5, max_basket=200)
+    return cooccurrence_similarity_topk(inc, "e", "i", max_basket=200)
 
 
 @_register(
@@ -10945,7 +10936,7 @@ def q208(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.editsim import edit_distance_pairs
 
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
-    return edit_distance_pairs(p, "p_partkey", "p_name", max_dist=2).select(
+    return edit_distance_pairs(p, "p_partkey", "p_name").select(
         "id_a", "id_b", "dist"
     )
 
@@ -11205,7 +11196,7 @@ def q212(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("item"),
         F.row_number().over(w2).cast("long").alias("rnk"),
     ).filter(F.col("rnk") <= 100)
-    return rrf_fuse(r1.unionByName(r2), "list_id", "item", "rnk", k=60, top_n=50)
+    return rrf_fuse(r1.unionByName(r2), "list_id", "item", "rnk", top_n=50)
 
 
 @_register(
@@ -11708,7 +11699,7 @@ def q220(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ym"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    return loo_target_encode(o, ["priority", "ym"], "cents", "loo_mean")
+    return loo_target_encode(o, ["priority", "ym"], "cents")
 
 
 @_register(
@@ -12056,7 +12047,7 @@ def q226(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.ranking import bigram_logprob_score
 
     d = _t(spark, sf_dir, "documents")
-    return bigram_logprob_score(d, "doc_id", "text")
+    return bigram_logprob_score(d)
 
 
 @_register(
@@ -13881,7 +13872,7 @@ def q251(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = li.select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents")
     )
-    return kll_quantile_report(cents, "cents", k=400)
+    return kll_quantile_report(cents, "cents")
 
 
 # ---------------------------------------------------------------------------
@@ -14231,7 +14222,7 @@ def q255(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("__g.winner").alias("winner"), F.col("__g.loser").alias("loser"))
     )
-    return bradley_terry_strengths(games, "winner", "loser", n_iters=5)
+    return bradley_terry_strengths(games, n_iters=5)
 
 
 def _q256_oracle() -> str:
@@ -14829,7 +14820,7 @@ def q265(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
     )
     nodes = _t(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
-    return harmonic_centrality(edges, nodes, "node", "src", "dst", max_hops=6).select(
+    return harmonic_centrality(edges, nodes, max_hops=6).select(
         F.col("node").alias("nationkey"), "n_reached", "harmonic_micro"
     )
 
@@ -15263,7 +15254,7 @@ def q271(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
     )
     nodes = _t(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
-    return simrank(edges, nodes, "node", "src", "dst", n_iters=3)
+    return simrank(edges, nodes, n_iters=3)
 
 
 def _q272_iter_sql(k: int) -> str:
@@ -16070,7 +16061,7 @@ def q282(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy("event_type", day.alias("day")).agg(
         F.sum(F.round(F.col("value") * 100).cast("long")).cast("long").alias("cents")
     )
-    return seasonal_strength_report(daily, "event_type", "day", "cents", period=7)
+    return seasonal_strength_report(daily, "event_type", "day", "cents")
 
 
 @_register(
@@ -16578,7 +16569,7 @@ def q290(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("c_acctbal") * 100).cast("long").alias("bal"),
         F.col("uk").isNotNull().cast("long").alias("is_urgent"),
     )
-    return entropy_binning(d, "bal", "is_urgent", depth=2, candidates=20, min_size=25)
+    return entropy_binning(d, "bal", "is_urgent", depth=2, min_size=25)
 
 
 # ---------------------------------------------------------------------------
@@ -17775,7 +17766,7 @@ def q306(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = kmv_sketch(
         o.filter(F.year("o_orderdate") == 1998).select("o_custkey"), "o_custkey"
     ).select("h")
-    return kmv_difference_estimate(a, b, k=256)
+    return kmv_difference_estimate(a, b)
 
 
 _Q307_K, _Q307_ITERS = 1000, 4
@@ -18335,7 +18326,7 @@ def q312(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.knn import sq8_topk
 
     em = _t(spark, sf_dir, "embeddings")
-    return sq8_topk(em.filter(F.col("vec_id") < 10), em, k=5)
+    return sq8_topk(em.filter(F.col("vec_id") < 10), em)
 
 
 # ---------------------------------------------------------------------------
@@ -19743,7 +19734,7 @@ def q327(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ref = v.filter(F.col("doc_id") % 3 != 0)
     cur = v.filter(F.col("doc_id") % 3 == 0)
-    return psi_report(ref, cur, ["source"], "nt", n_bins=10)
+    return psi_report(ref, cur, ["source"], "nt")
 
 
 # ---------------------------------------------------------------------------
@@ -19907,7 +19898,7 @@ def q330(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize once so the Python decode boundary runs one pass
     # (the q325 signatures lesson)
     fps = seal(perceptual_fingerprint(to_binary_payload(d)))
-    return phash_near_dup_pairs(fps, max_hamming=3, bands=4)
+    return phash_near_dup_pairs(fps, max_hamming=3)
 
 
 # ---------------------------------------------------------------------------
@@ -19972,7 +19963,7 @@ def q331(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(tokens(normalize_text(F.col("text")))).cast("long").alias("n_tokens"),
     )
-    return greedy_pack(lens, "doc_id", "n_tokens", capacity=2048, shards=16)
+    return greedy_pack(lens, capacity=2048, shards=16)
 
 
 @_register(
@@ -20015,8 +20006,8 @@ def q332(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(tokens(normalize_text(F.col("text")))).cast("long").alias("n_tokens"),
     )
-    assign = greedy_pack(lens, "doc_id", "n_tokens", capacity=2048, shards=16)
-    return packing_efficiency(assign, "n_tokens", capacity=2048)
+    assign = greedy_pack(lens, capacity=2048, shards=16)
+    return packing_efficiency(assign, capacity=2048)
 
 
 @_register("q333_incremental_phash_dedup", None)  # oracle = q330's (below)
@@ -20365,7 +20356,7 @@ def q337(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("v"),
         F.col("event_id").cast("string").alias("k"),
     )
-    return fdr_bh_screen(e, "g", "side", "v", "k", n_perms=64, alpha_num=1, alpha_den=10)
+    return fdr_bh_screen(e, "g", "side", "v", "k")
 
 
 @_register(
@@ -20625,7 +20616,7 @@ def q340(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("uk").isNotNull().cast("long").alias("y"),
         F.col("c_custkey").alias("id"),
     )
-    return decile_lift(d, "s", "y", "id", n_buckets=10)
+    return decile_lift(d, "s", "y", "id")
 
 
 # ---------------------------------------------------------------------------
@@ -20887,7 +20878,7 @@ def q344(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.raking import ipf_rake
 
     d = _t(spark, sf_dir, "documents")
-    return ipf_rake(d, "source", "lang", rounds=8)
+    return ipf_rake(d, "source", "lang")
 
 
 # ---------------------------------------------------------------------------
@@ -21269,7 +21260,7 @@ def q349(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy(day.alias("t")).agg(
         F.sum(F.round(F.col("value") * 100).cast("long")).cast("long").alias("x")
     )
-    return page_hinkley(daily, "t", "x", delta_micro=0, lambda_micro=5_000_000_000_000)
+    return page_hinkley(daily, "t", "x", lambda_micro=5_000_000_000_000)
 
 
 @_register(
@@ -22314,7 +22305,7 @@ def q361(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (_t(spark, sf_dir, "documents").select("doc_id")
          .repartition(spark.sparkContext.defaultParallelism))
     gifs = d.mapInPandas(synth, schema="doc_id bigint, payload binary")
-    return gif_frame_sample_stats(gifs, every=2)
+    return gif_frame_sample_stats(gifs)
 
 
 @_register(

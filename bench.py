@@ -530,7 +530,7 @@ def _ann_scenario(sparksession, sf_dir: str) -> dict[str, float]:
 
     for label, fn in (
         ("pq_adc", lambda: pq_adc_topk(qs, encoded_pq, cbs, k=5)),
-        ("pq_rerank", lambda: pq_rerank_topk(qs, em, encoded_pq, cbs, k=5, shortlist=100)),
+        ("pq_rerank", lambda: pq_rerank_topk(qs, em, encoded_pq, cbs, shortlist=100)),
         ("ivfpq", lambda: ivfpq_topk(qs, encoded_ivfpq, cents, cbs, k=5, n_probes=2)),
     ):
         t0 = _time.perf_counter()
@@ -627,7 +627,7 @@ def _ann_clustered_scenario(sparksession) -> dict[str, float]:
     cents = kmeans_fit(em, k=8, dim=dim)
     out["kmeans_fit_s"] = round(time.perf_counter() - t0, 3)
     t0 = time.perf_counter()
-    cbs = pq_codebooks_fit(em, m=4, ks=16, dim=dim)
+    cbs = pq_codebooks_fit(em, ks=16, dim=dim)
     out["pq_fit_s"] = round(time.perf_counter() - t0, 3)
     print(
         f"# ann_clustered fits: kmeans {out['kmeans_fit_s']}s, pq {out['pq_fit_s']}s",
@@ -639,7 +639,7 @@ def _ann_clustered_scenario(sparksession) -> dict[str, float]:
 
     for label, fn in (
         ("pq_adc", lambda: pq_adc_topk(qs, encoded_pq, cbs, k=5)),
-        ("pq_rerank", lambda: pq_rerank_topk(qs, em, encoded_pq, cbs, k=5, shortlist=100)),
+        ("pq_rerank", lambda: pq_rerank_topk(qs, em, encoded_pq, cbs, shortlist=100)),
         ("ivfpq", lambda: ivfpq_topk(qs, encoded_ivfpq, cents, cbs, k=5, n_probes=2)),
     ):
         t0 = time.perf_counter()
@@ -733,11 +733,11 @@ def _ann_planted_scenario(sparksession) -> dict[str, float]:
     truth = {(r.query_id, r.neighbor_id) for r in truth_df.collect()}
     out["brute_s"] = round(time.perf_counter() - t0, 3)
 
-    cbs = pq_codebooks_fit(em, m=4, ks=16, dim=dim)
+    cbs = pq_codebooks_fit(em, ks=16, dim=dim)
     encoded_pq = pq_encode(em, cbs, round_digits=6).localCheckpoint()
     for label, fn in (
         ("pq_adc", lambda: pq_adc_topk(qs, encoded_pq, cbs, k=5)),
-        ("pq_rerank", lambda: pq_rerank_topk(qs, em, encoded_pq, cbs, k=5, shortlist=100)),
+        ("pq_rerank", lambda: pq_rerank_topk(qs, em, encoded_pq, cbs, shortlist=100)),
     ):
         t0 = time.perf_counter()
         got = {(r.query_id, r.neighbor_id) for r in fn().collect()}

@@ -78,12 +78,12 @@ def minhash_signature_sql(shingles_sql: str, num_hashes: int = 16) -> Column:
     return F.expr(f"element_at(transform(array({base}), __h -> array({sigs})), 1)")
 
 
-def simhash_sql(tokens_sql: str, bits: int = 16) -> Column:
+def simhash_sql(tokens_sql: str) -> Column:
     """SimHash fingerprint (bigint) over a token array.
 
     Per bit position b: sign of Σ_tokens (bit b of md5_long(token) ? +1 : -1);
-    fingerprint = Σ_b sign_b · 2^b. Intra-row, shuffle-free.
-    ``bits`` ≤ 60 (md5_long width). 16 bits is enough for
+    fingerprint = Σ_b sign_b · 2^b over 16 bits. Intra-row,
+    shuffle-free. 16 bits (≤ 60, the md5_long width) is enough for
     bucketing-style near-dup candidate generation; use 64-bit xxhash
     variants when oracle portability is not needed.
     """
@@ -92,9 +92,9 @@ def simhash_sql(tokens_sql: str, bits: int = 16) -> Column:
         f"CAST(conv(substring(md5(t), 1, {_HEX_CHARS}), 16, 10) AS BIGINT))"
     )
     terms = []
-    for b in range(bits):
+    for b in range(16):
         # one md5 pass total (bound as __h below), then per-bit votes
-        # over the integer array — md5-inside-every-vote costs bits×
+        # over the integer array — md5-inside-every-vote costs 16×
         # the crypto plus interpreter dispatch on each element
         # shiftright(), not the ">>" operator: the SQL parser rejects
         # ">>" when its left operand is a bare lambda variable

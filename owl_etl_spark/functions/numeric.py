@@ -67,7 +67,7 @@ def descale_monetary_sql(text_sql: str, max_iters: int) -> str:
     return f"round(CASE {whens} ELSE {candidates[max_iters]} END, 2)"
 
 
-def descale_monetary(col: Column, max_iters: int = 10) -> Column:
+def descale_monetary(col: Column, max_iters: int) -> Column:
     """:func:`descale_monetary_sql` over ``col``, spliced as SQL text
     (see ``functions.text._sql``)."""
     return F.expr(descale_monetary_sql(_sql(col), max_iters))

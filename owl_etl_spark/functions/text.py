@@ -263,18 +263,18 @@ def clean_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
-def chunk_tokens(tokens_col: Column, size: int = 50, overlap: int = 10) -> Column:
+def chunk_tokens(tokens_col: Column, size: int = 50) -> Column:
     """Split a token array into overlapping fixed-size windows
     (``array<string>`` of space-joined chunks) — the standard
     pre-tokenization pass that turns long documents into training-
-    window-sized pieces. Stride = ``size - overlap``; the last chunk
+    window-sized pieces. Stride = ``size - 10`` (a 10-token overlap); the last chunk
     may be short; a doc shorter than ``size`` yields one chunk.
     Intra-row higher-order functions — zero shuffle at any corpus
     size; pair with ``posexplode`` for (doc, chunk_idx, chunk) rows.
     """
-    if overlap >= size:
-        raise ValueError("overlap must be < size")
-    stride = size - overlap
+    if size <= 10:
+        raise ValueError("size must exceed the 10-token overlap")
+    stride = size - 10
     n = F.size(tokens_col)
     nchunks = F.when(n <= size, F.lit(1)).otherwise(
         F.lit(1) + F.ceil((n - F.lit(size)).cast("double") / stride).cast("int")

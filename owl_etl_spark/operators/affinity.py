@@ -47,19 +47,16 @@ def cooccurrence_similarity_topk(
     df: DataFrame,
     entity_col: str,
     item_col: str,
-    k: int = 5,
     max_basket: int = 200,
 ) -> DataFrame:
-    """Top-``k`` most-similar items per item by binary cosine over
+    """Top-5 most-similar items per item by binary cosine over
     ``entity_col`` incidence. Returns
     ``(item, neighbor, c_item, c_nbr, c_both, cosine2_micro, rk)``
-    with rk = 1..k ordered by (cosine2_micro desc, neighbor asc) — a
+    with rk = 1..5 ordered by (cosine2_micro desc, neighbor asc) — a
     total order, so results are deterministic. Null entities/items
     are dropped; entities with more than ``max_basket`` distinct
     items are excluded (see module docstring).
     """
-    if k < 1:
-        raise ValueError(f"cooccurrence_similarity_topk: k must be >= 1, got {k}")
     baskets = (
         df.select(F.col(entity_col).alias("__e"), F.col(item_col).alias("__i"))
         .filter(F.col("__e").isNotNull() & F.col("__i").isNotNull())
@@ -118,7 +115,7 @@ def cooccurrence_similarity_topk(
     )
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= int(k))
+        .filter(F.col("rk") <= 5)
         .select("item", "neighbor", "c_item", "c_nbr", "c_both", "cosine2_micro", "rk")
     )
 

@@ -59,7 +59,6 @@ def seasonal_zscore(
     keys: list[str],
     season_col: str,
     value_col: str,
-    z_threshold: float = 3.0,
     profile: DataFrame | None = None,
 ) -> DataFrame:
     """Every input row annotated with ``z`` (residual z-score against
@@ -87,7 +86,7 @@ def seasonal_zscore(
         .withColumn("z", z)
         .withColumn(
             "is_anomaly",
-            F.coalesce(F.abs(F.col("z")) >= F.lit(float(z_threshold)), F.lit(False)),
+            F.coalesce(F.abs(F.col("z")) >= F.lit(3.0), F.lit(False)),
         )
         .drop("n", "s1", "s2")
     )
@@ -97,7 +96,6 @@ def benford_screen(
     df: DataFrame,
     keys: list[str],
     value_col: str,
-    min_n: int = 100,
 ) -> DataFrame:
     """Benford's-law first-digit screen per key group — the classic
     financial-forensics test (fabricated or systematically rounded
@@ -112,7 +110,7 @@ def benford_screen(
     Counts are exact BIGINTs; expected shares are 9 shared literals;
     the only doubles are the division per digit and the final MAD —
     identical arithmetic on any engine. ``flag`` marks groups over the
-    Nigrini "nonconformity" line (MAD > 0.015) with at least ``min_n``
+    Nigrini "nonconformity" line (MAD > 0.015) with at least 100
     values (below that the statistic is noise, flag stays false).
 
     Feed INTEGER units (cents): the leading digit comes from the
@@ -158,7 +156,7 @@ def benford_screen(
             ),
         ).alias("digit_counts"),
         mad.alias("mad_micro"),
-        ((mad > 15_000) & (F.sum("c") >= min_n)).alias("flag"),
+        ((mad > 15_000) & (F.sum("c") >= 100)).alias("flag"),
     )
 
 

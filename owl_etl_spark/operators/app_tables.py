@@ -27,14 +27,14 @@ def seed_users(spark: SparkSession, n: int = 5) -> DataFrame:
     )
 
 
-def seed_recommendations(users: DataFrame, fic: DataFrame, per_user: int = 2) -> DataFrame:
+def seed_recommendations(users: DataFrame, fic: DataFrame) -> DataFrame:
     """fic_recomendado (unique (usuario_id, fic_id), src/config/db.py:76-89):
     first N fics per user by fic_id — the reference's LIMIT-then-slice
     seeding (usuarios_prueba.py:82-131) as a deterministic rank filter."""
     ranked = fic.select("fic_id").withColumn(
         "rk", F.row_number().over(Window.orderBy("fic_id"))
     )
-    picks = ranked.filter(F.col("rk") <= per_user)
+    picks = ranked.filter(F.col("rk") <= 2)
     return (
         users.select("usuario_id")
         .crossJoin(F.broadcast(picks.select("fic_id")))

@@ -12,7 +12,7 @@ split:
 
 - one corpus pass: lowercase, whitespace-split, word→freq aggregate
   (the only corpus-sized shuffle), words length-capped by
-  ``max_word_len`` (a pathological unbroken-byte "word" would make
+  ``MAX_WORD_LEN`` (a pathological unbroken-byte "word" would make
   the per-row fold quadratic — refuse loudly, pre-split upstream);
 - per round: adjacent-pair explode over the VOCAB (weighted by word
   freq, exact BIGINT sums), winner = max count with lexicographic
@@ -42,6 +42,8 @@ from owl_etl_spark.session import seal
 #: fold-state sentinel: symbols are never empty strings, so '' marks
 #: "no pending symbol" without a tag column
 _EMPTY = "''"
+#: Longest word (in characters) the per-row merge fold accepts.
+MAX_WORD_LEN = 32
 
 
 def _merge_fold_expr(syms_col: str, l_col: str, r_col: str) -> str:
@@ -63,13 +65,11 @@ def _merge_fold_expr(syms_col: str, l_col: str, r_col: str) -> str:
     )
 
 
-def word_freq_symbols(
-    docs: DataFrame, text_col: str, max_word_len: int = 32
-) -> DataFrame:
+def word_freq_symbols(docs: DataFrame, text_col: str) -> DataFrame:
     """The one corpus pass: ``(word, freq, syms)`` — distinct
     lowercase whitespace tokens with corpus frequency and their
     initial single-character symbol arrays. Words longer than
-    ``max_word_len`` raise (see module docstring)."""
+    ``MAX_WORD_LEN`` raise (see module docstring)."""
     words = (
         docs.select(
             F.explode(
@@ -83,10 +83,10 @@ def word_freq_symbols(
     checked = words.withColumn(
         "word",
         F.when(
-            F.length("word") > int(max_word_len),
+            F.length("word") > MAX_WORD_LEN,
             F.raise_error(
                 F.lit(
-                    f"bpe: word longer than max_word_len={int(max_word_len)} — "
+                    f"bpe: word longer than max_word_len={MAX_WORD_LEN} — "
                     "pre-split pathological tokens upstream"
                 )
             ).cast("string"),
@@ -102,7 +102,6 @@ def bpe_pair_merges(
     docs: DataFrame,
     text_col: str,
     n_merges: int = 3,
-    max_word_len: int = 32,
 ) -> DataFrame:
     """First ``n_merges`` BPE merge rules learned from the corpus:
     one row per round — ``(merge_round, left, right, pair_count)``,
@@ -111,7 +110,7 @@ def bpe_pair_merges(
     and determinism contract."""
     if n_merges < 1:
         raise ValueError(f"bpe_pair_merges: n_merges must be >= 1, got {n_merges}")
-    vocab = seal(word_freq_symbols(docs, text_col, max_word_len), eager=False)
+    vocab = seal(word_freq_symbols(docs, text_col), eager=False)
     winners = []
     for t in range(1, int(n_merges) + 1):
         pairs = (

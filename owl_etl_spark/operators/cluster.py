@@ -137,10 +137,10 @@ def kmeans_fit(
 def assign_clusters(
     df: DataFrame,
     centroids: np.ndarray,
-    vec_col: str = "embedding",
     round_digits: int | None = None,
 ) -> DataFrame:
-    """Attach ``cluster_id`` — map-only, broadcast-by-literal.
+    """Attach ``cluster_id`` of the ``embedding`` column — map-only,
+    broadcast-by-literal.
 
     Staged-column form (r12, guide §4.1): the cast vector and the
     k-distance array are materialized as intermediate Project columns
@@ -154,7 +154,7 @@ def assign_clusters(
     ) + ")"
     return (
         df.withColumn(
-            "__ac_vd", F.expr(f"transform({vec_col}, v -> CAST(v AS DOUBLE))")
+            "__ac_vd", F.expr("transform(embedding, v -> CAST(v AS DOUBLE))")
         )
         .withColumn("__ac_d", F.expr(darr))
         .withColumn("cluster_id", F.expr(_argmin_sql("__ac_d")))
@@ -178,10 +178,8 @@ def ivf_knn(
     n_probes (== brute force at n_probes=k_clusters). ``round_digits``
     rounds centroid distances before argmin/probe ranking (ties →
     lowest cluster_id) so the candidate set is engine-portable."""
-    index = assign_clusters(corpus, centroids, "embedding", round_digits)
-    return ivf_knn_preassigned(
-        queries, index, centroids, k, n_probes, "vec_id", "embedding", round_digits
-    )
+    index = assign_clusters(corpus, centroids, round_digits=round_digits)
+    return ivf_knn_preassigned(queries, index, centroids, k, n_probes, round_digits=round_digits)
 
 
 def ivf_knn_preassigned(
@@ -190,12 +188,10 @@ def ivf_knn_preassigned(
     centroids: np.ndarray,
     k: int = 5,
     n_probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_digits: int | None = None,
 ) -> DataFrame:
     """:func:`ivf_knn` over an ALREADY-ASSIGNED index frame
-    (``id_col``, ``vec_col``, ``cluster_id``) — the search half of the
+    (``vec_id``, ``embedding``, ``cluster_id``) — the search half of the
     incremental-index pipeline: because assignment is a pure function
     of (vector, pinned centroids), a corpus that arrives in drops can
     be assigned drop-by-drop, each drop's rows appended to a persisted
@@ -209,14 +205,14 @@ def ivf_knn_preassigned(
     """
     kc = centroids.shape[0]
     c = index.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "cluster_id"
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"), "cluster_id"
     )
     # per-query distances to each centroid → explode top n_probes
     dist_structs = []
     for ci in range(kc):
         arr = ", ".join(f"{float(v)!r}D" for v in centroids[ci])
         d = (
-            f"aggregate(zip_with(transform({vec_col}, v -> CAST(v AS DOUBLE)), array({arr}), "
+            f"aggregate(zip_with(transform(embedding, v -> CAST(v AS DOUBLE)), array({arr}), "
             f"(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
         )
         if round_digits is not None:
@@ -228,8 +224,8 @@ def ivf_knn_preassigned(
         f"p -> p.cluster_id)"
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
         F.explode(F.expr(probes)).alias("cluster_id"),
     )
     scored = (
@@ -266,7 +262,6 @@ def pq_codebooks_from_ids(
 
 def pq_codebooks_fit(
     df: DataFrame,
-    m: int = 4,
     ks: int = 16,
     dim: int = 64,
     max_iters: int = 5,
@@ -274,7 +269,7 @@ def pq_codebooks_fit(
 ) -> np.ndarray:
     """Product-quantization codebooks FITTED per block — the
     production path (pinned ``pq_codebooks_from_ids`` exists only for
-    oracle portability). Returns (m, ks, dim/m).
+    oracle portability). Returns (m, ks, dim/m) for m = 4 blocks.
 
     Fitting runs per-block Lloyd's over a HASH-DETERMINISTIC SAMPLE of
     ``sample_rows`` vectors collected to the driver (one
@@ -287,6 +282,7 @@ def pq_codebooks_fit(
     partition-order-independent), so the fit is deterministic for a
     given corpus. ``sample_rows=None`` keeps the old distributed
     per-block ``kmeans_fit`` path (every iteration scans the corpus)."""
+    m = 4
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
@@ -403,7 +399,6 @@ def pq_adc_topk(
     corpus_encoded: DataFrame,
     codebooks: np.ndarray,
     k: int = 5,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k over a PQ-encoded
     corpus: each query builds one lookup table per block (its exact
@@ -415,8 +410,8 @@ def pq_adc_topk(
     side touches only (id, codes) — at 100 TB the vectors themselves
     are never read after encoding. Final per-query top-k is the
     WindowGroupLimit pattern. Output: (query_id, neighbor_id,
-    approx_dist, rank), rounded + id-tiebroken for engine-portable
-    ranking."""
+    approx_dist, rank), rounded to 6 digits + id-tiebroken for
+    engine-portable ranking."""
     m, ks, _ = codebooks.shape
     q = queries.select(
         F.col("vec_id").alias("query_id"),
@@ -436,7 +431,7 @@ def pq_adc_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(F.expr(total), round_digits).alias("approx_dist"),
+            F.round(F.expr(total), 6).alias("approx_dist"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -453,11 +448,10 @@ def pq_rerank_topk(
     corpus: DataFrame,
     corpus_encoded: DataFrame,
     codebooks: np.ndarray,
-    k: int = 5,
     shortlist: int = 50,
 ) -> DataFrame:
     """The production PQ search pipeline: ADC over codes to a
-    ``shortlist``, then EXACT squared-L2 re-rank of only the
+    ``shortlist``, then EXACT squared-L2 re-rank to the top 5 of only the
     shortlisted vectors — the standard recall-restoring second stage
     (IVF-PQ+rerank shape). At 100 TB the full-precision vectors are
     read for shortlist·|queries| rows only; everything corpus-wide
@@ -496,7 +490,7 @@ def pq_rerank_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("neighbor_id").asc())
     return (
         exact.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
     )
 
 
@@ -541,7 +535,7 @@ def ivfpq_encode(
     list's files (partition pruning does the 'inverted index' for
     free). Everything is literal-broadcast codegen'd expressions: no
     UDF, no shuffle, no driver data."""
-    assigned = assign_clusters(df, centroids, "embedding", round_digits)
+    assigned = assign_clusters(df, centroids, round_digits=round_digits)
     with_resid = assigned.withColumn(
         "__resid", _residual_expr("embedding", centroids, "cluster_id")
     )
@@ -557,7 +551,6 @@ def ivfpq_topk(
     codebooks: np.ndarray,
     k: int = 5,
     n_probes: int = 2,
-    round_digits: int = 6,
 ) -> DataFrame:
     """IVF-PQ approximate top-k: each query probes its ``n_probes``
     nearest coarse clusters and scores ONLY those inverted lists, by
@@ -570,8 +563,8 @@ def ivfpq_topk(
     scans corpus_fraction ≈ n_probes/k_clusters of the codes, and
     compared to ``ivf_knn`` it never touches a corpus vector — the
     two multiplicative savings that make billion-vector search a
-    small-join problem. Probe ranking and block argmins round at
-    ``round_digits`` with index tie-breaks; final ranking ties break
+    small-join problem. Probe ranking and block argmins round at 6
+    digits with index tie-breaks; final ranking ties break
     on neighbor id — fully engine-portable. Top-k plans as
     WindowGroupLimit after a cluster-key equi-join whose query side
     (n_queries × n_probes rows of m·ks-double LUTs) broadcasts."""
@@ -586,8 +579,7 @@ def ivfpq_topk(
             f"aggregate(zip_with(transform(embedding, v -> CAST(v AS DOUBLE)), array({arr}), "
             f"(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
         )
-        d = f"round({d}, {round_digits})" if round_digits is not None else d
-        dist_structs.append(f"named_struct('d', {d}, 'cluster_id', {ci})")
+        dist_structs.append(f"named_struct('d', round({d}, 6), 'cluster_id', {ci})")
     probes = (
         f"transform(slice(array_sort(array({', '.join(dist_structs)})), 1, {n_probes}), "
         f"p -> p.cluster_id)"
@@ -618,7 +610,7 @@ def ivfpq_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(F.expr(total), round_digits).alias("approx_dist"),
+            F.round(F.expr(total), 6).alias("approx_dist"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -114,7 +114,6 @@ def seasonal_strength_report(
     key_col: str,
     day_col: str,
     value_col: str,
-    period: int = 7,
 ) -> DataFrame:
     """Trend and seasonal STRENGTH per series (Hyndman-style
     F_trend = max(0, 1 − Var(R)/Var(T+R)), F_seas = max(0,
@@ -124,7 +123,7 @@ def seasonal_strength_report(
     model budget on them.
 
     Exact arithmetic: the decomposition reuses q188's integer micro
-    components (centered MA trend over ``period`` with exact
+    components (centered MA trend over a 7-day period with exact
     floor-div, phase means likewise); variances are computed from
     exact BIGINT sums of squares via Var = (nΣx² − (Σx)²)/n² in
     DOUBLE only at the final ratio, rounded at 6 — sums of squares of
@@ -135,7 +134,7 @@ def seasonal_strength_report(
     like with like. Returns ``(key, n_used, f_trend, f_seasonal)``."""
     from pyspark.sql import Window
 
-    half = int(period) // 2
+    half = 3
     d = df.select(
         F.col(key_col).alias("__k"),
         F.col(day_col).cast("long").alias("__d"),
@@ -150,10 +149,10 @@ def seasonal_strength_report(
     t = (
         d.withColumn("__cnt", F.count(F.lit(1)).over(w))
         .withColumn("__sum", F.sum("__v").over(w))
-        .filter(F.col("__cnt") == int(period))
-        .withColumn("__trend", F.expr(fd("__sum", str(period))).cast("long"))
+        .filter(F.col("__cnt") == 7)
+        .withColumn("__trend", F.expr(fd("__sum", "7")).cast("long"))
         .withColumn("__detr", F.col("__v") - F.col("__trend"))
-        .withColumn("__ph", F.pmod(F.col("__d"), F.lit(int(period))))
+        .withColumn("__ph", F.pmod(F.col("__d"), F.lit(7)))
     )
     wp = Window.partitionBy("__k", "__ph")
     s = (

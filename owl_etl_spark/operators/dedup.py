@@ -400,9 +400,6 @@ def with_simhash(df: DataFrame) -> DataFrame:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.5,
     max_group: int = 4096,
 ) -> DataFrame:
@@ -449,19 +446,19 @@ def ngram_jaccard_pairs(
     """
     from pyspark import StorageLevel
 
-    norm = normalize_text(F.col(text_col))
+    norm = normalize_text(F.col("text"))
     # pre-spread: small corpora scan as one partition; shingling +
     # hashing must not serialize onto a single task
     base = (
         spread_for_cpu(
-            df.select(F.col(id_col).alias("id"), norm.alias("__norm")),
+            df.select(F.col("doc_id").alias("id"), norm.alias("__norm")),
             by=F.col("id"),
         )
         .withColumn("__toks", F.split(F.col("__norm"), " "))
     )
     shingles_sql = (
-        f"CASE WHEN size(__toks) < {shingle_n} THEN array(__norm) "
-        f"ELSE {shingle_chain_sql('__toks', shingle_n)} END"
+        f"CASE WHEN size(__toks) < 3 THEN array(__norm) "
+        f"ELSE {shingle_chain_sql('__toks', 3)} END"
     )
     sh = (
         base.select(
@@ -636,8 +633,6 @@ def ngram_jaccard_pairs_prefix(
 
 def embedding_near_dup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str | None = None,
     threshold: float = 0.95,
 ) -> DataFrame:
@@ -650,13 +645,13 @@ def embedding_near_dup_pairs(
     from owl_etl_spark.functions.similarity import cosine_sql
 
     a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("va"),
         *([F.col(block_col).alias("blk")] if block_col else []),
     )
     b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vb"),
         *([F.col(block_col).alias("blk2")] if block_col else []),
     )
     cond = F.col("id_a") < F.col("id_b")
@@ -675,7 +670,6 @@ def semantic_dedup_pairs(
     df: DataFrame,
     centroids,
     threshold: float = 0.3,
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: cluster the
     embedding space (broadcast-literal centroids — k·dim driver state,
@@ -694,7 +688,7 @@ def semantic_dedup_pairs(
     """
     from owl_etl_spark.operators.cluster import assign_clusters
 
-    assigned = assign_clusters(df, centroids, "embedding", round_digits)
+    assigned = assign_clusters(df, centroids, round_digits=6)
     pairs = embedding_near_dup_pairs(
         assigned, block_col="cluster_id", threshold=threshold
     )
@@ -919,17 +913,11 @@ def connected_components(
                 release(labels)
 
 
-def dedup_segments(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seg_tokens: int = 8,
-    max_df: int = 2,
-) -> DataFrame:
+def dedup_segments(df: DataFrame) -> DataFrame:
     """Cross-document SEGMENT-level exact dedup (the C4/RefinedWeb
     "remove lines repeated across the corpus" pass, generalized to
-    fixed ``seg_tokens``-token segments for corpora without line
-    structure): drop every segment that occurs in more than ``max_df``
+    fixed 8-token segments for corpora without line
+    structure): drop every segment that occurs in more than 2
     distinct documents, reassemble the survivors in order.
 
     Whole-document dedup misses boilerplate — headers, footers,
@@ -948,10 +936,10 @@ def dedup_segments(
     no global sort. Exact up to 64-bit segment-hash collisions (the
     documented engine-wide tolerance).
     """
-    toks = F.split(F.col(text_col), " ")
-    nseg_expr = F.ceil(F.size(toks) / F.lit(seg_tokens)).cast("int")
+    toks = F.split(F.col("text"), " ")
+    nseg_expr = F.ceil(F.size(toks) / F.lit(8)).cast("int")
     base = df.select(
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         toks.alias("__toks"),
         nseg_expr.alias("__nseg"),
     )
@@ -960,8 +948,8 @@ def dedup_segments(
         "__nseg",
         F.posexplode(
             F.expr(
-                f"transform(sequence(0, __nseg - 1), "
-                f"i -> array_join(slice(__toks, i * {seg_tokens} + 1, {seg_tokens}), ' '))"
+                "transform(sequence(0, __nseg - 1), "
+                "i -> array_join(slice(__toks, i * 8 + 1, 8), ' '))"
             )
         ).alias("pos", "seg"),
     )
@@ -972,7 +960,7 @@ def dedup_segments(
     )
     kept = (
         segs.join(freq, F.xxhash64(segs["seg"]) == freq["h"])
-        .filter(F.col("df") <= max_df)
+        .filter(F.col("df") <= 2)
         .select("__id", "pos", "seg")
     )
     reassembled = kept.groupBy("__id").agg(
@@ -986,7 +974,7 @@ def dedup_segments(
         base.select("__id", "__nseg")
         .join(reassembled, "__id", "left")
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("doc_id"),
             F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
             F.col("__nseg").cast("long").alias("n_segments"),
             (F.col("__nseg") - F.coalesce(F.col("__kept"), F.lit(0))).cast("long").alias(
@@ -1140,11 +1128,7 @@ def near_dup_clusters(
     return connected_components(verified, df.select("doc_id"))
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """Exploded winnowing fingerprint set: one (id, fingerprint) row
     per distinct selected hash (Schleimer et al. local fingerprinting:
     8-gram rolling hashes min-sampled over windows of 4).
@@ -1154,22 +1138,17 @@ def winnow_fingerprints(
     joins on. md5-prefix integer hashes keep it oracle-portable.
     """
     base = df.select(
-        F.col(id_col), normalize_text(F.col(text_col)).alias("__s")
+        F.col("doc_id"), normalize_text(F.col("text")).alias("__s")
     ).filter(F.length("__s") >= 12)
     fps = (
         "array_distinct(transform(sequence(1, greatest(length(__s) - 10, 1)), "
         "i -> array_min(transform(sequence(i, i + 3), "
         "j -> CAST(conv(substring(md5(substring(__s, j, 8)), 1, 15), 16, 10) AS BIGINT)))))"
     )
-    return base.select(id_col, F.explode(F.expr(fps)).alias("fingerprint"))
+    return base.select("doc_id", F.explode(F.expr(fps)).alias("fingerprint"))
 
 
-def containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-) -> DataFrame:
+def containment_pairs(df: DataFrame) -> DataFrame:
     """Substring-containment near-dup pairs — the winnowing analog of
     exact-substring dedup (the RefinedWeb/Dolma suffix-array step,
     re-expressed with the fingerprint primitive Spark can distribute).
@@ -1187,27 +1166,27 @@ def containment_pairs(
     ``ngram_jaccard_pairs`` (winnowing already thins postings ~1/window
     vs raw k-grams; for Zipfian corpora compose with LSH blocking
     first). Output: (inner_id, outer_id, containment), both directions
-    when both clear the threshold.
+    when both clear the 0.8 threshold.
     """
-    fps = winnow_fingerprints(df, id_col, text_col)
-    sizes = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
+    fps = winnow_fingerprints(df)
+    sizes = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__n"))
     common = (
         fps.alias("a")
         .join(
             fps.alias("b"),
             (F.col("a.fingerprint") == F.col("b.fingerprint"))
-            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") != F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("inner_id"),
-            F.col(f"b.{id_col}").alias("outer_id"),
+            F.col("a.doc_id").alias("inner_id"),
+            F.col("b.doc_id").alias("outer_id"),
         )
         .agg(F.count(F.lit(1)).alias("__c"))
     )
     return (
-        common.join(sizes.withColumnRenamed(id_col, "inner_id"), "inner_id")
+        common.join(sizes.withColumnRenamed("doc_id", "inner_id"), "inner_id")
         .withColumn("containment", F.round(F.col("__c") / F.col("__n"), 6))
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= 0.8)
         .select("inner_id", "outer_id", "containment")
     )
 

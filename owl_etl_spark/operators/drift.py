@@ -38,7 +38,6 @@ def psi_report(
     cur: DataFrame,
     keys: list[str],
     value_col: str,
-    n_bins: int = 10,
 ) -> DataFrame:
     """Per-group PSI of ``cur`` vs ``ref`` over integer ``value_col``.
 
@@ -55,8 +54,8 @@ def psi_report(
         # integer division: positives truncate identically in every
         # engine; below-range negatives clamp to bin 0 either way
         b = F.least(
-            F.lit(n_bins - 1),
-            F.greatest(F.lit(0), F.expr(f"((CAST({value_col} AS BIGINT) - __lo) * {n_bins}) div (__hi - __lo + 1)")),
+            F.lit(9),
+            F.greatest(F.lit(0), F.expr(f"((CAST({value_col} AS BIGINT) - __lo) * 10) div (__hi - __lo + 1)")),
         )
         return j.groupBy(*keys, b.alias("bin")).agg(
             F.count(F.lit(1)).cast("long").alias(out)
@@ -64,7 +63,7 @@ def psi_report(
 
     rc, cc = _binned(ref, "n_ref"), _binned(cur, "n_cur")
     grid = bounds.select(
-        *keys, F.explode(F.expr(f"sequence(0, {n_bins - 1})")).alias("bin")
+        *keys, F.explode(F.expr("sequence(0, 9)")).alias("bin")
     ).withColumn("bin", F.col("bin").cast("long"))
     cells = (
         grid.join(rc, [*keys, "bin"], "left")
@@ -79,8 +78,8 @@ def psi_report(
     totals = cells.groupBy(*keys).agg(
         F.sum("n_ref").alias("__tr"), F.sum("n_cur").alias("__tc")
     )
-    pr = (F.col("n_ref") + 1) / (F.col("__tr") + n_bins)
-    pc = (F.col("n_cur") + 1) / (F.col("__tc") + n_bins)
+    pr = (F.col("n_ref") + 1) / (F.col("__tr") + 10)
+    pc = (F.col("n_cur") + 1) / (F.col("__tc") + 10)
     term = F.round((pc - pr) * F.log(pc / pr) * 1_000_000).cast("long")
     psi = (
         cells.join(F.broadcast(totals), keys)

@@ -42,16 +42,13 @@ def edit_distance_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    max_dist: int = 2,
 ) -> DataFrame:
     """All pairs ``(id_a < id_b)`` with
-    ``levenshtein(text_a, text_b) <= max_dist``. Null ids/texts are
+    ``levenshtein(text_a, text_b) <= 2``. Null ids/texts are
     dropped. Returns ``(id_a, id_b, dist)``; ``dist`` is the exact
     Levenshtein distance (0 for identical strings).
     """
-    if max_dist < 0:
-        raise ValueError(f"edit_distance_pairs: max_dist must be >= 0, got {max_dist}")
-    width = int(max_dist) + 1
+    width = 3
     base = (
         df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
         .filter(F.col("__id").isNotNull() & F.col("__t").isNotNull())
@@ -74,7 +71,7 @@ def edit_distance_pairs(
         )
         & (F.col("__id") != F.col("__id2"))
     )
-    d = F.levenshtein(F.col("__t"), F.col("__t2"), int(max_dist))
+    d = F.levenshtein(F.col("__t"), F.col("__t2"), 2)
     out = cand.select(
         F.least(F.col("__id"), F.col("__id2")).alias("id_a"),
         F.greatest(F.col("__id"), F.col("__id2")).alias("id_b"),

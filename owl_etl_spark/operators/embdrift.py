@@ -100,11 +100,10 @@ def similarity_histogram(
     id_col: str,
     vec_col: str,
     sample_mod: int,
-    n_bins: int = 40,
 ) -> DataFrame:
     """Histogram of pairwise cosine similarities over the
     deterministic sample ``md5('s|' || id) % sample_mod == 0``:
-    ``(bin, cnt)`` over ``n_bins`` equal bins of [−1, 1] in micro
+    ``(bin, cnt)`` over 40 equal bins of [−1, 1] in micro
     units. The sample keeps the pair count at (n/sample_mod)²/2 — a
     dial the caller owns — because an all-pairs join over the corpus
     is never acceptable; the cosine is the intra-row left-fold
@@ -130,7 +129,7 @@ def similarity_histogram(
         .alias("sim_micro")
     )
     return histogram_sketch(
-        sims, [], "sim_micro", lo=-1_000_000, hi=1_000_000, n_bins=n_bins
+        sims, [], "sim_micro", lo=-1_000_000, hi=1_000_000, n_bins=40
     )
 
 

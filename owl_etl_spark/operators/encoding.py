@@ -38,9 +38,8 @@ def loo_target_encode(
     df: DataFrame,
     category_cols: list[str],
     target_col: str,
-    out_col: str = "loo_mean",
 ) -> DataFrame:
-    """Append ``out_col`` = leave-one-out mean of ``target_col``
+    """Append ``loo_mean`` = leave-one-out mean of ``target_col``
     within each ``category_cols`` cell, rounded at 6; NULL when the
     cell has a single row. Rows with a NULL target raise (woven
     guard) — a silently skipped label would shift every other row's
@@ -66,7 +65,7 @@ def loo_target_encode(
             (s - F.col("__t")).cast("double") / (n - 1).cast("double"), 6
         ),
     )
-    return work.withColumn(out_col, loo).drop("__t")
+    return work.withColumn("loo_mean", loo).drop("__t")
 
 
 def woe_iv_report(
@@ -159,7 +158,6 @@ def entropy_binning(
     value_col: str,
     target_col: str,
     depth: int = 2,
-    candidates: int = 20,
     min_size: int = 50,
 ) -> DataFrame:
     """Supervised (entropy-based, MDLP-style) binning — where WoE
@@ -171,7 +169,7 @@ def entropy_binning(
     plainly: a FIXED depth replaces the MDL stopping rule (the
     unrolled levels are the oracle replay contract, the q276 Mondrian
     convention), and candidate boundaries are the segment's interior
-    ntile(``candidates``) edges rather than every distinct value
+    ntile(20) edges rather than every distinct value
     (the standard large-data concession — O(candidates) evaluations
     per segment instead of O(distinct)).
 
@@ -185,7 +183,7 @@ def entropy_binning(
     min_v, max_v)``.
 
     Plan per level: one ntile window per segment (boundary
-    candidates), a ≤``candidates``-fold fan-out join for the cost
+    candidates), a ≤20-fold fan-out join for the cost
     table, one argmin, one assignment pass — everything keyed by the
     current segment."""
     from pyspark.sql import Window
@@ -198,7 +196,7 @@ def entropy_binning(
         F.lit("r").alias("__seg"),
     ).filter(F.col("__v").isNotNull() & F.col("__y").isNotNull())
     d = seal(d, eager=False)
-    C = int(candidates)
+    C = 20
     fd = lambda x, dv: f"(({x}) - (((({x}) % ({dv})) + ({dv})) % ({dv}))) div ({dv})"
     for lvl in range(int(depth)):
         wseg = Window.partitionBy("__seg").orderBy(F.col("__v").asc())

@@ -40,7 +40,6 @@ def rrf_fuse(
     list_col: str,
     item_col: str,
     rank_col: str,
-    k: int = 60,
     top_n: int | None = None,
 ) -> DataFrame:
     """Fuse ``rankings`` rows ``(list_id, item, rank)`` (rank 1-based
@@ -48,8 +47,6 @@ def rrf_fuse(
     fused_rank)`` ordered by (rrf_nano desc, item asc). ``top_n``
     truncates the fused ranking after ordering.
     """
-    if k < 0:
-        raise ValueError(f"rrf_fuse: k must be >= 0, got {k}")
     rank = F.col(rank_col).cast("long")
     contrib = F.when(
         rank.isNull() | (rank < 1),
@@ -61,7 +58,7 @@ def rrf_fuse(
                 F.col(list_col).cast("string"),
             )
         ).cast("long"),
-    ).otherwise(F.expr(f"1000000000 div (CAST({k} AS BIGINT) + CAST({rank_col} AS BIGINT))"))
+    ).otherwise(F.expr(f"1000000000 div (60 + CAST({rank_col} AS BIGINT))"))
     fused = (
         rankings.select(
             F.col(item_col).alias("item"),

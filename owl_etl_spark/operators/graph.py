@@ -234,9 +234,6 @@ def personalized_pagerank(
 def triangle_count(
     edges: DataFrame,
     nodes: DataFrame,
-    node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Per-node triangle participation over an undirected simple graph
     (self-loops dropped, parallel/reverse edges collapsed) — the
@@ -264,8 +261,8 @@ def triangle_count(
     Returns (node, n_triangles) for EVERY node in *nodes* (zero when
     in no triangle).
     """
-    a = F.least(F.col(src_col), F.col(dst_col)).alias("a")
-    b = F.greatest(F.col(src_col), F.col(dst_col)).alias("b")
+    a = F.least(F.col("src"), F.col("dst")).alias("a")
+    b = F.greatest(F.col("src"), F.col("dst")).alias("b")
     und = (
         edges.select(a, b).filter(F.col("a") != F.col("b")).distinct()
     )
@@ -294,10 +291,10 @@ def triangle_count(
         "__n"
     ).agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     return (
-        nodes.select(F.col(node_col).alias("__n"))
+        nodes.select(F.col("node").alias("__n"))
         .join(corners, "__n", "left")
         .select(
-            F.col("__n").alias(node_col),
+            F.col("__n").alias("node"),
             F.coalesce(F.col("n_triangles"), F.lit(0)).cast("long").alias("n_triangles"),
         )
     )
@@ -383,8 +380,6 @@ def _hop_distances(
 
 def hits_scores(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
     n_iters: int = 3,
 ) -> DataFrame:
     """HITS hubs & authorities over a directed edge list, fixed
@@ -426,8 +421,8 @@ def hits_scores(
     if n_iters < 1:
         raise ValueError(f"hits_scores: n_iters must be >= 1, got {n_iters}")
     e = seal(
-        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-        .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
+        edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d"))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
     )
     # nodes and the seed hub table are each consumed exactly once
@@ -673,9 +668,6 @@ def modularity_report(
 def harmonic_centrality(
     edges: DataFrame,
     nodes: DataFrame,
-    node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_hops: int = 6,
 ) -> DataFrame:
     """Harmonic centrality Σ_{v≠u} 1/d(u,v) over unweighted directed
@@ -705,14 +697,14 @@ def harmonic_centrality(
             "contract the graph first (host/nation rollup)"
         )
     with sealed(
-        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-        .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-        .where(F.col(src_col) != F.col(dst_col))
+        edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d"))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .where(F.col("src") != F.col("dst"))
         .distinct()
     ) as e:
         hop0 = nodes.select(
-            F.col(node_col).alias("__src"),
-            F.col(node_col).alias("__n"),
+            F.col("node").alias("__src"),
+            F.col("node").alias("__n"),
             F.lit(0).cast("int").alias("__h"),
         )
         dist = _hop_distances(e, seal(hop0), "__n", "__h", max_hops)
@@ -726,10 +718,10 @@ def harmonic_centrality(
         .alias("harmonic_micro"),
     )
     return (
-        nodes.select(F.col(node_col).alias("__src"))
+        nodes.select(F.col("node").alias("__src"))
         .join(scores, "__src", "left")
         .select(
-            F.col("__src").alias(node_col),
+            F.col("__src").alias("node"),
             F.coalesce(F.col("n_reached"), F.lit(0)).cast("long").alias("n_reached"),
             F.coalesce(F.col("harmonic_micro"), F.lit(0))
             .cast("long")
@@ -741,9 +733,6 @@ def harmonic_centrality(
 def simrank(
     edges: DataFrame,
     nodes: DataFrame,
-    node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
     n_iters: int = 3,
     max_nodes: int = 2_000,
 ) -> DataFrame:
@@ -779,9 +768,9 @@ def simrank(
             "state is node-pair-sized; contract the graph first"
         )
     e = seal(
-        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-        .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-        .where(F.col(src_col) != F.col(dst_col))
+        edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d"))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .where(F.col("src") != F.col("dst"))
         .distinct()
     )
     indeg = seal(
@@ -789,8 +778,8 @@ def simrank(
     )
     # S_0: diagonal only
     s = nodes.select(
-        F.col(node_col).alias("__a"),
-        F.col(node_col).alias("__b"),
+        F.col("node").alias("__a"),
+        F.col("node").alias("__b"),
         F.lit(MICRO).cast("long").alias("__sc"),
     )
     ea = e.select(F.col("__s").alias("__u"), F.col("__d").alias("__na"))
@@ -822,8 +811,8 @@ def simrank(
             .filter(F.col("__sc") > 0)
         )
         diag = nodes.select(
-            F.col(node_col).alias("__a"),
-            F.col(node_col).alias("__b"),
+            F.col("node").alias("__a"),
+            F.col("node").alias("__b"),
             F.lit(MICRO).cast("long").alias("__sc"),
         )
         s = diag.unionByName(offdiag)

@@ -943,23 +943,18 @@ GIF_SAMPLE_SCHEMA = (
 )
 
 
-def gif_frame_sample_stats(
-    df: DataFrame, every: int = 2
-) -> DataFrame:
+def gif_frame_sample_stats(df: DataFrame) -> DataFrame:
     """Decode an animated-GIF binary column and FRAME-SAMPLE it (every
-    ``every``-th frame, starting at 0 — the video keyframe-sampling
+    2nd frame, starting at 0 — the video keyframe-sampling
     shape), emitting exact integer stats over the sampled frames.
     Arrow-batched ``mapInPandas``; at scale the decode parallelizes
     per-payload with no shuffle."""
-    if every < 1:
-        raise ValueError("every must be >= 1")
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 d = decode_gif_frames(bytes(payload))
-                sampled = d["frames"][::every].astype(np.int64)
+                sampled = d["frames"][::2].astype(np.int64)
                 rows.append(
                     (
                         doc_id,

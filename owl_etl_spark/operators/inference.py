@@ -399,9 +399,6 @@ def fdr_bh_screen(
     side_col: str,
     value_col: str,
     key_col: str,
-    n_perms: int = 64,
-    alpha_num: int = 1,
-    alpha_den: int = 10,
 ) -> DataFrame:
     """Benjamini-Hochberg FDR screen over PER-GROUP permutation tests
     — the multiple-testing closure of q291: when the same two-cohort
@@ -411,7 +408,7 @@ def fdr_bh_screen(
 
     Per group, a q291-style pseudo-permutation test of the
     ``side_col`` (boolean) mean difference in ``value_col``:
-    ``n_perms`` md5-hash relabelings of (key, perm, group), each
+    64 md5-hash relabelings of (key, perm, group), each
     permuted |mean diff| micro-snapped via exact floor division, and
     the exact rational p = (#{|perm diff| ≥ |observed|} + 1)/(used+1)
     (marginally-Bernoulli labels — the stated large-sample concession
@@ -422,19 +419,17 @@ def fdr_bh_screen(
     ascending p (ties by group name; the sort key is the single
     double division (n_ge+1)/(used+1), engine-identical), rejection
     rule p_(i) ≤ i·α/m decided as
-    (n_ge+1)·m·alpha_den ≤ i·alpha_num·(used+1), and every rank up to
+    (n_ge+1)·m·10 ≤ i·1·(used+1) (FDR level 1/10), and every rank up to
     the LARGEST passing i is rejected (the BH step-up, not step-down).
 
     Returns one row per group: ``(group, n1, n2, diff_micro, n_ge,
     n_perms_used, p_micro, p_rank, bh_crit_micro, rejected)``.
 
     Plan: one (group) stats aggregate broadcast back (m rows), a
-    constant ×n_perms map-side fan-out, one (group, perm) aggregate,
+    constant ×64 map-side fan-out, one (group, perm) aggregate,
     one (group) aggregate, then windows over the m-row frame. The
     only shuffled volumes are (group, perm)-cardinality.
     """
-    if n_perms < 4:
-        raise ValueError("fdr_bh_screen: n_perms must be >= 4")
     d = df.select(
         F.col(group_col).cast("string").alias("__g"),
         F.col(side_col).cast("boolean").alias("__side"),
@@ -477,7 +472,7 @@ def fdr_bh_screen(
             "__k",
             (F.col("__n1") + F.col("__n2")).alias("__nt"),
             "__n1",
-            F.explode(F.expr(f"sequence(0, {int(n_perms) - 1})")).alias("__p"),
+            F.explode(F.expr("sequence(0, 63)")).alias("__p"),
         )
         .withColumn(
             "__side1",
@@ -528,8 +523,8 @@ def fdr_bh_screen(
     rank_w = Window.orderBy(ratio.asc(), F.col("__g").asc())
     pg = pg.withColumn("p_rank", F.row_number().over(rank_w).cast("long"))
     passes = (
-        (F.col("n_ge") + 1) * F.col("__m") * int(alpha_den)
-        <= F.col("p_rank") * int(alpha_num) * (F.col("n_perms_used") + 1)
+        (F.col("n_ge") + 1) * F.col("__m") * 10
+        <= F.col("p_rank") * 1 * (F.col("n_perms_used") + 1)
     )
     cutoff = F.max(F.when(passes, F.col("p_rank")).otherwise(0)).over(m_w)
     return pg.select(
@@ -541,7 +536,7 @@ def fdr_bh_screen(
         "n_perms_used",
         _fd("(n_ge + 1) * 1000000", "n_perms_used + 1").cast("long").alias("p_micro"),
         "p_rank",
-        _fd(f"p_rank * {int(alpha_num)} * 1000000", f"__m * {int(alpha_den)}")
+        _fd("p_rank * 1 * 1000000", "__m * 10")
         .cast("long")
         .alias("bh_crit_micro"),
         (F.col("p_rank") <= cutoff).cast("long").alias("rejected"),

@@ -205,7 +205,6 @@ def kll_merge_rows(rows: Iterable) -> KLL:
 def kll_quantile_report(
     df: DataFrame,
     value_col: str,
-    k: int = 400,
 ) -> DataFrame:
     """Self-certifying quantile report: build per-partition sketches,
     merge on the driver, then verify each estimate's TRUE rank against
@@ -219,7 +218,7 @@ def kll_quantile_report(
     longs = df.select(F.col(value_col).cast("long").alias("v")).filter(
         F.col("v").isNotNull()
     )
-    sk = kll_merge_rows(kll_partition_sketches(longs, "v", k=k).collect())
+    sk = kll_merge_rows(kll_partition_sketches(longs, "v", k=400).collect())
     ests = [(p, sk.quantile(p)) for p in (100, 500, 2500, 5000, 7500, 9500, 9900)]
     # literal_frame, not createDataFrame: no Python-worker round trips
     # for a percentile-count-sized frame (r13)

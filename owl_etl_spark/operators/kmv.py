@@ -138,7 +138,7 @@ def kmv_value_quantiles(
 
 
 def kmv_jaccard_estimate(
-    sketch_a: DataFrame, sketch_b: DataFrame, k: int = 256
+    sketch_a: DataFrame, sketch_b: DataFrame
 ) -> DataFrame:
     """Jaccard similarity of two key sets from their KMV sketches —
     the set-resemblance estimator the bottom-k family is known for
@@ -161,7 +161,7 @@ def kmv_jaccard_estimate(
     sketches are deterministic and the count arithmetic is exact).
     Both inputs must be built with the same k and hash (kmv_sketch).
     """
-    union_k = kmv_merge(sketch_a, sketch_b, k=k).select("h")
+    union_k = kmv_merge(sketch_a, sketch_b, k=256).select("h")
     in_a = sketch_a.select(F.col("h").alias("h"), F.lit(1).alias("__a"))
     in_b = sketch_b.select(F.col("h").alias("h"), F.lit(1).alias("__b"))
     marked = (
@@ -184,7 +184,7 @@ def kmv_jaccard_estimate(
 
 
 def kmv_difference_estimate(
-    sketch_a: DataFrame, sketch_b: DataFrame, k: int = 256
+    sketch_a: DataFrame, sketch_b: DataFrame
 ) -> DataFrame:
     """|A \\ B| from the two KMV sketches alone — the a-not-b set
     operation that completes the sketch algebra (union = merge,
@@ -203,7 +203,7 @@ def kmv_difference_estimate(
     result is engine-portable: (n_union_sketch, n_only_a,
     only_a_frac_micro, est_diff).
     """
-    union_k = kmv_merge(sketch_a, sketch_b, k=k)
+    union_k = kmv_merge(sketch_a, sketch_b, k=256)
     in_a = sketch_a.select("h", F.lit(1).alias("__a"))
     in_b = sketch_b.select("h", F.lit(1).alias("__b"))
     marked = union_k.join(in_a, "h", "left").join(in_b, "h", "left")
@@ -217,9 +217,9 @@ def kmv_difference_estimate(
         F.max("h").alias("__hk"),
     )
     union_est = (
-        F.when(F.col("n_union_sketch") < k, F.col("n_union_sketch").cast("double"))
+        F.when(F.col("n_union_sketch") < 256, F.col("n_union_sketch").cast("double"))
         .otherwise(
-            F.round(F.lit(float(k - 1)) * F.lit(float(HASH_SPACE)) / F.col("__hk"))
+            F.round(F.lit(255.0) * F.lit(float(HASH_SPACE)) / F.col("__hk"))
         )
     )
     return agg.select(

@@ -21,16 +21,12 @@ from pyspark.sql import functions as F
 from owl_etl_spark.functions.similarity import cosine_sql
 
 
-def brute_force_knn(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+def brute_force_knn(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Exact top-5 cosine neighbors for each query vector.
 
     Broadcast the (small) query side, cross-join against the corpus,
     rank per query on (rounded cosine desc, neighbor id) — the rounding
-    + id tie-break makes top-k deterministic across runs and engines.
+    + id tie-break makes top-5 deterministic across runs and engines.
     Excludes self-matches (same id).
     """
     q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
@@ -43,23 +39,21 @@ def brute_force_knn(
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 
-def hyperplane_bucket_expr(
-    vec_col: str, dim: int = 64, num_planes: int = 8, seed: int = 42
-):
+def hyperplane_bucket_expr(vec_col: str, num_planes: int = 8, seed: int = 42):
     """LSH bucket id Column: sign pattern of ``num_planes`` random
-    hyperplane projections.
+    hyperplane projections of a 64-dim vector.
 
     Hyperplanes are generated driver-side from a fixed seed and
     embedded as literals — identical across executors and runs; the
     projection is an intra-row ``aggregate`` (no UDF, no shuffle).
     """
     rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((num_planes, dim))
+    planes = rng.standard_normal((num_planes, 64))
     bucket_terms = []
     for p_idx in range(num_planes):
         arr = ", ".join(f"{float(v)!r}D" for v in planes[p_idx])
@@ -76,42 +70,29 @@ def random_hyperplane_bucket(
     num_planes: int = 8,
 ) -> DataFrame:
     """Attach an ``lsh_bucket`` column (see hyperplane_bucket_expr)."""
-    return df.withColumn("lsh_bucket", hyperplane_bucket_expr("embedding", 64, num_planes))
+    return df.withColumn("lsh_bucket", hyperplane_bucket_expr("embedding", num_planes))
 
 
-def _multi_table_buckets(
-    df: DataFrame,
-    id_alias: str,
-    vec_alias: str,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    num_planes: int,
-    num_tables: int,
-    seed: int,
-) -> DataFrame:
-    """(id, vec, table, bucket) — one row per hash table. Each table is
-    an independent set of hyperplanes (seed offset); all tables' buckets
-    are computed in ONE projection, then exploded."""
-    out = df.select(F.col(id_col).alias(id_alias), F.col(vec_col).alias(vec_alias))
+def _multi_table_buckets(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
+    """(id, vec, table, bucket) — one row per hash table, 4 tables of
+    4 planes. Each table is an independent set of hyperplanes (seed
+    42 + 1000·t); all tables' buckets are computed in ONE projection,
+    then exploded."""
+    out = df.select(F.col("vec_id").alias(id_alias), F.col("embedding").alias(vec_alias))
     exprs = [
         F.struct(
             F.lit(t).alias("tbl"),
-            hyperplane_bucket_expr(vec_alias, dim, num_planes, seed + 1000 * t).alias("bucket"),
+            hyperplane_bucket_expr(vec_alias, 4, 42 + 1000 * t).alias("bucket"),
         )
-        for t in range(num_tables)
+        for t in range(4)
     ]
     return out.withColumn("tb", F.explode(F.array(*exprs))).select(
         id_alias, vec_alias, F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
     )
 
 
-def lsh_knn(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-) -> DataFrame:
-    """Approximate top-k: candidates share the query's bucket in ANY of
+def lsh_knn(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Approximate top-5: candidates share the query's bucket in ANY of
     4 independent hyperplane tables, then exact cosine rank
     within candidates. Equi-join on (table, bucket) instead of a cross
     join — the 100 TB path.
@@ -120,12 +101,8 @@ def lsh_knn(
     buckets → higher recall & cost; more tables → more probes. (4, 4)
     give ~2^4 buckets/table; recall is observable by
     comparing against ``brute_force_knn`` on a sample (tests do)."""
-    qb = _multi_table_buckets(
-        queries, "query_id", "qv", "vec_id", "embedding", 64, 4, 4, 42
-    )
-    cb = _multi_table_buckets(
-        corpus, "neighbor_id", "cv", "vec_id", "embedding", 64, 4, 4, 42
-    )
+    qb = _multi_table_buckets(queries, "query_id", "qv")
+    cb = _multi_table_buckets(corpus, "neighbor_id", "cv")
     scored = (
         cb.join(F.broadcast(qb), ["tbl", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -136,7 +113,7 @@ def lsh_knn(
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
@@ -173,12 +150,8 @@ def sq8_quantize(
     )
 
 
-def sq8_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-) -> DataFrame:
-    """Top-k neighbors by the cosine of the SQ8-QUANTIZED vectors —
+def sq8_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Top-5 neighbors by the cosine of the SQ8-QUANTIZED vectors —
     the memory-bound ANN configuration: the index holds int8 codes
     (4× smaller, integer SIMD dots), the ranking is
     qcos = dot(qa, qb) / sqrt(|qa|²·|qb|²) with the dot and both
@@ -221,6 +194,6 @@ def sq8_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "qcos", "rank")
     )

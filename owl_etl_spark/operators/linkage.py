@@ -134,7 +134,6 @@ def similarity_edges_multi(
     df: DataFrame,
     id_col: str,
     name_col: str,
-    threshold: float = 0.6,
     passes: tuple[str, ...] = ("last_token", "first_token", "squashed_prefix"),
 ) -> DataFrame:
     """Union of ``similarity_edges`` over several independent blocking
@@ -145,7 +144,7 @@ def similarity_edges_multi(
     or the squashed 4-char prefix still blocks it together — recall
     strictly dominates any one pass (the edge set is a superset by
     construction), while precision is untouched because every
-    candidate still has to clear the SAME trigram-Jaccard threshold.
+    candidate still has to clear the SAME trigram-Jaccard threshold (0.6).
 
     Scale shape: each pass is the bounded Σ block² self-join; the
     union adds a final (id_a, id_b) groupBy to drop pairs found by
@@ -160,7 +159,7 @@ def similarity_edges_multi(
         )
     edge_sets = [
         similarity_edges(
-            df, id_col, name_col, threshold, block_col=BLOCKING_PASSES[p](name_col)
+            df, id_col, name_col, 0.6, block_col=BLOCKING_PASSES[p](name_col)
         )
         for p in passes
     ]
@@ -174,7 +173,6 @@ def resolve_entities(
     df: DataFrame,
     id_col: str,
     name_col: str,
-    threshold: float = 0.6,
     passes: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Full entity resolution: every input row labeled with its
@@ -187,9 +185,9 @@ def resolve_entities(
     before clustering (typo-robust recall — see
     ``similarity_edges_multi``)."""
     if passes is None:
-        edges = similarity_edges(df, id_col, name_col, threshold)
+        edges = similarity_edges(df, id_col, name_col, 0.6)
     else:
-        edges = similarity_edges_multi(df, id_col, name_col, threshold, passes)
+        edges = similarity_edges_multi(df, id_col, name_col, passes=passes)
     return connected_components(
         edges, df.select(id_col), id_col
     ).withColumnRenamed("component", "entity_id")

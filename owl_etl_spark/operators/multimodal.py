@@ -468,12 +468,11 @@ def phash_band_rows(
 def phash_near_dup_pairs(
     fps: DataFrame,
     max_hamming: int = 3,
-    bands: int = 4,
 ) -> DataFrame:
     """Near-dup pairs (id_a < id_b, hamming) among perceptual
     fingerprints with Hamming distance ≤ ``max_hamming``, found by
     banded blocking — NEVER all-pairs. Pigeonhole completeness: with
-    ``max_hamming < bands``, two fingerprints within the Hamming
+    ``max_hamming < 4`` bands, two fingerprints within the Hamming
     bound differ in fewer bands than exist, so at least one band
     slice matches exactly and the equi-join cannot miss a true pair.
     Candidate generation is the skew-guarded LSH bucket expansion
@@ -484,12 +483,12 @@ def phash_near_dup_pairs(
     true near-dups, nothing quadratic."""
     from owl_etl_spark.operators.dedup import incremental_lsh_pairs
 
-    if max_hamming >= bands:
+    if max_hamming >= 4:
         raise ValueError(
             f"max_hamming={max_hamming} needs > {max_hamming} bands for "
-            f"complete candidate generation (got {bands})"
+            "complete candidate generation (got 4)"
         )
-    rows = phash_band_rows(fps, bands)
+    rows = phash_band_rows(fps, 4)
     cand = incremental_lsh_pairs(rows, None)
     fa = fps.select(F.col("doc_id").alias("id_a"), F.col("phash").alias("__fa"))
     fb = fps.select(F.col("doc_id").alias("id_b"), F.col("phash").alias("__fb"))

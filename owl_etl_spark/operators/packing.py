@@ -43,14 +43,12 @@ from pyspark.sql import functions as F
 
 def greedy_pack(
     df: DataFrame,
-    id_col: str = "doc_id",
-    len_col: str = "n_tokens",
     capacity: int = 2048,
     shards: int = 32,
 ) -> DataFrame:
     """(shard, id, length, bin) — greedy doc-boundary packing.
 
-    Documents are walked in ``id_col`` order within each shard
+    Documents are walked in ``doc_id`` order within each shard
     (``shard = id % shards``, oracle-portable); a document starts a
     new bin iff the current bin is non-empty and would overflow.
     A document longer than ``capacity`` occupies a bin alone
@@ -68,13 +66,13 @@ def greedy_pack(
         raise ValueError(f"shards must be positive, got {shards}")
 
     out_schema = (
-        f"shard int, {id_col} bigint, {len_col} bigint, "
+        "shard int, doc_id bigint, n_tokens bigint, "
         "bin bigint, is_oversize boolean"
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        lens = pdf[len_col].to_numpy(dtype=np.int64)
+        pdf = pdf.sort_values("doc_id", kind="mergesort")
+        lens = pdf["n_tokens"].to_numpy(dtype=np.int64)
         bins = np.empty(lens.size, dtype=np.int64)
         b = 0
         fill = 0
@@ -89,25 +87,24 @@ def greedy_pack(
         return pd.DataFrame(
             {
                 "shard": pdf["shard"].to_numpy(),
-                id_col: pdf[id_col].to_numpy(),
-                len_col: lens,
+                "doc_id": pdf["doc_id"].to_numpy(),
+                "n_tokens": lens,
                 "bin": bins,
                 "is_oversize": lens > capacity,
             }
         )
 
-    shard_col = F.pmod(F.col(id_col), F.lit(shards)).cast("int")
+    shard_col = F.pmod(F.col("doc_id"), F.lit(shards)).cast("int")
     base = df.select(
         shard_col.alias("shard"),
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(len_col).cast("long").alias(len_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
     )
     return base.groupBy("shard").applyInPandas(fn, schema=out_schema)
 
 
 def packing_efficiency(
     assignment: DataFrame,
-    len_col: str = "n_tokens",
     capacity: int = 2048,
 ) -> DataFrame:
     """Per-shard packing report over a :func:`greedy_pack` assignment:
@@ -120,7 +117,7 @@ def packing_efficiency(
     per_bin_budget = F.lit(int(capacity))
     agg = assignment.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(len_col).cast("long").alias("total_tokens"),
+        F.sum("n_tokens").cast("long").alias("total_tokens"),
         (F.max("bin") + 1).cast("long").alias("bins_used"),
         F.sum(F.when(F.col("is_oversize"), 1).otherwise(0))
         .cast("long")
@@ -129,7 +126,7 @@ def packing_efficiency(
     # oversize docs blow their own bin past capacity; budget counts
     # the ACTUAL allocation: max(capacity, doc) per oversize bin.
     over = assignment.filter(F.col("is_oversize")).groupBy("shard").agg(
-        F.sum(F.col(len_col) - per_bin_budget).cast("long").alias("__over_extra")
+        F.sum(F.col("n_tokens") - per_bin_budget).cast("long").alias("__over_extra")
     )
     joined = agg.join(over, "shard", "left").withColumn(
         "__budget",

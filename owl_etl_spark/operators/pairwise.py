@@ -51,8 +51,6 @@ def _fd(x: str, d: str) -> str:
 
 def bradley_terry_strengths(
     games: DataFrame,
-    winner_col: str = "winner",
-    loser_col: str = "loser",
     n_iters: int = 5,
 ) -> DataFrame:
     """Fit Bradley-Terry strengths from a (winner, loser) outcome
@@ -70,7 +68,7 @@ def bradley_terry_strengths(
     iteration for dimension-sized tables. They are broadcast (the
     ra/rb rating vectors already were; round 12, guide §3.1)."""
 
-    w, l = F.col(winner_col).cast("string"), F.col(loser_col).cast("string")
+    w, l = F.col("winner").cast("string"), F.col("loser").cast("string")
     g = games.select(w.alias("__w"), l.alias("__l")).withColumn(
         "__w",
         F.when(

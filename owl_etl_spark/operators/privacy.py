@@ -61,9 +61,7 @@ def k_anonymity_suppress(
     return df.join(F.broadcast(at_risk), cond, "left_anti")
 
 
-def generalization_report(
-    df: DataFrame, ladders: list[dict], k: int = 5
-) -> DataFrame:
+def generalization_report(df: DataFrame, ladders: list[dict]) -> DataFrame:
     """One row per generalization level: ``(gen_level, n_combos,
     n_at_risk_combos, n_rows_suppressed, n_rows_total)``.
 
@@ -78,8 +76,6 @@ def generalization_report(
     (map-side combined; the group count shrinks as levels coarsen) and
     a 1-row aggregate each — L tiny jobs, no joins.
     """
-    if k < 2:
-        raise ValueError(f"generalization_report: need k >= 2, got {k}")
     if not ladders:
         raise ValueError("generalization_report: ladders must be non-empty")
     names = sorted(ladders[0])
@@ -98,10 +94,10 @@ def generalization_report(
             combos.agg(
                 F.lit(i).cast("int").alias("gen_level"),
                 F.count(F.lit(1)).cast("long").alias("n_combos"),
-                F.sum(F.when(F.col("n") < k, 1).otherwise(0))
+                F.sum(F.when(F.col("n") < 5, 1).otherwise(0))
                 .cast("long")
                 .alias("n_at_risk_combos"),
-                F.coalesce(F.sum(F.when(F.col("n") < k, F.col("n"))), F.lit(0))
+                F.coalesce(F.sum(F.when(F.col("n") < 5, F.col("n"))), F.lit(0))
                 .cast("long")
                 .alias("n_rows_suppressed"),
                 F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_rows_total"),
@@ -116,7 +112,6 @@ def generalization_report(
 def k_anonymity_generalize(
     df: DataFrame,
     ladders: list[dict],
-    k: int = 5,
     max_suppressed_rows: int = 0,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
@@ -140,7 +135,7 @@ def k_anonymity_generalize(
     """
     rep = {
         r["gen_level"]: r["n_rows_suppressed"]
-        for r in generalization_report(df, ladders, k).collect()
+        for r in generalization_report(df, ladders).collect()
     }
     chosen = len(ladders) - 1
     for i in range(len(ladders)):
@@ -154,7 +149,7 @@ def k_anonymity_generalize(
         *[F.col(c) for c in keep],
         *[lvl[n].alias(n) for n in names],
     )
-    released = k_anonymity_suppress(gen, names, k)
+    released = k_anonymity_suppress(gen, names, 5)
     return released.withColumn("gen_level", F.lit(chosen).cast("int"))
 
 

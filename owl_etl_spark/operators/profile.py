@@ -235,7 +235,6 @@ def ab_test_report(
     keys: list[str],
     group_col: str,
     value_col: str,
-    z_crit: float = 1.96,
 ) -> DataFrame:
     """Pairwise two-sample comparison report per key — the A/B-test
     readout every experimentation pipeline computes, in the exact
@@ -248,7 +247,7 @@ def ab_test_report(
 
     is computed from those sums with the only doubles being the final
     divisions, emitted as integer micro-units (``t_micro``).
-    ``significant`` uses the normal threshold ``|t| ≥ z_crit`` —
+    ``significant`` uses the normal threshold ``|t| ≥ 1.96`` —
     the large-sample Welch z-test (no small-sample df correction; at
     warehouse n the distinction is noise, and a df-free rule is what
     replays exactly on any engine).
@@ -301,9 +300,9 @@ def ab_test_report(
     ok = (F.col("n_a") >= 2) & (F.col("n_b") >= 2) & (va + vb > 0)
     t = F.when(ok, F.round((_mean("__s1a", "n_a") - _mean("__s1b", "n_b")) / se * 1_000_000).cast("long"))
     # integer micro threshold: 1.96 is not binary-exact, so a float
-    # z_crit·1e6 sits an ulp off 1960000 and could flip a boundary row
+    # 1.96·1e6 sits an ulp off 1960000 and could flip a boundary row
     # vs an engine comparing integers
-    crit_micro = int(round(float(z_crit) * 1_000_000))
+    crit_micro = int(round(1.96 * 1_000_000))
     return pairs.select(
         *keys,
         "group_a",

@@ -43,10 +43,9 @@ def ipf_rake(
     df: DataFrame,
     row_col: str,
     col_col: str,
-    rounds: int = 8,
 ) -> DataFrame:
     """Rake the (row_col × col_col) count grid to uniform marginals on
-    both axes via ``rounds`` full IPF rounds (each = one row scaling +
+    both axes via 8 full IPF rounds (each = one row scaling +
     one column scaling).
 
     Returns one row per observed cell: ``(row_cat, col_cat, n,
@@ -61,8 +60,6 @@ def ipf_rake(
     count is what keeps the operator engine-exact and oracle-able
     (the convergence-test variant would gate on a float threshold).
     """
-    if rounds < 1:
-        raise ValueError("ipf_rake: rounds must be >= 1")
     cells = (
         df.select(
             F.col(row_col).cast("string").alias("__r"),
@@ -87,7 +84,7 @@ def ipf_rake(
     )
     wr = Window.partitionBy("__r")
     wc = Window.partitionBy("__c")
-    for _ in range(int(rounds)):
+    for _ in range(8):
         rs = F.sum("__m").over(wr).cast("long")
         cells = cells.withColumn(
             "__m",

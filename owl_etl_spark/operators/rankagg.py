@@ -128,10 +128,9 @@ def decile_lift(
     score_col: str,
     label_col: str,
     id_col: str,
-    n_buckets: int = 10,
 ) -> DataFrame:
     """Decile lift / cumulative-gains table: bucket the population
-    into ``n_buckets`` equal slices by descending integer score
+    into 10 equal slices by descending integer score
     (ties broken by ``id_col`` — deterministic ntile), then report
     how the positives concentrate. THE campaign-targeting /
     model-triage readout: "the top decile captures X% of positives at
@@ -148,7 +147,7 @@ def decile_lift(
     — identical in Spark and DuckDB.
 
     Plan: one ntile window over (score desc, id asc), one (bucket)
-    aggregate, one ordered window over the n_buckets-row frame. The
+    aggregate, one ordered window over the 10-row frame. The
     global sort is the unavoidable cost of exact deciles (cf. the
     no-global-sort quantile bucketing family for the billions-of-keys
     regime — this operator is for eval-sized scored sets).
@@ -160,7 +159,7 @@ def decile_lift(
     ).filter(F.col("__s").isNotNull() & F.col("__y").isNotNull())
     w = Window.orderBy(F.col("__s").desc(), F.col("__id").asc())
     b = d.select(
-        F.ntile(int(n_buckets)).over(w).cast("long").alias("bucket"), "__y"
+        F.ntile(10).over(w).cast("long").alias("bucket"), "__y"
     )
     per = b.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n"),

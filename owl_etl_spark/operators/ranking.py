@@ -26,15 +26,13 @@ def bm25_topk(
     df: DataFrame,
     terms: list[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Top-k documents by BM25 score for a bag of query ``terms``.
 
     Uses the Lucene-style non-negative idf
     ``ln(1 + (N - df + 0.5) / (df + 0.5))`` and the classic
     saturation/length normalization
-    ``tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))``.
+    ``tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))`` with k1 = 1.2, b = 0.75.
 
     Determinism: idf and the length norm are computed from exact
     BIGINT counts; every double op after that is per-row IEEE, and the
@@ -74,8 +72,8 @@ def bm25_topk(
         .withColumn(
             "contrib",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
+            * (F.col("tf") * (1.2 + 1))
+            / (F.col("tf") + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl"))),
         )
         .groupBy("id")
         # per-term contributions are rounded to integer nano-units and
@@ -103,8 +101,6 @@ def bm25_topk(
 
 def unigram_logprob_score(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document unigram cross-entropy against the corpus's own
     unigram LM — the cheap stand-in for KenLM-style LM filtering
@@ -129,8 +125,8 @@ def unigram_logprob_score(
     from owl_etl_spark.functions.text import normalize_text, tokens
 
     toks = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok"),
+        F.col("doc_id").alias("__id"),
+        F.explode(tokens(normalize_text(F.col("text")))).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__cnt"))
     total = toks.groupBy().agg(F.count(F.lit(1)).alias("__total"))
@@ -148,7 +144,7 @@ def unigram_logprob_score(
         )
     )
     return scored.select(
-        F.col("__id").alias(id_col),
+        F.col("__id").alias("doc_id"),
         "n_tokens",
         "cost_micro_nats",
         F.round(F.col("cost_micro_nats").cast("double") / F.col("n_tokens"))
@@ -159,8 +155,6 @@ def unigram_logprob_score(
 
 def bigram_logprob_score(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document bigram-LM cross-entropy against the corpus's own
     add-one-smoothed bigram model — one rung up the perplexity ladder
@@ -194,7 +188,7 @@ def bigram_logprob_score(
     from owl_etl_spark.functions.text import normalize_text, tokens
 
     toked = df.select(
-        F.col(id_col).alias("__id"), tokens(normalize_text(F.col(text_col))).alias("__a")
+        F.col("doc_id").alias("__id"), tokens(normalize_text(F.col("text"))).alias("__a")
     )
     bigrams = toked.select(
         "__id",
@@ -235,7 +229,7 @@ def bigram_logprob_score(
         )
     )
     return scored.select(
-        F.col("__id").alias(id_col),
+        F.col("__id").alias("doc_id"),
         "n_bigrams",
         "cost_micro_nats",
         F.round(F.col("cost_micro_nats").cast("double") / F.col("n_bigrams"))

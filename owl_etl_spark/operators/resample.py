@@ -37,33 +37,31 @@ def gap_fill(
     df: DataFrame,
     keys: list[str],
     ts_col: str,
-    step: str = "1 hour",
-    trunc_unit: str = "hour",
     aggs: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Dense per-key time grid with zero-filled counts.
 
-    Buckets ``ts_col`` to ``trunc_unit``, aggregates per (keys,
-    bucket), then explodes ``sequence(min_bucket, max_bucket, step)``
+    Buckets ``ts_col`` to the hour, aggregates per (keys,
+    bucket), then explodes ``sequence(min_bucket, max_bucket, interval 1 hour)``
     per key and left-joins the observed aggregates back; missing
     buckets get ``n = 0`` (other aggregates stay null — the caller
     coalesces to a domain-correct default). Each key spans only its
     own [min, max] — the grid never extrapolates.
     """
     aggs = aggs or {}
-    b = F.date_trunc(trunc_unit, F.col(ts_col)).alias("bucket")
+    b = F.date_trunc("hour", F.col(ts_col)).alias("bucket")
     observed = df.groupBy(*keys, b).agg(
         F.count(F.lit(1)).alias("n"), *[c.alias(a) for a, c in aggs.items()]
     )
     grid = (
         df.groupBy(*keys)
         .agg(
-            F.date_trunc(trunc_unit, F.min(ts_col)).alias("__lo"),
-            F.date_trunc(trunc_unit, F.max(ts_col)).alias("__hi"),
+            F.date_trunc("hour", F.min(ts_col)).alias("__lo"),
+            F.date_trunc("hour", F.max(ts_col)).alias("__hi"),
         )
         .select(
             *keys,
-            F.explode(F.expr(f"sequence(__lo, __hi, interval {step})")).alias("bucket"),
+            F.explode(F.expr("sequence(__lo, __hi, interval 1 hour)")).alias("bucket"),
         )
     )
     joined = grid.join(observed, [*keys, "bucket"], "left")
@@ -75,10 +73,9 @@ def rolling_time_agg(
     keys: list[str],
     ts_col: str,
     aggs: dict[str, Column],
-    window_seconds: int = 3600,
 ) -> DataFrame:
     """Trailing time-range aggregates: for every row, ``aggs`` over
-    the key's rows in ``[ts - window_seconds, ts]``.
+    the key's rows in ``[ts - 3600 s, ts]``.
 
     RANGE (not ROWS) framing over integer epoch seconds: all rows at
     the same second are peers and always co-included, making the
@@ -89,7 +86,7 @@ def rolling_time_agg(
     w = (
         Window.partitionBy(*keys)
         .orderBy(sec.alias("__sec"))
-        .rangeBetween(-window_seconds, 0)
+        .rangeBetween(-3600, 0)
     )
     out = df
     for name, col in aggs.items():
@@ -158,7 +155,6 @@ def cumulative_compound(
     keys: list[str],
     order_col: str,
     return_col: str,
-    out_col: str = "compounded",
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Running COMPOUNDED return per key: ``Π (1 + r_i) − 1`` over the
@@ -190,7 +186,7 @@ def cumulative_compound(
     ).cast("long")
     total = F.sum(log_micro).over(w)
     return df.withColumn(
-        out_col,
+        "compounded",
         F.round(F.exp(total.cast("double") / 1_000_000) - 1.0, 6),
     )
 
@@ -215,7 +211,6 @@ def ewma(
     value_col: str,
     alpha: float = 0.25,
     lags: int = 16,
-    out_col: str = "ewma",
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Truncated exponentially weighted moving average per key, in
@@ -261,7 +256,7 @@ def ewma(
     # NULL, not the NaN that 0.0/0.0 would produce — NaN is a different
     # value from null to every consumer (and to the oracle hash).
     return df.withColumn(
-        out_col,
+        "ewma",
         F.when(den > 0, F.round(num.cast("double") / den.cast("double"), 6)),
     )
 
@@ -329,7 +324,6 @@ def rolling_band_flags(
     order_col: str,
     value_col: str,
     window_rows: int = 24,
-    k_sigma: float = 2.0,
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Rolling mean ± k·σ bands over the last ``window_rows`` rows per
@@ -368,7 +362,7 @@ def rolling_band_flags(
         "roll_mean", F.when(ok, F.round(s1 / nw, 6))
     ).withColumn(
         "outside_band",
-        F.coalesce(F.when(ok, dev > F.lit(float(k_sigma)) * std), F.lit(False)),
+        F.coalesce(F.when(ok, dev > F.lit(2.0) * std), F.lit(False)),
     )
 
 

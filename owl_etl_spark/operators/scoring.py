@@ -35,7 +35,6 @@ def rfm_scores(
     key_col: str,
     ts_col: str,
     value_col: str,
-    k: int = 5,
 ) -> DataFrame:
     """One row per key: ``(key, recency, frequency, monetary,
     r_score, f_score, m_score, rfm)``.
@@ -65,10 +64,10 @@ def rfm_scores(
     )
     scored = per_key
     for dim, flip in (("recency", True), ("frequency", False), ("monetary", False)):
-        cuts = collect_cutpoints(exact_rank_cutpoints(per_key, dim, k))
+        cuts = collect_cutpoints(exact_rank_cutpoints(per_key, dim, 5))
         scored = assign_buckets(scored, dim, cuts, bucket_col=f"__b_{dim}")
         expr = (
-            (F.lit(k + 1) - F.col(f"__b_{dim}")) if flip else F.col(f"__b_{dim}")
+            (F.lit(6) - F.col(f"__b_{dim}")) if flip else F.col(f"__b_{dim}")
         )
         scored = scored.withColumn(f"{dim[0]}_score", expr.cast("long"))
     return scored.select(

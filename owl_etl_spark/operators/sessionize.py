@@ -32,23 +32,18 @@ def _epoch_seconds(df: DataFrame, ts_col: str) -> Column:
     return F.col(ts_col).cast("long")
 
 
-def sessionize(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-) -> DataFrame:
+def sessionize(df: DataFrame) -> DataFrame:
     """Assign session ids: a new session starts when the gap since the
-    user's previous event exceeds ``gap_seconds``.
+    user's previous event exceeds 1800 s (30 minutes).
 
     lag → gap flag → running sum = the standard two-window formulation;
     both windows share the same partitioning so Spark plans a single
     shuffle + sort.
     """
-    by_user = Window.partitionBy(user_col).orderBy(ts_col)
-    sec = _epoch_seconds(df, ts_col)
+    by_user = Window.partitionBy("user_id").orderBy("ts")
+    sec = _epoch_seconds(df, "ts")
     prev_sec = F.lag(sec).over(by_user)
-    is_new = F.when(prev_sec.isNull() | (sec - prev_sec > gap_seconds), 1).otherwise(0)
+    is_new = F.when(prev_sec.isNull() | (sec - prev_sec > 1800), 1).otherwise(0)
     return df.withColumn("__new_session", is_new).withColumn(
         "session_id",
         F.sum("__new_session").over(
@@ -57,18 +52,13 @@ def sessionize(
     ).drop("__new_session")
 
 
-def session_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-) -> DataFrame:
+def session_stats(df: DataFrame) -> DataFrame:
     """Sessionize + per-session aggregates (events, span, start/end)."""
-    s = sessionize(df, user_col, ts_col, gap_seconds)
-    sec = _epoch_seconds(s, ts_col)
-    return s.groupBy(user_col, "session_id").agg(
+    s = sessionize(df)
+    sec = _epoch_seconds(s, "ts")
+    return s.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
         (F.max(sec) - F.min(sec)).alias("duration_sec"),
     )

@@ -25,13 +25,13 @@ from owl_etl_spark.functions.hashing import md5_long_seeded
 
 
 def distinct_sketch(
-    df: DataFrame, keys: list[str], value_col: str, lg_k: int = 12
+    df: DataFrame, keys: list[str], value_col: str
 ) -> DataFrame:
     """One HLL sketch per key group over ``value_col`` (binary column
     ``sketch``). Partial aggregation applies — each map task emits one
     sketch per group, the shuffle moves KBs."""
     return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sketch")
+        F.hll_sketch_agg(value_col, F.lit(12)).alias("sketch")
     )
 
 
@@ -171,12 +171,11 @@ def cms_estimate(
     sketch: DataFrame,
     keys: DataFrame,
     key_col: str,
-    depth: int = 4,
     width: int = 4096,
 ) -> DataFrame:
     """Frequency estimates for every key in ``keys`` against a sketch
     built by :func:`cms_build` (same depth/width/seeds). Each key probes
-    its ``depth`` cells via a join against the ≤ depth×width-row sketch
+    its 4 cells (depth 4) via a join against the ≤ depth×width-row sketch
     — broadcast, so estimation is map-only over the candidate keys. A
     key hashing to an untouched cell estimates 0 (coalesce), so probing
     never-seen keys is safe."""
@@ -194,7 +193,7 @@ def cms_estimate(
                             F.lit(width),
                         ).alias("cell"),
                     )
-                    for i in range(depth)
+                    for i in range(4)
                 ]
             )
         ).alias("rc"),
@@ -208,13 +207,12 @@ def cms_estimate(
 def cms_inner_product(
     sketch_a: DataFrame,
     sketch_b: DataFrame,
-    depth: int = 4,
 ) -> DataFrame:
     """Equi-join SIZE estimation from two count-min sketches built with
     the same (depth, width, seeds): |A ⋈_k B| = Σ_k cntA(k)·cntB(k) is
     estimated by min over rows of Σ_cell a[cell]·b[cell] — the classic
     CMS inner-product estimator, biased UP only (collisions add
-    non-negative cross terms; the min over ``depth`` independent rows
+    non-negative cross terms; the min over the 4 independent rows
     trims them).
 
     Why it matters at 100 TB: the estimate prices a join BEFORE running
@@ -227,7 +225,7 @@ def cms_inner_product(
     A sketch row with NO overlapping cells has true dot product 0 and
     MUST participate in the min (otherwise disjoint tables estimate
     NULL and any zero-dot row silently inflates the estimate): the
-    per-row dots left-join a dense 0..depth-1 spine and coalesce to 0."""
+    per-row dots left-join a dense 0..3 spine and coalesce to 0."""
     spark = sketch_a.sparkSession
     a = sketch_a.select("row", "cell", F.col("count").alias("__a"))
     b = sketch_b.select("row", "cell", F.col("count").alias("__b"))
@@ -236,7 +234,7 @@ def cms_inner_product(
         .groupBy("row")
         .agg(F.sum(F.col("__a") * F.col("__b")).alias("__dot"))
     )
-    spine = spark.range(depth).select(F.col("id").cast("int").alias("row"))
+    spine = spark.range(4).select(F.col("id").cast("int").alias("row"))
     dense = spine.join(per_row, "row", "left").select(
         F.coalesce(F.col("__dot"), F.lit(0)).alias("__dot")
     )

@@ -149,15 +149,14 @@ def temperature_mixture(
     key: str | Column,
     stratum_col: str,
     target_total: int,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Temperature-weighted source mixture (the multilingual/
-    multi-source LM sampling rule): per-stratum quotas ∝ n_s^alpha,
-    filled in stable hash order.
+    multi-source LM sampling rule): per-stratum quotas ∝ √n_s (the
+    temperature alpha = 0.5), filled in stable hash order.
 
-    alpha=1 reproduces natural proportions, alpha=0 uniform-per-
-    stratum; 0<alpha<1 up-weights small sources the standard way.
-    Quota_s = floor(target_total · n_s^alpha / Σ_t n_t^alpha); rows
+    alpha=1 would reproduce natural proportions, alpha=0 uniform-per-
+    stratum; alpha=0.5 up-weights small sources the standard way.
+    Quota_s = floor(target_total · √n_s / Σ_t √n_t); rows
     are ranked per stratum by (md5-bucket, key) — the same stable
     hash order every sampler here uses, so regrowing a stratum only
     appends to its keep set's order, and quotas from a different
@@ -171,7 +170,7 @@ def temperature_mixture(
     compatible with this order).
 
     Portability: weights are snapped to integer micro-units
-    (round(1e6·n^alpha) — sqrt for alpha=0.5 is a correctly-rounded
+    (round(1e6·√n) — sqrt is a correctly-rounded
     IEEE op, so the per-stratum rounding is bit-identical on any
     engine) and quotas use pure integer division — no float
     accumulation anywhere, same rule an ANSI oracle can replay
@@ -181,15 +180,10 @@ def temperature_mixture(
     from pyspark.sql import Window
 
     kc = F.col(key) if isinstance(key, str) else key
-    w_expr = (
-        F.sqrt(F.col("__n").cast("double"))
-        if alpha == 0.5
-        else F.pow(F.col("__n").cast("double"), F.lit(float(alpha)))
-    )
     counts = (
         df.groupBy(stratum_col)
         .agg(F.count(F.lit(1)).alias("__n"))
-        .withColumn("__wi", F.round(w_expr * 1_000_000).cast("long"))
+        .withColumn("__wi", F.round(F.sqrt(F.col("__n").cast("double")) * 1_000_000).cast("long"))
     )
     tot = counts.agg(F.sum("__wi").alias("__twi"))
     quotas = (
@@ -216,11 +210,10 @@ def weighted_sample_aes(
     key: str,
     weight_col: str,
     k: int,
-    salt: str = "aes",
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement, k items
     (Efraimidis–Spirakis A-ES): each row draws a stable uniform
-    ``u = (md5(key|salt) + 0.5) / 2^60`` and races with priority
+    ``u = (md5(key|aes) + 0.5) / 2^60`` and races with priority
     ``-ln(u) / w`` — the k SMALLEST priorities are an exact weighted
     sample without replacement (the exponential-race formulation of
     A-ES; u^(1/w) top-k is the same order reversed).
@@ -243,7 +236,7 @@ def weighted_sample_aes(
     Long.MAX_VALUE, NaN → null), quietly corrupting the sample and
     diverging from any oracle replay instead of erroring.
     """
-    u = (md5_long(F.concat(F.col(key).cast("string"), F.lit(f"|{salt}"))) + F.lit(0.5)) / F.lit(
+    u = (md5_long(F.concat(F.col(key).cast("string"), F.lit("|aes"))) + F.lit(0.5)) / F.lit(
         float(1 << 60)
     )
     w = F.col(weight_col).cast("double")

@@ -153,7 +153,6 @@ def page_hinkley(
     df: DataFrame,
     t_col: str,
     value_col: str,
-    delta_micro: int = 0,
     lambda_micro: int | None = None,
 ) -> DataFrame:
     """Page-Hinkley mean-increase detector over a (time, value) series
@@ -191,7 +190,7 @@ def page_hinkley(
     d = d.withColumn("mean_micro", _fd("__cs * 1000000", "__i").cast("long"))
     d = d.withColumn(
         "__term",
-        (F.col("x") * _M - F.col("mean_micro") - int(delta_micro)).cast("long"),
+        (F.col("x") * _M - F.col("mean_micro")).cast("long"),
     )
     d = d.withColumn("m_micro", F.sum("__term").over(w_run).cast("long"))
     d = d.withColumn(

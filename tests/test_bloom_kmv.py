@@ -199,7 +199,7 @@ def test_kmv_jaccard_exact_on_small_sets(spark):
     a = spark.createDataFrame([Row(k=f"x{i}") for i in range(40)])          # x0..x39
     b = spark.createDataFrame([Row(k=f"x{i}") for i in range(20, 60)])      # x20..x59
     r = kmv_jaccard_estimate(
-        kmv_sketch(a, "k", 256), kmv_sketch(b, "k", 256), 256
+        kmv_sketch(a, "k", 256), kmv_sketch(b, "k", 256)
     ).collect()[0]
     # |A∩B| = 20, |A∪B| = 60 → 1/3
     assert r["n_union_sketch"] == 60 and r["n_both"] == 20
@@ -212,7 +212,7 @@ def test_kmv_jaccard_estimator_within_band(spark):
     a = spark.range(0, 6000).select(F.col("id").cast("string").alias("k"))
     b = spark.range(3000, 9000).select(F.col("id").cast("string").alias("k"))
     r = kmv_jaccard_estimate(
-        kmv_sketch(a, "k", 256), kmv_sketch(b, "k", 256), 256
+        kmv_sketch(a, "k", 256), kmv_sketch(b, "k", 256)
     ).collect()[0]
     # true J = 3000/9000 = 1/3; band 3/sqrt(256) ≈ 0.19
     assert abs(r["jaccard_micro"] / 1e6 - 1 / 3) < 0.19
@@ -224,6 +224,6 @@ def test_kmv_jaccard_disjoint_sets_zero(spark):
     a = spark.range(0, 5000).select(F.concat(F.lit("a"), F.col("id")).alias("k"))
     b = spark.range(0, 5000).select(F.concat(F.lit("b"), F.col("id")).alias("k"))
     r = kmv_jaccard_estimate(
-        kmv_sketch(a, "k", 256), kmv_sketch(b, "k", 256), 256
+        kmv_sketch(a, "k", 256), kmv_sketch(b, "k", 256)
     ).collect()[0]
     assert r["n_both"] == 0 and r["jaccard_micro"] == 0

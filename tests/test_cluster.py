@@ -29,7 +29,7 @@ def test_kmeans_and_ivf_recall(spark):
     assert max(r["count"] for r in sizes) < 500
 
     q = em.filter(F.col("vec_id") < 5)
-    bf = {(r.query_id, r.neighbor_id) for r in brute_force_knn(q, em, k=5).collect()}
+    bf = {(r.query_id, r.neighbor_id) for r in brute_force_knn(q, em).collect()}
     ivf = {(r.query_id, r.neighbor_id) for r in ivf_knn(q, em, centroids, k=5, n_probes=3).collect()}
     recall = len(bf & ivf) / len(bf)
     # embeddings are label-clustered by construction; 3-probe IVF should
@@ -117,7 +117,7 @@ def test_pq_fitted_codebooks_recall(spark):
             )
             vid += 1
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cbs = pq_codebooks_fit(df, m=4, ks=20, dim=64, max_iters=3)
+    cbs = pq_codebooks_fit(df, ks=20, dim=64, max_iters=3)
     assert cbs.shape == (4, 20, 16)
     enc = pq_encode(df, cbs, round_digits=6)
     q = df.filter(F.col("vec_id") % 25 == 3)
@@ -161,7 +161,7 @@ def test_pq_rerank_recall_monotone_in_shortlist(spark):
     enc = pq_encode(em, cbs, round_digits=6)
     last = -1.0
     for shortlist in (25, 100, 500):
-        top = pq_rerank_topk(q, em, enc, cbs, k=5, shortlist=shortlist)
+        top = pq_rerank_topk(q, em, enc, cbs, shortlist=shortlist)
         got = {(r.query_id, r.neighbor_id) for r in top.collect()}
         recall = len(got & truth) / len(truth)
         assert recall >= last - 1e-9, f"recall dropped: {last} -> {recall}"
@@ -201,7 +201,7 @@ def test_ivfpq_recovers_planted_clusters(spark):
     resid = assign_clusters(df, cents).withColumn(
         "embedding", _residual_expr("embedding", cents)
     ).select("vec_id", "embedding")
-    cbs = pq_codebooks_fit(resid, m=4, ks=16, dim=64, max_iters=3)
+    cbs = pq_codebooks_fit(resid, ks=16, dim=64, max_iters=3)
     enc = ivfpq_encode(df, cents, cbs, round_digits=6)
     q = df.filter(F.col("vec_id") % 30 == 3)
     top = ivfpq_topk(q, enc, cents, cbs, k=5, n_probes=3)
@@ -317,11 +317,11 @@ def test_pq_rerank_planted_neighbor_recall_gate(spark):
         for nid in np.argsort(d, kind="stable")[:5]:
             truth.add((1_000_000 + qi, int(nid)))
 
-    cbs = pq_codebooks_fit(em, m=4, ks=16, dim=dim)
+    cbs = pq_codebooks_fit(em, ks=16, dim=dim)
     enc = pq_encode(em, cbs, round_digits=6)
     got = {
         (r.query_id, r.neighbor_id)
-        for r in pq_rerank_topk(qs, em, enc, cbs, k=5, shortlist=100).collect()
+        for r in pq_rerank_topk(qs, em, enc, cbs, shortlist=100).collect()
     }
     recall = len(got & truth) / len(truth)
     assert recall >= 0.9, f"planted-neighbor recall@5 {recall} < 0.9"

@@ -310,5 +310,5 @@ def test_centroids_from_ids_and_rounded_ivf(spark):
         (r.query_id, r.neighbor_id)
         for r in ivf_knn(q, em, cent, k=5, n_probes=3, round_digits=6).collect()
     }
-    bf = {(r.query_id, r.neighbor_id) for r in brute_force_knn(q, em, k=5).collect()}
+    bf = {(r.query_id, r.neighbor_id) for r in brute_force_knn(q, em).collect()}
     assert len(ivf & bf) / len(bf) >= 0.5

@@ -317,7 +317,7 @@ def test_gif_frame_sample_stats_spark(spark):
     df = spark.createDataFrame(
         [(d, bytes(b)) for d, b, _ in payloads], "doc_id long, payload binary"
     )
-    rows = {r["doc_id"]: r for r in gif_frame_sample_stats(df, every=2).collect()}
+    rows = {r["doc_id"]: r for r in gif_frame_sample_stats(df).collect()}
     for doc_id, _, vals in payloads:
         r = rows[doc_id]
         sampled = vals[::2]

@@ -158,8 +158,8 @@ def test_knn_lsh_recall_vs_bruteforce(spark):
 
     em = read_table(spark, "/root/testdata/sf0.001", "embeddings")
     q = em.filter(F.col("vec_id") < 5)
-    bf = {(r.query_id, r.neighbor_id) for r in brute_force_knn(q, em, k=5).collect()}
-    ann = {(r.query_id, r.neighbor_id) for r in lsh_knn(q, em, k=5).collect()}
+    bf = {(r.query_id, r.neighbor_id) for r in brute_force_knn(q, em).collect()}
+    ann = {(r.query_id, r.neighbor_id) for r in lsh_knn(q, em).collect()}
     recall = len(bf & ann) / len(bf)
     assert recall >= 0.3, f"suspiciously low LSH recall {recall}"
 
@@ -175,7 +175,7 @@ def test_sessionize_gap_boundary(spark):
         (2, t0),
     ]
     df = spark.createDataFrame(rows, ["user_id", "ts"])
-    out = session_stats(df, gap_seconds=1800).collect()
+    out = session_stats(df).collect()
     by_user = {}
     for r in out:
         by_user.setdefault(r.user_id, []).append(r.n_events)
@@ -396,7 +396,7 @@ def test_rolling_time_agg_hand_check(spark):
     df = spark.createDataFrame(rows, ["user_id", "ts", "value"]).withColumn(
         "ts", F.col("ts").cast("timestamp_ntz")
     )
-    out = rolling_time_agg(df, ["user_id"], "ts", {"s": F.sum("value")}, 3600)
+    out = rolling_time_agg(df, ["user_id"], "ts", {"s": F.sum("value")})
     got = {(r.user_id, str(r.ts)): r.s for r in out.collect()}
     assert got[(1, "2024-01-01 10:00:00")] == 1.0
     assert got[(1, "2024-01-01 10:30:00")] == 3.0
@@ -528,7 +528,7 @@ def test_chunk_tokens_shapes(spark):
         ["doc_id", "text"],
     )
     out = df.select(
-        "doc_id", F.posexplode(chunk_tokens(tokens(F.col("text")), 50, 10))
+        "doc_id", F.posexplode(chunk_tokens(tokens(F.col("text")), 50))
     ).collect()
     by_doc = {}
     for r in out:
@@ -543,7 +543,7 @@ def test_chunk_tokens_shapes(spark):
     c2 = by_doc[1][2][1].split(" ")
     assert c2[0] == "t80" and len(c2) == 40
     with _pytest.raises(ValueError):
-        chunk_tokens(tokens(F.col("text")), 10, 10)
+        chunk_tokens(tokens(F.col("text")), 10)
 
 
 def test_hll_sketch_incremental_merge_consistency(spark):
@@ -715,7 +715,7 @@ def test_containment_pairs_asymmetric(spark):
         [(1, short), (2, long), (3, "completely unrelated content tokens only")],
         ["doc_id", "text"],
     )
-    rows = containment_pairs(df, threshold=0.8).collect()
+    rows = containment_pairs(df).collect()
     directed = {(r.inner_id, r.outer_id) for r in rows}
     assert (1, 2) in directed      # short contained in long
     assert (2, 1) not in directed  # long NOT contained in short

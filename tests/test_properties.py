@@ -64,7 +64,7 @@ def test_descale_matches_python_loop(spark, values):
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i int, v double")
     from owl_etl_spark.functions.numeric import descale_monetary
 
-    got = {r.i: r.d for r in df.select("i", descale_monetary(F.col("v")).alias("d")).collect()}
+    got = {r.i: r.d for r in df.select("i", descale_monetary(F.col("v"), 10).alias("d")).collect()}
     for i, v in enumerate(values):
         expected = _py_descale(v)
         g = got[i]

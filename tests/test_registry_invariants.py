@@ -74,14 +74,15 @@ def test_every_defaulted_keyword_is_passed_somewhere():
     option; one that no call in the repo passes is a knob nobody sets,
     and its default belongs in the body.
 
-    A call passes a keyword if it names it or reaches it by position.
-    Calls are matched by callee name anywhere in ``owl_etl_spark/``,
-    ``__spark_entry__.py``, ``bench.py``, ``tools/``, ``perfbench/`` and
-    ``tests/``. Names defined more than once in scope are skipped, and
-    a call site that passes ``**kwargs`` (or ``*args``) counts as
-    passing every keyword (or position), since the scan cannot see
-    which. ``sources/`` and ``streaming/`` hold deployment settings and
-    are out of scope.
+    A call passes a keyword if it names it or reaches it by position,
+    with any value but a literal equal to the default: a call that
+    spells the default out sets nothing. Calls are matched by callee
+    name anywhere in ``owl_etl_spark/``, ``__spark_entry__.py``,
+    ``bench.py``, ``tools/``, ``perfbench/`` and ``tests/``. Names
+    defined more than once in scope are skipped, and a call site that
+    passes ``**kwargs`` (or ``*args``) counts as passing every keyword
+    (or position), since the scan cannot see which. ``sources/`` and
+    ``streaming/`` hold deployment settings and are out of scope.
     """
     scope = _py_files(
         "owl_etl_spark/operators", "owl_etl_spark/functions", "owl_etl_spark/plans",
@@ -92,7 +93,23 @@ def test_every_defaulted_keyword_is_passed_somewhere():
         for node in ast.parse(path.read_text(encoding="utf-8")).body:
             if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
                 defs[node.name].append((path, node))
-    names, positions = defaultdict(set), defaultdict(int)
+    defaults = {}
+    for name, found in defs.items():
+        a = found[0][1].args
+        pos = a.posonlyargs + a.args
+        defaulted = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+        defaulted += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        defaults[name] = (
+            [p.arg for p in pos], {p.arg: d for p, d in defaulted}
+        )
+
+    def sets(value, default) -> bool:
+        return not (
+            isinstance(value, ast.Constant) and isinstance(default, ast.Constant)
+            and type(value.value) is type(default.value) and value.value == default.value
+        )
+
+    passed = defaultdict(set)
     callers = _py_files(
         "owl_etl_spark", "__spark_entry__.py", "bench.py", "tools", "perfbench", "tests"
     )
@@ -104,21 +121,25 @@ def test_every_defaulted_keyword_is_passed_somewhere():
             name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
             if name not in defs:
                 continue
+            params, dflt = defaults[name]
             if any(k.arg is None for k in call.keywords):
-                names[name].add("**")
-            names[name].update(k.arg for k in call.keywords)
-            starred = any(isinstance(a, ast.Starred) for a in call.args)
-            positions[name] = max(positions[name], 10**6 if starred else len(call.args))
+                passed[name].add("**")
+            passed[name].update(
+                k.arg for k in call.keywords if k.arg not in dflt or sets(k.value, dflt[k.arg])
+            )
+            for i, v in enumerate(call.args):
+                if isinstance(v, ast.Starred):
+                    passed[name].update(params[i:])
+                    break
+                if i < len(params) and (params[i] not in dflt or sets(v, dflt[params[i]])):
+                    passed[name].add(params[i])
     unpassed = []
     for name, found in defs.items():
-        if len(found) > 1 or "**" in names[name]:
+        if len(found) > 1 or "**" in passed[name]:
             continue
         path, node = found[0]
-        a = node.args
-        pos = a.posonlyargs + a.args
-        defaulted = [(i, p.arg) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
-        defaulted += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-        for i, arg in defaulted:
-            if arg not in names[name] and (i is None or i >= positions[name]):
-                unpassed.append(f"{path.relative_to(ROOT)}:{node.lineno} {name}({arg})")
+        unpassed += [
+            f"{path.relative_to(ROOT)}:{node.lineno} {name}({arg})"
+            for arg in defaults[name][1] if arg not in passed[name]
+        ]
     assert unpassed == []

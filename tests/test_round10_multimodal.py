@@ -71,7 +71,7 @@ def test_phash_is_perceptual_planted_near_dups(spark):
     fps = _fp_df(spark, docs)
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in phash_near_dup_pairs(fps, max_hamming=3, bands=4).collect()
+        for r in phash_near_dup_pairs(fps, max_hamming=3).collect()
     }
     assert pairs[(1, 4)] == 0  # exact duplicate
     assert (1, 2) in pairs and pairs[(1, 2)] <= 3  # planted near-dup
@@ -101,7 +101,7 @@ def test_blocking_is_complete_vs_brute_force(spark):
     }
     blocked = {
         (r.id_a, r.id_b): r.hamming
-        for r in phash_near_dup_pairs(fps, max_hamming=3, bands=4).collect()
+        for r in phash_near_dup_pairs(fps, max_hamming=3).collect()
     }
     assert blocked == brute
     assert brute, "corpus planted no Hamming-≤3 pairs — test is vacuous"
@@ -119,7 +119,7 @@ def test_band_rows_shape_and_validation(spark):
     with pytest.raises(ValueError, match="not divisible"):
         phash_band_rows(fps, bands=7)
     with pytest.raises(ValueError, match="complete candidate"):
-        phash_near_dup_pairs(fps, max_hamming=4, bands=4)
+        phash_near_dup_pairs(fps, max_hamming=4)
 
 
 def test_incremental_phash_union_equals_one_shot(spark):
@@ -136,7 +136,7 @@ def test_incremental_phash_union_equals_one_shot(spark):
     fps = _fp_df(spark, docs)
     one_shot = {
         (r.id_a, r.id_b, r.hamming)
-        for r in phash_near_dup_pairs(fps, max_hamming=3, bands=4).collect()
+        for r in phash_near_dup_pairs(fps, max_hamming=3).collect()
     }
     hist = fps.filter(F.col("doc_id") % 3 != 0)
     drop = fps.filter(F.col("doc_id") % 3 == 0)

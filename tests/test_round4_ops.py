@@ -39,7 +39,7 @@ def test_cms_never_undercounts(spark, word_df):
     sketch = cms_build(word_df, "word", depth=4, width=64)
     exact = {r["word"]: r["n"] for r in word_df.groupBy("word").agg(F.count("*").alias("n")).collect()}
     keys = word_df.select("word").distinct()
-    est = {r["word"]: r["est"] for r in cms_estimate(sketch, keys, "word", depth=4, width=64).collect()}
+    est = {r["word"]: r["est"] for r in cms_estimate(sketch, keys, "word", width=64).collect()}
     assert set(est) == set(exact)
     for k in exact:
         assert est[k] >= exact[k], (k, est[k], exact[k])
@@ -51,7 +51,7 @@ def test_cms_exact_when_wide(spark, word_df):
     sketch = cms_build(word_df, "word", depth=4, width=4096)
     exact = {r["word"]: r["n"] for r in word_df.groupBy("word").agg(F.count("*").alias("n")).collect()}
     keys = word_df.select("word").distinct()
-    est = {r["word"]: r["est"] for r in cms_estimate(sketch, keys, "word", depth=4, width=4096).collect()}
+    est = {r["word"]: r["est"] for r in cms_estimate(sketch, keys, "word", width=4096).collect()}
     assert est == exact
 
 
@@ -74,7 +74,7 @@ def test_cms_unseen_key_estimates_safely(spark, word_df):
     estimate (0 when its cells are untouched), never an error/null."""
     sketch = cms_build(word_df, "word", depth=4, width=4096)
     keys = spark.createDataFrame([Row(word="neverseen")])
-    [row] = cms_estimate(sketch, keys, "word", depth=4, width=4096).collect()
+    [row] = cms_estimate(sketch, keys, "word", width=4096).collect()
     assert row["est"] == 0
 
 
@@ -338,7 +338,7 @@ def test_resolve_entities_links_variants_not_strangers(spark):
             Row(id=5, name="Blue Rocket"),     # different block entirely
         ]
     )
-    out = {r["id"]: r["entity_id"] for r in resolve_entities(df, "id", "name", 0.6).collect()}
+    out = {r["id"]: r["entity_id"] for r in resolve_entities(df, "id", "name").collect()}
     assert out[1] == out[2] == out[3] == 1
     assert out[4] != out[1] and out[5] != out[1]
     assert len(out) == 5  # every record labeled, singletons included
@@ -358,7 +358,7 @@ def test_resolve_entities_transitive(spark):
         ]
     )
     edges = {(r["id_a"], r["id_b"]) for r in similarity_edges(df, "id", "name", 0.6).collect()}
-    out = {r["id"]: r["entity_id"] for r in resolve_entities(df, "id", "name", 0.6).collect()}
+    out = {r["id"]: r["entity_id"] for r in resolve_entities(df, "id", "name").collect()}
     assert out[1] == out[2] == out[3] == 1
     assert (1, 3) not in edges  # the chain, not a direct edge, linked them
 

@@ -225,7 +225,7 @@ def test_multi_pass_edges_superset_of_single(spark, typo_entities):
     }
     multi = {
         (r["id_a"], r["id_b"])
-        for r in similarity_edges_multi(typo_entities, "id", "name", 0.6).collect()
+        for r in similarity_edges_multi(typo_entities, "id", "name").collect()
     }
     assert single <= multi
 
@@ -237,7 +237,7 @@ def test_multi_pass_recovers_last_token_typo(spark, typo_entities):
     }
     multi = {
         (r["id_a"], r["id_b"])
-        for r in similarity_edges_multi(typo_entities, "id", "name", 0.6).collect()
+        for r in similarity_edges_multi(typo_entities, "id", "name").collect()
     }
     assert (1, 2) not in single  # the documented single-key miss
     assert (1, 2) in multi  # first-token / squashed-prefix pass blocks it
@@ -249,7 +249,6 @@ def test_multi_pass_keeps_strangers_apart(spark, typo_entities):
         typo_entities,
         "id",
         "name",
-        threshold=0.6,
         passes=("last_token", "first_token", "squashed_prefix"),
     ).collect()
     ent = {r["id"]: r["entity_id"] for r in labels}
@@ -273,7 +272,7 @@ def test_multi_pass_jaccard_identical_across_passes(spark, typo_entities):
     }
     multi = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in similarity_edges_multi(typo_entities, "id", "name", 0.6).collect()
+        for r in similarity_edges_multi(typo_entities, "id", "name").collect()
     }
     for pair, j in single.items():
         assert multi[pair] == j
@@ -527,7 +526,7 @@ def test_benford_zeros_excluded_and_min_n(spark):
     from owl_etl_spark.operators.anomaly import benford_screen
 
     rows = [Row(g="a", v=0)] * 50 + [Row(g="a", v=900)] * 30
-    r = benford_screen(spark.createDataFrame(rows), ["g"], "v", min_n=100).collect()[0]
+    r = benford_screen(spark.createDataFrame(rows), ["g"], "v").collect()[0]
     assert r["n"] == 30  # zeros carry no leading digit
     assert r["flag"] is False  # nonconforming but under min_n — stays quiet
     assert r["digit_counts"][9] == 30

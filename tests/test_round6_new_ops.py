@@ -185,7 +185,7 @@ def test_rfm_scores_flip_and_code(spark):
         for j in range(i + 1):  # frequency = i+1
             rows.append((f"c{i}", 100 + i * 10, (i + 1) * 1000))
     df = spark.createDataFrame(rows, "k string, d long, v long")
-    out = {r.k: r for r in rfm_scores(df, "k", "d", "v", k=5).collect()}
+    out = {r.k: r for r in rfm_scores(df, "k", "d", "v").collect()}
     # c4 has the LATEST activity (d=140) -> recency 0 -> r_score 5;
     # highest frequency and monetary -> 5/5
     assert out["c4"].r_score == 5 and out["c4"].f_score == 5 and out["c4"].m_score == 5
@@ -383,20 +383,20 @@ def test_generalize_prefers_finest_fitting_level(spark):
         {"region": F.substring("city", 1, 1)},
         {"region": F.lit("*")},
     ]
-    rep = {r.gen_level: r for r in generalization_report(df, ladders, k=5).collect()}
+    rep = {r.gen_level: r for r in generalization_report(df, ladders).collect()}
     assert rep[0].n_rows_suppressed == 2
     assert rep[1].n_rows_suppressed == 2   # 'z' group still has 2
     assert rep[2].n_rows_suppressed == 0
     # budget 0 -> must climb to level 2, nothing suppressed
-    out = k_anonymity_generalize(df, ladders, k=5, max_suppressed_rows=0, keep_cols=["id"])
+    out = k_anonymity_generalize(df, ladders, max_suppressed_rows=0, keep_cols=["id"])
     rows_out = out.collect()
     assert len(rows_out) == 30 and all(r.gen_level == 2 for r in rows_out)
     # budget 2 -> level 0 fits, the 2 zz rows suppressed
-    out0 = k_anonymity_generalize(df, ladders, k=5, max_suppressed_rows=2, keep_cols=["id"])
+    out0 = k_anonymity_generalize(df, ladders, max_suppressed_rows=2, keep_cols=["id"])
     rows0 = out0.collect()
     assert len(rows0) == 28 and all(r.gen_level == 0 for r in rows0)
     with pytest.raises(ValueError, match="same columns"):
-        generalization_report(df, [{"region": F.col("city")}, {"other": F.lit(1)}], k=5)
+        generalization_report(df, [{"region": F.col("city")}, {"other": F.lit(1)}])
 
 
 # ---------------------------------------------------------------------------

@@ -270,8 +270,8 @@ def test_pq_fit_sampled_deterministic_and_shaped(spark):
     df = spark.createDataFrame(rows)
     from owl_etl_spark.operators.cluster import pq_codebooks_fit, pq_encode
 
-    cbs1 = pq_codebooks_fit(df, m=4, ks=8, dim=64, sample_rows=150)
-    cbs2 = pq_codebooks_fit(df, m=4, ks=8, dim=64, sample_rows=150)
+    cbs1 = pq_codebooks_fit(df, ks=8, dim=64, sample_rows=150)
+    cbs2 = pq_codebooks_fit(df, ks=8, dim=64, sample_rows=150)
     assert cbs1.shape == (4, 8, 16)
     assert np.array_equal(cbs1, cbs2), "hash-ordered sample fit must be deterministic"
     # encode must produce valid codes for every row

@@ -93,7 +93,7 @@ def test_bigram_costs_exact(spark):
     # letters; vocab V = 2. bigrams: d1: ab, ba, ab; d2: ab.
     # c(ab)=3, c(ba)=1; contexts: c(a·)=3, c(b·)=1.
     df = spark.createDataFrame([(1, "a b a b"), (2, "a b")], ["doc_id", "text"])
-    out = {r["doc_id"]: r for r in bigram_logprob_score(df, "doc_id", "text").collect()}
+    out = {r["doc_id"]: r for r in bigram_logprob_score(df).collect()}
     cost_ab = round(math.log((3 + 2) / (3 + 1)) * 1e6)
     cost_ba = round(math.log((1 + 2) / (1 + 1)) * 1e6)
     assert out[1]["n_bigrams"] == 3
@@ -106,7 +106,7 @@ def test_bigram_short_docs_emit_no_row(spark):
     df = spark.createDataFrame(
         [(1, "hello"), (2, ""), (3, "x y")], ["doc_id", "text"]
     )
-    out = bigram_logprob_score(df, "doc_id", "text").collect()
+    out = bigram_logprob_score(df).collect()
     assert [r["doc_id"] for r in out] == [3]
 
 

@@ -900,7 +900,7 @@ def test_similarity_histogram_counts_pairs(spark):
     # vectors give cosine 1 (top bin), orthogonal pairs give 0.
     rows = [(1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r["bin"]: r["cnt"] for r in similarity_histogram(df, "vec_id", "embedding", 1, n_bins=40).collect()}
+    out = {r["bin"]: r["cnt"] for r in similarity_histogram(df, "vec_id", "embedding", 1).collect()}
     assert sum(out.values()) == 3
     assert out[39] == 1  # the cosine-1 pair clamps into the top bin
     assert out[20] == 2  # the two orthogonal pairs at 0 → bin (0+1e6)//50000 = 20

@@ -140,7 +140,7 @@ def test_affinity_hand_counts(spark):
     )
     got = {
         (r["item"], r["neighbor"]): r
-        for r in cooccurrence_similarity_topk(df, "e", "i", k=5).collect()
+        for r in cooccurrence_similarity_topk(df, "e", "i").collect()
     }
     ab = got[("A", "B")]
     assert (ab["c_item"], ab["c_nbr"], ab["c_both"]) == (3, 2, 2)
@@ -152,7 +152,7 @@ def test_affinity_hand_counts(spark):
     df2 = df.union(spark.createDataFrame([(1, "A")], ["e", "i"]))
     got2 = {
         (r["item"], r["neighbor"]): r["c_both"]
-        for r in cooccurrence_similarity_topk(df2, "e", "i", k=5).collect()
+        for r in cooccurrence_similarity_topk(df2, "e", "i").collect()
     }
     assert got2[("A", "B")] == 2
 
@@ -162,7 +162,7 @@ def test_affinity_max_basket_excludes_entity(spark):
     df = spark.createDataFrame(rows, ["e", "i"])
     got = {
         (r["item"], r["neighbor"]): r["c_both"]
-        for r in cooccurrence_similarity_topk(df, "e", "i", k=5, max_basket=2).collect()
+        for r in cooccurrence_similarity_topk(df, "e", "i", max_basket=2).collect()
     }
     # entity 1 (basket 3 > 2) is excluded entirely: only e2's A-B pair
     assert got == {("A", "B"): 1, ("B", "A"): 1}
@@ -182,7 +182,7 @@ def test_edit_pairs_hand_cases(spark):
         ],
         ["id", "t"],
     )
-    got = {(r["id_a"], r["id_b"]): r["dist"] for r in edit_distance_pairs(df, "id", "t", 2).collect()}
+    got = {(r["id_a"], r["id_b"]): r["dist"] for r in edit_distance_pairs(df, "id", "t").collect()}
     assert got == {(1, 2): 1, (1, 4): 0, (2, 3): 2, (2, 4): 1}
 
 
@@ -190,7 +190,7 @@ def test_edit_pairs_adjacent_length_buckets_once(spark):
     # lengths 5 and 7 sit in adjacent width-3 buckets (1 and 2):
     # the pair must appear exactly once
     df = spark.createDataFrame([(1, "abcde"), (2, "abcdexy")], ["id", "t"])
-    rows = edit_distance_pairs(df, "id", "t", 2).collect()
+    rows = edit_distance_pairs(df, "id", "t").collect()
     assert [(r["id_a"], r["id_b"], r["dist"]) for r in rows] == [(1, 2, 2)]
 
 
@@ -216,7 +216,7 @@ def test_edit_pairs_brute_force_parity(spark):
         if lev(strings[i], strings[j]) <= 2
     }
     df = spark.createDataFrame(list(enumerate(strings)), ["id", "t"])
-    got = {(r["id_a"], r["id_b"]): r["dist"] for r in edit_distance_pairs(df, "id", "t", 2).collect()}
+    got = {(r["id_a"], r["id_b"]): r["dist"] for r in edit_distance_pairs(df, "id", "t").collect()}
     assert got == want
 
 

@@ -81,7 +81,7 @@ def test_xcorr_lag0_matches_plain_corr_and_null_pairs_excluded(spark):
 def test_rrf_hand_scores(spark):
     rows = [("l1", "a", 1), ("l1", "b", 2), ("l2", "b", 1), ("l2", "c", 2)]
     df = spark.createDataFrame(rows, ["lst", "item", "rnk"])
-    got = {r["item"]: r for r in rrf_fuse(df, "lst", "item", "rnk", k=60).collect()}
+    got = {r["item"]: r for r in rrf_fuse(df, "lst", "item", "rnk").collect()}
     assert got["b"]["rrf_nano"] == 10**9 // 61 + 10**9 // 62
     assert got["a"]["rrf_nano"] == 10**9 // 61
     assert got["c"]["rrf_nano"] == 10**9 // 62

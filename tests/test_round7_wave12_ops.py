@@ -24,14 +24,14 @@ def _series(spark, fn, n=70, key="s"):
 
 def test_strength_pure_seasonal(spark):
     df = _series(spark, lambda d: 1000 + 500 * (d % 7 == 3))
-    r = seasonal_strength_report(df, "k", "d", "v", period=7).collect()[0]
+    r = seasonal_strength_report(df, "k", "d", "v").collect()[0]
     assert r.f_seasonal > 0.95
     assert r.f_trend < 0.2
 
 
 def test_strength_pure_trend(spark):
     df = _series(spark, lambda d: 100 * d)
-    r = seasonal_strength_report(df, "k", "d", "v", period=7).collect()[0]
+    r = seasonal_strength_report(df, "k", "d", "v").collect()[0]
     assert r.f_trend > 0.95
     assert r.f_seasonal < 0.6  # linear trend leaves no weekly pattern
 
@@ -41,13 +41,13 @@ def test_strength_noise_scores_low(spark):
 
     rnd = random.Random(2)
     df = _series(spark, lambda d: rnd.randrange(0, 1000))
-    r = seasonal_strength_report(df, "k", "d", "v", period=7).collect()[0]
+    r = seasonal_strength_report(df, "k", "d", "v").collect()[0]
     assert r.f_seasonal < 0.45 and r.f_trend < 0.45
 
 
 def test_strength_edges_excluded(spark):
     df = _series(spark, lambda d: d, n=20)
-    r = seasonal_strength_report(df, "k", "d", "v", period=7).collect()[0]
+    r = seasonal_strength_report(df, "k", "d", "v").collect()[0]
     assert r.n_used == 20 - 6  # 3 rows lost at each edge
 
 

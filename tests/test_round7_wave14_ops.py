@@ -88,7 +88,7 @@ def test_entropy_binning_finds_planted_threshold(spark):
     # on the nearest candidate edge and the leaves must be pure
     rows = [(v, 1 if v >= 500 else 0) for v in range(1000)]
     df = spark.createDataFrame(rows, "v long, y long")
-    out = entropy_binning(df, "v", "y", depth=1, candidates=20, min_size=50).collect()
+    out = entropy_binning(df, "v", "y", depth=1, min_size=50).collect()
     assert len(out) == 2
     lo = next(r for r in out if r.bin_id.endswith("0"))
     hi = next(r for r in out if r.bin_id.endswith("1"))
@@ -99,7 +99,7 @@ def test_entropy_binning_finds_planted_threshold(spark):
 def test_entropy_binning_respects_min_size(spark):
     rows = [(v, v % 2) for v in range(60)]
     df = spark.createDataFrame(rows, "v long, y long")
-    out = entropy_binning(df, "v", "y", depth=3, candidates=20, min_size=50).collect()
+    out = entropy_binning(df, "v", "y", depth=3, min_size=50).collect()
     # 60 rows can never split into two >= 50 halves
     assert len(out) == 1 and out[0].bin_id == "r"
 

@@ -172,7 +172,7 @@ def test_bpe_single_char_words_are_harmless(spark):
 def test_bpe_word_length_guard_raises(spark):
     docs = _docs(spark, ["x" * 40])
     with pytest.raises(Exception, match="max_word_len"):
-        bpe_pair_merges(docs, "text", n_merges=1, max_word_len=32).collect()
+        bpe_pair_merges(docs, "text", n_merges=1).collect()
 
 
 def test_word_freq_symbols_shape(spark):

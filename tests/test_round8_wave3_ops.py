@@ -112,7 +112,7 @@ def test_kmv_diff_exact_regime(spark):
     b = spark.range(60, 160).select(F.col("id").alias("k"))
     sa = kmv_sketch(a, "k", k=256).select("h")
     sb = kmv_sketch(b, "k", k=256).select("h")
-    got = kmv_difference_estimate(sa, sb, k=256).collect()[0]
+    got = kmv_difference_estimate(sa, sb).collect()[0]
     # union (0..159 = 160 keys) fits the sketch: everything is exact
     assert got["n_union_sketch"] == 160
     assert got["n_only_a"] == 60
@@ -124,7 +124,7 @@ def test_kmv_diff_estimate_close_on_large_sets(spark):
     b = spark.range(15_000, 35_000).select(F.col("id").alias("k"))
     sa = kmv_sketch(a, "k", k=256).select("h")
     sb = kmv_sketch(b, "k", k=256).select("h")
-    got = kmv_difference_estimate(sa, sb, k=256).collect()[0]
+    got = kmv_difference_estimate(sa, sb).collect()[0]
     # true |A\B| = 15000, |A∪B| = 35000; error ~ |A∪B|/sqrt(k) ≈ 2200
     assert abs(got["est_diff"] - 15_000) < 6_000, got["est_diff"]
 
@@ -134,10 +134,10 @@ def test_kmv_diff_disjoint_and_subset(spark):
     b = spark.range(200, 250).select(F.col("id").alias("k"))
     sa = kmv_sketch(a, "k", k=256).select("h")
     sb = kmv_sketch(b, "k", k=256).select("h")
-    assert kmv_difference_estimate(sa, sb, k=256).collect()[0]["est_diff"] == 50
+    assert kmv_difference_estimate(sa, sb).collect()[0]["est_diff"] == 50
     # A ⊆ B -> difference 0
     sub = kmv_sketch(spark.range(200, 220).select(F.col("id").alias("k")), "k", k=256).select("h")
-    assert kmv_difference_estimate(sub, sb, k=256).collect()[0]["est_diff"] == 0
+    assert kmv_difference_estimate(sub, sb).collect()[0]["est_diff"] == 0
 
 
 # ---------------------------------------------------------- huber line

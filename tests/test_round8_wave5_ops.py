@@ -100,8 +100,8 @@ def test_sq8_quantize_exact_values(spark):
 def test_sq8_topk_high_recall_vs_exact(spark):
     em = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = em.filter(F.col("vec_id") < 8)
-    exact = brute_force_knn(q, em, k=5)
-    quant = sq8_topk(q, em, k=5)
+    exact = brute_force_knn(q, em)
+    quant = sq8_topk(q, em)
     ex = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     qz = {(r["query_id"], r["neighbor_id"]) for r in quant.collect()}
     recall = len(ex & qz) / len(ex)
@@ -118,6 +118,6 @@ def test_sq8_excludes_zero_vectors_and_self(spark):
         [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0])],
         "vec_id long, embedding array<float>",
     )
-    got = sq8_topk(df.filter(F.col("vec_id") == 1), df, k=5).collect()
+    got = sq8_topk(df.filter(F.col("vec_id") == 1), df).collect()
     ids = {r["neighbor_id"] for r in got}
     assert 1 not in ids and 3 not in ids and 2 in ids

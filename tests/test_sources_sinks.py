@@ -95,7 +95,7 @@ def test_app_tables_favorites(spark):
          (30, "fondoC", "Alternativa", "http://c")],
         ["fic_id", "nombre_fic", "tipo", "url"],
     )
-    rec = seed_recommendations(users, fic, per_user=2)
+    rec = seed_recommendations(users, fic)
     assert rec.count() == 6  # 3 users x first 2 fics
     rep = favorites_report(rec, fic)
     per_user = rep.groupBy("usuario_id").count().collect()

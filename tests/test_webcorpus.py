@@ -89,7 +89,7 @@ def test_dedup_segments_drops_cross_doc_boilerplate(spark):
         (5, "v1 v2 v3 v4 v5 v6 v7 v8"),  # unique doc, untouched
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r.doc_id: r for r in dedup_segments(df, max_df=2).collect()}
+    out = {r.doc_id: r for r in dedup_segments(df).collect()}
     # boilerplate appears in 4 docs (> max_df=2) → dropped everywhere
     assert out[1].clean_text == "u1a u1b u1c u1d u1e u1f u1g u1h"
     assert out[1].n_segments == 2 and out[1].n_dropped == 1
@@ -110,7 +110,7 @@ def test_dedup_segments_keeps_rare_segments_in_order(spark):
         for i in range(3)
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r.doc_id: r for r in dedup_segments(df, max_df=2).collect()}
+    out = {r.doc_id: r for r in dedup_segments(df).collect()}
     for i in range(3):
         toks = rows[i][1].split(" ")
         want = " ".join(toks[:8] + toks[16:])
@@ -127,11 +127,11 @@ def test_temperature_mixture_quotas_and_prefix_order(spark):
 
     rows = [(i, "big") for i in range(10000)] + [(100000 + i, "small") for i in range(100)]
     df = spark.createDataFrame(rows, ["doc_id", "source"])
-    kept = temperature_mixture(df, "doc_id", "source", target_total=220, alpha=0.5)
+    kept = temperature_mixture(df, "doc_id", "source", target_total=220)
     counts = {r.source: r.n for r in kept.groupBy("source").agg(F.count("*").alias("n")).collect()}
     # wi: big=10^7, small=10^6 → quotas 200 and 20
     assert counts == {"big": 200, "small": 20}
-    kept_half = temperature_mixture(df, "doc_id", "source", target_total=110, alpha=0.5)
+    kept_half = temperature_mixture(df, "doc_id", "source", target_total=110)
     a = {r.doc_id for r in kept_half.collect()}
     b = {r.doc_id for r in kept.collect()}
     assert a < b  # strict prefix nesting
