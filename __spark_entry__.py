@@ -36,7 +36,7 @@ from owl_etl_spark.operators.dedup import ngram_jaccard_pairs
 from owl_etl_spark.operators.knn import brute_force_knn, lsh_knn
 from owl_etl_spark.operators.latest import latest_per_key
 from owl_etl_spark.operators.sessionize import session_stats
-from owl_etl_spark.session import release, seal
+from owl_etl_spark.session import core_shuffle_partitions, release, seal
 from owl_etl_spark.sources.readers import read_table
 
 # ---------------------------------------------------------------------------
@@ -853,7 +853,7 @@ def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q23(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup via md5 fingerprint of normalized text (library:
-    operators.dedup.duplicate_clusters). One hash shuffle; at 100 TB
+    functions.text.fingerprint). One hash shuffle; at 100 TB
     this is the mandatory first pass before any fuzzy dedup."""
     d = _t(spark, sf_dir, "documents")
     return (
@@ -1058,7 +1058,7 @@ def _simhash_duck(bits: int = 16) -> str:
     """,
 )
 def q28(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash fingerprints (library: operators.dedup.with_simhash)
+    """16-bit SimHash fingerprints (library: functions.hashing.simhash_sql)
     — near-dup bucketing key; intra-row, shuffle-free."""
     from owl_etl_spark.functions.hashing import simhash_sql
 
@@ -1097,18 +1097,15 @@ def q29(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs.
 
     Registered form: the xxhash64-keyed inverted-index join — chosen
-    by MEASUREMENT, not doctrine. Both variants were timed head-to-head
-    at sf0.1 (5k docs, 27k distinct shingles, threshold 0.5): the
-    long-keyed join runs 4.8 s; the prefix-filtered AllPairs variant
-    (``ngram_jaccard_pairs_prefix``, identical output, pinned by
-    tests/test_operators.py::test_ngram_jaccard_prefix_equals_naive)
-    runs 12.1 s, because t=0.5 on 52-shingle docs keeps HALF of all
-    postings in the prefix (weak pruning) while paying 5 shuffles +
-    409k-candidate exact verification vs the join's 2 shuffles. The
-    crossover favors the prefix/LSH forms on Zipfian real-text corpora
-    where hot-shingle df² dominates; for those, compose
-    ``ngram_jaccard_pairs_prefix`` or ``near_dup_dedup`` (LSH+verify)
-    instead."""
+    by MEASUREMENT, not doctrine. A prefix-filtered AllPairs variant
+    with identical output was timed head-to-head at sf0.1 (5k docs,
+    27k distinct shingles, threshold 0.5): the long-keyed join ran
+    4.8 s, the prefix variant 12.1 s, because t=0.5 on 52-shingle docs
+    keeps HALF of all postings in the prefix (weak pruning) while
+    paying 5 shuffles + 409k-candidate exact verification vs the
+    join's 2 shuffles; the variant has since been deleted. On Zipfian
+    real-text corpora where hot-shingle df² dominates, compose
+    ``minhash_lsh_pairs`` with exact verification instead."""
     d = _t(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(d, threshold=0.5)
 
@@ -1323,7 +1320,7 @@ def q34(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.dedup import minhash_lsh_pairs
 
     d = _t(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(d, "doc_id", "text", num_hashes=16, bands=8)
+    return minhash_lsh_pairs(d, bands=8)
 
 
 @_register(
@@ -2508,7 +2505,7 @@ def q62(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.knn import random_hyperplane_bucket
 
     em = _t(spark, sf_dir, "embeddings")
-    bucketed = random_hyperplane_bucket(em, num_planes=4)
+    bucketed = random_hyperplane_bucket(em)
     return embedding_near_dup_pairs(bucketed, block_col="lsh_bucket", threshold=0.2)
 
 
@@ -2976,7 +2973,7 @@ def q75(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 97 == 0)
     train = d.filter(F.col("doc_id") % 97 != 0)
-    _, contaminated = decontaminate(train, bench, min_shared=3)
+    _, contaminated = decontaminate(train, bench)
     return contaminated.select("doc_id", "source", "n_shared")
 
 
@@ -4023,7 +4020,7 @@ def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.dedup import connected_components, minhash_lsh_pairs
 
     d = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(d, "doc_id", "text", num_hashes=16, bands=8)
+    pairs = minhash_lsh_pairs(d, bands=8)
     return connected_components(pairs, d.select("doc_id"), "doc_id")
 
 
@@ -4801,18 +4798,8 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _Q110_RUNS[0] += 1
     name = f"q110_sink_{_Q110_RUNS[0]}"
-    # State-store partition count is fixed at checkpoint creation from
-    # spark.sql.shuffle.partitions; a stream-stream join keeps FOUR
-    # stores per partition, so an un-tuned 200-partition session pays
-    # ~800 store commits per micro-batch regardless of data volume.
-    # Pin this run's (fresh, throwaway) checkpoint to the session's
-    # core count — on a cluster defaultParallelism is total cores, so
-    # the same line sizes up unchanged — and restore after.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    # the throwaway checkpoint's state stores, sized to the cores
+    with core_shuffle_partitions(spark):
         q = (
             joined.writeStream.format("memory")
             .queryName(name)
@@ -4821,8 +4808,6 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     def _utc_str(col: str):
         ntz = F.expr(
@@ -5484,7 +5469,7 @@ def q118(spark: SparkSession, sf_dir: str) -> DataFrame:
     em = _t(spark, sf_dir, "embeddings")
     cents = centroids_from_ids(em, _Q118_CC_IDS)
     cbs = pq_codebooks_from_ids(em, _Q118_CB_IDS, m=_Q118_M)
-    encoded = ivfpq_encode(em, cents, cbs, round_digits=6)
+    encoded = ivfpq_encode(em, cents, cbs)
     return ivfpq_topk(
         em.filter(F.col("vec_id") < 5),
         encoded,
@@ -6022,17 +6007,9 @@ def q126(spark: SparkSession, sf_dir: str) -> DataFrame:
     sess = sessionize_stateful(src, "user_id", "ts", gap_seconds=1800)
     _Q126_RUNS[0] += 1
     name = f"q126_sink_{_Q126_RUNS[0]}"
-    # Pin this run's (fresh, throwaway) checkpoint's state-store
-    # partition count to the session's core count: it is fixed at
-    # checkpoint creation from spark.sql.shuffle.partitions, and an
-    # un-tuned 200-partition session pays 200 store commits per
-    # micro-batch for a keyspace this size (the emission contract is
-    # watermark-global, so the partition count never changes results).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    # the throwaway checkpoint's state stores, sized to the cores (the
+    # emission contract is watermark-global: partition-independent)
+    with core_shuffle_partitions(spark):
         q = (
             sess.writeStream.format("memory")
             .queryName(name)
@@ -6041,8 +6018,6 @@ def q126(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     # session boundaries arrive as epoch-ms longs (TZ-proof by
     # construction — see _SESSION_OUT); render via the NTZ rebuild
@@ -6187,7 +6162,7 @@ def q128(spark: SparkSession, sf_dir: str) -> DataFrame:
     from owl_etl_spark.operators.linkage import select_canonical
 
     d = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(d, "doc_id", "text", num_hashes=16, bands=8)
+    pairs = minhash_lsh_pairs(d, bands=8)
     labels = connected_components(pairs, d.select("doc_id"), "doc_id")
     surv = select_canonical(
         d.select("doc_id", "n_chars"),
@@ -10342,14 +10317,9 @@ def q199(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = streaming_histogram(src, ["event_type"], "cents", lo=0, hi=10000, n_bins=50)
     _Q199_RUNS[0] += 1
     name = f"q199_sink_{_Q199_RUNS[0]}"
-    # Pin the throwaway checkpoint's state-store partition count (set
-    # at creation from spark.sql.shuffle.partitions) to the session's
-    # cores; histogram counts are exact sums, partition-independent.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    # the throwaway checkpoint's state stores, sized to the cores
+    # (histogram counts are exact sums, partition-independent)
+    with core_shuffle_partitions(spark):
         q = (
             sk.writeStream.format("memory")
             .queryName(name)
@@ -10358,8 +10328,6 @@ def q199(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     final = spark.table(name).select(
         "event_type", "bin", F.col("cnt").cast("long").alias("cnt")
     )
@@ -16927,10 +16895,10 @@ def q296(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop2 = d.filter(F.col("doc_id") % 3 == 0)
     cat = session_catalog()
     store_name = f"q296_lsh_sigs_{sf_tag(sf_dir)}"
-    sigs1 = minhash_band_signatures(drop1, "doc_id", "text", num_hashes=16, bands=8)
+    sigs1 = minhash_band_signatures(drop1, bands=8)
     cat.write_drop(sigs1, store_name, ["band", "sig"], "history")
     store = cat.read(spark, store_name)
-    sigs2 = minhash_band_signatures(drop2, "doc_id", "text", num_hashes=16, bands=8)
+    sigs2 = minhash_band_signatures(drop2, bands=8)
     pairs2 = incremental_lsh_pairs(sigs2, store)
     # Round 12 (guide §2.1): history's within-drop pairs expand from the
     # STORE read-back, not a second signing pass over drop 1 — the store
@@ -17929,14 +17897,9 @@ def q308(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = streaming_cms(src, "user_id", depth=4, width=1024)
     _Q308_RUNS[0] += 1
     name = f"q308_sink_{_Q308_RUNS[0]}"
-    # Pin the throwaway checkpoint's state-store partition count (set
-    # at creation from spark.sql.shuffle.partitions) to the session's
-    # cores; CMS cells are exact sums, partition-independent.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    # the throwaway checkpoint's state stores, sized to the cores
+    # (CMS cells are exact sums, partition-independent)
+    with core_shuffle_partitions(spark):
         q = (
             sk.writeStream.format("memory")
             .queryName(name)
@@ -17945,8 +17908,6 @@ def q308(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     sketch = spark.table(name)
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     cand = spark.range(20).select(F.col("id").alias("user_id"))
@@ -18058,14 +18019,9 @@ def q309(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = streaming_hll(src, ["event_type"], "user_id", p=_Q309_P)
     _Q309_RUNS[0] += 1
     name = f"q309_sink_{_Q309_RUNS[0]}"
-    # Pin the throwaway checkpoint's state-store partition count (set
-    # at creation from spark.sql.shuffle.partitions) to the session's
-    # cores; HLL registers are maxes, partition-independent.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    # the throwaway checkpoint's state stores, sized to the cores
+    # (HLL registers are maxes, partition-independent)
+    with core_shuffle_partitions(spark):
         q = (
             sk.writeStream.format("memory")
             .queryName(name)
@@ -18074,8 +18030,6 @@ def q309(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     final = spark.table(name).select("event_type", "register", "max_rho")
     out = hll_registers_estimate(final, ["event_type"], p=_Q309_P)
     spark.catalog.dropTempView(name)
@@ -18175,15 +18129,8 @@ def q310(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem")
     pc = _copurchase_pair_counts(li)
-    # The level loop materializes eagerly (a seal per level —
-    # an RDD-path action AQE cannot coalesce); pin the iterative phase
-    # to the session's core count so an un-tuned 200-partition session
-    # doesn't pay hundreds of near-empty tasks per level.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    # the level loop seals once per level
+    with core_shuffle_partitions(spark):
         # Round 13: seal the edge frame ONCE, and derive the seed set
         # from the SEALED frame — the unsealed seeds plan was measured
         # re-running the whole co-purchase aggregation a second time
@@ -18201,8 +18148,6 @@ def q310(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = betweenness_seeded(
             edges, seeds, n_levels=_Q310_LEVELS, edges_sealed=True
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return out.select(F.col("node").alias("part_key"), "betweenness_micro")
 
 
@@ -18248,16 +18193,9 @@ def q311(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop2 = d.filter(F.col("doc_id") % 3 == 0)
     cat = session_catalog()
     tag = sf_tag(sf_dir)
-    # The whole body is eager (store writes + per-round sealed
-    # label loops — RDD-path actions AQE cannot coalesce); pin it to
-    # the session's core count so an un-tuned 200-partition session
-    # doesn't pay hundreds of near-empty tasks per round.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        sigs1 = minhash_band_signatures(drop1, "doc_id", "text", num_hashes=16, bands=8)
+    # the whole body is eager: store writes and per-round sealed label loops
+    with core_shuffle_partitions(spark):
+        sigs1 = minhash_band_signatures(drop1, bands=8)
         cat.write_drop(sigs1, f"q311_lsh_sigs_{tag}", ["band", "sig"], "history")
         labels1 = connected_components(
             incremental_lsh_pairs(sigs1, None), drop1.select("doc_id")
@@ -18265,11 +18203,9 @@ def q311(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.write_drop(labels1, f"q311_components_{tag}", ["doc_id"], "history")
         sig_store = cat.read(spark, f"q311_lsh_sigs_{tag}")
         label_store = cat.read(spark, f"q311_components_{tag}")
-        sigs2 = minhash_band_signatures(drop2, "doc_id", "text", num_hashes=16, bands=8)
+        sigs2 = minhash_band_signatures(drop2, bands=8)
         pairs2 = incremental_lsh_pairs(sigs2, sig_store)
         out = seal(incremental_components(label_store, pairs2, drop2.select("doc_id")))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return out
 
 
@@ -19040,21 +18976,11 @@ def q322(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(d, num_hashes=16, bands=8)
-    # connected_components materializes eagerly (per-round
-    # localCheckpoint — an RDD-path action AQE cannot coalesce), so on
-    # an un-tuned 200-partition session every round pays hundreds of
-    # near-empty tasks. Pin the iterative phase to the session's core
-    # count (labels are a min-fold: partitioning never changes them)
-    # and restore before the lazy rollup below, which AQE handles.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    pairs = minhash_lsh_pairs(d, bands=8)
+    # connected_components seals every round (labels are a min-fold:
+    # partitioning never changes them); the lazy rollup below is AQE's
+    with core_shuffle_partitions(spark):
         comp = connected_components(pairs, d.select("doc_id"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     tok = d.select(
         "doc_id",
         "source",
@@ -19322,14 +19248,10 @@ def q324(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinning shuffle partitions to the core count was MEASURED slower
     # here (12.3s vs 8.0s sweep, 3 runs) because coarse tasks lose the
     # load-balance slack; the session default + AQE is the right call.
-    sigs_store = minhash_band_signatures(
-        store_docs, "doc_id", "text", num_hashes=16, bands=8
-    )
+    sigs_store = minhash_band_signatures(store_docs, bands=8)
     cat.write_drop(sigs_store, f"q324_lsh_sigs_{tag}", ["band", "sig"], "history")
     store = cat.read(spark, f"q324_lsh_sigs_{tag}")
-    sigs_new = minhash_band_signatures(
-        exact_docs, "doc_id", "text", num_hashes=16, bands=8
-    )
+    sigs_new = minhash_band_signatures(exact_docs, bands=8)
     pairs = incremental_lsh_pairs(sigs_new, store)
 
     # Greedy removal over (id_a < id_b) pairs: the higher id of a
@@ -19474,19 +19396,11 @@ def q325(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # The remaining stages (banding + shingle-intersection + signature
-    # joins) are pair-list-sized; run them eagerly under a core-count
-    # partition
-    # pin (tiny tasks, overhead-dominated — unlike q324's
-    # compute-dense store signing) so the gate's lazy collect only
-    # pays a 16-row agg.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    # joins) are pair-list-sized and overhead-dominated, unlike q324's
+    # compute-dense store signing; run them eagerly at the core count
+    # so the gate's lazy collect only pays a 16-row agg.
+    with core_shuffle_partitions(spark):
         scored = _q325_scored(spark, d, sigs)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return scored.groupBy("n_agree").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.round(F.avg("jm")).cast("long").alias("mean_jaccard_micro"),
@@ -19772,9 +19686,7 @@ def q328(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     out = None
     for k, label in enumerate(["m0", "m1", "m2"]):
-        sigs = minhash_band_signatures(
-            d.filter(F.col("doc_id") % 3 == k), "doc_id", "text", num_hashes=16, bands=8
-        )
+        sigs = minhash_band_signatures(d.filter(F.col("doc_id") % 3 == k), bands=8)
         store = cat.read(spark, name) if cat.exists(name) else None
         # materialize this month's pairs BEFORE the store gains the
         # month's own signatures (the read is lazy; the law needs the
@@ -22007,15 +21919,8 @@ def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = [f"m{k:02d}" for k in range(12)]
     out = None
     # 12 sequential monthly loads, each a handful of small shuffles and
-    # a seal: pin shuffle width to core count for the
-    # iterative phase (a seal freezes pre-AQE partitioning, so
-    # the session default of 200 would cost 12×(stages×200) empty
-    # tasks) — the q310 save/restore discipline.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    # a seal
+    with core_shuffle_partitions(spark):
         # Round 13 (guide §2.6/§1.2): months' pair probes SEAL once per
         # compaction window, not once per month. Each month's probe
         # frame stays lazy but is pinned to the PRE-append store: the
@@ -22054,10 +21959,7 @@ def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
             # materialization replaces a second signing pass, twelve
             # times.
             sigs = seal(
-                minhash_band_signatures(
-                    d.filter(F.col("doc_id") % 12 == k), "doc_id", "text",
-                    num_hashes=16, bands=8,
-                )
+                minhash_band_signatures(d.filter(F.col("doc_id") % 12 == k), bands=8)
             )
             window_sigs.append(sigs)
             store = cat.read(spark, name) if cat.exists(name) else None
@@ -22070,8 +21972,6 @@ def q358(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for back in labels[k - 3 : k + 1]:
                     cat.compact_drop(spark, name, back)
         out = _seal_window(out)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     man = cat.manifest(name)
     # the row-count leg re-counts from PARQUET (the on-disk truth a
     # probe actually joins), not from the manifest's own arithmetic —

@@ -526,7 +526,7 @@ def _ann_scenario(sparksession, sf_dir: str) -> dict[str, float]:
     cents = centroids_from_ids(em, [20, 80, 140, 200, 260, 320, 380, 440])
     cbs = pq_codebooks_from_ids(em, [10, 70, 130, 190, 250, 310, 370, 430], m=4)
     encoded_pq = pq_encode(em, cbs, round_digits=6).localCheckpoint()
-    encoded_ivfpq = ivfpq_encode(em, cents, cbs, round_digits=6).localCheckpoint()
+    encoded_ivfpq = ivfpq_encode(em, cents, cbs).localCheckpoint()
 
     for label, fn in (
         ("pq_adc", lambda: pq_adc_topk(qs, encoded_pq, cbs, k=5)),
@@ -635,7 +635,7 @@ def _ann_clustered_scenario(sparksession) -> dict[str, float]:
     )
 
     encoded_pq = pq_encode(em, cbs, round_digits=6).localCheckpoint()
-    encoded_ivfpq = ivfpq_encode(em, cents, cbs, round_digits=6).localCheckpoint()
+    encoded_ivfpq = ivfpq_encode(em, cents, cbs).localCheckpoint()
 
     for label, fn in (
         ("pq_adc", lambda: pq_adc_topk(qs, encoded_pq, cbs, k=5)),
@@ -1403,8 +1403,7 @@ def _scale_stress_scenario(
             meas_name = f"bench_probe_meas_{sf_tag(work)}"
             cat.reset(meas_name)
             all_sigs = minhash_band_signatures(
-                sparksession.read.parquet(f"{work}/documents.parquet"),
-                "doc_id", "text", num_hashes=16, bands=8,
+                sparksession.read.parquet(f"{work}/documents.parquet"), bands=8
             )
             cat.write_drop(
                 all_sigs, meas_name, ["band", "sig"], "m0", target_partitions=64
@@ -1426,7 +1425,7 @@ def _scale_stress_scenario(
             ):
                 by_band: dict[int, list[str]] = {}
                 for r in (
-                    minhash_band_signatures(probe, "doc_id", "text", num_hashes=16, bands=8)
+                    minhash_band_signatures(probe, bands=8)
                     .select("band", "sig")
                     .distinct()
                     .collect()

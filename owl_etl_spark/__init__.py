@@ -8,7 +8,7 @@ columns, text analysis).
 
 Design principles (see SURVEY.md §7):
 - every operator is a function ``DataFrame -> DataFrame`` (or a pure
-  ``Column`` expression), composable with ``plans.Pipeline``;
+  ``Column`` expression), composable by plain function application;
 - declarative first: built-in ``pyspark.sql.functions`` and
   higher-order array functions so Catalyst/Tungsten keep the whole
   plan inside WholeStageCodegen; Python UDFs only where semantics

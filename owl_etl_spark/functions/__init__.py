@@ -1,3 +1,3 @@
-from owl_etl_spark.functions import dates, hashing, numeric, similarity, text, urls, zorder
+from owl_etl_spark.functions import dates, hashing, numeric, similarity, text, urls
 
-__all__ = ["dates", "hashing", "numeric", "similarity", "text", "urls", "zorder"]
+__all__ = ["dates", "hashing", "numeric", "similarity", "text", "urls"]

@@ -68,26 +68,25 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     )
 
 
-def char_ngrams(col: Column, n: int = 5) -> Column:
-    """Character n-grams of the normalized text (for fuzzy dedup)."""
-    s = normalize_text(col)
-    return F.expr(
-        f"""CASE WHEN length({_sql(s)}) <= {n} THEN array({_sql(s)})
-             ELSE transform(sequence(1, length({_sql(s)}) - {n} + 1),
-                            i -> substring({_sql(s)}, i, {n})) END"""
-    )
-
-
 def _sql(col: Column) -> str:
-    # Column → SQL text for embedding in expression text. Column
-    # references, function calls and F.expr columns render as parseable
-    # SQL; arithmetic built with Python operators does not (it renders
-    # as e.g. "*(a, 2.5)"), so wrappers built on this take the former.
+    # Column → SQL text for embedding in expression text. A Column's own
+    # rendering is kept when it parses (it spells F.expr text verbatim,
+    # lambdas included); operators built in Python render as e.g.
+    # "*(a, 2.5)", which does not, and take Catalyst's rendering instead
+    # ("`*`(a, 2.5D)", which also keeps the literal a double).
+    from pyspark.errors import ParseException
+    from pyspark.sql import SparkSession
     from pyspark.sql.classic.column import Column as ClassicColumn
 
-    if isinstance(col, ClassicColumn):
-        return col._jc.toString()
-    raise TypeError("expected a classic Column")
+    if not isinstance(col, ClassicColumn):
+        raise TypeError("expected a classic Column")
+    text = col._jc.toString()
+    jspark = SparkSession.active()._jsparkSession
+    try:
+        jspark.sessionState().sqlParser().parseExpression(text)
+    except ParseException:
+        return jspark.expression(col._jc).sql()
+    return text
 
 
 def sql_str(value: str) -> str:
@@ -252,15 +251,6 @@ def redact(col: Column, patterns: dict[str, str] | None = None) -> Column:
     for pat in (patterns or REDACTION_PATTERNS).values():
         out = F.regexp_replace(out, pat, "[REDACTED]")
     return out
-
-
-def clean_text(col: Column) -> Column:
-    """Canonical corpus cleaning: strip simple markup tags, collapse
-    entities and whitespace, trim. Deliberately conservative — cleaning
-    that alters token content belongs in explicit operators."""
-    out = F.regexp_replace(col, r"<[^>]{1,200}>", " ")     # tags
-    out = F.regexp_replace(out, r"&[a-z]{2,6};", " ")      # entities
-    return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
 def chunk_tokens(tokens_col: Column, size: int = 50) -> Column:

@@ -1,10 +1,9 @@
-from owl_etl_spark.operators.latest import latest_per_key, scd2_history, upsert_by_recency
+from owl_etl_spark.operators.latest import latest_per_key, scd2_history
 from owl_etl_spark.operators.quality import anti_filter, repair_structure, split_by_predicate
 from owl_etl_spark.operators.sessionize import sessionize
 from owl_etl_spark.operators.split import (
     hash_split,
     per_key_cap,
-    sample_by_hash,
     stratified_sample_exact,
     temperature_mixture,
     weighted_mixture,
@@ -17,11 +16,9 @@ __all__ = [
     "temperature_mixture",
     "latest_per_key",
     "repair_structure",
-    "sample_by_hash",
     "scd2_history",
     "sessionize",
     "split_by_predicate",
     "stratified_sample_exact",
-    "upsert_by_recency",
     "weighted_mixture",
 ]

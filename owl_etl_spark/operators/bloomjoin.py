@@ -33,8 +33,6 @@ key set no longer fits a broadcast list.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -46,26 +44,6 @@ _BLOOM_SEED_BASE = 9_000
 #: Bits packed per BIGINT word — 32, not 64, so the highest mask is
 #: 2^31 and the sign bit stays untouched in every engine.
 BITS_PER_WORD = 32
-
-
-def bloom_params(n_items: int, fpp: float) -> tuple[int, int]:
-    """Derive ``(n_bits, k)`` from the standard Bloom accuracy
-    contract so callers state their tolerance instead of hand-picking:
-    ``n_bits = ceil(-n·ln(p) / ln(2)²)`` rounded up to a whole number
-    of 32-bit words, ``k = round(n_bits/n · ln 2)`` (≥ 1).
-
-    >>> bloom_params(10_000, 0.01)   # 1% false positives
-    (95872, 7)
-    """
-    if n_items <= 0 or not (0 < fpp < 1):
-        raise ValueError(
-            f"bloom_params: need n_items > 0 and 0 < fpp < 1, "
-            f"got n_items={n_items!r} fpp={fpp!r}"
-        )
-    n_bits = math.ceil(-n_items * math.log(fpp) / (math.log(2) ** 2))
-    n_bits = ((n_bits + BITS_PER_WORD - 1) // BITS_PER_WORD) * BITS_PER_WORD
-    k = max(1, round(n_bits / n_items * math.log(2)))
-    return n_bits, k
 
 
 def _positions(key: Column, n_bits: int, k: int) -> list[Column]:

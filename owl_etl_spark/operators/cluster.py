@@ -520,7 +520,6 @@ def ivfpq_encode(
     df: DataFrame,
     centroids: np.ndarray,
     codebooks: np.ndarray,
-    round_digits: int | None = None,
 ) -> DataFrame:
     """The full IVF-PQ index build as ONE map-only pass: coarse-assign
     each vector to its nearest centroid (the inverted-list key),
@@ -534,12 +533,13 @@ def ivfpq_encode(
     partitionable BY cluster_id so each probe reads only its inverted
     list's files (partition pruning does the 'inverted index' for
     free). Everything is literal-broadcast codegen'd expressions: no
-    UDF, no shuffle, no driver data."""
-    assigned = assign_clusters(df, centroids, round_digits=round_digits)
+    UDF, no shuffle, no driver data. Distances are rounded to 6 digits
+    before every argmin, so near-ties resolve the same on any engine."""
+    assigned = assign_clusters(df, centroids, round_digits=6)
     with_resid = assigned.withColumn(
         "__resid", _residual_expr("embedding", centroids, "cluster_id")
     )
-    return pq_encode(with_resid, codebooks, vec_col="__resid", round_digits=round_digits).drop(
+    return pq_encode(with_resid, codebooks, vec_col="__resid", round_digits=6).drop(
         "__resid"
     )
 

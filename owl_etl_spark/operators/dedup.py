@@ -1,15 +1,15 @@
 """Deduplication operators for training-data pipelines.
 
-Exact (hash groupBy), MinHash+LSH, SimHash buckets, n-gram Jaccard,
-and embedding-cosine near-dup. These extend the reference (whose only
-dedup is latest-per-key, SURVEY.md W1) with the operators a 100 TB
-text corpus needs.
+MinHash+LSH, n-gram Jaccard, winnowing containment and embedding-cosine
+near-dup pairs, and connected components over them. These extend the
+reference (whose only dedup is latest-per-key, SURVEY.md W1) with the
+operators a 100 TB text corpus needs.
 
 Scale design:
 - signatures/fingerprints are computed intra-row with higher-order
   functions — zero shuffle until the candidate join;
 - candidate generation always goes through a *bucket equi-join*
-  (LSH band or SimHash prefix), never an all-pairs cross join; the
+  (LSH band or embedding cluster), never an all-pairs cross join; the
   exact verifier (Jaccard/cosine) runs only on candidates;
 - the all-pairs ``ngram_jaccard_pairs`` is the small-data oracle
   baseline and deliberately documents its O(n·d²) blowup.
@@ -25,9 +25,8 @@ from owl_etl_spark.functions.hashing import (
     md5_long,
     minhash_coeffs,
     minhash_signature_sql,
-    simhash_sql,
 )
-from owl_etl_spark.functions.text import shingle_chain_sql
+from owl_etl_spark.functions.text import normalize_text, shingle_chain_sql
 from owl_etl_spark.session import (
     bounded_collect,
     iterate,
@@ -37,30 +36,6 @@ from owl_etl_spark.session import (
     sealed,
     spread_for_cpu,
 )
-from owl_etl_spark.functions.text import fingerprint, normalize_text
-
-
-def dedup_exact(df: DataFrame) -> DataFrame:
-    """Exact dedup on normalized text: one survivor (min id) per
-    fingerprint. Single hash-shuffle on the md5 fingerprint."""
-    return (
-        df.withColumn("__fp", fingerprint(F.col("text")))
-        .groupBy("__fp")
-        .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("dup_count"))
-        .drop("__fp")
-    )
-
-
-def duplicate_clusters(df: DataFrame) -> DataFrame:
-    """Fingerprint → cluster of ids + size; clusters of 1 are unique docs."""
-    return (
-        df.withColumn("fingerprint", fingerprint(F.col("text")))
-        .groupBy("fingerprint")
-        .agg(
-            F.sort_array(F.collect_list("doc_id")).alias("ids"),
-            F.count(F.lit(1)).alias("cluster_size"),
-        )
-    )
 
 
 def with_minhash(
@@ -162,21 +137,15 @@ def _chunked_pair_expansion(
     )
 
 
-def minhash_band_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """``(id, band, sig)`` band-signature rows — the persistable half
+def minhash_band_signatures(df: DataFrame, bands: int = 4) -> DataFrame:
+    """``(doc_id, band, sig)`` band-signature rows of ``text`` (16
+    hashes over word 3-shingles) — the persistable half
     of MinHash-LSH, shared by the one-shot pair finder
     (:func:`minhash_lsh_pairs`) and the incremental cross-drop path
     (:func:`incremental_lsh_pairs`), which stores these rows between
     drops instead of recomputing the whole corpus each month.
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = 16 // bands
     # Repartition BEFORE the signature stage: a small text corpus often
     # arrives as one scan partition, which would serialize the CPU-heavy
     # md5 work onto a single task. Round 12: with an EXPLICIT width —
@@ -185,9 +154,9 @@ def minhash_band_signatures(
     # this exchange exists to spread (q296's signature chain profiled
     # as a string of 1-task stages). spread_for_cpu is a no-op when the
     # scan already carries enough partitions (the 100 TB case).
-    spread = spread_for_cpu(df.select(id_col, text_col), by=F.col(id_col))
+    spread = spread_for_cpu(df.select("doc_id", "text"), by=F.col("doc_id"))
     # Signatures via explode → md5 once per distinct shingle → groupBy
-    # id with num_hashes affine MIN aggregates. Everything runs in
+    # id with 16 affine MIN aggregates. Everything runs in
     # WholeStageCodegen — unlike the intra-row higher-order form
     # (with_minhash), whose aggregate lambdas evaluate interpreted
     # (measured ~6 s vs ~0.3 s for 5k docs at sf0.1). The groupBy
@@ -195,19 +164,19 @@ def minhash_band_signatures(
     # upstream hash partitioning on id. with_minhash stays the right
     # form when the signature must ride along as a column next to
     # other row data.
-    norm = normalize_text(F.col(text_col))
+    norm = normalize_text(F.col("text"))
     base = (
-        spread.select(F.col(id_col).alias("__id"), norm.alias("__norm"))
+        spread.select(F.col("doc_id").alias("__id"), norm.alias("__norm"))
         .withColumn("__toks", F.split(F.col("__norm"), " "))
     )
     shingles_sql = (
-        f"CASE WHEN size(__toks) < {shingle_n} THEN array(__norm) "
-        f"ELSE {shingle_chain_sql('__toks', shingle_n)} END"
+        f"CASE WHEN size(__toks) < 3 THEN array(__norm) "
+        f"ELSE {shingle_chain_sql('__toks', 3)} END"
     )
     hashes = base.select(
         "__id", F.explode(F.array_distinct(F.expr(shingles_sql))).alias("__s")
     ).select("__id", F.pmod(md5_long(F.col("__s")), F.lit(MINHASH_P)).alias("__h"))
-    coeffs = minhash_coeffs(num_hashes)
+    coeffs = minhash_coeffs(16)
     # r13: the 16 affine MIN aggregates as SQL expression strings —
     # one py4j round trip each instead of ~6 Column-builder calls
     # (profiled at ~0.24 s of driver time PER minhash_band_signatures
@@ -223,8 +192,8 @@ def minhash_band_signatures(
             ]
         )
         .select(
-            F.col("__id").alias(id_col),
-            F.array(*[f"__m{i}" for i in range(num_hashes)]).alias("minhash"),
+            F.col("__id").alias("doc_id"),
+            F.array(*[f"__m{i}" for i in range(16)]).alias("minhash"),
         )
     )
     # Band slicing happens ABOVE a Generate(explode) whose generator is
@@ -235,9 +204,9 @@ def minhash_band_signatures(
     # measured 30x slower banding at sf0.1). The minhash array rides
     # through the explode as a plain column; each band row slices it.
     return (
-        sig.select(id_col, "minhash", F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band"))
+        sig.select("doc_id", "minhash", F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band"))
         .select(
-            id_col,
+            "doc_id",
             "band",
             F.expr(
                 f"array_join(transform(slice(minhash, band * {rows_per_band} + 1, {rows_per_band}), "
@@ -249,14 +218,11 @@ def minhash_band_signatures(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
     bands: int = 4,
-    shingle_n: int = 3,
     max_group: int = 1024,
 ) -> DataFrame:
-    """Candidate near-dup pairs via MinHash banding.
+    """Candidate near-dup pairs via MinHash banding of ``doc_id``'s
+    ``text`` (16 hashes over word 3-shingles).
 
     rows → (band, band-signature) keys → equi-join on identical band
     signature → distinct candidate pairs (a < b). The join key is the
@@ -277,9 +243,7 @@ def minhash_lsh_pairs(
     expanded per chunk-pair — so no task ever materializes more than
     ``max_group``² pairs. Output is identical (pinned by test).
     """
-    banded = minhash_band_signatures(
-        df, id_col, text_col, num_hashes, bands, shingle_n
-    )
+    banded = minhash_band_signatures(df, bands)
     # Pair generation is a single groupBy on (band, sig) + intra-row
     # expansion of each bucket's sorted id list — NOT a self-join. One
     # shuffle, the signatures are computed exactly once, and nothing
@@ -287,7 +251,7 @@ def minhash_lsh_pairs(
     # self-join and leaked the cache into the session).
     buckets = (
         banded.groupBy("band", "sig")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
+        .agg(F.array_sort(F.collect_list(F.col("doc_id"))).alias("ids"))
         .filter(F.size("ids") >= 2)  # sequence(1, 0) would count DOWN
     )
     # Skew guard, single-path: split each bucket's SORTED id list into
@@ -388,16 +352,6 @@ def incremental_lsh_pairs(
     return new_new.unionByName(cross).distinct()
 
 
-def with_simhash(df: DataFrame) -> DataFrame:
-    """Attach a SimHash fingerprint column (intra-row). Tokens are
-    materialized first (same lambda re-evaluation hazard as
-    with_minhash)."""
-    df = df.withColumn("__norm", normalize_text(F.col("text"))).withColumn(
-        "__toks", F.split(F.col("__norm"), " ")
-    )
-    return df.withColumn("simhash", simhash_sql("__toks")).drop("__norm", "__toks")
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -435,9 +389,8 @@ def ngram_jaccard_pairs(
     exact-duplicate class — would not be: run exact dedup first, the
     standing prescription for that corpus shape). Total work is still
     Σ_shingle df², inherent to exact-Jaccard-by-inverted-index; where
-    that sum binds, use ``ngram_jaccard_pairs_prefix`` (identical
-    output, fan-out restricted to rare-shingle prefixes) or
-    ``minhash_lsh_pairs`` + candidate verification.
+    that sum binds, use ``minhash_lsh_pairs`` + candidate
+    verification.
 
     The exploded (id, shingle) relation feeds two consumers (doc
     sizes, posting lists), so it is persisted for the duration of this
@@ -515,122 +468,6 @@ def ngram_jaccard_pairs(
         sh.unpersist()
 
 
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via a PREFIX-FILTERED
-    inverted index (AllPairs/PPJoin family). Output is identical to
-    ``ngram_jaccard_pairs`` (pinned by test).
-
-    J(A,B) >= t forces |A∩B| >= ceil(t·|A|) (because |A∪B| >= |A|), so
-    under ANY global total order on shingles, two qualifying docs must
-    share a shingle among each one's first |X| - ceil(t·|X|) + 1
-    shingles. Ordering rarest-first (global document frequency, then
-    shingle xxhash64) makes the indexed prefix avoid exactly the hot
-    shingles whose df² fan-out dominates a naive all-shingles
-    self-join; candidates are then verified EXACTLY with an intra-row
-    set intersection, so the output is identical to the naive join.
-
-    EAGER: the verified pair list is sealed before returning so the
-    corpus-sized shingle cache can be released inside this call
-    instead of leaking into the session.
-
-    Scale: no stage materializes the full pair space — the self-join
-    fan-out is Σ over *prefix* postings only, and hot shingles land in
-    prefixes only for docs that have nothing rarer (i.e. genuinely
-    need them). The df table is vocabulary-sized (AQE broadcasts it
-    when small); the verification joins shuffle candidate pairs, whose
-    count the prefix filter already bounded.
-    """
-    norm = normalize_text(F.col("text"))
-    # pre-spread: small corpora scan as one partition; shingling +
-    # hashing must not serialize onto a single task
-    base = (
-        spread_for_cpu(
-            df.select(F.col("doc_id").alias("id"), norm.alias("__norm")),
-            by=F.col("id"),
-        )
-        .withColumn("__toks", F.split(F.col("__norm"), " "))
-    )
-    shingles_sql = (
-        f"CASE WHEN size(__toks) < 3 THEN array(__norm) "
-        f"ELSE {shingle_chain_sql('__toks', 3)} END"
-    )
-    # `sets` feeds three branches (df counts, prefix index, verification);
-    # without materialization each branch re-scans and re-shingles the
-    # corpus (ReuseExchange does NOT fire here — per-branch filter
-    # pushdown de-canonicalizes the subtrees; measured 6 scans). It is
-    # persisted MEMORY_AND_DISK for the duration of this call and
-    # unpersisted in the finally below — the r1 version leaked this
-    # cache into the session.
-    #
-    # Shingles are hashed to int64 (xxhash64) at the source, exactly
-    # like the naive join form: the df-join, the prefix window's
-    # ordering, and the verification ``array_intersect`` all run on
-    # 8-byte longs instead of ~30-char strings (the string forms made
-    # the prefix variant 1.6x SLOWER than the naive long-keyed join at
-    # sf0.1). The prefix filter only needs SOME global total order on
-    # shingles — (df, hash) is as valid as (df, text). Exact up to
-    # 64-bit collisions, the same tolerance the naive form documents.
-    from pyspark import StorageLevel
-
-    sets = base.select(
-        "id",
-        F.expr(f"array_distinct(transform({shingles_sql}, s -> xxhash64(s)))").alias("sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    ex = sets.select("id", F.size("sh").alias("sz"), F.explode("sh").alias("shingle"))
-    freq = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    # Prefix length |X| - ceil(t'·|X|) + 1 with t' backed off 1e-6 below
-    # the threshold: the final filter accepts round(J, 6) >= t, i.e.
-    # true J >= t - 5e-7, and the backoff keeps the filter lossless for
-    # those boundary pairs (an over-long prefix only adds candidates,
-    # never drops pairs).
-    w = Window.partitionBy("id").orderBy("df", "shingle")
-    prefix = (
-        ex.join(freq, "shingle")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(
-            F.col("rk")
-            <= F.col("sz") - F.ceil(F.lit(threshold - 1e-6) * F.col("sz")) + 1
-        )
-        .select("id", "shingle")
-    )
-    # Candidate pairs: groupBy-shingle + intra-row expansion of each
-    # posting list (same shape as minhash_lsh_pairs) — one shuffle on
-    # the prefix postings, no prefix self-join.
-    pair_expr = F.expr(
-        "flatten(transform(sequence(1, size(ids) - 1), "
-        "i -> transform(slice(ids, i + 1, size(ids) - i), "
-        "x -> named_struct('id_a', element_at(ids, i), 'id_b', x))))"
-    )
-    cand = (
-        prefix.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") >= 2)  # sequence(1, 0) would count DOWN
-        .select(F.explode(pair_expr).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
-    result = (
-        cand.join(sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sha")), "id_a")
-        .join(sets.select(F.col("id").alias("id_b"), F.col("sh").alias("shb")), "id_b")
-        .withColumn("common", F.size(F.array_intersect("sha", "shb")))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.size("sha") + F.size("shb") - F.col("common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    try:
-        # seal the (small) verified pair list, then unpersist the
-        # corpus-sized shingle cache in the finally
-        return seal(result)
-    finally:
-        sets.unpersist()
-
-
 def embedding_near_dup_pairs(
     df: DataFrame,
     block_col: str | None = None,
@@ -683,8 +520,8 @@ def semantic_dedup_pairs(
     and split by raising k.
 
     Returns (cluster_id, id_a, id_b, cosine) evidence pairs; compose
-    with ``connected_components`` + keep-min-id for survivor selection
-    exactly like ``near_dup_dedup``.
+    with ``connected_components`` + keep-min-id for survivor
+    selection.
     """
     from owl_etl_spark.operators.cluster import assign_clusters
 
@@ -696,64 +533,6 @@ def semantic_dedup_pairs(
         F.col("vec_id").alias("id_a"), F.col("cluster_id").alias("cluster_id")
     )
     return pairs.join(blocks, "id_a").select("cluster_id", "id_a", "id_b", "cosine")
-
-
-def near_dup_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-) -> tuple[DataFrame, DataFrame]:
-    """The full near-duplicate removal flow, composed:
-
-    1. MinHash-LSH candidate pairs (band equi-join — the only shuffle
-       that touches pair space);
-    2. exact Jaccard verification on candidates only (intra-row
-       ``array_intersect`` over distinct shingle sets);
-    3. survivor selection: greedy keep-smaller-id (each verified pair
-       drops its larger id; chains collapse toward the smallest id).
-
-    Returns ``(kept, dropped_pairs)`` where dropped_pairs carries
-    (id_a, id_b, jaccard) evidence. At 100 TB: exact dedup first
-    (removes identical docs and the band-skew they cause), then this.
-    """
-    cand = minhash_lsh_pairs(df, id_col, text_col, num_hashes, bands, shingle_n)
-    norm = normalize_text(F.col(text_col))
-    base = (
-        df.select(F.col(id_col).alias("id"), norm.alias("__norm"))
-        .withColumn("__toks", F.split(F.col("__norm"), " "))
-        .withColumn(
-            "__sh",
-            F.array_distinct(
-                F.expr(
-                    f"CASE WHEN size(__toks) < {shingle_n} THEN array(__norm) "
-                    f"ELSE {shingle_chain_sql('__toks', shingle_n)} END"
-                )
-            ),
-        )
-        .select("id", "__sh")
-    )
-    verified = (
-        cand.join(base.withColumnRenamed("id", "id_a").withColumnRenamed("__sh", "__sha"), "id_a")
-        .join(base.withColumnRenamed("id", "id_b").withColumnRenamed("__sh", "__shb"), "id_b")
-        .withColumn("__common", F.size(F.array_intersect("__sha", "__shb")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("__common")
-                / (F.size("__sha") + F.size("__shb") - F.col("__common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    dropped_ids = verified.select(F.col("id_b").alias(id_col)).distinct()
-    kept = df.join(dropped_ids, id_col, "left_anti")
-    return kept, verified
 
 
 def _label_ids(ids: DataFrame, id_col: str, mapping: DataFrame) -> DataFrame:
@@ -1116,18 +895,6 @@ def connected_components_star(
                 release(cur)
 
 
-def near_dup_clusters(
-    df: DataFrame,
-    threshold: float = 0.7,
-    **lsh_kwargs,
-) -> DataFrame:
-    """Full transitive near-dup clustering: LSH candidates → exact
-    Jaccard verify → connected components. Returns (id, component);
-    keeping ``component == id`` rows is the canonical dedup."""
-    _, verified = near_dup_dedup(df, threshold=threshold, **lsh_kwargs)
-    return connected_components(verified, df.select("doc_id"))
-
-
 def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """Exploded winnowing fingerprint set: one (id, fingerprint) row
     per distinct selected hash (Schleimer et al. local fingerprinting:
@@ -1194,10 +961,9 @@ def containment_pairs(df: DataFrame) -> DataFrame:
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
-    min_shared: int = 1,
 ) -> tuple[DataFrame, DataFrame]:
-    """Benchmark decontamination: drop training docs that share ≥
-    ``min_shared`` winnowing fingerprints with any benchmark doc.
+    """Benchmark decontamination: drop training docs that share ≥ 3
+    winnowing fingerprints with any benchmark doc.
 
     Returns ``(clean, contaminated)``; ``contaminated`` carries
     ``n_shared`` (distinct shared fingerprints) as evidence. The
@@ -1218,7 +984,7 @@ def decontaminate(
         doc_fp.join(bench_fp, "fingerprint")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 3)
     )
     contaminated = docs.join(hits, "doc_id")
     clean = docs.join(hits.select("doc_id"), "doc_id", "left_anti")

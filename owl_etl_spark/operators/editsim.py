@@ -3,10 +3,7 @@
 ``edit_distance_pairs`` finds every pair of rows whose string values
 are within Levenshtein distance ``max_dist`` — the typo/variant
 detector behind product-name reconciliation, near-duplicate labels
-and fuzzy key audits. The fuzzy-join family in
-operators/fuzzy_join.py matches a fact column against a SMALL
-reference list (broadcast); this operator is the symmetric
-self-join case where both sides are large and a cross join is
+and fuzzy key audits, where both sides are large and a cross join is
 impossible.
 
 Exactness + scale come from a LENGTH-BUCKET block that is implied by

@@ -103,8 +103,8 @@ def woe_iv_report(
     diagnostics stay visible). One shuffle: the global ntile window;
     bin aggregation rides it. The single-partition total order is the
     price of EXACT equal-frequency bins (the gate needs exactness) —
-    at 100 TB swap the binning for quantiles.approx_cutpoints +
-    assign_buckets and keep the WoE/IV arithmetic unchanged."""
+    at 100 TB swap the binning for ``percentile_approx`` cutpoints +
+    quantiles.assign_buckets and keep the WoE/IV arithmetic unchanged."""
     if n_bins < 2:
         raise ValueError(f"woe_iv_report: n_bins must be >= 2, got {n_bins}")
     ties = [F.col(c).asc() for c in (tie_cols or [])]

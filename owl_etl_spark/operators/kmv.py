@@ -11,7 +11,7 @@ distinct population comes for free: quantiles of an attribute,
 group-share estimates, example records for debugging. DISTINCT
 semantics (not row sampling): duplicates of a key hash identically
 and collapse, so heavy keys don't bias the sample — the property
-``split.sample_by_hash`` (row-level) cannot give.
+row-level hash sampling cannot give.
 
 Math: with h uniform on [0, H) and h_(k) the k-th smallest distinct
 hash, E[h_(k)/H] = k/(n+1), so ``est = (k-1)·H / h_(k)`` is the

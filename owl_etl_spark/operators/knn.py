@@ -65,12 +65,9 @@ def hyperplane_bucket_expr(vec_col: str, num_planes: int = 8, seed: int = 42):
     return F.expr(" + ".join(bucket_terms))
 
 
-def random_hyperplane_bucket(
-    df: DataFrame,
-    num_planes: int = 8,
-) -> DataFrame:
-    """Attach an ``lsh_bucket`` column (see hyperplane_bucket_expr)."""
-    return df.withColumn("lsh_bucket", hyperplane_bucket_expr("embedding", num_planes))
+def random_hyperplane_bucket(df: DataFrame) -> DataFrame:
+    """Attach a 4-plane ``lsh_bucket`` column (see hyperplane_bucket_expr)."""
+    return df.withColumn("lsh_bucket", hyperplane_bucket_expr("embedding", 4))
 
 
 def _multi_table_buckets(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:

@@ -1,11 +1,9 @@
-"""Latest-version-per-key dedup and upsert-by-recency (SURVEY.md W1/F4/S10).
+"""Latest-version-per-key dedup and SCD2 history (SURVEY.md W1/F4/S10).
 
 The reference keeps only the most recent fact sheet per fund
 (``(nombre_fic, url)`` key, ``fecha_corte`` recency; older incoming
 versions dropped — src/etl/load.py:99-219). The canonical distributed
-form is a single window dedup; the "upsert" against an existing gold
-table is an anti-join + union + the same window — no driver loops, no
-per-row lookups.
+form is a single window dedup — no driver loops, no per-row lookups.
 
 Scale notes: the window shuffles once on the key — same cost as the
 groupBy a MERGE would need. For skewed keys AQE skew-join handles the
@@ -43,35 +41,6 @@ def latest_per_key(
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-    )
-
-
-def upsert_by_recency(
-    existing: DataFrame,
-    incoming: DataFrame,
-    keys: list[str],
-    recency_col: str,
-) -> DataFrame:
-    """Merge incoming rows into an existing snapshot, newest-per-key wins
-    (S10/F4 as a batch operator).
-
-    Equivalent to a Delta ``MERGE ... WHEN MATCHED AND s.recency >
-    t.recency THEN UPDATE WHEN NOT MATCHED THEN INSERT``, expressed
-    engine-agnostically as union + window dedup. Ties favor the
-    existing row (incoming equal-or-older is discarded,
-    src/etl/load.py:213-216).
-    """
-    tagged_existing = existing.withColumn("__src", F.lit(0))
-    tagged_incoming = incoming.withColumn("__src", F.lit(1))
-    unioned = tagged_existing.unionByName(tagged_incoming, allowMissingColumns=True)
-    # Order: newer recency first; on exact tie prefer existing (__src asc).
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(recency_col).desc_nulls_last(), F.col("__src").asc()
-    )
-    return (
-        unioned.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
     )
 
 

@@ -175,22 +175,6 @@ def _round_half_away(x: float) -> int:
     return int(math.floor(abs(x) + 0.5)) * (1 if x >= 0 else -1)
 
 
-def logistic_score(
-    df: DataFrame,
-    x_cols: list[str],
-    weights_micro: list[int],
-) -> DataFrame:
-    """Append σ(w·x) as ``p_hat`` (double, rounded at 6) using a
-    fitted micro-unit weight vector."""
-    if len(x_cols) != len(weights_micro):
-        raise ValueError("logistic_score: weights/features length mismatch")
-    z = sum(
-        (F.lit(int(weights_micro[j])) * F.col(x_cols[j]).cast("long")).cast("double")
-        for j in range(len(x_cols))
-    ) / F.lit(1_000_000.0)
-    return df.withColumn("p_hat", F.round(_sigma(z), 6))
-
-
 def logistic_fit_report(
     df: DataFrame,
     y_col: str,

@@ -8,8 +8,7 @@ stdlib (round 12): ``parse_png_header`` verifies the PNG signature and
 the IHDR chunk's CRC-32 and reads the big-endian dimension pair
 (ISO/IEC 15948 §11.2.2); ``parse_jpeg_header`` walks the marker-
 segment stream to the SOFn frame header (ITU-T T.81 §B.2). Full PIXEL
-decode is ALSO real, pure stdlib+numpy: ``decode_png_pixels`` below
-(IDAT inflate + §9 filter reconstruction), baseline JPEG entropy
+decode is ALSO real, pure stdlib+numpy: baseline JPEG entropy
 decode / WAV PCM / animated-GIF LZW in ``operators/imagecodec.py``
 and ``operators/audiocodec.py``. The only stubbed ``_decode`` media
 types left are the synthetic ``text/plain`` / ``image/fake`` formula
@@ -126,110 +125,6 @@ def parse_jpeg_header(payload: bytes) -> tuple[int, int]:
             return width, height
         i += 2 + seglen
     raise ValueError("JPEG has no SOF frame header")
-
-
-def decode_png_pixels(payload: bytes) -> dict:
-    """FULL PNG pixel decode, pure stdlib+numpy — no codec
-    dependency: signature + chunk walk with CRC-32 verification,
-    IDAT concatenation + zlib inflate, and scanline FILTER
-    RECONSTRUCTION per ISO/IEC 15948 §9 (None/Sub/Up/Average/Paeth).
-    Returns ``{"width", "height", "channels", "pixels"}`` with
-    ``pixels`` a ``(height, width, channels)`` uint8 array.
-
-    Scope (the formats a training-data pipeline's own artifacts use):
-    8-bit depth, color types 0 (grayscale), 2 (truecolor), 4
-    (gray+alpha), 6 (RGBA), non-interlaced. Palette, 16-bit, and
-    Adam7 interlace raise ``ValueError`` — fail loudly, like an
-    unsupported codec. The per-scanline reconstruction is inherently
-    sequential in the row dimension (each row needs the prior row)
-    but vectorized across the row's samples where the filter allows;
-    at the Spark layer this runs inside the Arrow-batched
-    ``mapInPandas`` boundary like every other decoder."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    data = bytes(payload)
-    if len(data) < 8 or data[:8] != PNG_SIGNATURE:
-        raise ValueError("not a PNG (bad signature)")
-    i, n = 8, len(data)
-    width = height = None
-    channels = 0
-    idat = bytearray()
-    while i + 8 <= n:
-        (length,), ctype = struct.unpack(">I", data[i : i + 4]), data[i + 4 : i + 8]
-        end = i + 8 + length
-        if end + 4 > n:
-            raise ValueError("PNG chunk overruns the payload (truncated?)")
-        chunk = data[i + 8 : end]
-        (crc,) = struct.unpack(">I", data[end : end + 4])
-        if zlib.crc32(data[i + 4 : end]) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG {ctype!r} chunk CRC mismatch (corrupt container)")
-        if ctype == b"IHDR":
-            width, height, depth, color, comp, filt, interlace = struct.unpack(
-                ">IIBBBBB", chunk
-            )
-            if depth != 8:
-                raise ValueError(f"unsupported PNG bit depth {depth} (8 only)")
-            if interlace:
-                raise ValueError("Adam7-interlaced PNG not supported")
-            if comp or filt:
-                raise ValueError("nonstandard PNG compression/filter method")
-            channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color)
-            if channels is None:
-                raise ValueError(f"unsupported PNG color type {color}")
-        elif ctype == b"IDAT":
-            idat += chunk
-        elif ctype == b"IEND":
-            break
-        i = end + 4
-    if width is None:
-        raise ValueError("PNG has no IHDR")
-    if not idat:
-        raise ValueError("PNG has no IDAT (header-only container)")
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-    stride = width * channels
-    if raw.size != height * (stride + 1):
-        raise ValueError(
-            f"PNG pixel data is {raw.size} bytes, expected {height * (stride + 1)}"
-        )
-    raw = raw.reshape(height, stride + 1)
-    filters, lines = raw[:, 0], raw[:, 1:].astype(np.int32)
-    out = np.zeros((height, stride), dtype=np.int32)
-    prior = np.zeros(stride, dtype=np.int32)
-    bpp = channels
-    for r in range(height):
-        f, line = int(filters[r]), lines[r]
-        if f == 0:  # None
-            recon = line.copy()
-        elif f == 2:  # Up
-            recon = (line + prior) & 0xFF
-        elif f in (1, 3, 4):  # Sub / Average / Paeth: left-sequential
-            recon = line.copy()
-            for x in range(stride):
-                a = recon[x - bpp] if x >= bpp else 0
-                b = prior[x]
-                if f == 1:
-                    pred = a
-                elif f == 3:
-                    pred = (a + b) >> 1
-                else:
-                    c = prior[x - bpp] if x >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                recon[x] = (recon[x] + pred) & 0xFF
-        else:
-            raise ValueError(f"invalid PNG filter type {f} on row {r}")
-        out[r] = recon
-        prior = recon
-    return {
-        "width": int(width),
-        "height": int(height),
-        "channels": int(channels),
-        "pixels": out.astype(np.uint8).reshape(height, width, channels),
-    }
 
 
 def _decode(payload: bytes, media_type: str) -> dict:

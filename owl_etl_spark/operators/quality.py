@@ -79,11 +79,3 @@ def repair_structure(df: DataFrame) -> DataFrame:
     return df.withColumns({c: F.expr(sql) for c, sql in fills.items()})
 
 
-def observed_counts(df: DataFrame, name: str, *metrics: Column):
-    """Attach an ``Observation`` for job-metric accounting (A7) —
-    replaces the reference's driver-side success/failure counters with
-    executor-side accumulation (no extra action needed)."""
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return df.observe(obs, *metrics), obs

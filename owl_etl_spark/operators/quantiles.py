@@ -15,10 +15,6 @@ bottleneck. The scalable shape decouples the two jobs ntile fuses:
      sort over |distinct values| (not |rows|); fine while the value
      domain is materially smaller than the key count, e.g. prices,
      scores, bounded integer metrics.
-   - ``approx_cutpoints``: one-pass ``percentile_approx`` sketch, KBs
-     of state, no sort anywhere — the 100 TB form. Rank error ≤
-     n/accuracy; agreement with the exact form away from boundary
-     ties is pinned by test.
 2. **assignment** — ``assign_buckets``: the k-1 cutpoints (a
    config-sized list, collected to the driver like a broadcast dim)
    compile into a literal comparison chain: bucket(x) =
@@ -54,8 +50,9 @@ def exact_rank_cutpoints(df: DataFrame, value_col: str, k: int) -> DataFrame:
     integer rank arithmetic, no interpolation, so any engine computes
     the identical boundary. Cost: one groupBy over distinct values +
     a single-task cumulative window over |distinct| rows + one final
-    k-1-column aggregate. Use ``approx_cutpoints`` when the value
-    domain is not materially smaller than the row count.
+    k-1-column aggregate. When the value domain is not materially
+    smaller than the row count, a one-pass ``percentile_approx``
+    sketch is the 100 TB form.
     """
     vals = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("__c"))
     w = (
@@ -76,20 +73,6 @@ def exact_rank_cutpoints(df: DataFrame, value_col: str, k: int) -> DataFrame:
     ]
     return cum.agg(*aggs).select(
         F.array(*[f"__cut{d}" for d in range(1, k)]).alias("cutpoints")
-    )
-
-
-def approx_cutpoints(
-    df: DataFrame, value_col: str, k: int, accuracy: int = 10000
-) -> DataFrame:
-    """1-row DataFrame with ``cutpoints``: k-1 approximate boundaries
-    from the GK sketch (``percentile_approx``). One pass, mergeable
-    partials, no sort — rank error ≤ n/accuracy. The sketch returns
-    actual data values, so with accuracy ≥ n it degenerates to the
-    exact nearest-rank boundaries."""
-    probs = F.array(*[F.lit(d / k) for d in range(1, k)])
-    return df.agg(
-        F.percentile_approx(value_col, probs, F.lit(accuracy)).alias("cutpoints")
     )
 
 

@@ -8,13 +8,12 @@ the all-time rollup. Algebraic aggregates (count/sum/min/max, and
 avg = sum/count derived at read time) merge exactly: partials per
 (keys) from the new partition union with the stored state and
 re-aggregate — cost is O(|new| + |state|), independent of history
-size. Pair with ``operators.sketches`` for mergeable distinct counts
-and ``writers.write_partition_overwrite`` for the storage side.
+size. Pair with ``operators.sketches`` for mergeable distinct counts.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: merge rule per metric suffix: how two partial values combine.

@@ -41,11 +41,6 @@ def merge_sketches(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.groupBy(*keys).agg(F.hll_union_agg("sketch").alias("sketch"))
 
 
-def estimate() -> Column:
-    """Distinct-count estimate from the ``sketch`` column (BIGINT)."""
-    return F.hll_sketch_estimate("sketch")
-
-
 def distinct_overlap_estimate(
     df: DataFrame,
     key_col: str,
@@ -86,31 +81,6 @@ def distinct_overlap_estimate(
 
 #: Seed base for the CMS hash family (md5-portable — see functions.hashing).
 _CMS_SEED_BASE = 7_000
-
-
-def cms_params(epsilon: float, delta: float) -> tuple[int, int]:
-    """Derive ``(depth, width)`` from the standard CMS accuracy
-    contract so callers state their tolerance instead of hand-picking
-    4096: with ``width = ceil(e/ε)`` and ``depth = ceil(ln(1/δ))``,
-    each estimate over-counts by at most ``ε·N`` (N = total stream
-    mass) with probability ≥ 1-δ (Cormode & Muthukrishnan 2005).
-
-    >>> cms_params(epsilon=0.001, delta=0.01)   # ±0.1%·N, 99% conf
-    (5, 2719)
-
-    Memory is ``depth × width`` BIGINT cells — the example is ~106 KB,
-    independent of vocabulary size. Feed the result to ``cms_build`` /
-    ``cms_estimate`` / ``cms_inner_product`` (same depth/width on both
-    sides of any merge or inner product).
-    """
-    if not (0 < epsilon < 1) or not (0 < delta < 1):
-        raise ValueError(
-            f"cms_params: need 0 < epsilon < 1 and 0 < delta < 1, "
-            f"got epsilon={epsilon!r} delta={delta!r}"
-        )
-    import math
-
-    return (max(1, math.ceil(math.log(1.0 / delta))), math.ceil(math.e / epsilon))
 
 
 def cms_build(

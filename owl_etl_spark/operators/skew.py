@@ -1,15 +1,9 @@
-"""Skew mitigation: salted aggregation and salted joins.
+"""Skew diagnostics: per-key row-count reports that predict straggler
+tasks before a join or aggregation on the key.
 
-AQE's skew-join splitting handles most runtime skew; these operators
-are for the cases planners can't fix:
-- a groupBy where one key holds a large fraction of all rows (partial
-  aggregation already helps; salting helps when the *combined* state
-  per key is huge, e.g. collect-type aggs);
-- a join where one hot key would overwhelm a single task even after
-  AQE splits (the broadcast-replicate side is too big to broadcast).
-
-Salting is deterministic here (hash of a row-identity column, not
-rand()) so results are replay-stable.
+AQE's skew-join splitting handles most runtime skew; these reports
+show when one key holds so large a fraction of the rows that a single
+task would still be overwhelmed.
 """
 
 from __future__ import annotations
@@ -18,54 +12,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_groupby_sum(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    salt_col: str,
-) -> DataFrame:
-    """Two-level aggregation: groupBy (keys, salt) → groupBy keys.
-
-    ``salt_col`` is any column that distributes rows within a key (an
-    id, a timestamp); the salt is its hash mod 16. The first
-    level bounds per-task group state to ~1/16 of the hot key.
-    """
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(salt_col)), F.lit(16)))
-    partial = salted.groupBy(*keys, "__salt").agg(F.sum(value_col).alias("__partial"))
-    return partial.groupBy(*keys).agg(F.sum("__partial").alias(f"sum_{value_col}"))
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    key: str,
-    row_id_col: str,
-) -> DataFrame:
-    """Join a skewed fact side against a modest dimension by exploding
-    the dimension into 16 salted replicas.
-
-    The fact side gets a deterministic salt from ``row_id_col``; the
-    dimension is replicated 16 times (only viable when
-    |small| · 16 stays modest — i.e. 'too big to broadcast,
-    small enough to replicate'). The hot key's rows now spread across
-    16 tasks instead of one.
-    """
-    fact = skewed.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(row_id_col)), F.lit(16))
-    )
-    dim = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(15)))
-    )
-    return fact.join(dim, [key, "__salt"]).drop("__salt")
-
-
 def skew_report(df: DataFrame, key: str) -> DataFrame:
     """Key-distribution diagnostics ahead of a join/agg on ``key``:
     one row with key cardinality, max/avg per-key row counts, and the
     skew ratio (max/avg) that predicts straggler tasks. Two-level
     aggregation — per-key counts (one shuffle), then a global
-    single-row reduce. At 100 TB run it on ``sample_by_hash`` output;
-    the ratio estimate is unbiased for heavy keys."""
+    single-row reduce. At 100 TB run it on a hash-sampled subset
+    (``split.hash_bucket``); the ratio estimate is unbiased for heavy keys."""
     per_key = df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
     return per_key.agg(
         F.count(F.lit(1)).cast("long").alias("n_keys"),

@@ -62,18 +62,6 @@ def hash_split(
     return df.withColumn("split", last)
 
 
-def sample_by_hash(
-    df: DataFrame, key: str | Column, fraction: float
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by hashed key — unlike
-    ``df.sample`` the decision is a pure row function: reproducible
-    across runs/engines/partitionings, and consistent across tables
-    sharing the key (sampling users samples all their events)."""
-    space = 1_000_000
-    bucket = hash_bucket(F.col(key) if isinstance(key, str) else key, space, "sample")
-    return df.filter(bucket < int(round(fraction * space)))
-
-
 def weighted_mixture(
     df: DataFrame,
     key: str | Column,

@@ -350,8 +350,7 @@ class StoreCatalog:
     ) -> int:
         """Monthly hygiene: rewrite one drop into
         ``ceil(bytes/target)`` files WITHOUT losing its range
-        clustering (a plain coalesce — writers.compact_parquet —
-        would merge unsorted neighbors and destroy the min/max file
+        clustering (a plain coalesce would merge unsorted neighbors and destroy the min/max file
         pruning the store exists for). Read → re-cluster on the
         manifest's keys at the reduced partition count → crash-safe
         swap; row count re-verified against the manifest before the

@@ -11,8 +11,7 @@ handful of jobs regardless of table size:
   set (broadcast when the parent is dimension-sized).
 
 The report is a tiny (one row per constraint) DataFrame — suitable for
-asserting in CI, appending to a run-history table, or gating a write
-(`fail_on_violations`).
+asserting in CI, appending to a run-history table, or gating a write.
 """
 
 from __future__ import annotations
@@ -102,14 +101,6 @@ def constraint_report(
     for r in reports[1:]:
         out = out.unionByName(r)
     return out
-
-
-def fail_on_violations(report: DataFrame) -> None:
-    """Raise if any constraint has violations — the write-gate form."""
-    bad = report.filter(F.col("n_violations") > 0).collect()
-    if bad:
-        detail = ", ".join(f"{r.constraint}={r.n_violations}" for r in bad)
-        raise ValueError(f"data-quality constraints violated: {detail}")
 
 
 def fk_orphan_report(

@@ -16,12 +16,9 @@ RAISE rather than silently aliasing distant cells together. The
 z-value is a sum of disjoint bit terms — identical on any engine with
 integer shifts.
 
-Relation to ``functions/zorder.py``: that module is the WRITE-path
-special case (two min-max-scaled columns, range-partitioned and sorted
-on :func:`zorder_expr` of the pair); this one is the general k-column
-operator surface — explicit range contract instead of silent scaling,
-any number of dimensions, and an oracle-gated query (q166). Dimension i
-owns the bit positions ≡ i mod k.
+The k-column operator surface has an explicit range contract instead
+of silent scaling, any number of dimensions, and an oracle-gated
+query (q166). Dimension i owns the bit positions ≡ i mod k.
 """
 
 from __future__ import annotations

@@ -1,4 +1,3 @@
 from owl_etl_spark.plans.fic_pipeline import transform_fic_documents
-from owl_etl_spark.plans.pipeline import Pipeline
 
-__all__ = ["Pipeline", "transform_fic_documents"]
+__all__ = ["transform_fic_documents"]

@@ -176,6 +176,28 @@ def sealed(df):
         release(out)
 
 
+@contextmanager
+def core_shuffle_partitions(spark):
+    """Set ``spark.sql.shuffle.partitions`` to the session's core count
+    (``defaultParallelism``, total cores on a cluster) for the body of a
+    ``with`` block, and restore the previous value when it exits, also
+    on an exception.
+
+    For the two plans AQE cannot coalesce: a streaming checkpoint, whose
+    state-store partition count is fixed at creation from this setting
+    (an un-tuned 200-partition session pays 200 store commits per
+    micro-batch, four per partition for a stream-stream join), and
+    eager seals, which freeze the pre-AQE partitioning (hundreds of
+    near-empty tasks per loop round). Callers use it only where results
+    do not depend on the partition count."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def iterate(state, step, rounds, every=1, stop=None):
     """Run ``state = step(state, i)`` for ``i`` in ``range(rounds)``,
     sealing on a cadence — the one loop of every iterative operator.

@@ -1,6 +1,4 @@
 from owl_etl_spark.sources.readers import (
-    TPCH_TABLES,
-    load_star,
     read_events,
     read_fic_json,
     read_skip_list,
@@ -8,8 +6,6 @@ from owl_etl_spark.sources.readers import (
 )
 
 __all__ = [
-    "TPCH_TABLES",
-    "load_star",
     "read_events",
     "read_fic_json",
     "read_skip_list",

@@ -4,7 +4,7 @@ Covers the reference's scan surface (SURVEY.md §2.1 S1-S7):
 - S4/S5 JSON folder scans with glob include/exclude → ``read_fic_json``
 - S6 skip-list file reader → ``read_skip_list``
 - P9 filename-metadata extraction → ``with_file_metadata``
-- plus the driver's synthetic star schema → ``read_table``/``load_star``.
+- plus the driver's synthetic star schema → ``read_table``/``read_events``.
 
 Everything returns plain DataFrames; filters/projections applied
 downstream push into the parquet scan via Catalyst (verify with
@@ -15,20 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-TPCH_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 
 def _ensure_nanos_conf(spark: SparkSession) -> None:
     # The synthetic events table is TIMESTAMP(NANOS); Spark's reader
@@ -65,17 +51,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     return df
-
-
-def load_star(spark: SparkSession, sf_dir: str, register: bool = False) -> dict[str, DataFrame]:
-    """Load every synthetic table; optionally register temp views."""
-    out = {}
-    for name in TPCH_TABLES:
-        df = read_table(spark, sf_dir, name)
-        if register:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def with_file_metadata(df: DataFrame) -> DataFrame:
@@ -186,42 +161,3 @@ def derive_metadata_from_filename(df: DataFrame, filename_col: str = "filename")
     )
 
 
-def read_json_with_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema,
-    corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame]:
-    """PERMISSIVE JSON scan split into (good, quarantined): malformed
-    lines land whole in ``corrupt_col`` instead of failing the job —
-    the distributed form of the reference's per-file try/except
-    accounting (src/scripts/script_load.py:86-151). At 100 TB a
-    single bad record must never kill a stage; quarantined rows keep
-    the raw text for replay after a parser fix.
-
-    Spark requires referencing the corrupt column from a *cached*
-    frame (it is populated only at parse time).
-    """
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    full = StructType([*schema.fields, StructField(corrupt_col, StringType())])
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-        .cache()
-    )
-    good = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = df.filter(F.col(corrupt_col).isNotNull()).select(corrupt_col)
-    return good, bad
-
-
-def read_parquet_merged_schema(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution-tolerant parquet scan: ``mergeSchema`` unions
-    the footers of every vintage (columns added over time read as
-    null in old files) — the monthly-drop contract means the staged
-    layout WILL gain columns between vintages. Merge costs a footer
-    read per file at planning; keep it off (default) for fixed-schema
-    hot paths."""
-    return spark.read.option("mergeSchema", "true").parquet(path)

@@ -258,37 +258,11 @@ def stream_static_enrich(
     CAVEAT (verified): a path-backed static DataFrame pins its FILE
     LISTING at plan creation — rows in files that existed then are
     re-read per batch, but files added later are invisible. For a
-    slowly-changing dimension that gains files between batches use
-    :func:`foreach_batch_enrich`, which re-loads the dimension every
-    micro-batch, or back the dimension with a catalog table that
-    re-resolves.
+    slowly-changing dimension that gains files between batches,
+    re-load the dimension inside a ``foreachBatch`` sink, or back it
+    with a catalog table that re-resolves.
     """
     d = F.broadcast(dim) if broadcast_dim else dim
     return stream.join(d, on, how)
 
 
-def foreach_batch_enrich(
-    stream: DataFrame,
-    dim_loader,
-    on: list[str],
-    sink,
-    how: str = "left",
-):
-    """SCD-refreshing stream enrichment: ``dim_loader(spark)`` is
-    re-invoked EVERY micro-batch (fresh file listing, fresh snapshot),
-    the batch joins against that day's dimension map-side, and
-    ``sink(enriched_df, batch_id)`` writes the result — the
-    ``foreachBatch`` pattern Structured Streaming prescribes for
-    joins against data that changes underneath a running query.
-
-    Returns the ``DataStreamWriter`` (call ``.start()`` /
-    ``.trigger(...)`` on it). Exactly-once still holds end-to-end if
-    ``sink`` is idempotent on ``batch_id`` (micro-batch replays rerun
-    the same id).
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        dim = dim_loader(batch_df.sparkSession)
-        sink(batch_df.join(F.broadcast(dim), on, how), batch_id)
-
-    return stream.writeStream.foreachBatch(_apply)

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from owl_etl_spark.operators.bloomjoin import (
     BITS_PER_WORD,
     bloom_build,
-    bloom_params,
     bloom_prune,
     bloom_words,
 )
@@ -94,15 +93,6 @@ def test_bloom_prune_plan_has_no_join_or_shuffle(spark, member_keys):
         spark.range(0, 100).select(F.col("id").alias("k")), "k", words, 8192, 4
     )._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan and "Exchange" not in plan, plan
-
-
-def test_bloom_params_textbook_and_validation():
-    n_bits, k = bloom_params(10_000, 0.01)
-    assert n_bits % BITS_PER_WORD == 0 and 90_000 < n_bits < 100_000 and k == 7
-    with pytest.raises(ValueError):
-        bloom_params(0, 0.01)
-    with pytest.raises(ValueError):
-        bloom_params(100, 1.5)
 
 
 def test_bloom_prune_rejects_wrong_word_count(spark, member_keys):

@@ -202,7 +202,7 @@ def test_ivfpq_recovers_planted_clusters(spark):
         "embedding", _residual_expr("embedding", cents)
     ).select("vec_id", "embedding")
     cbs = pq_codebooks_fit(resid, ks=16, dim=64, max_iters=3)
-    enc = ivfpq_encode(df, cents, cbs, round_digits=6)
+    enc = ivfpq_encode(df, cents, cbs)
     q = df.filter(F.col("vec_id") % 30 == 3)
     top = ivfpq_topk(q, enc, cents, cbs, k=5, n_probes=3)
     got = [(r.query_id, r.neighbor_id) for r in top.collect()]
@@ -223,7 +223,7 @@ def test_ivfpq_encode_deterministic_and_shaped(spark):
     em = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = centroids_from_ids(em, [20, 80, 140, 200, 260, 320, 380, 440])
     cbs = pq_codebooks_from_ids(em, [10, 70, 130, 190, 250, 310, 370, 430], m=4)
-    enc = ivfpq_encode(em, cents, cbs, round_digits=6)
+    enc = ivfpq_encode(em, cents, cbs)
     rows = {
         r.vec_id: (r.cluster_id, list(r.pq_codes))
         for r in enc.select("vec_id", "cluster_id", "pq_codes").collect()
@@ -232,7 +232,7 @@ def test_ivfpq_encode_deterministic_and_shaped(spark):
         0 <= c < 8 and len(codes) == 4 and all(0 <= x < 8 for x in codes)
         for c, codes in rows.values()
     )
-    enc2 = ivfpq_encode(em.repartition(7), cents, cbs, round_digits=6)
+    enc2 = ivfpq_encode(em.repartition(7), cents, cbs)
     rows2 = {
         r.vec_id: (r.cluster_id, list(r.pq_codes))
         for r in enc2.select("vec_id", "cluster_id", "pq_codes").collect()
@@ -255,7 +255,7 @@ def test_ivfpq_full_probe_equals_pq_on_residuals(spark):
     em = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = centroids_from_ids(em, [20, 80, 140, 200, 260, 320, 380, 440])
     cbs = pq_codebooks_from_ids(em, [10, 70, 130, 190, 250, 310, 370, 430], m=4)
-    enc = ivfpq_encode(em, cents, cbs, round_digits=6)
+    enc = ivfpq_encode(em, cents, cbs)
     q = em.filter(F.col("vec_id") < 3)
     full = ivfpq_topk(q, enc, cents, cbs, k=3, n_probes=8)
     pruned = ivfpq_topk(q, enc, cents, cbs, k=3, n_probes=2)

@@ -1,6 +1,7 @@
 """Coverage for the remaining library surface: similarity UDF parity
-with difflib, the Pipeline runner, observation metrics, text shingles,
-fuzzy_top1_join directly, and the reference's monthly-upsert flow."""
+with difflib, text shingles, SQL-text wrappers over operator-built
+columns, connected components, the CLI pipeline and the distinct-overlap
+estimate."""
 
 from __future__ import annotations
 import pytest
@@ -29,125 +30,46 @@ def test_difflib_ratio_udf_parity(spark):
             assert 0.0 <= r.l <= 1.0
 
 
-def test_pipeline_runner(spark):
-    from owl_etl_spark.plans.pipeline import Pipeline
-
-    df = spark.range(10)
-    p = (
-        Pipeline()
-        .then("double", lambda d: d.withColumn("x", F.col("id") * 2))
-        .then("filter", lambda d: d.filter(F.col("x") >= 10))
-    )
-    out = p.run(df)
-    assert out.count() == 5
-    assert [n for n, _ in p.steps] == ["double", "filter"]
-
-
-def test_observed_counts(spark):
-    from owl_etl_spark.operators.quality import observed_counts
-
-    df = spark.range(100).withColumn("ok", F.col("id") % 10 != 0)
-    observed, obs = observed_counts(
-        df, "load_metrics",
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(F.col("ok"), 0).otherwise(1)).alias("failed"),
-    )
-    observed.collect()
-    assert obs.get["total"] == 100
-    assert obs.get["failed"] == 10
-
-
-def test_word_shingles_and_char_ngrams(spark):
-    from owl_etl_spark.functions.text import char_ngrams, word_shingles
+def test_word_shingles(spark):
+    from owl_etl_spark.functions.text import word_shingles
 
     df = spark.createDataFrame([("a b c d",), ("xy",)], ["t"])
-    rows = df.select(
-        word_shingles(F.col("t"), 2).alias("ws"), char_ngrams(F.col("t"), 3).alias("cn")
-    ).collect()
+    rows = df.select(word_shingles(F.col("t"), 2).alias("ws")).collect()
     assert rows[0].ws == ["a b", "b c", "c d"]
-    assert rows[0].cn == ["a b", " b ", "b c", " c ", "c d"]
     assert rows[1].ws == ["xy"]  # shorter than n -> whole text
-    assert rows[1].cn == ["xy"]
 
 
-def test_fuzzy_top1_join_direct(spark):
-    from owl_etl_spark.operators.fuzzy_join import fuzzy_top1_join
+def test_sql_text_wrappers_take_columns_built_with_operators(spark):
+    """Columns built with Python operators (``*``, ``>``) are spliced as
+    parseable SQL: each wrapper gives the same rows on them as on the
+    same values projected into plain columns first."""
+    from owl_etl_spark.functions.dates import parse_fecha_robusta
+    from owl_etl_spark.functions.numeric import descale_monetary
+    from owl_etl_spark.functions.text import word_shingles
 
-    probe = spark.createDataFrame([("Banco de Bogota",), ("Unknown Entity",)], ["name"])
-    dim = spark.createDataFrame(
-        [("bancodebogota", "u1"), ("bancolombia", "u2")], ["canon", "url"]
-    )
-    out = {r.name: (r.canon, r.url) for r in fuzzy_top1_join(probe, dim, "name", "canon").collect()}
-    assert out["Banco de Bogota"] == ("bancodebogota", "u1")
-    assert out["Unknown Entity"] == (None, None)
-
-
-def test_monthly_upsert_flow(spark):
-    """The reference's operating loop: month N gold snapshot + month N+1
-    silver -> upsert-by-recency keeps newest per fund, inserts new
-    funds, discards stale arrivals (F4/W1/S10 together)."""
-    from owl_etl_spark.operators.latest import upsert_by_recency
-
-    gold_n = spark.createDataFrame(
-        [("FondoA", "u/a", "2025-06-30", 100.0), ("FondoB", "u/b", "2025-06-30", 200.0)],
-        ["nombre_fic", "url", "fecha_corte", "valor"],
-    )
-    silver_n1 = spark.createDataFrame(
-        [
-            ("FondoA", "u/a", "2025-07-31", 110.0),   # newer → replaces
-            ("FondoB", "u/b", "2025-05-31", 150.0),   # stale → discarded
-            ("FondoC", "u/c", "2025-07-31", 300.0),   # new fund → inserted
-        ],
-        ["nombre_fic", "url", "fecha_corte", "valor"],
-    )
-    out = {
-        r.nombre_fic: (r.fecha_corte, r.valor)
-        for r in upsert_by_recency(
-            gold_n, silver_n1, ["nombre_fic", "url"], "fecha_corte"
-        ).collect()
-    }
-    assert out == {
-        "FondoA": ("2025-07-31", 110.0),
-        "FondoB": ("2025-06-30", 200.0),
-        "FondoC": ("2025-07-31", 300.0),
-    }
-
-
-def test_partition_overwrite_monthly_upsert(spark, tmp_path):
-    from owl_etl_spark.sources.writers import write_partition_overwrite, write_staged_parquet
-
-    base = str(tmp_path / "gold")
-    month1 = spark.createDataFrame(
-        [("a", "2025", "6"), ("b", "2025", "7")], ["v", "anio", "mes"]
-    )
-    write_staged_parquet(month1, base)
-    # month 7 re-arrives with corrected data; month 6 must survive
-    month2 = spark.createDataFrame([("b2", "2025", "7")], ["v", "anio", "mes"])
-    write_partition_overwrite(month2, base)
-    # partition values come back type-inferred (ints)
-    back = {(str(r.anio), str(r.mes)): r.v for r in spark.read.parquet(base).collect()}
-    assert back == {("2025", "6"): "a", ("2025", "7"): "b2"}
-
-
-def test_near_dup_dedup_end_to_end(spark):
-    from owl_etl_spark.operators.dedup import near_dup_dedup
-
-    base = "spark window join filter scan table row batch stream merge sort key"
     df = spark.createDataFrame(
-        [
-            (1, base),
-            (2, base + " tiny tail"),                  # near-dup of 1
-            (3, "completely different words about cooking pasta tonight"),
-            (4, base),                                  # exact dup of 1
-        ],
-        ["doc_id", "text"],
+        [(1, 2500.5, "a b c", "31/12/2024"), (2, 7.0, "d", "2024-01-05"), (3, None, "e f", None)],
+        "k int, p double, t string, d string",
     )
-    kept, dropped = near_dup_dedup(df, threshold=0.6)
-    kept_ids = {r.doc_id for r in kept.collect()}
-    dropped_pairs = {(r.id_a, r.id_b) for r in dropped.collect()}
-    assert 1 in kept_ids and 3 in kept_ids
-    assert 2 not in kept_ids and 4 not in kept_ids
-    assert (1, 4) in dropped_pairs
+    built = {
+        "m": F.col("p") * 1000.0,
+        "s": F.when(F.col("k") > 1, F.col("t")).otherwise(F.lit("x y z")),
+        "f": F.when(F.col("k") > 1, F.col("d")).otherwise(F.lit("2020-01-01")),
+    }
+
+    def apply(m, s, f):
+        return [
+            descale_monetary(m, 10).alias("m"),
+            word_shingles(s, 2).alias("s"),
+            parse_fecha_robusta(f).alias("f"),
+        ]
+
+    direct = df.select("k", *apply(*built.values())).orderBy("k").collect()
+    pre = df.select("k", *[c.alias(n) for n, c in built.items()])
+    projected = pre.select("k", *apply(F.col("m"), F.col("s"), F.col("f"))).orderBy("k").collect()
+    assert direct == projected
+    assert direct[0].m == 2500.5 and direct[0].s == ["x y", "y z"]
+    assert str(direct[0].f) == "2020-01-01" and str(direct[1].f) == "2024-01-05"
 
 
 def test_connected_components_chain(spark):
@@ -159,24 +81,6 @@ def test_connected_components_chain(spark):
     ids = spark.createDataFrame([(i,) for i in [1, 2, 3, 7, 10, 11]], ["doc_id"])
     out = {r.doc_id: r.component for r in connected_components(pairs, ids).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 7: 7, 10: 10, 11: 10}
-
-
-def test_near_dup_clusters_transitive(spark):
-    from owl_etl_spark.operators.dedup import near_dup_clusters
-
-    base = "spark window join filter scan table row batch stream merge sort key"
-    df = spark.createDataFrame(
-        [
-            (1, base),
-            (2, base + " tail one"),
-            (3, base + " tail one two"),   # near 2, likely near 1 transitively
-            (9, "unrelated text about gardening and soil and plants today"),
-        ],
-        ["doc_id", "text"],
-    )
-    comp = {r.doc_id: r.component for r in near_dup_clusters(df, threshold=0.5).collect()}
-    assert comp[1] == comp[2] == comp[3] == 1
-    assert comp[9] == 9
 
 
 @pytest.mark.full

@@ -141,140 +141,6 @@ def test_jpeg_rejects_marker_desync():
         parse_jpeg_header(bytes(img))
 
 
-# ---------------------------------------------------------------------------
-# full pixel decode (round 12): zlib inflate + filter reconstruction
-# ---------------------------------------------------------------------------
-
-
-def _encode_png(pixels, filters=None, color=None):
-    """Reference PNG encoder for tests: forward-filters each scanline
-    with the requested filter type (ISO 15948 §9) and wraps the zlib
-    stream in a valid container. ``pixels`` is (h, w, channels) uint8."""
-    import numpy as np
-
-    h, w, ch = pixels.shape
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[ch] if color is None else color
-    flat = pixels.reshape(h, w * ch).astype(np.int32)
-    filters = [0] * h if filters is None else filters
-    out = bytearray()
-    prior = np.zeros(w * ch, dtype=np.int32)
-    for r in range(h):
-        f = filters[r]
-        line = flat[r]
-        enc = line.copy()
-        for x in range(w * ch):
-            a = line[x - ch] if x >= ch else 0
-            b = prior[x]
-            c = prior[x - ch] if x >= ch else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) >> 1
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            enc[x] = (line[x] - pred) & 0xFF
-        out += bytes([f]) + bytes(enc.astype(np.uint8))
-        prior = line
-    ihdr = _png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0))
-    idat = _png_chunk(b"IDAT", zlib.compress(bytes(out)))
-    return b"\x89PNG\r\n\x1a\n" + ihdr + idat + _png_chunk(b"IEND", b"")
-
-
-def test_png_pixel_decode_every_filter_type():
-    """One image per filter type (grayscale, deterministic gradient):
-    the reconstruction must recover the exact pixels for None, Sub,
-    Up, Average, AND Paeth scanlines."""
-    import numpy as np
-
-    from owl_etl_spark.operators.multimodal import decode_png_pixels
-
-    px = (np.arange(6 * 5).reshape(6, 5, 1) * 7 % 256).astype(np.uint8)
-    for f in range(5):
-        got = decode_png_pixels(_encode_png(px, filters=[f] * 6))
-        assert (got["width"], got["height"], got["channels"]) == (5, 6, 1)
-        assert (got["pixels"] == px).all(), f"filter {f} mis-reconstructed"
-
-
-def test_png_pixel_decode_randomized_round_trip():
-    """Randomized property: random RGB/gray/RGBA images, random
-    per-row filter choices, split across multiple IDAT chunks — the
-    decode must be byte-exact."""
-    import random
-
-    import numpy as np
-
-    from owl_etl_spark.operators.multimodal import decode_png_pixels
-
-    rng = random.Random(17)
-    nprng = np.random.default_rng(17)
-    for ch in (1, 2, 3, 4):
-        h, w = rng.randint(2, 12), rng.randint(2, 12)
-        px = nprng.integers(0, 256, size=(h, w, ch), dtype=np.uint8)
-        filters = [rng.randint(0, 4) for _ in range(h)]
-        buf = _encode_png(px, filters=filters)
-        got = decode_png_pixels(buf)
-        assert got["channels"] == ch
-        assert (got["pixels"] == px).all(), (ch, filters)
-    # multi-IDAT: split one stream across three chunks
-    px = nprng.integers(0, 256, size=(7, 9, 3), dtype=np.uint8)
-    buf = _encode_png(px, filters=[4] * 7)
-    sig, ihdr_end = buf[:8], 8 + 25
-    ihdr = buf[8:ihdr_end]
-    idat_chunk = buf[ihdr_end:-12]
-    payload = idat_chunk[8:-4]
-    parts = [payload[: len(payload) // 3], payload[len(payload) // 3 : 2 * len(payload) // 3],
-             payload[2 * len(payload) // 3 :]]
-    rebuilt = sig + ihdr + b"".join(_png_chunk(b"IDAT", p) for p in parts) + _png_chunk(b"IEND", b"")
-    got = decode_png_pixels(rebuilt)
-    assert (got["pixels"] == px).all()
-
-
-def test_png_pixel_decode_rejects_unsupported_and_corrupt():
-    import numpy as np
-
-    import pytest as _pytest
-
-    from owl_etl_spark.operators.multimodal import decode_png_pixels
-
-    px = (np.zeros((3, 3, 1))).astype(np.uint8)
-    good = _encode_png(px)
-    # corrupt the IDAT CRC
-    bad = bytearray(good)
-    bad[-13] ^= 0xFF  # a byte inside IDAT data, CRC now stale
-    with _pytest.raises(ValueError, match="CRC mismatch"):
-        decode_png_pixels(bytes(bad))
-    # palette color type
-    pal = _encode_png(px, color=3)
-    with _pytest.raises(ValueError, match="unsupported PNG color type"):
-        decode_png_pixels(pal)
-    # header-only container (the q35 synthesis shape): no IDAT
-    with _pytest.raises(ValueError, match="no IDAT"):
-        decode_png_pixels(_make_png(4, 4, with_idat=False))
-    # wrong pixel-buffer size: lie about the height
-    import struct as _struct
-
-    wrong = _encode_png(px)
-    ihdr_data = _struct.pack(">IIBBBBB", 3, 9, 8, 0, 0, 0, 0)
-    rebuilt = (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr_data)
-               + wrong[8 + 25 :])
-    with _pytest.raises(ValueError, match="expected"):
-        decode_png_pixels(rebuilt)
-
-
-def test_png_pixel_decode_agrees_with_make_png():
-    """The all-zero grayscale fixture from _make_png (filter 0 rows)
-    decodes to the exact zero image at the declared dimensions."""
-    from owl_etl_spark.operators.multimodal import decode_png_pixels
-
-    got = decode_png_pixels(_make_png(33, 7))
-    assert (got["width"], got["height"], got["channels"]) == (33, 7, 1)
-    assert got["pixels"].sum() == 0
 
 
 # ---------------------------------------------------------------------------

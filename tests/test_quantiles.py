@@ -1,6 +1,5 @@
-"""Quantile-bucket operator: exact nearest-rank cutpoints, approx
-(sketch) cutpoints, broadcast assignment — and their pinned agreement
-with the ntile form (r2 VERDICT next-#5)."""
+"""Quantile-bucket operator: exact nearest-rank cutpoints, broadcast
+assignment — and their pinned agreement with the ntile form."""
 
 from __future__ import annotations
 
@@ -8,7 +7,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from owl_etl_spark.operators.quantiles import (
-    approx_cutpoints,
     assign_buckets,
     collect_cutpoints,
     exact_rank_cutpoints,
@@ -35,27 +33,6 @@ def test_exact_cutpoints_match_ntile_when_divisible(spark):
     joined = got.join(ref, ["k", "v"])
     mismatch = joined.filter(F.col("bucket") != F.col("nt")).count()
     assert mismatch == 0
-
-
-def test_approx_cutpoints_agree_with_exact_at_high_accuracy(spark):
-    """percentile_approx with accuracy >> n has rank error < 1 → its
-    cutpoints are data values at the same nearest ranks; bucket
-    assignments must agree with the exact form away from boundary
-    ties (here: everywhere, values distinct)."""
-    vals = [(v * 263) % 7907 for v in range(500)]
-    df = _mk(spark, vals)
-    exact = collect_cutpoints(exact_rank_cutpoints(df, "v", 10))
-    approx = collect_cutpoints(approx_cutpoints(df, "v", 10, accuracy=100000))
-    a = assign_buckets(df, "v", exact).withColumnRenamed("bucket", "b_exact")
-    b = assign_buckets(df, "v", approx).withColumnRenamed("bucket", "b_approx")
-    boundary = set(exact) | set(approx)
-    diff = (
-        a.join(b, ["k", "v"])
-        .filter(F.col("b_exact") != F.col("b_approx"))
-        .filter(~F.col("v").isin(*boundary))
-        .count()
-    )
-    assert diff == 0
 
 
 def test_cutpoint_ties_land_in_lower_bucket(spark):

@@ -143,3 +143,49 @@ def test_every_defaulted_keyword_is_passed_somewhere():
             for arg in defaults[name][1] if arg not in passed[name]
         ]
     assert unpassed == []
+
+
+
+#: Public definitions kept with no caller in the program, each standing
+#: for a stage of the reference pipeline (named by its reference file).
+#: What they use (``PollingServiceExtractor``, ``ServiceError``) is
+#: reached through them.
+REFERENCE_MIRRORS = {
+    "write_jdbc": "src/etl/load.py (the Postgres load)",
+    "extract_text_service": "src/etl/extract.py (LLMWhisperer extraction)",
+}
+
+
+def test_every_public_definition_is_reached_outside_tests():
+    """A public top-level function or class in ``owl_etl_spark/`` that
+    only tests reach is code the system never runs; delete it with its
+    tests. Reached means spelled as an identifier or attribute by
+    ``__spark_entry__.py``, ``bench.py``, ``tools/``, ``perfbench/``, by
+    code in ``owl_etl_spark/`` outside the public definitions, or by the
+    body of a reached definition (so two dead functions calling each
+    other stay dead). Calls inside f-strings count; import aliases (the
+    package ``__init__`` re-exports), ``__all__`` strings and docstrings
+    do not.
+    """
+    bodies = defaultdict(set)
+    where = {}
+    roots = set(REFERENCE_MIRRORS)
+    for path in _py_files("owl_etl_spark", "__spark_entry__.py", "bench.py", "tools", "perfbench"):
+        in_pkg = path.is_relative_to(ROOT / "owl_etl_spark")
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            spelled = {
+                n.id if isinstance(n, ast.Name) else n.attr
+                for n in ast.walk(node) if isinstance(n, (ast.Name, ast.Attribute))
+            }
+            if in_pkg and isinstance(node, (ast.FunctionDef, ast.ClassDef)) and not node.name.startswith("_"):
+                where[node.name] = f"{path.relative_to(ROOT)}:{node.lineno}"
+                bodies[node.name] |= spelled - {node.name}
+            else:
+                roots |= spelled
+    assert set(REFERENCE_MIRRORS) <= set(where), "stale REFERENCE_MIRRORS entry"
+    reached, todo = set(), roots & set(where)
+    while todo:
+        name = todo.pop()
+        reached.add(name)
+        todo |= (bodies[name] & set(where)) - reached
+    assert sorted(f"{where[n]} {n}" for n in set(where) - reached) == []

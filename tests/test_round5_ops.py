@@ -29,7 +29,6 @@ from owl_etl_spark.operators.linkage import (
     similarity_edges_multi,
 )
 from owl_etl_spark.operators.profile import trend_report
-from owl_etl_spark.operators.sketches import cms_params
 from owl_etl_spark.operators.split import weighted_sample_aes
 
 
@@ -170,28 +169,6 @@ def test_pagerank_rejects_unknown_dangling_mode(spark):
     n = spark.createDataFrame([Row(node="a")])
     with pytest.raises(ValueError, match="dangling"):
         pagerank(e, n, dangling="teleport")
-
-
-# ---------------------------------------------------------------------------
-# cms_params: ε/δ → (depth, width)
-# ---------------------------------------------------------------------------
-
-
-def test_cms_params_textbook_values():
-    assert cms_params(0.001, 0.01) == (5, 2719)
-    assert cms_params(0.01, 0.05) == (3, 272)
-
-
-def test_cms_params_tighter_tolerance_never_shrinks():
-    d1, w1 = cms_params(0.01, 0.01)
-    d2, w2 = cms_params(0.001, 0.001)
-    assert d2 >= d1 and w2 > w1
-
-
-def test_cms_params_rejects_out_of_range():
-    for eps, delta in [(0.0, 0.1), (1.0, 0.1), (0.1, 0.0), (0.1, 1.0), (-1, 0.5)]:
-        with pytest.raises(ValueError):
-            cms_params(eps, delta)
 
 
 # ---------------------------------------------------------------------------

@@ -14,7 +14,6 @@ from owl_etl_spark.functions.hashing import hashed_features
 from owl_etl_spark.operators.logreg import (
     logistic_fit_report,
     logistic_regression_fit,
-    logistic_score,
 )
 from owl_etl_spark.operators.quantiles import quantile_normalize
 
@@ -63,9 +62,9 @@ def test_logreg_learns_separable_signal(spark):
     rows = [(1 if x >= 5 else 0, 1, x) for x in range(10) for _ in range(20)]
     df = spark.createDataFrame(rows, ["y", "x0", "x1"])
     w = logistic_regression_fit(df, "y", ["x0", "x1"], iterations=20, lr=0.5)
-    scored = logistic_score(df, ["x0", "x1"], w).collect()
-    pos = [r["p_hat"] for r in scored if r["y"] == 1]
-    neg = [r["p_hat"] for r in scored if r["y"] == 0]
+    # sigma is monotone, so ranking by the linear score w.x ranks by p_hat
+    pos = [w[0] * x0 + w[1] * x1 for y, x0, x1 in rows if y == 1]
+    neg = [w[0] * x0 + w[1] * x1 for y, x0, x1 in rows if y == 0]
     assert min(pos) > max(neg)
 
 

@@ -48,11 +48,11 @@ def _pairs_set(df):
 
 def test_incremental_union_equals_one_shot(spark):
     docs = _corpus(spark)
-    one_shot = _pairs_set(minhash_lsh_pairs(docs, num_hashes=16, bands=8))
+    one_shot = _pairs_set(minhash_lsh_pairs(docs, bands=8))
     drop1 = docs.filter(F.col("doc_id") % 3 != 0)
     drop2 = docs.filter(F.col("doc_id") % 3 == 0)
-    sigs1 = minhash_band_signatures(drop1, num_hashes=16, bands=8)
-    sigs2 = minhash_band_signatures(drop2, num_hashes=16, bands=8)
+    sigs1 = minhash_band_signatures(drop1, bands=8)
+    sigs2 = minhash_band_signatures(drop2, bands=8)
     inc = _pairs_set(incremental_lsh_pairs(sigs1, None)) | _pairs_set(
         incremental_lsh_pairs(sigs2, sigs1)
     )
@@ -67,10 +67,10 @@ def test_incremental_three_drops(spark):
     """Associativity over more than two drops: each drop joins the
     union of all earlier drops' signatures."""
     docs = _corpus(spark, n=210, dup_every=5)
-    one_shot = _pairs_set(minhash_lsh_pairs(docs, num_hashes=16, bands=4))
+    one_shot = _pairs_set(minhash_lsh_pairs(docs, bands=4))
     sigs = [
         minhash_band_signatures(
-            docs.filter(F.col("doc_id") % 3 == k), num_hashes=16, bands=4
+            docs.filter(F.col("doc_id") % 3 == k), bands=4
         )
         for k in range(3)
     ]
@@ -100,7 +100,7 @@ def test_store_roundtrip_preserves_signatures(spark):
     """write_sorted_parquet(band, sig) -> read back: same rows, and the
     store's files are range-clustered so a band probe prunes."""
     docs = _corpus(spark, n=120)
-    sigs = minhash_band_signatures(docs, num_hashes=16, bands=8)
+    sigs = minhash_band_signatures(docs, bands=8)
     work = tempfile.mkdtemp(prefix="lsh_store_test_")
     try:
         write_sorted_parquet(sigs, f"{work}/sigs", ["band", "sig"])

@@ -85,10 +85,10 @@ def test_monthly_drop_kept_docs_never_duplicate_the_store(spark):
     n_exact_clash = drop_fp.join(store_fp, "fp").count()
 
     sig_store = minhash_band_signatures(
-        store, "doc_id", "text", num_hashes=16, bands=8
+        store, bands=8
     ).select("band", "sig").distinct()
     sig_drop = minhash_band_signatures(
-        drop, "doc_id", "text", num_hashes=16, bands=8
+        drop, bands=8
     )
     n_band_clash = (
         sig_drop.join(sig_store, ["band", "sig"]).select("doc_id").distinct().count()
@@ -262,7 +262,7 @@ def test_incremental_lsh_three_drop_law(spark):
     incremental = []
     for drop in drops:
         sigs = minhash_band_signatures(
-            drop, "doc_id", "text", num_hashes=16, bands=8
+            drop, bands=8
         ).localCheckpoint(eager=True)
         incremental.append(incremental_lsh_pairs(sigs, store))
         store = sigs if store is None else store.unionByName(sigs)
@@ -274,9 +274,7 @@ def test_incremental_lsh_three_drop_law(spark):
     )
     want = sorted(
         (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(
-            d, "doc_id", "text", num_hashes=16, bands=8
-        ).collect()
+        for r in minhash_lsh_pairs(d, bands=8).collect()
     )
     assert got == want and len(want) > 0
 

@@ -1,5 +1,6 @@
 """Scale-technique tests: bucketed co-located joins (no exchange),
-salted aggregation/join equivalence."""
+runtime bloom-filter pruning, cache-free dedup pair generation, and
+connected-components convergence."""
 
 from __future__ import annotations
 
@@ -70,42 +71,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_salted_groupby_sum_equivalence(spark):
-    from owl_etl_spark.operators.skew import salted_groupby_sum
-
-    li = read_table(spark, "/root/testdata/sf0.001", "lineitem")
-    plain = {
-        r.l_returnflag: round(r.s, 2)
-        for r in li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("s")).collect()
-    }
-    salted = {
-        r.l_returnflag: round(r.sum_l_quantity, 2)
-        for r in salted_groupby_sum(li, ["l_returnflag"], "l_quantity", "l_orderkey").collect()
-    }
-    assert salted == plain
-
-
-def test_salted_join_equivalence(spark):
-    from owl_etl_spark.operators.skew import salted_join
-
-    o = read_table(spark, "/root/testdata/sf0.001", "orders")
-    c = read_table(spark, "/root/testdata/sf0.001", "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    plain = (
-        o.join(c, "o_custkey").groupBy("c_mktsegment").count().collect()
-    )
-    salted = (
-        salted_join(o, c, "o_custkey", "o_orderkey")
-        .groupBy("c_mktsegment")
-        .count()
-        .collect()
-    )
-    assert {(r.c_mktsegment, r["count"]) for r in salted} == {
-        (r.c_mktsegment, r["count"]) for r in plain
-    }
-
-
 def test_runtime_bloom_filter_join_pruning(spark, tmp_path):
     """With broadcast disabled (big-dim case), Catalyst can still
     inject a bloom filter built from the filtered dimension into the
@@ -148,73 +113,18 @@ def test_runtime_bloom_filter_join_pruning(spark, tmp_path):
                 spark.conf.set(k, v)
 
 
-def test_zorder_write_prunes_2d_boxes(spark, tmp_path):
-    """Z-ordered layout: a box predicate on BOTH dimensions touches
-    fewer files than a single-key sorted layout does, and far fewer
-    than all of them; content is unchanged."""
-    from owl_etl_spark.functions.zorder import write_zordered_parquet
-    from owl_etl_spark.sources.writers import write_sorted_parquet
-
-    n = 60_000
-    df = spark.range(0, n).select(
-        (F.col("id") % 600).alias("x"),
-        ((F.col("id") * 37) % 500).alias("y"),
-        F.col("id").alias("payload"),
-    )
-    zpath, lpath = str(tmp_path / "z"), str(tmp_path / "lin")
-    write_zordered_parquet(df, zpath, "x", "y", target_partitions=16)
-    write_sorted_parquet(df, lpath, ["x"], target_partitions=16)
-
-    def files_touched(path, pred):
-        return (
-            spark.read.parquet(path)
-            .filter(pred)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .count()
-        )
-
-    x_box = "x BETWEEN 100 AND 160"
-    y_box = "y BETWEEN 100 AND 150"
-    # single-key layout: perfect on its own key, hopeless on the other —
-    # every file contains the full y range
-    assert files_touched(lpath, y_box) == 16
-    # z-order: BOTH dimensions prune; neither degenerates to full scan
-    zx, zy = files_touched(zpath, x_box), files_touched(zpath, y_box)
-    assert zx < 16 and zy < 16, f"zorder x={zx} y={zy}"
-    # and the balanced sum beats the single-key layout's sum
-    lx, ly = files_touched(lpath, x_box), files_touched(lpath, y_box)
-    assert zx + zy < lx + ly, f"z({zx}+{zy}) vs linear({lx}+{ly})"
-    # correctness: same rows either way
-    box = f"{x_box} AND {y_box}"
-    a = sorted(r.payload for r in spark.read.parquet(zpath).filter(box).collect())
-    b = sorted(r.payload for r in spark.read.parquet(lpath).filter(box).collect())
-    assert a == b and len(a) > 0
-
-
 def test_dedup_pair_generators_leave_no_cache(spark):
-    """r1 VERDICT: minhash_lsh_pairs / ngram_jaccard_pairs_prefix cached
-    intermediates and never unpersisted — leaking executor memory across
-    a long-lived session. Both are now cache-free (groupBy pair
-    expansion / shuffle-file ReuseExchange); after a full run the
+    """r1 VERDICT: minhash_lsh_pairs cached intermediates and never
+    unpersisted — leaking executor memory across a long-lived session.
+    It is now cache-free (groupBy pair expansion); after a full run the
     session must hold no MORE persisted RDDs than before."""
-    from owl_etl_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
+    from owl_etl_spark.operators.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     # minhash pair generation is cache-free (groupBy pair expansion)
     minhash_lsh_pairs(docs).count()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
-    # prefix-jaccard scopes its corpus-sized shingle cache inside the
-    # call; the only storage it may leave behind is the checkpointed
-    # (pair-sized) RESULT, released when the caller drops the frame.
-    pairs = ngram_jaccard_pairs_prefix(docs, threshold=0.5)
-    pairs.count()
-    grew = spark.sparkContext._jsc.getPersistentRDDs().size() - before
-    assert grew <= 1, f"persistent RDDs grew by {grew} (> result itself)"
 
 
 def test_ngram_jaccard_hot_shingle_guard(spark):
@@ -253,18 +163,6 @@ def test_ngram_jaccard_hot_shingle_guard(spark):
     assert got == planted, f"unexpected extra pairs: {sorted(got - planted)[:5]}"
     grew = spark.sparkContext._jsc.getPersistentRDDs().size() - before
     assert grew <= 2, f"persistent RDDs grew by {grew} (> the 2 results)"
-
-
-def test_jaccard_prefix_returns_flat_materialized_plan(spark):
-    """Eager scoping: the returned frame must be a flat scan of the
-    checkpointed pair list — not a live plan still referencing the
-    (now-unpersisted) shingle cache."""
-    from owl_etl_spark.operators.dedup import ngram_jaccard_pairs_prefix
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = ngram_jaccard_pairs_prefix(docs, threshold=0.5)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" not in plan and ("LogicalRDD" in plan or "ExistingRDD" in plan), plan
 
 
 def test_connected_components_lineage_truncated(spark):
@@ -384,7 +282,7 @@ def test_star_contraction_on_lsh_edges_matches_q98_form(spark):
     )
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    pairs = minhash_lsh_pairs(d, "doc_id", "text", num_hashes=16, bands=8)
+    pairs = minhash_lsh_pairs(d, bands=8)
     ids = d.select("doc_id")
     ml = {r.doc_id: r.component for r in connected_components(pairs, ids).collect()}
     st = {r.doc_id: r.component for r in connected_components_star(pairs, ids).collect()}
@@ -407,9 +305,9 @@ def test_minhash_lsh_skew_guard_chunks_giant_buckets(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    capped = minhash_lsh_pairs(df, num_hashes=16, bands=8, max_group=64)
+    capped = minhash_lsh_pairs(df, bands=8, max_group=64)
     # output identity vs the effectively-uncapped form
-    uncapped = minhash_lsh_pairs(df, num_hashes=16, bands=8, max_group=1 << 20)
+    uncapped = minhash_lsh_pairs(df, bands=8, max_group=1 << 20)
     got = {(r.id_a, r.id_b) for r in capped.collect()}
     want = {(r.id_a, r.id_b) for r in uncapped.collect()}
     assert got == want
@@ -477,30 +375,3 @@ def test_min_label_cc_driver_path_matches_distributed(spark, monkeypatch):
     assert dict(fast)[99] == 99
 
 
-def test_zorder_key_pins_morton_grid(spark):
-    """``zorder_key`` on an 8x8 integer grid (y spread over [-5, 16]):
-    keys recorded before it was rebuilt on ``operators.zorder.zorder_expr``."""
-    from owl_etl_spark.functions.zorder import zorder_key
-
-    grid = spark.createDataFrame(
-        [(x, y * 3 - 5) for x in range(8) for y in range(8)], "x int, y int"
-    )
-    got = [r["__zkey"] for r in zorder_key(grid, "x", "y").orderBy("x", "y").collect()]
-    assert got == [
-        0, 68174084, 272696336, 340870420,
-        1090785344, 1158959428, 1363481680, 1431655765,
-        136348168, 204522252, 409044504, 477218588,
-        1227133512, 1295307596, 1499829848, 1568003933,
-        545392672, 613566756, 818089008, 886263092,
-        1636178016, 1704352100, 1908874352, 1977048437,
-        681740840, 749914924, 954437176, 1022611260,
-        1772526184, 1840700268, 2045222520, 2113396605,
-        2181570688, 2249744772, 2454267024, 2522441108,
-        3272356032, 3340530116, 3545052368, 3613226453,
-        2317918856, 2386092940, 2590615192, 2658789276,
-        3408704200, 3476878284, 3681400536, 3749574621,
-        2726963360, 2795137444, 2999659696, 3067833780,
-        3817748704, 3885922788, 4090445040, 4158619125,
-        2863311530, 2931485614, 3136007866, 3204181950,
-        3954096874, 4022270958, 4226793210, 4294967295,
-    ]

@@ -1,5 +1,6 @@
 """``session.seal`` / ``release`` / ``sealed``: the one spelling of a
-local checkpoint, and a release that frees its blocks.
+local checkpoint, and a release that frees its blocks; and
+``core_shuffle_partitions``, the one pin of the shuffle width.
 
 ``DataFrame.unpersist()`` on a local checkpoint frees nothing (the
 blocks belong to the checkpointed RDD under the frame's ``LogicalRDD``
@@ -20,7 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from owl_etl_spark import session
-from owl_etl_spark.session import iterate, release, seal, sealed
+from owl_etl_spark.session import core_shuffle_partitions, iterate, release, seal, sealed
 
 ROOT = Path(__file__).resolve().parents[1]
 
@@ -78,6 +79,33 @@ def test_sealed_releases_when_its_body_raises(spark):
             assert _stored(spark) - before == _sealed_leaves(out)
             raise RuntimeError("body failed")
     assert _stored(spark) - before == set()
+
+
+def test_core_shuffle_partitions_pins_and_restores_when_its_body_raises(spark):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        with pytest.raises(RuntimeError):
+            with core_shuffle_partitions(spark):
+                assert spark.conf.get(key) == str(spark.sparkContext.defaultParallelism)
+                raise RuntimeError("body failed")
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_shuffle_partitions_are_set_only_in_session():
+    files = [ROOT / "__spark_entry__.py", *sorted((ROOT / "owl_etl_spark").rglob("*.py"))]
+    hits = [
+        f"{path.relative_to(ROOT)}:{call.lineno}"
+        for path in files
+        if path != ROOT / "owl_etl_spark" / "session.py"
+        for call in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(call, ast.Call) and getattr(call.func, "attr", None) == "set"
+        and call.args and getattr(call.args[0], "value", None) == "spark.sql.shuffle.partitions"
+    ]
+    assert hits == []
 
 
 def test_release_logs_no_warning():

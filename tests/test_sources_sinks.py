@@ -55,21 +55,6 @@ def test_extract_retry_quarantine(spark, tmp_path):
     assert "service down" in out.extract_error
 
 
-def test_staged_write_partitioning(spark, tmp_path):
-    from owl_etl_spark.sources.writers import write_staged_parquet
-
-    df = spark.createDataFrame(
-        [("a", "2025", "7"), ("b", "2025", "8")], ["v", "anio", "mes"]
-    )
-    out = str(tmp_path / "staged")
-    write_staged_parquet(df, out)
-    assert os.path.isdir(f"{out}/anio=2025/mes=7")
-    back = spark.read.parquet(out)
-    # partition pruning: only one partition's files read
-    pruned = back.filter((F.col("anio") == "2025") & (F.col("mes") == "7"))
-    assert pruned.count() == 1
-
-
 def test_skip_list_roundtrip(spark, tmp_path):
     from owl_etl_spark.sources.readers import read_skip_list
     from owl_etl_spark.sources.writers import write_skip_list
@@ -80,27 +65,6 @@ def test_skip_list_roundtrip(spark, tmp_path):
     back = read_skip_list(spark, path)
     assert back.count() == 2
     assert all(r.skip_name.endswith("_transformed.json") for r in back.collect())
-
-
-def test_app_tables_favorites(spark):
-    from owl_etl_spark.operators.app_tables import (
-        favorites_report,
-        seed_recommendations,
-        seed_users,
-    )
-
-    users = seed_users(spark, 3)
-    fic = spark.createDataFrame(
-        [(10, "fondoA", "Renta Fija", "http://a"), (20, "fondoB", "Mixta", "http://b"),
-         (30, "fondoC", "Alternativa", "http://c")],
-        ["fic_id", "nombre_fic", "tipo", "url"],
-    )
-    rec = seed_recommendations(users, fic)
-    assert rec.count() == 6  # 3 users x first 2 fics
-    rep = favorites_report(rec, fic)
-    per_user = rep.groupBy("usuario_id").count().collect()
-    assert all(r["count"] == 2 for r in per_user)
-    assert {r.nombre_fic for r in rep.collect()} == {"fondoA", "fondoB"}
 
 
 def test_write_sorted_parquet_clusters_keys(spark, tmp_path):
@@ -126,58 +90,6 @@ def test_write_sorted_parquet_clusters_keys(spark, tmp_path):
     spans = sorted((r.lo, r.hi) for r in ranges)
     for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
         assert hi1 < lo2, f"overlapping file ranges: ({lo1},{hi1}) vs ({lo2},{hi2})"
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    from owl_etl_spark.sources.writers import compact_parquet
-
-    path = str(tmp_path / "splintered")
-    spark.range(0, 1000).repartition(40).write.parquet(path)  # 40 tiny files
-    before = spark.read.parquet(path)
-    rows_before = sorted(r.id for r in before.collect())
-
-    n = compact_parquet(spark, path, target_file_bytes=1 << 30)
-    assert n == 1
-    import os
-
-    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(files) == 1
-    after = spark.read.parquet(path)
-    assert sorted(r.id for r in after.collect()) == rows_before
-
-
-def test_read_json_with_quarantine(spark, tmp_path):
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from owl_etl_spark.sources.readers import read_json_with_quarantine
-
-    p = tmp_path / "in"
-    p.mkdir()
-    (p / "data.json").write_text(
-        '{"id": 1, "name": "ok"}\n'
-        '{"id": 2 "name": "missing comma"}\n'
-        '{"id": 3, "name": "fine"}\n'
-    )
-    schema = StructType([StructField("id", LongType()), StructField("name", StringType())])
-    good, bad = read_json_with_quarantine(spark, str(p), schema)
-    assert sorted(r.id for r in good.collect()) == [1, 3]
-    quarantined = bad.collect()
-    assert len(quarantined) == 1 and "missing comma" in quarantined[0][0]
-
-
-def test_read_parquet_merged_schema(spark, tmp_path):
-    from owl_etl_spark.sources.readers import read_parquet_merged_schema
-
-    v1 = str(tmp_path / "t" / "v=1")
-    v2 = str(tmp_path / "t" / "v=2")
-    spark.range(0, 3).select(F.col("id").alias("a")).write.parquet(v1)
-    spark.range(3, 6).select(
-        F.col("id").alias("a"), (F.col("id") * 10).alias("b")
-    ).write.parquet(v2)
-    df = read_parquet_merged_schema(spark, str(tmp_path / "t"))
-    assert set(df.columns) >= {"a", "b"}
-    rows = {r.a: r.b for r in df.collect()}
-    assert rows[1] is None and rows[4] == 40
 
 
 def test_real_pdf_end_to_end(spark):
@@ -268,38 +180,3 @@ def test_real_pdf_end_to_end(spark):
     assert out["calificacion"]["entidad_calificadora"] == "BRC INVESTOR SERVICES"
 
 
-def test_write_excel_report(spark, tmp_path):
-    """S13 closed: the 4 report DataFrames land as a 4-sheet xlsx; the
-    zip parts are well-formed XML and carry the cell values."""
-    import xml.etree.ElementTree as ET
-    import zipfile
-
-    import __spark_entry__ as m
-    from owl_etl_spark.sources.writers import write_excel_report
-
-    sf = "/root/testdata/sf0.001"
-    qs = m.queries()
-    tables = {
-        "golden_diff": qs["q36_golden_diff"](spark, sf).limit(20),
-        "reliability": qs["q37_reliability_report"](spark, sf),
-        "status_pivot": qs["q38_status_pivot"](spark, sf),
-        "segment_cube": qs["q39_segment_cube"](spark, sf).limit(20),
-    }
-    out = str(tmp_path / "report.xlsx")
-    write_excel_report(tables, out)
-
-    with zipfile.ZipFile(out) as z:
-        names = set(z.namelist())
-        assert {"[Content_Types].xml", "xl/workbook.xml",
-                "xl/_rels/workbook.xml.rels", "_rels/.rels"} <= names
-        assert {f"xl/worksheets/sheet{i}.xml" for i in (1, 2, 3, 4)} <= names
-        wb = ET.fromstring(z.read("xl/workbook.xml"))
-        ns = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
-        sheet_names = [s.get("name") for s in wb.iter(f"{ns}sheet")]
-        assert sheet_names == ["golden_diff", "reliability", "status_pivot", "segment_cube"]
-        # reliability sheet: header row + 3 data rows, values parse back
-        sh = ET.fromstring(z.read("xl/worksheets/sheet2.xml"))
-        rows = list(sh.iter(f"{ns}row"))
-        assert len(rows) == 1 + 3
-        header = [t.text for t in rows[0].iter(f"{ns}t")]
-        assert header == tables["reliability"].columns

@@ -140,11 +140,11 @@ def test_two_drop_replay_through_catalog_equals_one_shot(spark, cat):
     the in-memory frames), appended after the probe — the union of
     incremental pair outputs equals the one-shot full-corpus LSH."""
     docs = _corpus(spark)
-    one_shot = _pairs(minhash_lsh_pairs(docs, num_hashes=16, bands=8))
+    one_shot = _pairs(minhash_lsh_pairs(docs, bands=8))
     inc = set()
     for k, label in enumerate(["m0", "m1", "m2"]):
         sigs = minhash_band_signatures(
-            docs.filter(F.col("doc_id") % 3 == k), num_hashes=16, bands=8
+            docs.filter(F.col("doc_id") % 3 == k), bands=8
         )
         store = cat.read(spark, "lsh") if cat.exists("lsh") else None
         inc |= _pairs(incremental_lsh_pairs(sigs, store))

@@ -105,36 +105,6 @@ def test_streaming_latest_per_key(spark, tmp_path):
     assert last == {"f1": ("2025-07-31", "new"), "f2": ("2025-05-31", "only")}
 
 
-@pytest.mark.full
-def test_incremental_silver_exactly_once(spark, tmp_path):
-    """Two invocations over a growing bronze dir: the second run
-    processes ONLY the new file (checkpointed file source)."""
-    from owl_etl_spark.streaming.incremental import incremental_silver
-
-    bronze = tmp_path / "bronze"; bronze.mkdir()
-    silver = str(tmp_path / "silver")
-    ckpt = str(tmp_path / "ckpt")
-
-    def doc(name):
-        return json.dumps({
-            "fic": {"nombre_fic": name, "gestor": "g", "custodio": "c",
-                    "fecha_corte": "2025-07-31", "politica_de_inversion": "bonos"},
-            "filename": f"banco1_{name}_raw.json",
-        })
-
-    (bronze / "b0.json").write_text(doc("fondo1") + "\n")
-    incremental_silver(spark, str(bronze), silver, ckpt)
-    first = spark.read.json(silver)
-    assert first.count() == 1
-
-    (bronze / "b1.json").write_text(doc("fondo2") + "\n")
-    incremental_silver(spark, str(bronze), silver, ckpt)
-    out = spark.read.json(silver)
-    # fondo1 NOT reprocessed: exactly 2 rows total
-    assert out.count() == 2
-    assert {r["fic"]["nombre_fic"] for r in out.select("fic").collect()} == {"fondo1", "fondo2"}
-
-
 def test_streaming_batch_equivalence(spark, tmp_path):
     """The SAME transformation (hourly_event_counts) over the same rows
     must produce identical aggregates in batch mode and in streaming
@@ -419,39 +389,3 @@ def test_stream_static_enrich_broadcast_join(spark, tmp_path):
     assert q.lastProgress["stateOperators"] in ([], None)  # stateless
 
 
-def test_foreach_batch_enrich_refreshes_dimension(spark, tmp_path):
-    """The foreachBatch form re-loads the dimension every micro-batch:
-    a key added to the dimension AFTER the query plan was built still
-    enriches rows in later batches — the SCD-refresh property the
-    plan-pinned static join cannot provide."""
-    from owl_etl_spark.streaming.joins import foreach_batch_enrich
-
-    dim_dir = tmp_path / "dim"; dim_dir.mkdir()
-    (dim_dir / "d1.json").write_text(json.dumps({"k": "a", "label": "alpha"}) + "\n")
-    src = tmp_path / "src"; src.mkdir()
-    (src / "b1.json").write_text(json.dumps({"k": "a", "v": 1, "ts": "2024-01-01T00:00:00"}) + "\n")
-
-    results = []
-
-    def sink(df, batch_id):
-        results.extend((r.v, r.label) for r in df.collect())
-
-    def dim_loader(s):
-        return s.read.schema("k string, label string").json(str(dim_dir))
-
-    stream = spark.readStream.schema("k string, v long, ts timestamp").json(str(src))
-    # batch 1: only 'a' known
-    q = foreach_batch_enrich(stream, dim_loader, ["k"], sink).trigger(
-        availableNow=True
-    ).option("checkpointLocation", str(tmp_path / "ckpt")).start()
-    q.awaitTermination(120)
-    assert results == [(1, "alpha")]
-    # dimension gains 'b'; a new stream row with k='b' arrives; restart
-    # from the checkpoint processes ONLY the new file, with a FRESH dim
-    (dim_dir / "d2.json").write_text(json.dumps({"k": "b", "label": "beta"}) + "\n")
-    (src / "b2.json").write_text(json.dumps({"k": "b", "v": 2, "ts": "2024-01-01T00:01:00"}) + "\n")
-    q = foreach_batch_enrich(stream, dim_loader, ["k"], sink).trigger(
-        availableNow=True
-    ).option("checkpointLocation", str(tmp_path / "ckpt")).start()
-    q.awaitTermination(120)
-    assert results == [(1, "alpha"), (2, "beta")]
